@@ -784,55 +784,24 @@ def bpe_train(
         )
 
     trajectory: list[tuple[int, str, str, int]] = []
-    rank = 1
-    rounds_applied = 0
-    while rank <= merges:
-        # One argmax job can safely yield TWO consecutive merge rounds
-        # (r17, VERDICT r16 #7 — batch the per-round argmax; the rounds
-        # were pure job latency on a coalesced vocab). Soundness: after
-        # merging p1 = (a, b), the only pre-existing pairs whose counts
-        # can CHANGE are {(x, a)} (their right element may fuse into ab)
-        # and {(b, y)} (their left element may fuse) — both only ever
-        # DECREASE — and the only NEW pairs are (x, ab) / (ab, y) /
-        # (ab, ab), each bounded above by a pre-count from those same
-        # classes (every occurrence consumes one such adjacency). So if
-        # the head row p2 directly under p1 (i) is NOT in either class
-        # and (ii) STRICTLY beats the third row's count, then after p1's
-        # merge p2 is unchanged while every other pair — decreased,
-        # unchanged or new — sits at or below the third count, strictly
-        # under p2: p2 is round r+1's winner regardless of tie-break.
-        # The guard is exact (no approximation); when it fails the loop
-        # simply falls back to one merge for this job. The trajectory is
-        # bit-identical to the sequential form (equivalence-pinned).
-        head = (
+    for rank in range(1, merges + 1):
+        best = (
             words.filter(F.size("s") >= 2)
             .select("freq", F.explode(pairs_expr).alias("p"))
             .groupBy("p")
             .agg(F.sum("freq").alias("cnt"))
             .orderBy(F.desc("cnt"), F.col("p.a"), F.col("p.b"))
-            .limit(3)
+            .limit(1)
             .collect()
         )
-        if not head:
+        if not best:
             break
-        a, b, cnt = head[0]["p"]["a"], head[0]["p"]["b"], head[0]["cnt"]
+        a, b, cnt = best[0]["p"]["a"], best[0]["p"]["b"], best[0]["cnt"]
         trajectory.append((rank, a, b, int(cnt)))
-        rank += 1
-        picks = [(a, b)]
-        if rank <= merges and len(head) >= 2:
-            p2 = head[1]["p"]
-            changed_class = p2["b"] == a or p2["a"] == b
-            beats_third = len(head) < 3 or head[1]["cnt"] > head[2]["cnt"]
-            if not changed_class and beats_third:
-                trajectory.append((rank, p2["a"], p2["b"], int(head[1]["cnt"])))
-                picks.append((p2["a"], p2["b"]))
-                rank += 1
-        for pa, pb in picks:
-            rounds_applied += 1
-            if rank <= merges:  # the final round's merge is never materialized
-                words = words.select(apply_merge_expr(pa, pb).alias("s"), "freq")
-                if rounds_applied % checkpoint_interval == 0:
-                    words = words.localCheckpoint(eager=True)
+        if rank < merges:  # the final round's merge is never materialized
+            words = words.select(apply_merge_expr(a, b).alias("s"), "freq")
+            if rank % checkpoint_interval == 0:
+                words = words.localCheckpoint(eager=True)
     return spark.createDataFrame(
         trajectory, "merge_rank int, lhs string, rhs string, pair_count long"
     )

@@ -19,38 +19,14 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyspark.sql import types as T
-
 from espkinesis_spark.session import ensure_session_confs
 from espkinesis_spark.streaming import state as st
-from espkinesis_spark.tables import SCHEMAS, table_path
-
-def _events_raw_schema(ts_dtype: str) -> T.StructType:
-    """Stream-reader schema matching the on-disk ``ts`` encoding.
-
-    FileStreamSource needs an explicit schema, so unlike the batch edge
-    (tables._normalize_timestamps, which adapts to the footer) we must
-    probe the encoding first and declare the matching raw type: nanos →
-    long, µs-NTZ → timestamp_ntz, µs/ms-UTC → timestamp.
-    """
-    raw = {
-        "bigint": T.LongType(),
-        "timestamp_ntz": T.TimestampNTZType(),
-    }.get(ts_dtype, T.TimestampType())
-    return T.StructType(
-        [
-            f if f.name != "ts" else T.StructField("ts", raw)
-            for f in SCHEMAS["events"].fields
-        ]
-    )
-
-
-def _normalize_ts(df: DataFrame, ts_dtype: str) -> DataFrame:
-    if ts_dtype == "bigint":  # nanos-as-long; testdata is µs-aligned
-        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if ts_dtype == "timestamp_ntz":  # pure reinterpretation under UTC zone
-        return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+from espkinesis_spark.tables import (
+    _normalize_timestamps,
+    _source_files,
+    disk_schema,
+    table_path,
+)
 
 
 def _ensure_symlink(src_file: str, link: str) -> None:
@@ -67,21 +43,30 @@ def _ensure_symlink(src_file: str, link: str) -> None:
         pass
 
 
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # FileStreamSource requires a *directory*; expose the single parquet
-    # file through a symlink dir (testdata itself is read-only).
+def _table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Replayable stream of one test table. FileStreamSource requires a
+    *directory*, so the single parquet file is exposed through a symlink
+    dir (testdata itself is read-only). It also needs an explicit schema:
+    the declared one, with timestamp columns typed as the footer encodes
+    them (``disk_schema``: read on the driver, no Spark job), normalized
+    at the same edge as the batch loader."""
     ensure_session_confs(spark)
-    src_file = os.path.abspath(table_path(sf_dir, "events"))
+    src_file = os.path.abspath(table_path(sf_dir, name))
     stream_dir = os.path.join(
         tempfile.gettempdir(), "espk_stream", src_file.strip("/").replace("/", "_")
     )
     os.makedirs(stream_dir, exist_ok=True)
-    _ensure_symlink(src_file, os.path.join(stream_dir, "events.parquet"))
-    # probe the on-disk ts encoding via a footer-only batch read, then
-    # declare the matching stream schema and normalize at the edge
-    ts_dtype = dict(spark.read.parquet(src_file).dtypes)["ts"]
-    raw = spark.readStream.schema(_events_raw_schema(ts_dtype)).parquet(stream_dir)
-    return _normalize_ts(raw, ts_dtype)
+    _ensure_symlink(src_file, os.path.join(stream_dir, f"{name}.parquet"))
+    raw = spark.readStream.schema(disk_schema(src_file, name)).parquet(stream_dir)
+    return _normalize_timestamps(raw, name)
+
+
+def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _table_stream(spark, sf_dir, "events")
+
+
+def _documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _table_stream(spark, sf_dir, "documents")
 
 
 # Executed micro-batch physical plans, keyed by query name — recorded at
@@ -319,15 +304,16 @@ def _state_partitions(spark: SparkSession, source_rows: int | None) -> str:
     ESPK_STREAM_STATE_PARTITIONS overrides; otherwise ceil(source_rows /
     STATE_ROWS_PER_PARTITION) — source rows upper-bound the state keys —
     clamped to [1, 4 x defaultParallelism]. An unknown source size falls
-    back to the cluster's default parallelism (the cluster-true choice;
-    every in-repo job passes its source's footer row count)."""
+    back to min(8, defaultParallelism): a parallel floor that does not pay
+    one state store per core on a large cluster (every in-repo job passes
+    its source's footer row count)."""
     env = os.environ.get("ESPK_STREAM_STATE_PARTITIONS")
     if env:
         return env
-    hi = 4 * spark.sparkContext.defaultParallelism
+    cores = spark.sparkContext.defaultParallelism
     if source_rows is None:
-        return str(spark.sparkContext.defaultParallelism)
-    return str(max(1, min(-(-source_rows // STATE_ROWS_PER_PARTITION), hi)))
+        return str(min(8, cores))
+    return str(max(1, min(-(-source_rows // STATE_ROWS_PER_PARTITION), 4 * cores)))
 
 
 def _drain_complete_to_parquet(
@@ -468,26 +454,6 @@ def _drain_rowstore(
     return _drain_to_memory(df, name, "append", source_rows=rows or None)
 
 
-def _source_files(path: str) -> list[str]:
-    """Data files of a file OR directory-style parquet table. A missing
-    path yields [] — the router then takes the memory route and the
-    stream's own source reader raises the clearer error (r11 ADVICE:
-    don't fail the job on the router's stat call). Metadata subtrees
-    (_spark_metadata/, _delta_log/, .hidden/) are pruned at the
-    DIRECTORY level: their files ('0', '9.compact') don't start with
-    '_'/'.' themselves, and a file-sink store's ever-growing compact
-    manifests would otherwise skew the byte route."""
-    if os.path.isdir(path):
-        out: list[str] = []
-        for root, dirs, names in os.walk(path):
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            out.extend(
-                os.path.join(root, f) for f in names if not f.startswith(("_", "."))
-            )
-        return out
-    return [path] if os.path.exists(path) else []
-
-
 def _bytes_of(files: list[str]) -> int:
     return sum(os.path.getsize(f) for f in files)
 
@@ -584,18 +550,6 @@ def sliding_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = agg.select(F.col("win.start").alias("w_start"), "event_type", "n")
     return _drain_to_memory(out, "st_sliding_counts_sink", "complete", source_rows=_table_rows(sf_dir, "events"))
-
-
-def _documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Replayable documents stream (symlink-dir trick, as for events)."""
-    ensure_session_confs(spark)
-    src_file = os.path.abspath(table_path(sf_dir, "documents"))
-    stream_dir = os.path.join(
-        tempfile.gettempdir(), "espk_stream", src_file.strip("/").replace("/", "_")
-    )
-    os.makedirs(stream_dir, exist_ok=True)
-    _ensure_symlink(src_file, os.path.join(stream_dir, "documents.parquet"))
-    return spark.readStream.schema(SCHEMAS["documents"]).parquet(stream_dir)
 
 
 def content_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1364,8 +1318,9 @@ def sink_roundtrip_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(data_dir, f"batch_id={batch_id}")
         )
 
+    shipped = src.select("event_id", "user_id", "event_type", "value")
     query = keyed_foreach_batch_sink(
-        src.select("event_id", "user_id", "event_type", "value"),
+        shipped,
         deliver,
         key_col="user_id",
         available_now=True,
@@ -1375,7 +1330,10 @@ def sink_roundtrip_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     query.awaitTermination()
     _record_stream_plan(query)
     return _read_back_batches(
-        spark, out_dir, data_dir, lambda dirs: spark.read.parquet(*dirs)
+        spark,
+        out_dir,
+        data_dir,
+        lambda dirs: spark.read.schema(shipped.schema).parquet(*dirs),
     )
 
 
@@ -1405,7 +1363,8 @@ def console_roundtrip_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def read_docs(dirs):
         return (
-            spark.read.json(*dirs)
+            spark.read.schema("doc string")
+            .json(*dirs)
             .select(
                 F.from_json(
                     "doc", "event_id bigint, event_type string, value double"

@@ -85,7 +85,8 @@ def test_tail_fragment_recovers_per_query_figures(tmp_path):
     per-query geomean next round."""
     from bench_diff import load
 
-    line = json.dumps(_sample())
+    sample = _sample()
+    line = json.dumps(sample)
     # cut everything before the tail_queries mirror — the r15 failure mode
     frag = line[line.index('"tail_queries"'):]
     wrapped = {"n": 17, "rc": 0, "tail": frag, "parsed": None}
@@ -96,7 +97,9 @@ def test_tail_fragment_recovers_per_query_figures(tmp_path):
     # all 120 per-entry figures recovered from the mirror alone
     assert len(rec["queries"]) == 120
     assert rec["queries"]["q000"] == pytest.approx(0.5)
-    assert rec["scalars"]["tail_total_sec"] == rec["scalars"].get("tail_total_sec")
+    assert rec["scalars"]["tail_total_sec"] == pytest.approx(
+        sample["tail_total_sec"]
+    )
     assert rec["contaminated"] is False
 
 

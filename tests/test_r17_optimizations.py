@@ -8,9 +8,12 @@ one fails HERE with a named kernel):
   * the winnow sliding-window minimum as a branch-free ``least()`` over
     direct element accesses == ``array_min(slice(...))`` (tail windows
     shorter than W included on both forms),
-  * ``bpe_train``'s guarded two-merges-per-job argmax batching == the
-    sequential one-argmax-per-round loop (same trajectory), including a
-    corpus built so naive (guard-less) batching WOULD be wrong.
+  * ``bpe_train`` == the sequential one-argmax-per-round reference loop
+    (same trajectory), on corpora built so batching several merges per
+    argmax job WOULD be wrong. r17's guarded two-merges-per-job batching
+    was unsound (self-pairs, and merges that recreate an existing symbol,
+    can raise a pair's count) and has been removed; the sequential loop
+    is the only one.
 """
 
 from __future__ import annotations
@@ -113,8 +116,8 @@ def _traj(df):
 
 
 def test_bpe_batched_argmax_matches_sequential(spark, sf_dir):
-    """The guarded two-per-job batching must replay the sequential greedy
-    trajectory exactly on the real fixture corpus."""
+    """The trainer must replay the sequential greedy trajectory exactly on
+    the real fixture corpus."""
     from espkinesis_spark.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
@@ -125,10 +128,8 @@ def test_bpe_guard_refuses_unsafe_batch(spark):
     """A corpus where naive batching WOULD be wrong: pre-merge counts are
     (a,b)=5, (x,a)=4, (q,r)=3, but merging (a,b) consumes every (x,a)
     occurrence into the NEW pair (x,ab)=4 — so round 2's true winner is
-    (x,ab), which does not even exist before round 1. (x,a) has right
-    element == a (the changed class), so the guard must fall back to
-    sequential rounds; the batched trainer must produce the same
-    trajectory as the reference loop."""
+    (x,ab), which does not even exist before round 1. The trainer must
+    produce the same trajectory as the reference loop."""
     rows = (
         [(i, "xab") for i in range(4)]
         + [(100, "ab")]
@@ -141,9 +142,9 @@ def test_bpe_guard_refuses_unsafe_batch(spark):
 
 
 def test_bpe_guard_batches_only_on_strict_separation(spark):
-    """A tie directly under the runner-up (cnt(#2) == cnt(#3)) must refuse
-    the batch (a new pair bounded by cnt(#3) could tie #2 and win on the
-    lexicographic rule); the trajectory must still match sequential."""
+    """A tie directly under the runner-up (cnt(#2) == cnt(#3)): a new pair
+    bounded by cnt(#3) could tie #2 and win on the lexicographic rule, so
+    the trajectory must still match sequential."""
     # counts: (a,b)=4; (c,d)=3; (e,f)=3 — #2/#3 tie
     rows = (
         [(i, "ab") for i in range(4)]
@@ -154,3 +155,15 @@ def test_bpe_guard_batches_only_on_strict_separation(spark):
     got = _traj(T.bpe_train(docs, merges=3))
     assert got == _bpe_train_sequential(docs, merges=3)
     assert got == [(1, "a", "b", 4), (2, "c", "d", 3), (3, "e", "f", 3)]
+
+
+def test_bpe_self_pair_counterexample(spark):
+    """The counterexample that sank r17's two-merges-per-argmax batching:
+    round 1 merges the self-pair (a,a)=8, leaving (aa,a)=4 — a pair that
+    did not exist before, and that beats the pre-merge runner-up (c,d)=3
+    which batching would have taken as round 2."""
+    rows = [(i, "aaa") for i in range(4)] + [(10 + i, "cd") for i in range(3)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = _traj(T.bpe_train(docs, merges=2))
+    assert got == [(1, "a", "a", 8), (2, "aa", "a", 4)]
+    assert got == _bpe_train_sequential(docs, merges=2)

@@ -839,7 +839,8 @@ def test_source_files_prunes_metadata_directories(tmp_path):
     NAMES don't start with '_' ('0', '9.compact'), so pruning must happen
     at the directory level or the router's byte/row stats count
     ever-growing non-data manifest bytes."""
-    from espkinesis_spark.streaming.jobs import _source_bytes, _source_files
+    from espkinesis_spark.streaming.jobs import _source_bytes
+    from espkinesis_spark.tables import _source_files
 
     d = tmp_path / "store"
     (d / "_spark_metadata").mkdir(parents=True)
@@ -849,11 +850,36 @@ def test_source_files_prunes_metadata_directories(tmp_path):
     (d / ".hidden" / "junk").write_bytes(b"x" * 5000)
     (d / "part-0000.parquet").write_bytes(b"d" * 300)
     (d / "part-0001.parquet").write_bytes(b"d" * 700)
-    assert sorted(os.path.basename(f) for f in _source_files(str(d))) == [
+    assert [os.path.basename(f) for f in _source_files(str(d))] == [
         "part-0000.parquet",
         "part-0001.parquet",
     ]
     assert _source_bytes(str(d)) == 1000
+
+
+@pytest.mark.parametrize("cores", [1, 4, 32])
+def test_state_partitions_stay_in_clamp(cores, monkeypatch):
+    """The derived state-partition count stays inside [1, 4 x
+    defaultParallelism] for every source size, and an unknown size takes
+    the min(8, defaultParallelism) floor, not one store per core."""
+    from types import SimpleNamespace
+
+    from espkinesis_spark.streaming.jobs import _state_partitions
+
+    monkeypatch.delenv("ESPK_STREAM_STATE_PARTITIONS", raising=False)
+    spark = SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=cores))
+    got = {
+        rows: int(_state_partitions(spark, rows))
+        for rows in (None, 0, 1, 250_001, 10**15)
+    }
+    assert all(1 <= n <= 4 * cores for n in got.values()), got
+    assert got == {
+        None: min(8, cores),
+        0: 1,
+        1: 1,
+        250_001: min(2, 4 * cores),
+        10**15: 4 * cores,
+    }
 
 
 def test_source_stats_graceful_on_missing_or_garbage_paths(tmp_path, sf_dir):

@@ -12,6 +12,7 @@ encoding-invariant.
 
 from __future__ import annotations
 
+import glob
 import os
 
 import pyarrow as pa
@@ -19,7 +20,12 @@ import pyarrow.parquet as pq
 import pytest
 
 from espkinesis_spark import queries
-from espkinesis_spark.tables import TABLE_NAMES, load_table, table_path
+from espkinesis_spark.tables import (
+    TABLE_NAMES,
+    disk_schema,
+    load_table,
+    table_path,
+)
 
 # encoding name -> (arrow timestamp type, extra pq.write_table kwargs)
 ENCODINGS = {
@@ -100,24 +106,29 @@ def test_streaming_source_adapts_to_encoding(spark, sf_dir, encoded_dirs):
         assert got == canonical, f"streaming drifted under encoding {enc}"
 
 
-def test_date_reencoded_orders_normalizes(spark, sf_dir, tmp_path):
-    """The date-like columns are midnight-aligned, so a future testdata
-    round could re-encode them as parquet DATE (the r4 failure class).
-    load_table must restore identical TimestampType instants, and the
-    date-touching queries must return identical results."""
+@pytest.fixture(scope="module")
+def dated_dir(sf_dir, tmp_path_factory):
+    """An sf-dir whose orders.o_orderdate is re-encoded as parquet DATE."""
     src = pq.read_table(table_path(sf_dir, "orders"))
     idx = src.schema.get_field_index("o_orderdate")
     dated = src.set_column(
         idx, "o_orderdate", src.column("o_orderdate").cast(pa.date32())
     )
-    d = tmp_path / "dated"
-    d.mkdir()
+    d = tmp_path_factory.mktemp("dated")
     pq.write_table(dated, str(d / "orders.parquet"), version="2.6")
     for name in TABLE_NAMES:
         if name != "orders":
             os.symlink(table_path(sf_dir, name), str(d / f"{name}.parquet"))
+    return str(d)
 
-    df = load_table(spark, str(d), "orders")
+
+def test_date_reencoded_orders_normalizes(spark, sf_dir, dated_dir):
+    """The date-like columns are midnight-aligned, so a future testdata
+    round could re-encode them as parquet DATE (the r4 failure class).
+    load_table must restore identical TimestampType instants, and the
+    date-touching queries must return identical results."""
+    d = dated_dir
+    df = load_table(spark, d, "orders")
     assert dict(df.dtypes)["o_orderdate"] == "timestamp"
     canonical = sorted(
         (r.o_orderkey, r.o_orderdate)
@@ -133,5 +144,108 @@ def test_date_reencoded_orders_normalizes(spark, sf_dir, tmp_path):
     for qname in ("ex_shipping_priority", "ex_exists_shipped"):
         fn = queries.registry()[qname]
         want = sorted(map(tuple, fn(spark, sf_dir).collect()))
-        have = sorted(map(tuple, fn(spark, str(d)).collect()))
+        have = sorted(map(tuple, fn(spark, d).collect()))
         assert have == want, f"{qname} drifted under DATE encoding"
+
+
+def _typed(schema):
+    return [(f.name, f.dataType.simpleString()) for f in schema.fields]
+
+
+def _assert_disk_schema_matches_inference(spark, path, name):
+    assert _typed(disk_schema(path, name)) == _typed(
+        spark.read.parquet(path).schema
+    ), f"{name} at {path}"
+
+
+def test_disk_schema_matches_inference_on_testdata(spark, sf_dir):
+    """The footer-typed declared schema must be exactly what Spark's own
+    inference yields, for every table at every scale factor present next
+    to the one the suite runs at."""
+    here = os.path.normpath(sf_dir)
+    data_dirs = sorted(glob.glob(os.path.join(os.path.dirname(here), "sf*")))
+    assert here in data_dirs
+    for data_dir in data_dirs:
+        for name in TABLE_NAMES:
+            _assert_disk_schema_matches_inference(
+                spark, table_path(data_dir, name), name
+            )
+
+
+def test_disk_schema_matches_inference_under_every_encoding(
+    spark, encoded_dirs, dated_dir
+):
+    """Every ts encoding (nanos -> bigint, NTZ, UTC, millis, INT96) and the
+    DATE-re-encoded orders fixture type exactly as Spark infers them."""
+    # the tests run at one scale factor, so a missing encoding (a lossy
+    # cast skipped by the fixture) must not go unnoticed
+    assert {"nanos", "us_utc", "us_ntz", "int96"} <= set(encoded_dirs)
+    for d in encoded_dirs.values():
+        _assert_disk_schema_matches_inference(
+            spark, table_path(d, "events"), "events"
+        )
+    _assert_disk_schema_matches_inference(
+        spark, table_path(dated_dir, "orders"), "orders"
+    )
+
+
+def test_disk_schema_reads_first_file_of_a_directory_table(
+    spark, sf_dir, tmp_path
+):
+    """A directory-style table is typed from its first data file; files
+    under metadata subtrees (which sort first here) are skipped."""
+    src = pq.read_table(table_path(sf_dir, "events"))
+    ts = src.column("ts").cast(pa.timestamp("us", tz="UTC"))
+    utc = src.set_column(src.schema.get_field_index("ts"), "ts", ts)
+    d = tmp_path / "events.parquet"
+    (d / "_temporary").mkdir(parents=True)
+    (d / "_temporary" / "junk").write_text("not parquet")
+    pq.write_table(utc.slice(0, 10), str(d / "part-0.parquet"))
+    pq.write_table(utc.slice(10), str(d / "part-1.parquet"))
+    assert dict(_typed(disk_schema(str(d), "events")))["ts"] == "timestamp"
+    _assert_disk_schema_matches_inference(spark, str(d), "events")
+    assert load_table(spark, str(tmp_path), "events").count() == src.num_rows
+
+
+def test_disk_schema_refuses_renamed_column(tmp_path, sf_dir):
+    """Under an explicit schema a missing column reads as all-NULL, so a
+    footer whose columns are not the declared ones must raise, naming the
+    table and both column lists."""
+    src = pq.read_table(table_path(sf_dir, "events"))
+    renamed = src.rename_columns(
+        ["user" if c == "user_id" else c for c in src.column_names]
+    )
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(renamed, path)
+    with pytest.raises(ValueError, match="'events'") as exc:
+        disk_schema(path, "events")
+    msg = str(exc.value)
+    assert "'user'" in msg and "'user_id'" in msg
+
+
+def _jobs_started(spark, build):
+    """Spark job ids started while ``build()`` runs, under a fresh job
+    group; the listener bus is drained first so none is missed."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"zero-job-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "construction only")
+    try:
+        build()
+    finally:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        sc._jsc.clearJobGroup()
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_table_and_stream_construction_start_no_spark_job(spark, sf_dir):
+    """Loading a table and building the events stream read footers on the
+    driver only: no schema-inference job. The control read (Spark's own
+    inference) shows the counter does see such a job."""
+    from espkinesis_spark.streaming.jobs import _events_stream
+
+    path = table_path(sf_dir, "events")
+    assert _jobs_started(spark, lambda: spark.read.parquet(path).schema)
+    assert _jobs_started(spark, lambda: load_table(spark, sf_dir, "events").schema) == []
+    assert _jobs_started(spark, lambda: _events_stream(spark, sf_dir).schema) == []

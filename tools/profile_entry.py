@@ -5,7 +5,10 @@ session, noop sink, warmed JVM/python-worker pool) and optionally dump
 
 Unlike bench.py this is a development tool — it draws K samples per
 entry back-to-back and prints min/median, which is what you want when
-iterating on one plan, not when producing the round artifact.
+iterating on one plan, not when producing the round artifact. Next to the
+times it prints the Spark jobs each draw started while the DataFrame was
+being built (``build_jobs``: eager probes, checkpoints, schema inference)
+and while it executed (``run_jobs``), as the median over the K draws.
 
 Usage:
     python tools/profile_entry.py NAME [NAME...] [--k K] [--sf SF_DIR]
@@ -20,6 +23,18 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def _median(xs):
+    s = sorted(xs)
+    return s[len(s) // 2] if len(s) % 2 else (s[len(s) // 2 - 1] + s[len(s) // 2]) / 2
+
+
+def _jobs_so_far(sc) -> int:
+    """Jobs the scheduler has started in this application, from every
+    thread (a streaming drain's micro-batches run on the query's own
+    thread, under its own job group)."""
+    return sc._jsc.sc().dagScheduler().nextJobId()
 
 
 def main() -> None:
@@ -54,17 +69,21 @@ def main() -> None:
             )
             with open(os.path.join(args.explain, f"{name}.txt"), "w") as fh:
                 fh.write(plan)
-        samples = []
+        sc = spark.sparkContext
+        samples, build_jobs, run_jobs = [], [], []
         for _ in range(args.k):
-            spark.sparkContext.setJobDescription(f"profile:{name}")
-            t0 = time.perf_counter()
-            registry[name](spark, args.sf).write.mode("overwrite").format("noop").save()
+            sc.setJobDescription(f"profile:{name}")
+            t0, j0 = time.perf_counter(), _jobs_so_far(sc)
+            df = registry[name](spark, args.sf)
+            j1 = _jobs_so_far(sc)
+            df.write.mode("overwrite").format("noop").save()
             samples.append(time.perf_counter() - t0)
-            spark.sparkContext.setJobDescription(None)
-        s = sorted(samples)
-        med = s[len(s) // 2] if len(s) % 2 else (s[len(s) // 2 - 1] + s[len(s) // 2]) / 2
+            build_jobs.append(j1 - j0)
+            run_jobs.append(_jobs_so_far(sc) - j1)
+            sc.setJobDescription(None)
         print(
-            f"{name}: min={min(samples):.3f} med={med:.3f} "
+            f"{name}: min={min(samples):.3f} med={_median(samples):.3f} "
+            f"build_jobs={_median(build_jobs):g} run_jobs={_median(run_jobs):g} "
             f"all={[round(x, 3) for x in samples]}",
             flush=True,
         )
