@@ -9,6 +9,7 @@ Structured Streaming layer for the real-time pipelines.
 
 Layout:
     session.py    — tuned SparkSession factory
+    _worker_daemon.py — Spark's Python daemon on the installed pyspark
     tables.py     — test-table schemas + loaders (registers temp views)
     engine.py     — Engine facade: register_tables / sql / query registry
     operators/    — reference-semantics ops (remap, patch, validate, state)
@@ -18,8 +19,17 @@ Layout:
     streaming/    — Structured Streaming pipelines (sources, state, sinks)
 """
 
-from espkinesis_spark.engine import Engine
-from espkinesis_spark.session import get_spark
+import importlib
 
 __all__ = ["Engine", "get_spark"]
 __version__ = "0.1.0"
+
+# Lazy (PEP 562) so that importing a submodule -- the Python worker daemon in
+# particular -- does not import pyspark before it has chosen its sys.path.
+_LAZY = {"Engine": "espkinesis_spark.engine", "get_spark": "espkinesis_spark.session"}
+
+
+def __getattr__(name: str):
+    if name in _LAZY:
+        return getattr(importlib.import_module(_LAZY[name]), name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

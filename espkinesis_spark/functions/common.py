@@ -314,8 +314,3 @@ BALANCE_SALTS = 64
 # — no float interpolation, so both engines cut at identical values; a
 # score equal to a threshold takes the lower bucket.
 PPL_SCALE = 10_000
-
-
-def minhash_salt(j: int) -> str:
-    """Salt for the j-th MinHash permutation; md5(salt || shingle)."""
-    return f"mh{j:02d}|"

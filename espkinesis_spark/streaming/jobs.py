@@ -292,10 +292,14 @@ def _drain_to_parquet(
 # batch. Upper-bounded at 4x the cluster's default parallelism so a
 # 100 TB key space still spreads over every core with skew headroom
 # (state partitions are pinned at first checkpoint — oversizing beats
-# resizing). r17 measurement note: at sf0.1 the choice measured FLAT
-# across 1/2/4/8 partitions (the per-store overhead is no longer the
-# floor after the r13 32->8 cut), so the derivation is a scale-story
-# parameterization, not a local win.
+# resizing). r17 measurement note: at sf0.1 the JVM-aggregate legs
+# measured FLAT across 1/2/4/8 partitions (the per-store overhead is no
+# longer the floor after the r13 32->8 cut), so for them the derivation
+# is a scale-story parameterization, not a local win. Python stateful
+# operators are not flat: each state partition is one
+# applyInPandasWithState task, so 1 partition runs every key in one
+# worker -- st_override_asof measured 8.26 s at 1 partition against
+# 3.97 s at 8.
 STATE_ROWS_PER_PARTITION = 250_000
 
 

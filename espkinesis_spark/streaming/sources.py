@@ -63,12 +63,6 @@ def command_lines(spark: SparkSession, path: str) -> DataFrame:
     return file_stream(spark, path, COMMAND_LINE_SCHEMA, fmt="json")
 
 
-def parse_commands(lines: DataFrame) -> DataFrame:
-    """F2 — parse raw JSON; malformed rows keep a NULL struct (the error
-    side-output filter is downstream, ref: src/transmitter/main.cpp:232-240)."""
-    return lines.withColumn("cmd", F.from_json(F.col("raw"), COMMAND_SCHEMA))
-
-
 def rate_frames(spark: SparkSession, rows_per_second: int = 2) -> DataFrame:
     """Synthetic 2 Hz frame source (ref envelope: RADIO_SEND_FREQ_HZ=2,
     src/transmitter/main.cpp:23-25) for live-mode demos."""
