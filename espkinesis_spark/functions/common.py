@@ -10,10 +10,22 @@ identically.
 
 from __future__ import annotations
 
+import re
+
 # --- tokenization -----------------------------------------------------------
 # Whitespace tokenizer over trimmed text. Spark `split` and DuckDB
 # `string_split_regex` agree on this pattern for non-empty trimmed input.
 TOKEN_SPLIT_RE = r"\s+"
+_TOKEN_SPLIT = re.compile(TOKEN_SPLIT_RE, re.ASCII)
+
+
+def split_tokens(text: str) -> list[str]:
+    """The ``text.tokens()`` contract in Python, for the Arrow kernels: Spark's
+    ``trim`` strips only ' ' and Java's ``\\s`` is ASCII-only, so a plain
+    ``str.strip()`` / Unicode ``\\s`` split would diverge on tab-edged text
+    and on U+00A0 / U+2003."""
+    return _TOKEN_SPLIT.split(text.strip(" "))
+
 
 # BPE-ish pretokenizer (letters | digits | single other-symbol), shared by
 # token counting. ASCII-only so Java regex and RE2 agree.

@@ -475,86 +475,61 @@ def neardup_jaccard_exact(
     )
 
 
-def simhash(docs: DataFrame, bits: int = C.SIMHASH_BITS, impl: str = "numpy") -> DataFrame:
+def simhash(docs: DataFrame, bits: int = C.SIMHASH_BITS) -> DataFrame:
     """SimHash over whitespace tokens (with multiplicity), md5-derived bits.
 
     bit_j(token) = bit (3 - j%4) of nibble j//4 of md5(token); the signature
-    sets bit j iff sum over tokens of (2*bit_j - 1) > 0. Packed into a
-    BIGINT as sum(2^j). Arithmetic (floor/power/mod) instead of bit ops so
-    the DuckDB oracle is expression-identical.
-
-    ``impl='numpy'`` (default) computes the whole signature inside one
+    sets bit j iff sum over tokens of (2*bit_j - 1) > 0, packed into a
+    BIGINT as sum(2^j). The DuckDB oracle spells this with arithmetic
+    (floor/power/mod); here the whole signature is computed inside one
     Arrow batch per task — a pure map with zero shuffle and no row
-    explosion, the shape that survives 100 TB. ``impl='sql'`` keeps the
-    expression-tree form (token x bit explode + two aggregations) that is
-    textually parallel to the DuckDB oracle.
+    explosion, the shape that survives 100 TB.
     """
-    if impl == "numpy":
-        return _simhash_numpy(docs, bits)
-    tok = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
-    tok = tok.withColumn("h", F.md5(F.col("tok")))
-    per_bit = (
-        tok.select(
-            "doc_id",
-            F.explode(F.sequence(F.lit(0), F.lit(bits - 1))).alias("j"),
-            F.col("h"),
-        )
-        .withColumn(
-            "nib",
-            F.expr("instr('0123456789abcdef', substring(h, CAST(floor(j / 4) AS INT) + 1, 1)) - 1"),
-        )
-        .withColumn("bit", F.expr("CAST(floor(nib / power(2, 3 - (j % 4))) AS BIGINT) % 2"))
-        .groupBy("doc_id", "j")
-        .agg(F.sum(F.col("bit") * 2 - 1).alias("s"))
-    )
-    return per_bit.groupBy("doc_id").agg(
-        F.sum(
-            F.when(F.col("s") > 0, F.expr("CAST(power(2, j) AS BIGINT)")).otherwise(F.lit(0).cast("long"))
-        ).alias("simhash")
-    )
-
-
-def _simhash_numpy(docs: DataFrame, bits: int) -> DataFrame:
-    """Arrow-batched SimHash kernel, bit-identical to the SQL form.
-
-    bit_j(token) = bit (3 - j%4) of nibble j//4 of md5(token) — exactly the
-    MSB-first bit order of the digest bytes, so ``np.unpackbits`` over the
-    first ceil(bits/8) digest bytes reproduces it directly.
-    """
-    import hashlib
-    import re
-
-    import numpy as np
     import pandas as pd
 
-    nbytes = (bits + 7) // 8
-    split_re = re.compile(C.TOKEN_SPLIT_RE)
-    weights = np.int64(1) << np.arange(bits, dtype=np.int64)
-
     def run(batches):
-        cache: dict[str, np.ndarray] = {}
-
-        def token_bits(t: str) -> np.ndarray:
-            v = cache.get(t)
-            if v is None:
-                d = hashlib.md5(t.encode("utf-8")).digest()[:nbytes]
-                v = np.unpackbits(np.frombuffer(d, dtype=np.uint8))[:bits].astype(np.int64)
-                cache[t] = v
-            return v
-
+        sign = simhash_signer(bits)
         for pdf in batches:
-            out = np.empty(len(pdf), dtype=np.int64)
-            for i, text in enumerate(pdf["text"]):
-                counts: dict[str, int] = {}
-                for t in split_re.split(text.strip()):
-                    counts[t] = counts.get(t, 0) + 1
-                s = np.zeros(bits, dtype=np.int64)
-                for t, c in counts.items():
-                    s += c * (2 * token_bits(t) - 1)
-                out[i] = int(weights[s > 0].sum())
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "simhash": out})
+            sig = pd.Series([sign(t) for t in pdf["text"]], dtype="int64")
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "simhash": sig.values})
 
     return docs.select("doc_id", "text").mapInPandas(run, schema="doc_id long, simhash long")
+
+
+def simhash_signer(bits: int = C.SIMHASH_BITS):
+    """The per-text SimHash signature ``text -> int`` behind ``simhash``
+    (and the registry's ``espk_simhash48`` UDF), with its own md5 cache.
+
+    bit_j(token) is exactly the MSB-first bit order of the digest bytes, so
+    ``np.unpackbits`` over the first ceil(bits/8) digest bytes reproduces
+    it directly.
+    """
+    import hashlib
+
+    import numpy as np
+
+    nbytes = (bits + 7) // 8
+    weights = np.int64(1) << np.arange(bits, dtype=np.int64)
+    cache: dict[str, np.ndarray] = {}
+
+    def token_bits(t: str) -> np.ndarray:
+        v = cache.get(t)
+        if v is None:
+            d = hashlib.md5(t.encode("utf-8")).digest()[:nbytes]
+            v = np.unpackbits(np.frombuffer(d, dtype=np.uint8))[:bits].astype(np.int64)
+            cache[t] = v
+        return v
+
+    def sign(text: str) -> int:
+        counts: dict[str, int] = {}
+        for t in C.split_tokens(text):
+            counts[t] = counts.get(t, 0) + 1
+        s = np.zeros(bits, dtype=np.int64)
+        for t, c in counts.items():
+            s += c * (2 * token_bits(t) - 1)
+        return int(weights[s > 0].sum())
+
+    return sign
 
 
 def _ckpt(df: DataFrame, mode: str) -> DataFrame:
@@ -565,80 +540,6 @@ def _ckpt(df: DataFrame, mode: str) -> DataFrame:
     if mode == "reliable":
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
-
-
-def dedup_clusters(
-    pairs: DataFrame,
-    max_iters: int = 25,
-    impl: str = "star",
-    checkpoint: str = "local",
-) -> DataFrame:
-    """Connected components over near-dup pairs: (doc_id, cluster_id) with
-    cluster_id = min doc_id in the component (keep iff doc_id == cluster_id).
-
-    Near-dup PAIRS overcount the work a dedup pass must do — the keep/drop
-    decision needs CLUSTERS (A~B, B~C must drop two docs, not settle two
-    independent pairs).
-
-    ``impl='star'`` (default): the large-star/small-star alternation
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    converges in O(log n) rounds even on chain graphs, needs no per-round
-    driver action (the round budget is derived from one upfront node
-    count), and verifies convergence with a single fixpoint check at the
-    end. ``impl='minlabel'``: plain min-label propagation — one shuffle
-    per round, converges in graph-diameter rounds; fine when near-dup
-    clusters are shallow, raises if the diameter exceeds ``max_iters``.
-
-    Both implementations raise RuntimeError instead of returning
-    silently-wrong split clusters when the iteration budget is exhausted
-    before convergence. ``checkpoint='reliable'`` swaps the per-round
-    ``localCheckpoint`` for reliable checkpointing (requires
-    ``sparkContext.setCheckpointDir``) so a lost executor cannot kill a
-    long run.
-    """
-    if impl == "star":
-        return _dedup_clusters_star(pairs, max_iters, checkpoint)
-    edges = _ckpt(
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).union(
-            pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
-        ),
-        checkpoint,
-    )
-    labels = _ckpt(
-        edges.select(F.col("u").alias("node")).distinct().withColumn("label", F.col("node")),
-        checkpoint,
-    )
-    changed = 0
-    for _ in range(max_iters):
-        nbr = (
-            edges.join(labels, edges["v"] == labels["node"])
-            .groupBy("u")
-            .agg(F.min("label").alias("nl"))
-        )
-        # carry the changed flag through the same projection: the
-        # convergence check is then a filter-count on the checkpointed
-        # result, not a second join + recompute per round
-        new = _ckpt(
-            labels.join(nbr, labels["node"] == nbr["u"], "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce(F.col("nl"), F.col("label"))).alias("nl2"),
-                (F.coalesce(F.col("nl"), F.col("label")) < F.col("label")).alias("__chg"),
-            )
-            .withColumnRenamed("nl2", "label"),
-            checkpoint,
-        )
-        changed = new.filter(F.col("__chg")).count()
-        labels = new.drop("__chg")
-        if changed == 0:
-            break
-    if changed:
-        raise RuntimeError(
-            f"dedup_clusters(minlabel) did not converge in {max_iters} rounds "
-            f"({changed} labels still changing) — the component diameter exceeds "
-            "the budget; use impl='star' or raise max_iters"
-        )
-    return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -687,18 +588,31 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return nbr.union(own).distinct()
 
 
-def _dedup_clusters_star(pairs: DataFrame, max_iters: int, checkpoint: str) -> DataFrame:
-    """Large-star/small-star alternation with per-round fixpoint exit.
+def dedup_clusters(
+    pairs: DataFrame, max_iters: int = 25, checkpoint: str = "local"
+) -> DataFrame:
+    """Connected components over near-dup pairs: (doc_id, cluster_id) with
+    cluster_id = min doc_id in the component (keep iff doc_id == cluster_id).
 
-    A fully-contracted component is a star on its minimum, and stars are
-    fixpoints of small∘large — so each round checks whether the edge set
-    changed (symmetric difference isEmpty) and stops at the first fixpoint.
-    The check is one action over the EDGE set, which is near-dup-pair-sized
-    — orders of magnitude smaller than the corpus at any scale — and
-    real dup graphs converge in 2-4 rounds, far under the worst-case
-    O(log n) the alternation guarantees on adversarial chains. max_iters
-    bounds the adversarial case; exhausting it without a fixpoint raises
-    instead of returning split clusters."""
+    Near-dup PAIRS overcount the work a dedup pass must do — the keep/drop
+    decision needs CLUSTERS (A~B, B~C must drop two docs, not settle two
+    independent pairs).
+
+    The large-star/small-star alternation (Kiveris et al., "Connected
+    Components in MapReduce and Beyond") converges in O(log n) rounds even
+    on chain graphs. A fully-contracted component is a star on its minimum,
+    and stars are fixpoints of small∘large — so each round checks whether
+    the edge set changed and stops at the first fixpoint. The check is one
+    action over the EDGE set, which is near-dup-pair-sized — orders of
+    magnitude smaller than the corpus at any scale — and real dup graphs
+    converge in 2-4 rounds. max_iters bounds the adversarial case;
+    exhausting it without a fixpoint raises RuntimeError instead of
+    returning silently-wrong split clusters.
+
+    ``checkpoint='reliable'`` swaps the per-round ``localCheckpoint`` for
+    reliable checkpointing (requires ``sparkContext.setCheckpointDir``) so
+    a lost executor cannot kill a long run.
+    """
     edges = _ckpt(
         pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .filter(F.col("u") != F.col("v"))
@@ -725,7 +639,7 @@ def _dedup_clusters_star(pairs: DataFrame, max_iters: int, checkpoint: str) -> D
         edges, n_edges = nxt, n_nxt
     if not converged:
         raise RuntimeError(
-            f"dedup_clusters(star) not a fixpoint after {max_iters} rounds — "
+            f"dedup_clusters not a fixpoint after {max_iters} rounds — "
             "raise max_iters (expected O(log n) convergence)"
         )
     sym = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))

@@ -73,30 +73,12 @@ def register_python_functions(spark: SparkSession) -> list[str]:
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
+    from espkinesis_spark.functions.dedup import simhash_signer
+
+    sign = simhash_signer()
+
     def _simhash_kernel(text):
-        # same kernel contract as functions.dedup._simhash_numpy
-        import hashlib
-        import re
-
-        import numpy as np
-
-        from espkinesis_spark.functions import common as C
-
-        split_re = re.compile(C.TOKEN_SPLIT_RE)
-        bits = C.SIMHASH_BITS
-        weights = np.int64(1) << np.arange(bits, dtype=np.int64)
-        out = []
-        for t in text:
-            counts: dict[str, int] = {}
-            for tok in split_re.split(t.strip()):
-                counts[tok] = counts.get(tok, 0) + 1
-            s = np.zeros(bits, dtype=np.int64)
-            for tok, c in counts.items():
-                d = hashlib.md5(tok.encode("utf-8")).digest()[: (bits + 7) // 8]
-                bv = np.unpackbits(np.frombuffer(d, dtype=np.uint8))[:bits].astype(np.int64)
-                s += c * (2 * bv - 1)
-            out.append(int(weights[s > 0].sum()))
-        return pd.Series(out)
+        return pd.Series([sign(t) for t in text], dtype="int64")
 
     # real annotation objects: `from __future__ import annotations` would
     # stringify inline hints, which pyspark's signature inspection rejects

@@ -3,19 +3,19 @@
 Three paths, same semantics (cosine rounded to 6 dp before any argmax /
 threshold; ties break to the lowest neighbor id):
 
-* brute-force top-k — the correctness baseline. Query-set x corpus join;
-  fine when the query set is bounded or the corpus side is broadcastable.
-* threshold near-dup — all pairs above a cosine threshold; brute force at
-  test scale, blocked at real scale.
+* brute-force top-k — the exact baseline. The (bounded) query set is
+  broadcast into a matmul over each Arrow batch of the corpus.
+* threshold near-dup — all pairs above a cosine threshold; one broadcast
+  matmul while the corpus fits, blocked at real scale.
 * IVF — deterministic coarse quantization: assign every vector to its
   nearest centroid, probe only the closest IVF_NPROBE centroid buckets.
   The scale path: candidate set shrinks by ~ (nprobe / n_centroids), the
   assignment pass is a broadcast join against the (small) centroid set,
   and the probe is an equi-join on centroid id — no all-pairs anywhere.
 
-Dot products run JVM-side via zip_with/aggregate in whole-stage codegen.
-For very wide vectors (>~1k dims) a pandas_udf over Arrow batches with
-numpy matmul wins — keep the same API and swap the kernel.
+The exact kernels (top-k, near-dup, IVF assignment) are Arrow-batched
+numpy matmuls; the candidate-scoring joins compute dot products JVM-side
+via zip_with/aggregate in whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -102,52 +102,23 @@ def cosine(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
 # (PQ subvectors w=4; the W=16 ts-similarity distance).
 
 
-def _pairs(queries: DataFrame, corpus: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """(query x corpus) pairs with rounded cosine, self-pairs excluded.
-
-    The corpus side is hinted broadcast when Spark's size estimate allows;
-    for corpora beyond broadcast size, pre-filter with IVF (below) instead.
-    """
-    q = with_norm(queries, vec_col).select(
-        F.col("vec_id").alias("vec_id"),
-        F.col(vec_col).alias("__qv"),
-        F.col("__norm").alias("__qn"),
-    )
-    c = with_norm(corpus, vec_col).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        F.col("__norm").alias("__cn"),
-    )
-    return (
-        q.join(c, q.vec_id != c.neighbor_id)
-        .withColumn("cos", cosine(F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn")))
-        .select("vec_id", "neighbor_id", "cos")
-    )
-
-
 def topk_bruteforce(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = C.ANN_TOPK,
     vec_col: str = "embedding",
-    impl: str = "numpy",
 ) -> DataFrame:
     """Exact top-k neighbors per query vector: (vec_id, rnk, neighbor_id, cos).
 
-    ``impl='numpy'`` (default): broadcast the (small) query matrix, BLAS
-    matmul against each Arrow batch of the corpus, keep a local top-k per
-    query per batch, then one tiny window merge over batches*k candidates —
-    the scan over the corpus is a pure map, so the shape holds at any corpus
-    size. ``impl='sql'`` keeps the pure-Catalyst pairwise join.
+    Broadcast the (small) query matrix, BLAS matmul against each Arrow batch
+    of the corpus, keep a local top-k per query per batch, then one tiny
+    window merge over batches*k candidates — the scan over the corpus is a
+    pure map, so the shape holds at any corpus size.
     """
     w = Window.partitionBy("vec_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    pairs = (
-        _topk_candidates_numpy(queries, corpus, k, vec_col)
-        if impl == "numpy"
-        else _pairs(queries, corpus, vec_col)
-    )
     return (
-        pairs.withColumn("rnk", F.row_number().over(w).cast("long"))
+        _topk_candidates_numpy(queries, corpus, k, vec_col)
+        .withColumn("rnk", F.row_number().over(w).cast("long"))
         .filter(F.col("rnk") <= k)
         .select("vec_id", "rnk", "neighbor_id", "cos")
     )
@@ -158,7 +129,7 @@ def _topk_candidates_numpy(
 ) -> DataFrame:
     """Per-batch local top-k candidates (vec_id, neighbor_id, cos): the
     global merge only sees batches*k rows per query. Ties keep the lowest
-    neighbor_id, matching the SQL path."""
+    neighbor_id."""
     import numpy as np
     import pandas as pd
 
@@ -218,48 +189,29 @@ NEARDUP_BROADCAST_BYTES = 64 << 20
 NEARDUP_MAX_BLOCKS = 64
 
 
-def neardup_cosine(
-    vecs: DataFrame, threshold: float = C.NEARDUP_COSINE, impl: str = "auto"
-) -> DataFrame:
+def neardup_cosine(vecs: DataFrame, threshold: float = C.NEARDUP_COSINE) -> DataFrame:
     """All pairs (a < b) with rounded cosine >= threshold.
 
-    ``impl='auto'`` (default): pick the single-broadcast matmul kernel when
-    Catalyst's size estimate fits ``NEARDUP_BROADCAST_BYTES``, otherwise the
-    blocked path (corpus scored block-pair by block-pair, entirely on
-    executors — no corpus data ever reaches the driver) — same output
-    either way (equivalence-tested). A 100 TB embedding table can never be
-    collected to the driver, so auto-routing on the plan estimate is what
-    makes this the default-safe entry point.
-    ``impl='numpy'``: force the broadcast kernel — each Arrow batch computes
-    a (batch x corpus) BLAS matmul, ~50x the expression-tree dot product.
-    ``impl='sql'`` keeps the pure-Catalyst pairwise join (oracle's shape).
+    Routes on Catalyst's size estimate: the single-broadcast matmul kernel
+    (each Arrow batch computes a (batch x corpus) BLAS matmul) when it fits
+    ``NEARDUP_BROADCAST_BYTES``, otherwise the blocked path (corpus scored
+    block-pair by block-pair, entirely on executors — no corpus data ever
+    reaches the driver) — same output either way (equivalence-tested). A
+    100 TB embedding table can never be collected to the driver, so
+    routing on the plan estimate is what makes this the default-safe entry
+    point.
     """
-    if impl == "auto":
-        size = _plan_size_bytes(vecs)
-        if size is not None and size <= NEARDUP_BROADCAST_BYTES:
-            return _neardup_cosine_numpy(vecs, threshold)
-        import math
-
-        n_blocks = (
-            min(NEARDUP_MAX_BLOCKS, max(2, math.ceil(size / NEARDUP_BROADCAST_BYTES)))
-            if size is not None
-            else 8
-        )
-        return neardup_cosine_blocked(vecs, threshold, n_blocks)
-    if impl == "numpy":
+    size = _plan_size_bytes(vecs)
+    if size is not None and size <= NEARDUP_BROADCAST_BYTES:
         return _neardup_cosine_numpy(vecs, threshold)
-    a = with_norm(vecs).select(
-        F.col("vec_id").alias("vec_a"), F.col("embedding").alias("__av"), F.col("__norm").alias("__an")
+    import math
+
+    n_blocks = (
+        min(NEARDUP_MAX_BLOCKS, max(2, math.ceil(size / NEARDUP_BROADCAST_BYTES)))
+        if size is not None
+        else 8
     )
-    b = with_norm(vecs).select(
-        F.col("vec_id").alias("vec_b"), F.col("embedding").alias("__bv"), F.col("__norm").alias("__bn")
-    )
-    return (
-        a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .withColumn("cos", cosine(F.col("__av"), F.col("__bv"), F.col("__an"), F.col("__bn")))
-        .filter(F.col("cos") >= threshold)
-        .select("vec_a", "vec_b", "cos")
-    )
+    return neardup_cosine_blocked(vecs, threshold, n_blocks)
 
 
 def _neardup_cosine_numpy(probe: DataFrame, threshold: float) -> DataFrame:
@@ -528,45 +480,22 @@ def knn_graph(
     )
 
 
-def ivf_assign(vecs: DataFrame, centroids: DataFrame, impl: str = "numpy") -> DataFrame:
+def ivf_assign(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
     """Assign every vector to its nearest centroid (rounded cosine,
     tie → lowest centroid id).
 
-    ``impl='numpy'`` (default): broadcast the centroid matrix, one matmul +
-    argmax per Arrow batch — the assignment is a pure map over the corpus,
-    which is what makes IVF the scale path in the first place.
-    ``impl='sql'``: broadcast cross join + window (the oracle's shape).
+    Broadcast the centroid matrix, one matmul + argmax per Arrow batch —
+    the assignment is a pure map over the corpus, which is what makes IVF
+    the scale path in the first place.
     """
-    if impl == "numpy":
-        return _ivf_assign_numpy(vecs, centroids)
-    pairs = (
-        with_norm(vecs)
-        .select("vec_id", F.col("embedding").alias("__v"), F.col("__norm").alias("__vn"))
-        .crossJoin(
-            F.broadcast(
-                with_norm(centroids).select(
-                    F.col("vec_id").alias("centroid_id"),
-                    F.col("embedding").alias("__c"),
-                    F.col("__norm").alias("__cn"),
-                )
-            )
-        )
-        .withColumn("cos", cosine(F.col("__v"), F.col("__c"), F.col("__vn"), F.col("__cn")))
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos").desc(), F.col("centroid_id").asc())
-    return (
-        pairs.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("vec_id", "centroid_id")
-    )
+    return _ivf_assign_numpy(vecs, centroids)
 
 
 def _ivf_assign_numpy(
     vecs: DataFrame, centroids: DataFrame, keep_vec: bool = False
 ) -> DataFrame:
     """Matmul assignment kernel. Centroid ids are sorted ascending so a
-    plain argmax over rounded cosines lands on the lowest id at ties,
-    matching the SQL path.
+    plain argmax over rounded cosines lands on the lowest id at ties.
 
     ``keep_vec=True`` passes the embedding column through the kernel
     unchanged (r16): kmeans_train's update step previously JOINED the

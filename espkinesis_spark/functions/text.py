@@ -1,9 +1,16 @@
 """Text-analysis operators over the documents table.
 
-All JVM-side column expressions (no Python UDFs) — these run inside
-whole-stage codegen and scale linearly with document count: no shuffle at
-all for the per-document ops (tokenize/stats/lang-id/fingerprint), one
-key-partitioned shuffle for any downstream group-by.
+Most operators are JVM-side column expressions that run inside whole-stage
+codegen and scale linearly with document count: no shuffle at all for the
+per-document ops (tokenize/stats/pii), one key-partitioned shuffle for any
+downstream group-by. The exceptions:
+
+* ``lang_id``, ``fingerprints`` and ``frequent_values``'s candidate pass
+  are Arrow-batched ``mapInPandas`` kernels (Python workers; still pure
+  maps, no shuffle). The per-document kernels tokenize with
+  ``common.split_tokens``, the Python form of ``tokens()``.
+* BPE training (``bpe_train``, and ``bpe_encode`` on top of it) runs one
+  driver-side argmax job per merge round.
 """
 
 from __future__ import annotations
@@ -24,39 +31,16 @@ def _stopword_hits(toks: Column, words: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(wl, t)))
 
 
-def lang_id(df: DataFrame, text_col: str = "text", impl: str = "numpy") -> DataFrame:
+def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Heuristic language ID: stopword-hit counts per language, argmax with
     deterministic tie order (en > es > de > fr), 'und' when no hits.
 
-    ``impl='numpy'`` (default) counts hits via set lookups in one Arrow
-    batch pass (a pure map); ``impl='sql'`` keeps the columnar expression
-    form (4 array-filter passes over the token array). Swap in a real model
-    via the same mapInPandas shape without changing the interface.
+    Counts hits via set lookups in one Arrow batch pass (a pure map). Swap
+    in a real model via the same mapInPandas shape without changing the
+    interface.
     """
-    if impl == "numpy":
-        return _lang_id_numpy(df, text_col)
-    toks = tokens(F.col(text_col))
-    counts = {lg: _stopword_hits(toks, ws) for lg, ws in C.LANG_STOPWORDS.items()}
-    en, es, de, fr = (counts[lg] for lg in C.LANG_ORDER)
-    pred = (
-        F.when(F.greatest(en, es, de, fr) == 0, "und")
-        .when(en >= F.greatest(es, de, fr), "en")
-        .when(es >= F.greatest(de, fr), "es")
-        .when(de >= fr, "de")
-        .otherwise("fr")
-    )
-    return df.withColumn("lang_pred", pred)
-
-
-def _lang_id_numpy(df: DataFrame, text_col: str) -> DataFrame:
-    """Kernel form of ``lang_id`` (identical tie semantics)."""
-    import re
-
-    import pandas as pd
-
     from pyspark.sql import types as T
 
-    split_re = re.compile(C.TOKEN_SPLIT_RE)
     stop = {lg: frozenset(ws) for lg, ws in C.LANG_STOPWORDS.items()}
     order = C.LANG_ORDER
 
@@ -64,7 +48,7 @@ def _lang_id_numpy(df: DataFrame, text_col: str) -> DataFrame:
         for pdf in batches:
             preds = []
             for t in pdf[text_col]:
-                toks = split_re.split(t.strip())
+                toks = C.split_tokens(t)
                 counts = [sum(1 for x in toks if x in stop[lg]) for lg in order]
                 best = max(counts)
                 preds.append("und" if best == 0 else order[counts.index(best)])
@@ -125,7 +109,7 @@ def token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def fingerprints(df: DataFrame, text_col: str = "text", impl: str = "numpy") -> DataFrame:
+def fingerprints(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Two document fingerprints:
 
     * ``fp_key``  — OpenRefine-style key collision fingerprint: md5 of the
@@ -133,39 +117,21 @@ def fingerprints(df: DataFrame, text_col: str = "text", impl: str = "numpy") -> 
     * ``fp_roll`` — polynomial rolling hash ``h = (h*131 + code) % 1e9+7``
       over the first 64 characters (order-sensitive prefix identity).
 
-    ``impl='numpy'`` (default): Arrow-batched kernel. The expression form
-    (``impl='sql'``) unrolls a 64-step fold into one enormous codegen
-    method whose JIT compile intermittently stalls for seconds — the
-    kernel is also a pure map, so nothing is lost at scale.
+    Arrow-batched kernel, a pure map. UTF-8 byte order (the oracle's
+    list_sort) equals code-point order (Python sorted), so the key
+    fingerprint matches for any input. The expression form of the 64-step
+    fold unrolls into one enormous codegen method whose JIT compile
+    intermittently stalls for seconds.
     """
-    if impl == "numpy":
-        return _fingerprints_numpy(df, text_col)
-    toks = tokens(F.lower(F.col(text_col)))
-    fp_key = F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(toks))))
-    fp_roll = F.expr(
-        f"aggregate(transform(sequence(1, least(length({text_col}), {C.ROLLING_MAX_CHARS})),"
-        f" i -> ascii(substring({text_col}, i, 1))),"
-        f" CAST(0 AS BIGINT), (h, c) -> (h * {C.ROLLING_BASE} + c) % {C.ROLLING_MOD})"
-    )
-    return df.select("doc_id", fp_key.alias("fp_key"), fp_roll.alias("fp_roll"))
-
-
-def _fingerprints_numpy(df: DataFrame, text_col: str) -> DataFrame:
-    """Kernel form of ``fingerprints`` — bit-identical to the SQL path.
-    UTF-8 byte order (Spark array_sort) equals code-point order (Python
-    sorted), so the key fingerprint matches for any input."""
     import hashlib
-    import re
 
     import pandas as pd
-
-    split_re = re.compile(C.TOKEN_SPLIT_RE)
 
     def run(batches):
         for pdf in batches:
             keys, rolls = [], []
             for t in pdf[text_col]:
-                uniq = sorted(set(split_re.split(t.lower().strip())))
+                uniq = sorted(set(C.split_tokens(t.lower())))
                 keys.append(hashlib.md5(" ".join(uniq).encode("utf-8")).hexdigest())
                 h = 0
                 for ch in t[: C.ROLLING_MAX_CHARS]:
@@ -974,7 +940,7 @@ def quality_gate_stateless(df: DataFrame, text_col: str = "text") -> DataFrame:
     the naive O(distinct·n) distinct×filter scan, measured 5.3× faster at
     the 30× ladder (52 s → 9.8 s for 150k docs). Token arrays are
     materialized as real columns first (nested-lambda re-evaluation
-    hazard, NOTES round 6).
+    hazard, NOTES.md).
     """
     toks = tokens(F.col(text_col))
     t = df.withColumn("__toks", toks).withColumn(

@@ -153,9 +153,28 @@ def test_dedup_clusters_chain_and_disjoint(spark):
     assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (5, 1), (10, 10), (11, 10)}
 
 
-def test_dedup_clusters_star_equals_minlabel(spark):
-    """Star alternation and min-label propagation must agree on a mixed
-    graph (chains + shared hubs + disjoint components)."""
+def _components_model(pairs):
+    """Union-find reference for dedup_clusters: (doc_id, cluster_id) with
+    cluster_id = the component minimum, for every doc named in a pair."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)  # the root stays the minimum
+    return {(x, find(x)) for x in parent}
+
+
+def test_dedup_clusters_equals_union_find_model(spark):
+    """Star alternation equals the union-find model on a mixed graph
+    (chains + shared hubs + disjoint components)."""
     edges = (
         [(i, i + 1) for i in range(100, 120)]  # 21-node chain
         + [(200, 200 + i) for i in range(1, 8)]  # star hub
@@ -163,29 +182,47 @@ def test_dedup_clusters_star_equals_minlabel(spark):
         + [(7, 400), (400, 8)]  # bridge joining small ids
     )
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    star = {(r["doc_id"], r["cluster_id"]) for r in dedup.dedup_clusters(pairs, impl="star").collect()}
-    minl = {(r["doc_id"], r["cluster_id"]) for r in dedup.dedup_clusters(pairs, impl="minlabel").collect()}
-    assert star == minl and len(star) > 0
+    got = {(r["doc_id"], r["cluster_id"]) for r in dedup.dedup_clusters(pairs).collect()}
+    assert got == _components_model(edges)
+
+
+def test_dedup_clusters_property_union_find(spark):
+    """Random ``doc_a < doc_b`` pair lists — the shape every pair source
+    emits — cluster exactly as the union-find model says."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    node = st.integers(0, 40)
+    pair = st.tuples(node, node).filter(lambda p: p[0] != p[1]).map(lambda p: tuple(sorted(p)))
+
+    @settings(max_examples=10, deadline=None)
+    @given(st.lists(pair, max_size=40))
+    def run(edges):
+        pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+        got = {(r["doc_id"], r["cluster_id"]) for r in dedup.dedup_clusters(pairs).collect()}
+        assert got == _components_model(edges)
+
+    run()
 
 
 def test_dedup_clusters_star_handles_long_chain_in_log_rounds(spark):
     """A 64-node chain has diameter 63; the star alternation must converge
-    inside its ceil(log2 n)+2 round budget (min-label would need 63)."""
+    in O(log n) rounds, far under the default budget."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 64)], "doc_a long, doc_b long"
     )
-    got = {(r["doc_id"], r["cluster_id"]) for r in dedup.dedup_clusters(pairs, impl="star").collect()}
+    got = {(r["doc_id"], r["cluster_id"]) for r in dedup.dedup_clusters(pairs).collect()}
     assert got == {(i, 1) for i in range(1, 65)}
 
 
-def test_dedup_clusters_minlabel_raises_when_budget_exhausted(spark):
-    import pytest
-
+def test_dedup_clusters_raises_when_not_a_fixpoint(spark):
+    """An exhausted round budget raises instead of returning split
+    clusters: the 64-node chain is no fixpoint after one round."""
     pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 12)], "doc_a long, doc_b long"
+        [(i, i + 1) for i in range(1, 64)], "doc_a long, doc_b long"
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.dedup_clusters(pairs, impl="minlabel", max_iters=3)
+    with pytest.raises(RuntimeError, match="not a fixpoint"):
+        dedup.dedup_clusters(pairs, max_iters=1)
 
 
 def test_dedup_clusters_reliable_checkpoint(spark, tmp_path):

@@ -13,9 +13,10 @@ def _pairs_set(df):
     return {(r["vec_a"], r["vec_b"], r["cos"]) for r in df.collect()}
 
 
-def test_blocked_neardup_equals_broadcast(spark, sf_dir):
+def test_blocked_neardup_equals_broadcast(spark, sf_dir, monkeypatch):
     vecs = load_table(spark, sf_dir, "embeddings")
-    full = _pairs_set(similarity.neardup_cosine(vecs, impl="numpy"))
+    monkeypatch.setattr(similarity, "NEARDUP_BROADCAST_BYTES", 1 << 60)
+    full = _pairs_set(similarity.neardup_cosine(vecs))
     blocked = _pairs_set(similarity.neardup_cosine_blocked(vecs, n_blocks=3))
     assert blocked == full and len(full) > 0
 
@@ -35,18 +36,23 @@ def test_blocked_neardup_scores_on_executors(spark, sf_dir):
 
 
 def test_neardup_auto_routes_by_size(spark, sf_dir, monkeypatch):
-    """Default impl='auto' must pick the blocked path once the plan-size
+    """neardup_cosine must pick the blocked path once the plan-size
     estimate exceeds the broadcast budget, with identical output."""
+    from espkinesis_spark.plans import audit
+
     vecs = load_table(spark, sf_dir, "embeddings")
     size = similarity._plan_size_bytes(vecs)
     assert size is not None and size > 0  # parquet scan → real estimate
-    baseline = _pairs_set(similarity.neardup_cosine(vecs, impl="numpy"))
-    # tiny budget → auto must block (and still match)
-    monkeypatch.setattr(similarity, "NEARDUP_BROADCAST_BYTES", 1)
-    assert _pairs_set(similarity.neardup_cosine(vecs)) == baseline
-    # huge budget → auto takes the single-broadcast kernel (and matches)
+    # huge budget → the single-broadcast kernel
     monkeypatch.setattr(similarity, "NEARDUP_BROADCAST_BYTES", 1 << 60)
-    assert _pairs_set(similarity.neardup_cosine(vecs)) == baseline
+    broadcast = similarity.neardup_cosine(vecs)
+    assert "FlatMapGroupsInPandas" not in audit.physical_plan(broadcast)
+    baseline = _pairs_set(broadcast)
+    # tiny budget → the blocked path, with identical output
+    monkeypatch.setattr(similarity, "NEARDUP_BROADCAST_BYTES", 1)
+    blocked = similarity.neardup_cosine(vecs)
+    assert "FlatMapGroupsInPandas" in audit.physical_plan(blocked)
+    assert _pairs_set(blocked) == baseline and len(baseline) > 0
 
 
 def test_assign_ids_ranged_equals_window(spark, sf_dir):
