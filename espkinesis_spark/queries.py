@@ -3728,14 +3728,14 @@ def ex_asof_features(spark, sf_dir):
 
 def ex_asof_features_skew(spark, sf_dir):
     """ex_asof_features through the SKEW-SAFE kernel: the same
-    point-in-time semantics, but matching runs as a per-key
-    cogrouped-pandas searchsorted kernel (operators.core.
+    point-in-time semantics, but matching runs as a cogrouped-pandas
+    searchsorted kernel over hash buckets of the key (operators.core.
     asof_last_match_pandas) instead of join-then-reaggregate. This is
     the production shape for hot keys / dense right sides, where the
     join form amplifies the intermediate by up to lookback/granularity
     (≤365 rows per event here); the cogrouped kernel shuffles each side
-    ONCE on the key and never materializes the candidate set. Outputs
-    are identical by construction, so it shares ex_asof_features'
+    ONCE on the key's bucket and never materializes the candidate set.
+    Outputs are identical by construction, so it shares ex_asof_features'
     oracle (plus a unit equivalence test against the join form)."""
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     return asof_feature_frame(spark, sf_dir, ev, matcher="pandas")

@@ -1,18 +1,19 @@
-"""Driver-checkable streaming queries.
+"""Driver-checkable streaming queries: the registry's ``st_*`` entries.
 
-Each job replays a file source with ``trigger(availableNow=True)`` into a
-memory sink and returns the drained result as a batch DataFrame. The three
-jobs are the streaming forms of batch queries with DuckDB oracles, so the
-driver's correctness gate checks streaming semantics too:
+Each job replays a test table as a file stream with
+``trigger(availableNow=True)`` and drains the result back as a batch
+DataFrame, so the driver's correctness gate checks streaming semantics
+against the same DuckDB oracles as the batch queries, e.g.:
 
   * latest_per_user_stream  == DQ-07 (last-value-per-key, A2/A3)
   * window_counts_stream    == hourly tumbling counts (A4/T3 analog)
   * override_asof_stream    == DQ-09 (stateful as-of, A5) via
-    applyInPandasWithState
+    applyInPandasWithState over hash buckets of the user
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import tempfile
 
@@ -295,11 +296,7 @@ def _drain_to_parquet(
 # resizing). r17 measurement note: at sf0.1 the JVM-aggregate legs
 # measured FLAT across 1/2/4/8 partitions (the per-store overhead is no
 # longer the floor after the r13 32->8 cut), so for them the derivation
-# is a scale-story parameterization, not a local win. Python stateful
-# operators are not flat: each state partition is one
-# applyInPandasWithState task, so 1 partition runs every key in one
-# worker -- st_override_asof measured 8.26 s at 1 partition against
-# 3.97 s at 8.
+# is a scale-story parameterization, not a local win.
 STATE_ROWS_PER_PARTITION = 250_000
 
 
@@ -318,6 +315,21 @@ def _state_partitions(spark: SparkSession, source_rows: int | None) -> str:
     if source_rows is None:
         return str(min(8, cores))
     return str(max(1, min(-(-source_rows // STATE_ROWS_PER_PARTITION), 4 * cores)))
+
+
+@contextlib.contextmanager
+def _state_layout(spark: SparkSession, source_rows: int | None):
+    """Pin shuffle.partitions to ``_state_partitions`` while a stateful
+    query is built (``st.asof_override`` sizes its buckets from it) and
+    started (the query keeps it as its state-partition count)."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", _state_partitions(spark, source_rows)
+    )
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def _drain_complete_to_parquet(
@@ -346,11 +358,7 @@ def _drain_complete_to_parquet(
     base = os.path.join(tempfile.gettempdir(), "espk_drain", app_id, name)
     shutil.rmtree(base, ignore_errors=True)
     out_dir, ckpt = os.path.join(base, "data"), os.path.join(base, "ckpt")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", _state_partitions(spark, source_rows)
-    )
-    try:
+    with _state_layout(spark, source_rows):
         query = (
             df.writeStream.outputMode("complete")
             .foreachBatch(
@@ -363,8 +371,6 @@ def _drain_complete_to_parquet(
         )
         query.awaitTermination()
         _record_stream_plan(query)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     os.makedirs(out_dir, exist_ok=True)
     return spark.read.schema(df.schema).parquet(out_dir)
 
@@ -382,18 +388,7 @@ def _drain_to_memory(
     for q in spark.streams.active:
         if q.name == name:
             q.stop()
-    # Stateful operators pay a fixed per-partition state-store cost each
-    # micro-batch, so the partition count must track key cardinality, not
-    # the session default (measured 3x on the replay jobs: 32 -> 8
-    # partitions in r13; r17 derives it from the source's footer row
-    # count via _state_partitions — scale-adaptive, env-overridable).
-    # shuffle.partitions is captured at query start, so the temporary
-    # override pins only this query's state layout.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", _state_partitions(spark, source_rows)
-    )
-    try:
+    with _state_layout(spark, source_rows):
         query = (
             df.writeStream.outputMode(mode)
             .format("memory")
@@ -403,8 +398,6 @@ def _drain_to_memory(
         )
         query.awaitTermination()
         _record_stream_plan(query)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)
 
 
@@ -487,18 +480,6 @@ def _table_rows(sf_dir: str, table: str) -> int | None:
     return _rows_of(files) if files else None
 
 
-def _source_bytes(path: str) -> int:
-    """On-disk bytes of a parquet source (os.path.getsize on a directory
-    returns the ~4 KB inode size, which would silently pin the router to
-    the memory sink forever — sum the files underneath instead)."""
-    return _bytes_of(_source_files(path))
-
-
-def _source_rows(path: str) -> int:
-    """Exact row count of a parquet source, via ``_rows_of``."""
-    return _rows_of(_source_files(path))
-
-
 def latest_per_user_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming A2/A3: last event per user via max_by aggregation
     (complete mode). Ties on ts break by event_id, matching DQ-07."""
@@ -521,10 +502,12 @@ def window_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def override_asof_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming A5: per-key as-of state via applyInPandasWithState."""
-    src = _events_stream(spark, sf_dir)
-    out = st.asof_override(src)
-    return _drain_to_memory(out, "st_override_asof_sink", "append", source_rows=_table_rows(sf_dir, "events"))
+    """Streaming A5: as-of state per user hash bucket via
+    applyInPandasWithState."""
+    rows = _table_rows(sf_dir, "events")
+    with _state_layout(spark, rows):
+        out = st.asof_override(_events_stream(spark, sf_dir))
+    return _drain_to_memory(out, "st_override_asof_sink", "append", source_rows=rows)
 
 
 def session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -4,26 +4,32 @@ The one genuinely stateful construct in the reference is the override
 session (A5): a command patches a target's channels and sets an absolute
 expiry; frames re-use the override until it lapses, checked lazily at frame
 time (ref: src/transmitter/main.cpp:84-87,215-217). Both processors here use
-``applyInPandasWithState`` — per-key state in the state store, Arrow-batched
+``applyInPandasWithState`` — keyed state in the state store, Arrow-batched
 user code, event-time logic so replays are deterministic.
 
-Scale: state is per key (target/user); the state store shards by key across
-executors (RocksDB provider in production: set
-``spark.sql.streaming.stateStore.providerClass``). Per-key state is bounded
-(pruned to the lookback horizon), so 1000 executors hold 1000th of the keys
-each — no global state anywhere.
+Scale: the override session keys state by target, the as-of matcher by a
+hash bucket of the user (one ``operators.core.asof_window_max`` call per
+bucket pays the framework's per-group cost once). The store shards state
+by key and prunes it to the lookback horizon, so 1000 executors hold
+1000th of the keys each — no global state anywhere.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from espkinesis_spark.operators.core import asof_window_max, epoch_micros
+
 US_PER_HOUR = 3_600_000_000
+# several per state partition for balance, few for the per-group cost
+ASOF_BUCKETS_PER_PARTITION = 8
 
 ASOF_OUTPUT_SCHEMA = T.StructType(
     [
@@ -31,52 +37,61 @@ ASOF_OUTPUT_SCHEMA = T.StructType(
         T.StructField("active_override", T.LongType()),
     ]
 )
+# one bucket's purchases, plus the bucket count its key was hashed with
 ASOF_STATE_SCHEMA = T.StructType(
     [
-        T.StructField("p_ts", T.ArrayType(T.LongType())),
-        T.StructField("p_id", T.ArrayType(T.LongType())),
+        T.StructField("n_buckets", T.LongType()),
+        T.StructField("user_id", T.ArrayType(T.LongType())),
+        T.StructField("ts", T.ArrayType(T.LongType())),
+        T.StructField("event_id", T.ArrayType(T.LongType())),
     ]
 )
 
 
-def _make_asof_fn(late_slack_us: int):
+def _make_asof_fn(late_slack_us: int, n_buckets: int):
     def _asof_fn(
         key, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        """Per-user as-of matcher: for each click, the max purchase event_id
-        with purchase_ts in (click_ts - 1h, click_ts]. Purchases persist in
-        state (pruned to the 1h horizon + late slack) so late batches
-        continue correctly."""
-        df = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-        p_ts, p_id = (list(state.get[0]), list(state.get[1])) if state.exists else ([], [])
-        out_ids: list[int] = []
-        out_over: list[int | None] = []
-        max_ts = 0
-        for row in df.itertuples():
-            t_us = row.ts.value // 1000  # pandas ns -> µs
-            max_ts = max(max_ts, t_us)
-            if row.event_type == "purchase":
-                p_ts.append(t_us)
-                p_id.append(int(row.event_id))
-            elif row.event_type == "click":
-                best = None
-                for pt, pid in zip(p_ts, p_id):
-                    if pt <= t_us and pt > t_us - US_PER_HOUR:
-                        best = pid if best is None else max(best, pid)
-                out_ids.append(int(row.event_id))
-                out_over.append(best)
-        horizon = max_ts - US_PER_HOUR - late_slack_us
-        keep = [(a, b) for a, b in zip(p_ts, p_id) if a > horizon]
-        state.update(([a for a, _ in keep], [b for _, b in keep]))
-        yield pd.DataFrame(
-            {"event_id": out_ids, "active_override": pd.array(out_over, dtype="Int64")}
+        """Per click, the max same-user purchase event_id in (click_ts - 1h,
+        click_ts]; state keeps the bucket's purchases within horizon + slack."""
+        df = pd.concat(list(pdfs))
+        stored, *purchases = state.get if state.exists else (n_buckets, [], [], [])
+        if stored != n_buckets:
+            raise RuntimeError(
+                f"asof_override state was hashed into {stored} buckets, this query"
+                f" into {n_buckets}: resume with its first spark.sql.shuffle.partitions"
+            )
+        ts = epoch_micros(df["ts"])
+        uid, eid = df["user_id"].to_numpy(), df["event_id"].to_numpy()
+        ok = (df["user_id"].notna() & df["ts"].notna()).to_numpy()
+        click = (df["event_type"] == "click").to_numpy()
+        buy = ok & ~click & df["event_id"].notna().to_numpy()
+        p_uid, p_ts, p_id = (
+            np.concatenate([np.asarray(old, dtype=np.int64), new]).astype(np.int64)
+            for old, new in zip(purchases, (uid[buy], ts[buy], eid[buy]))
         )
+        n = int(click.sum())
+        codes = pd.factorize(np.concatenate([uid[click], p_uid]))[0]
+        lkey = np.where(ok[click], codes[:n], -1)
+        over = asof_window_max(lkey, ts[click], codes[n:], p_ts, p_id, US_PER_HOUR)
+        keep = p_ts > ts.max(initial=0) - US_PER_HOUR - late_slack_us
+        state.update(
+            (n_buckets, p_uid[keep].tolist(), p_ts[keep].tolist(), p_id[keep].tolist())
+        )
+        yield pd.DataFrame({"event_id": eid[click], "active_override": over})
 
     return _asof_fn
 
 
 def asof_override(events: DataFrame, late_slack: str = "1 hour") -> DataFrame:
     """A5 streaming form over an events stream (click/purchase rows).
+
+    State is keyed by ``pmod(xxhash64(user_id), n_buckets)``: there are
+    ``ASOF_BUCKETS_PER_PARTITION`` buckets for each of the session's
+    ``spark.sql.shuffle.partitions`` at call time, the state-partition
+    count a query started from it keeps. A resume that would hash into a
+    different bucket count raises. A purchase at exactly a click's ts
+    counts, whatever its event_id (the oracle's ``o.ts <= e.ts``).
 
     Ordering assumption: state is pruned relative to each batch's max event
     time (applyInPandasWithState exposes no per-group watermark), so a click
@@ -87,11 +102,15 @@ def asof_override(events: DataFrame, late_slack: str = "1 hour") -> DataFrame:
     batch replays (the driver's availableNow drain) are exact regardless.
     """
     slack_us = int(pd.Timedelta(late_slack).value // 1000)
-    filtered = events.filter(events.event_type.isin("click", "purchase")).select(
-        "user_id", "ts", "event_id", "event_type"
+    n_buckets = ASOF_BUCKETS_PER_PARTITION * int(
+        events.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
-    return filtered.groupBy("user_id").applyInPandasWithState(
-        _make_asof_fn(slack_us),
+    bucket = F.pmod(F.xxhash64("user_id"), F.lit(n_buckets)).alias("bucket")
+    filtered = events.filter(events.event_type.isin("click", "purchase")).select(
+        bucket, "user_id", "ts", "event_id", "event_type"
+    )
+    return filtered.groupBy("bucket").applyInPandasWithState(
+        _make_asof_fn(slack_us, n_buckets),
         outputStructType=ASOF_OUTPUT_SCHEMA,
         stateStructType=ASOF_STATE_SCHEMA,
         outputMode="append",
@@ -119,21 +138,24 @@ OVERRIDE_STATE_SCHEMA = T.StructType(
 )
 
 
-def _override_fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-    """Override session per target (ref semantics, event-time):
+def _override_step(
+    key, patch: list[int] | None, expiry: int, pdf: pd.DataFrame
+) -> tuple[list[int] | None, int, pd.DataFrame]:
+    """One override-session step for one target, shared by both state APIs
+    (ref semantics, event time, rows in (ts, seq) order):
 
     * command row -> store (patch, expiry = cmd_ts + duration ms)
       (ref: src/transmitter/main.cpp:215-217)
     * frame row   -> if frame_ts < expiry apply patch (-1 keeps live value,
       ref :190-213), else the override has lapsed (lazy check, ref :84-87).
     """
-    df = pd.concat(list(pdfs)).sort_values(["ts", "seq"])
-    patch, expiry = (state.get[0], state.get[1]) if state.exists else (None, -1)
+    # plain Python ints: numpy scalars don't survive the state round trip
+    patch = None if patch is None else [int(c) for c in patch]
+    expiry = int(expiry)
     rows: list[tuple] = []
-    for row in df.itertuples():
+    for row in pdf.sort_values(["ts", "seq"]).itertuples():
         t_us = row.ts.value // 1000
         if row.kind == "command":
-            # plain Python ints — numpy scalars don't survive the return trip
             patch = [int(c) for c in row.channels]
             expiry = t_us + int(row.duration) * 1000
         else:  # frame
@@ -143,10 +165,14 @@ def _override_fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterat
                 rows.append((int(key[0]), row.ts, int(row.frame_id), merged, True))
             else:
                 rows.append((int(key[0]), row.ts, int(row.frame_id), live, False))
+    return patch, expiry, pd.DataFrame(rows, columns=OVERRIDE_OUTPUT_SCHEMA.names)
+
+
+def _override_fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+    patch, expiry = state.get if state.exists else (None, -1)
+    patch, expiry, out = _override_step(key, patch, expiry, pd.concat(list(pdfs)))
     state.update((patch, expiry))
-    yield pd.DataFrame(
-        rows, columns=["target_id", "ts", "frame_id", "channels", "overridden"]
-    )
+    yield out
 
 
 def override_sessions(tagged: DataFrame) -> DataFrame:
@@ -190,32 +216,10 @@ def override_sessions_tws(tagged: DataFrame) -> DataFrame:
             self._state = handle.getValueState("override", OVERRIDE_STATE_SCHEMA)
 
         def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            df = pd.concat(list(rows)).sort_values(["ts", "seq"])
-            if self._state.exists():
-                patch, expiry = self._state.get()
-                patch = list(patch) if patch is not None else None
-            else:
-                patch, expiry = None, -1
-            out: list[tuple] = []
-            for row in df.itertuples():
-                t_us = row.ts.value // 1000
-                if row.kind == "command":
-                    patch = [int(c) for c in row.channels]
-                    expiry = t_us + int(row.duration) * 1000
-                else:
-                    live = [int(v) for v in row.channels]
-                    if patch is not None and t_us < expiry:
-                        merged = [c if c != -1 else v for c, v in zip(patch, live)]
-                        out.append((int(key[0]), row.ts, int(row.frame_id), merged, True))
-                    else:
-                        out.append((int(key[0]), row.ts, int(row.frame_id), live, False))
-            self._state.update((patch, int(expiry)))
-            yield pd.DataFrame(
-                out, columns=["target_id", "ts", "frame_id", "channels", "overridden"]
-            )
-
-        def close(self) -> None:
-            pass
+            patch, expiry = self._state.get() if self._state.exists() else (None, -1)
+            patch, expiry, out = _override_step(key, patch, expiry, pd.concat(list(rows)))
+            self._state.update((patch, expiry))
+            yield out
 
     return tagged.groupBy("target_id").transformWithStateInPandas(
         statefulProcessor=OverrideProcessor(),

@@ -129,13 +129,6 @@ SCHEMAS: dict[str, T.StructType] = {
     ),
 }
 
-# Tables small enough to always broadcast in joins (dimension side).
-# At 100 TB the facts (lineitem/orders/events/documents) grow with SF;
-# these stay O(small) — region/nation are constant-size, supplier/part
-# grow slowly. customer is borderline; we do NOT force-broadcast it.
-BROADCAST_DIMS = frozenset({"region", "nation", "supplier"})
-
-
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 

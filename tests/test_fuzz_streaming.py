@@ -13,11 +13,12 @@ a replayed batch — are exactly the class a fixed 3-chunk replay
 (tests/test_streaming.py's multibatch tests) can miss when the bug needs
 a specific boundary placement.
 
-Eight families across the five streaming execution models the engine
-uses (families 4/4b/5 target applyInPandasWithState — one per stateful
-processor plus the bounded-lateness variant; family 7 targets
-transformWithStateInPandas, runnable since protobuf_compat unblocked its
-state workers in r16 — it self-skips where no protobuf runtime exists):
+Nine families across the five streaming execution models the engine
+uses (families 4/4b/4c/5 target applyInPandasWithState — one per
+stateful processor plus the bounded-lateness and oracle-model variants;
+family 7 targets transformWithStateInPandas, runnable since
+protobuf_compat unblocked its state workers in r16 — it self-skips where
+no protobuf runtime exists):
  1. complete-mode grouped aggregation (streaming-agg state accumulates
     partials across triggers) — random filter + group key + exact
     aggregates over events;
@@ -45,6 +46,10 @@ state workers in r16 — it self-skips where no protobuf runtime exists):
     bounded-disorder contract); purchases stay on time, and the
     streamed assignment must still equal batch DQ-09 — an off-by-slack
     horizon prune silently drops matches for exactly these rows;
+ 4c. the same path on small random click/purchase streams with forced
+    same-ts ties, time-ordered random batches and late clicks within a
+    drawn ``late_slack``, checked against a pure-Python model of the
+    DQ-09 oracle rule rather than against the batch kernel;
  5. applyInPandasWithState override sessions (the transmitter A5 path)
     — frames and commands derived in-stream from the same time-ordered
     randomly-cut source, run through tag_frames_and_commands +
@@ -68,7 +73,7 @@ state workers in r16 — it self-skips where no protobuf runtime exists):
     boundary placement, not just on the fixed fixture the deterministic
     TWS test pins.
 
-Families 4/4b/5 order chunks BY TIME (unlike the hash-random chunks of
+Families 4/4b/4c/5 order chunks BY TIME (unlike the hash-random chunks of
 1-3): the stateful processors' contract is bounded disorder — state is
 pruned against each batch's max event time — so arbitrarily-late
 cross-batch rows are out of contract; boundary PLACEMENT in the ordered
@@ -91,14 +96,18 @@ from __future__ import annotations
 import itertools
 import os
 
+import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, Phase, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from espkinesis_spark.tables import load_table
 
 _uniq = itertools.count()
+
+# each shrink step would be another Spark job
+_NO_SHRINK = (Phase.explicit, Phase.reuse, Phase.generate)
 
 _FUZZ_SETTINGS = dict(
     max_examples=8,  # each example runs a chunk write + a streaming replay
@@ -391,7 +400,7 @@ _ASOF_SPEC = st.fixed_dictionaries(
 def test_stateful_asof_invariant_to_time_ordered_boundaries(
     spark, stream_fuzz_ctx, asof_batch_ctx, spec
 ):
-    """Family 4: st_override_asof's exact execution path. The per-user
+    """Family 4: st_override_asof's exact execution path. The bucketed
     purchase state must survive every boundary placement — a click in a
     LATER micro-batch must still match a purchase from an earlier one
     when it sits inside the 1 h lookback, for every late_slack setting
@@ -615,6 +624,174 @@ def test_stateful_asof_slackless_prune_witness(
         ).collect()
     }
     assert got == {(2, 1)}
+
+
+def test_stateful_asof_null_users_and_times_match_nothing(
+    spark, tmp_path_factory
+):
+    """DQ-09 compares with SQL ``=`` and ``<=``: a click or purchase with a
+    null user_id or ts matches nothing, and such a click still comes out
+    with a null match (never a match between two null users)."""
+    t0 = pd.Timestamp("2024-01-01 06:00:00")
+    pdf = pd.DataFrame(
+        {
+            "event_id": [1, 2, 3, 4, 5, 6],
+            "user_id": pd.array([7, 7, None, None, 7, 7], dtype="Int64"),
+            "event_type": ["purchase", "click"] * 3,
+            "ts": [t0, t0, t0, t0, None, None],
+        }
+    )
+    src = _write_chunk_files(
+        spark,
+        tmp_path_factory,
+        _sorted_arrow_table(pdf, ["event_id"]),
+        [(0, 6)],
+        "event_id long, user_id long, event_type string, ts timestamp",
+    )
+    from espkinesis_spark.streaming.state import asof_override
+
+    got = {
+        tuple(r)
+        for r in _run_available_now(asof_override(src), "append", spark).collect()
+    }
+    assert got == {(2, 1), (4, None), (6, None)}
+
+
+# --- family 4c: the streaming as-of against a pure-Python oracle model ----
+
+
+def _asof_oracle_model(rows):
+    """DQ-09's rule in plain Python: each click gets the max event_id of
+    the same user's purchases with ts in (click ts - 1 h, click ts] — a
+    purchase at exactly the click's ts counts, whatever its event_id —
+    or None when there is none."""
+    hour = pd.Timedelta("1 hour")
+    buys = [r for r in rows if r["event_type"] == "purchase"]
+    return {
+        (
+            c["event_id"],
+            max(
+                (
+                    b["event_id"]
+                    for b in buys
+                    if b["user_id"] == c["user_id"]
+                    and c["ts"] - hour < b["ts"] <= c["ts"]
+                ),
+                default=None,
+            ),
+        )
+        for c in rows
+        if c["event_type"] == "click"
+    }
+
+
+_ASOF_MODEL_SPEC = st.fixed_dictionaries(
+    {
+        # (user, is_click, 10-minute slot): few users and slots, so same-ts
+        # ties and exact lookback edges are common
+        "events": st.lists(
+            st.tuples(
+                st.integers(min_value=0, max_value=2),
+                st.booleans(),
+                st.integers(min_value=0, max_value=12),
+            ),
+            min_size=8,
+            max_size=40,
+        ),
+        "cuts": st.lists(st.integers(min_value=1, max_value=12), max_size=6),
+        "slack_slots": st.sampled_from([0, 2, 4, 6]),
+        "seed": st.integers(min_value=0, max_value=2**31),
+    }
+)
+
+
+@pytest.fixture(scope="module")
+def one_bucket_users(spark):
+    """Three user ids that asof_override hashes into ONE bucket at this
+    session's bucket count, so the model test always matches several
+    users inside one kernel call."""
+    from espkinesis_spark.streaming.state import ASOF_BUCKETS_PER_PARTITION
+
+    n = ASOF_BUCKETS_PER_PARTITION * int(
+        spark.conf.get("spark.sql.shuffle.partitions")
+    )
+    rows = spark.range(4 * n).select(
+        "id", F.pmod(F.xxhash64("id"), F.lit(n)).alias("b")
+    ).collect()
+    by_bucket: dict[int, list[int]] = {}
+    for r in rows:
+        by_bucket.setdefault(r["b"], []).append(r["id"])
+    return next(ids[:3] for ids in by_bucket.values() if len(ids) >= 3)
+
+
+@given(spec=_ASOF_MODEL_SPEC)
+@settings(**{**_FUZZ_SETTINGS, "phases": _NO_SHRINK})
+def test_stateful_asof_equals_oracle_model(
+    spark, tmp_path_factory, one_bucket_users, spec
+):
+    """Family 4c: asof_override on small random click/purchase streams
+    against ``_asof_oracle_model``, its three users sharing one hash
+    bucket. Every example forces a same-ts tie: a click and a same-user
+    purchase at the same ts, the purchase with the largest event_id, so
+    a kernel that drops same-ts purchases (or orders ties by event_id)
+    fails every example. Micro-batches are cut between 10-minute slots
+    in time order, and a seeded 70% of the clicks arrives late: in the
+    furthest batch whose earlier rows are all within the drawn
+    ``late_slack`` of the click — the documented bounded-disorder
+    contract, so a horizon prune that ignores the slack can drop their
+    matches. Slots are whole 10-minute steps, so lookback edges land
+    exactly on purchases."""
+    import bisect
+    import random
+
+    from espkinesis_spark.streaming.state import asof_override
+
+    rng = random.Random(spec["seed"])
+    t0, step = pd.Timestamp("2024-01-01 06:00:00"), pd.Timedelta("10 minutes")
+    events = [*spec["events"], (spec["events"][0][0], True, spec["events"][0][2])]
+    events.append((events[-1][0], False, events[-1][2]))
+    ids = rng.sample(range(1, 10_000), len(events) - 1)
+    ids.append(max(ids) + 1)  # the forced tie purchase outranks every other
+    pdf = (
+        pd.DataFrame(
+            {
+                "event_id": ids,
+                "user_id": [one_bucket_users[u] for u, _, _ in events],
+                "event_type": ["click" if c else "purchase" for _, c, _ in events],
+                "ts": [t0 + slot * step for _, _, slot in events],
+            }
+        )
+        .sort_values(["ts", "event_id"], kind="mergesort")
+        .reset_index(drop=True)
+    )
+    cuts = sorted(set(spec["cuts"]))
+    k = len(cuts) + 1
+    slots = [int((t - t0) / step) for t in pdf["ts"]]
+    batch = [bisect.bisect_right(cuts, s) for s in slots]
+    # latest slot of every row whose on-time batch precedes batch j
+    before = [
+        max((s for s, b in zip(slots, batch) if b < j), default=-1) for j in range(k)
+    ]
+    for i, kind in enumerate(pdf["event_type"]):
+        if kind == "click" and rng.random() < 0.7:
+            batch[i] = max(
+                j for j in range(batch[i], k)
+                if before[j] <= slots[i] + spec["slack_slots"]
+            )
+    chunks = [[i for i, b in enumerate(batch) if b == j] for j in range(k)]
+    schema = "event_id long, user_id long, event_type string, ts timestamp"
+    src = _write_chunk_files(
+        spark,
+        tmp_path_factory,
+        _sorted_arrow_table(pdf, ["ts", "event_id"]),
+        chunks,
+        schema,
+    )
+    streamed = asof_override(src, late_slack=f"{10 * spec['slack_slots']} minutes")
+    got = {
+        tuple(r) for r in _run_available_now(streamed, "append", spark).collect()
+    }
+    assert got == _asof_oracle_model(pdf.to_dict("records"))
 
 
 # --- family 6: random-restart resume of the parquet drain (VERDICT r14 #4) --

@@ -108,6 +108,34 @@ def test_pandas_asof_equals_join_form(spark, sf_dir):
     assert got == want and len(want) > 0
 
 
+def test_pandas_asof_null_keys_and_times_match_nothing(spark):
+    """Null keys, times and values never match, as in the join form's
+    SQL equality and range predicates; a left row with a null key or
+    time still comes out, with a null match."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1, 6)
+    left = spark.createDataFrame(
+        [(1, 7, t0), (2, None, t0), (3, 7, None), (4, 8, t0)],
+        "lid long, k long, lts timestamp",
+    )
+    right = spark.createDataFrame(
+        [(7, t0, 10), (None, t0, 11), (8, None, 12), (8, t0, None)],
+        "k long, rts timestamp, v long",
+    )
+    args = dict(key="k", left_ts="lts", right_ts="rts", right_val="v")
+    want = {tuple(r) for r in ops.asof_last_match(left, right, **args).collect()}
+    got = {
+        tuple(r) for r in ops.asof_last_match_pandas(left, right, **args).collect()
+    }
+    assert got == want == {
+        (1, 7, t0, 10),
+        (2, None, t0, None),
+        (3, 7, None, None),
+        (4, 8, t0, None),
+    }
+
+
 def test_dedup_apply_shuffle_equals_broadcast(spark, sf_dir):
     """The big-drop-set path (shuffled left-anti) must produce exactly the
     broadcast path's survivors, and its plan must contain NO

@@ -696,19 +696,20 @@ def test_video_frame_stores_never_use_memory_sink(spark, sf_dir):
 def test_source_bytes_sums_directory_style_tables(tmp_path):
     """os.path.getsize on a directory returns the inode size (~4 KB),
     which would silently pin the drain router to the memory sink for
-    any directory-style parquet table — _source_bytes must sum the
-    files underneath instead."""
-    from espkinesis_spark.streaming.jobs import _source_bytes
+    any directory-style parquet table — the router's byte stat must sum
+    the files underneath instead."""
+    from espkinesis_spark.streaming.jobs import _bytes_of
+    from espkinesis_spark.tables import _source_files
 
     f = tmp_path / "single.parquet"
     f.write_bytes(b"x" * 1000)
-    assert _source_bytes(str(f)) == 1000
+    assert _bytes_of(_source_files(str(f))) == 1000
 
     d = tmp_path / "table.parquet"
     (d / "part0").mkdir(parents=True)
     (d / "part0" / "a.parquet").write_bytes(b"x" * 600)
     (d / "b.parquet").write_bytes(b"x" * 400)
-    assert _source_bytes(str(d)) == 1000
+    assert _bytes_of(_source_files(str(d))) == 1000
 
 
 def test_drain_rowstore_routes_by_source_row_count(spark, sf_dir, monkeypatch):
@@ -839,7 +840,7 @@ def test_source_files_prunes_metadata_directories(tmp_path):
     NAMES don't start with '_' ('0', '9.compact'), so pruning must happen
     at the directory level or the router's byte/row stats count
     ever-growing non-data manifest bytes."""
-    from espkinesis_spark.streaming.jobs import _source_bytes
+    from espkinesis_spark.streaming.jobs import _bytes_of
     from espkinesis_spark.tables import _source_files
 
     d = tmp_path / "store"
@@ -854,7 +855,7 @@ def test_source_files_prunes_metadata_directories(tmp_path):
         "part-0000.parquet",
         "part-0001.parquet",
     ]
-    assert _source_bytes(str(d)) == 1000
+    assert _bytes_of(_source_files(str(d))) == 1000
 
 
 @pytest.mark.parametrize("cores", [1, 4, 32])
@@ -887,21 +888,21 @@ def test_source_stats_graceful_on_missing_or_garbage_paths(tmp_path, sf_dir):
     stream's own reader raise the clearer error, not kill the job in the
     router's stat call (r11 ADVICE); unreadable footers likewise count 0
     instead of raising."""
-    from espkinesis_spark.streaming.jobs import _source_bytes, _source_rows
-    from espkinesis_spark.tables import table_path
+    from espkinesis_spark.streaming.jobs import _bytes_of, _rows_of
+    from espkinesis_spark.tables import _source_files, table_path
 
     missing = str(tmp_path / "nope.parquet")
-    assert _source_bytes(missing) == 0
-    assert _source_rows(missing) == 0
+    assert _bytes_of(_source_files(missing)) == 0
+    assert _rows_of(_source_files(missing)) == 0
     garbage = tmp_path / "garbage.parquet"
     garbage.write_bytes(b"not parquet at all")
-    assert _source_rows(str(garbage)) == 0
+    assert _rows_of(_source_files(str(garbage))) == 0
     # real footers: metadata-only row count equals the table's row count
     docs = table_path(sf_dir, "documents")
     import duckdb
 
     want = duckdb.sql(f"SELECT count(*) FROM '{docs}'").fetchone()[0]
-    assert _source_rows(docs) == want
+    assert _rows_of(_source_files(docs)) == want
 
 
 def test_drain_to_parquet_kill_and_resume_is_exactly_once(
@@ -1147,3 +1148,102 @@ def test_zorder_stream_parquet_drain_multibatch_accumulates(
     got = {tuple(r) for r in drained.collect()}
     want = {tuple(r) for r in zproj(ev).collect()}
     assert got == want and len(want) > 0
+
+
+def _asof_checkpoint_run(spark, events_dir, ckpt, stateful):
+    """Start ``stateful`` over the parquet files under ``events_dir`` on
+    checkpoint ``ckpt`` and drain what is new."""
+    src = spark.readStream.schema(
+        "event_id long, user_id long, event_type string, ts timestamp"
+    ).parquet(str(events_dir))
+    q = (
+        stateful(src)
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(ckpt))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
+def _write_asof_events(events_dir, name, user_ids, first_id):
+    import pandas as pd
+
+    t0 = pd.Timestamp("2024-01-01 06:00:00")
+    n = len(user_ids)
+    pd.DataFrame(
+        {
+            "event_id": range(first_id, first_id + n),
+            "user_id": user_ids,
+            "event_type": ["purchase", "click"] * (n // 2),
+            "ts": [t0 + pd.Timedelta(minutes=i) for i in range(n)],
+        }
+    ).to_parquet(str(events_dir / name), coerce_timestamps="us")
+
+
+def test_asof_override_refuses_per_user_checkpoint(spark, tmp_path):
+    """A checkpoint written by a per-user as-of processor (state ``(p_ts,
+    p_id)`` keyed by user_id, the layout before hash buckets) must not
+    resume under the bucketed asof_override: Spark's state-schema check
+    refuses it rather than reading user keys as buckets."""
+    import pandas as pd
+    from pyspark.sql import types as T
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from espkinesis_spark.streaming.state import ASOF_OUTPUT_SCHEMA, asof_override
+
+    per_user_state = T.StructType(
+        [
+            T.StructField("p_ts", T.ArrayType(T.LongType())),
+            T.StructField("p_id", T.ArrayType(T.LongType())),
+        ]
+    )
+
+    def per_user(key, pdfs, state):
+        df = pd.concat(list(pdfs))
+        state.update(([0], [0]))
+        none = pd.array([None] * len(df), dtype="Int64")
+        yield pd.DataFrame({"event_id": df["event_id"], "active_override": none})
+
+    events, ckpt = tmp_path / "events", tmp_path / "ckpt"
+    events.mkdir()
+    _write_asof_events(events, "a.parquet", [7, 7], first_id=1)
+    _asof_checkpoint_run(
+        spark,
+        events,
+        ckpt,
+        lambda src: src.groupBy("user_id").applyInPandasWithState(
+            per_user,
+            ASOF_OUTPUT_SCHEMA,
+            per_user_state,
+            "append",
+            GroupStateTimeout.NoTimeout,
+        ),
+    )
+    _write_asof_events(events, "b.parquet", [7, 7], first_id=3)
+    with pytest.raises(Exception, match="STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"):
+        _asof_checkpoint_run(spark, events, ckpt, asof_override)
+
+
+def test_asof_override_refuses_changed_bucket_count(spark, tmp_path):
+    """The bucket count follows spark.sql.shuffle.partitions when the query
+    is built, but a resumed query keeps its checkpoint's state partitions:
+    resuming under a different session setting would hash users into
+    buckets whose state holds other users' purchases, so the processor
+    raises instead of silently losing matches."""
+    from espkinesis_spark.streaming.state import asof_override
+
+    events, ckpt = tmp_path / "events", tmp_path / "ckpt"
+    events.mkdir()
+    users = [u for u in range(10) for _ in range(2)]
+    _write_asof_events(events, "a.parquet", users, first_id=1)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "1")
+        _asof_checkpoint_run(spark, events, ckpt, asof_override)
+        _write_asof_events(events, "b.parquet", users, first_id=100)
+        spark.conf.set("spark.sql.shuffle.partitions", "2")
+        with pytest.raises(Exception, match="8 buckets, this query into 16"):
+            _asof_checkpoint_run(spark, events, ckpt, asof_override)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
