@@ -673,13 +673,30 @@ def dedup_apply(
     plan whose estimate degrades to a sentinel): small corpus → broadcast,
     else shuffle. Mirrors assign_ids' plan-size routing.
     """
-    pairs = neardup_minhash(docs, threshold)
+    return apply_pairs(docs, neardup_minhash(docs, threshold), impl)
+
+
+def apply_pairs(docs: DataFrame, pairs: DataFrame, impl: str = "auto") -> DataFrame:
+    """The shared dedup tail of every pairs source: near-dup ``pairs``
+    (doc_a, doc_b) → ``dedup_clusters`` → drop every member but the
+    cluster's min doc_id → ``apply_drop_set`` (``impl`` routes the
+    anti-join). Returns the surviving documents."""
     drops = (
         dedup_clusters(pairs)
         .filter(F.col("doc_id") != F.col("cluster_id"))
         .select("doc_id")
     )
     return apply_drop_set(docs, drops, impl)
+
+
+def survivor_summary(docs: DataFrame) -> DataFrame:
+    """Per-source summary of a (deduplicated) corpus: n_docs and
+    sum_chars, both exact longs — the result shape of the dedup-apply
+    entries."""
+    return docs.groupBy("source").agg(
+        F.count("*").cast("long").alias("n_docs"),
+        F.sum("n_chars").cast("long").alias("sum_chars"),
+    )
 
 
 def apply_drop_set(

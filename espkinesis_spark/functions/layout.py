@@ -194,22 +194,23 @@ def _cover_is_exact(
     return covered == (x_hi - x_lo + 1) * (y_hi - y_lo + 1)
 
 
-def z_interval_filter(zcol: Column, intervals: list[tuple[int, int]]) -> Column:
-    """OR-of-BETWEENs membership predicate for a z-interval cover.
-
-    Use ONLY on a cheap/materialized ``zcol``: Catalyst's project
-    collapse inlines the column's defining expression into EVERY between
-    term, so pairing this with the 32-term ``z_value`` expression
-    recreates the giant-codegen Janino hazard NOTES.md documents.
-    ``ex_zrange_bigmin`` therefore prefilters via a broadcast LEFT-SEMI
-    range join against the interval list instead — the join condition
-    reads the one projected z column per row."""
-    if not intervals:
-        return F.lit(False)
-    cond = zcol.between(F.lit(intervals[0][0]), F.lit(intervals[0][1]))
-    for lo, hi in intervals[1:]:
-        cond = cond | zcol.between(F.lit(lo), F.lit(hi))
-    return cond
+def z_interval_prefilter(
+    df: DataFrame, zcol: str, intervals: list[tuple[int, int]]
+) -> DataFrame:
+    """Rows of ``df`` whose ``zcol`` lies in a z-interval cover: a
+    broadcast LEFT-SEMI range join against the (budget-bounded,
+    driver-side) interval list. A semi-join rather than an
+    OR-of-BETWEENs row filter deliberately: Catalyst's project collapse
+    would inline the 32-term ``z_value`` expression behind ``zcol`` into
+    EVERY between term — the giant-codegen Janino hazard NOTES.md
+    documents — while the join condition reads the one projected column
+    per row. An empty cover selects nothing."""
+    ivdf = df.sparkSession.createDataFrame(intervals, "z_lo long, z_hi long")
+    return df.join(
+        F.broadcast(ivdf),
+        F.col(zcol).between(F.col("z_lo"), F.col("z_hi")),
+        "leftsemi",
+    )
 
 
 def zorder_write_plan(df: DataFrame, zcol: str, num_files: int) -> DataFrame:

@@ -2,8 +2,10 @@
 
 Each entry is ``(spark, sf_dir) -> DataFrame``, DataFrame-API first, built
 from the operator library so the declared inventory exercises the same code
-paths users call. Every computed column is aliased to match the oracle SQL
-in ``oracles.py`` exactly (the driver compares by column name).
+paths users call. The streaming entries (``st_*``) are the availableNow
+replay jobs of ``streaming/jobs.py``, registered directly. Every computed
+column is aliased to match the oracle SQL in ``oracles.py`` exactly (the
+driver compares by column name).
 
 Ordering note: the driver's value-hash is order-insensitive, but ORDER BY is
 kept where it defines the *result set* (LIMIT queries) and dropped where it
@@ -20,6 +22,7 @@ from pyspark.sql import functions as F
 from espkinesis_spark.functions import common as C
 from espkinesis_spark.functions import dedup, multimodal, similarity, text
 from espkinesis_spark.operators import core as ops
+from espkinesis_spark.streaming import jobs
 from espkinesis_spark.tables import load_table
 
 
@@ -356,15 +359,6 @@ def ex_containment_dedup(spark, sf_dir):
     return dedup.containment_pairs(_t(spark, sf_dir, "documents"))
 
 
-def st_containment_dedup(spark, sf_dir):
-    """Streaming containment: shingles extracted at ingest (stateless,
-    no distinct on the stream), post-drain dedupe + scoring. Shares
-    ex_containment_dedup's oracle."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.containment_stream(spark, sf_dir)
-
-
 def ex_ann_filtered(spark, sf_dir):
     """Metadata-FILTERED vector search (the production retrieval shape:
     a predicate narrows the corpus before similarity ranks it): top-3
@@ -686,21 +680,16 @@ def ex_zrange_bigmin(spark, sf_dir):
     cover (``layout.z_box_intervals``, Tropf & Herzog 1981) descends
     until the box is tiled exactly or the 32-interval budget is hit, so
     the prefilter is a broadcast LEFT-SEMI range join against the
-    (budget-bounded, driver-side) interval list. A semi-join rather
-    than an OR-of-BETWEENs row filter deliberately: Catalyst's project
-    collapse would inline the 32-term ``z_value`` expression into EVERY
-    between term — the giant-codegen Janino hazard NOTES.md documents —
-    while the join condition reads the ONE projected ``__z`` column per
-    row. The cover is computed at plan-build time from ONE 4-scalar
-    min/max reduce (a summary collect, the IVF-centroid /
-    sketch-interval precedent — never data-sized; note for explain-only
-    tooling: this makes DataFrame CONSTRUCTION itself run one small
-    Spark job — tools/plan_sweep.py documents the exception); no
-    shuffle added, no UDF, and on a z-ordered layout the same intervals
-    ARE the parquet
-    footer-stat file skip (tests/test_io pins files-read <
-    files-written and that the interval set skips at least as many
-    files as the octile set).
+    (budget-bounded, driver-side) interval list
+    (``layout.z_interval_prefilter``). The cover is computed at
+    plan-build time from ONE 4-scalar min/max reduce (a summary collect,
+    the IVF-centroid / sketch-interval precedent — never data-sized;
+    note for explain-only tooling: this makes DataFrame CONSTRUCTION
+    itself run one small Spark job — tools/plan_sweep.py documents the
+    exception); no shuffle added, no UDF, and on a z-ordered layout the
+    same intervals ARE the parquet footer-stat file skip (tests/test_io
+    pins files-read < files-written and that the interval set skips at
+    least as many files as the octile set).
     The oracle answers the SAME box with the direct predicate and NO
     z-math — the equivalence proves the cover dismisses nothing
     (losslessness: quantization is monotone, every matching cell lies in
@@ -741,13 +730,7 @@ def ex_zrange_bigmin(spark, sf_dir):
             layout.range_quantize("t_ms", "__mn", "__mx"),
         ),
     )
-    ivdf = spark.createDataFrame(intervals, "z_lo long, z_hi long")
-    pre = z.join(
-        F.broadcast(ivdf),
-        F.col("__z").between(F.col("z_lo"), F.col("z_hi")),
-        "leftsemi",
-    )
-    exact = pre.filter(
+    exact = layout.z_interval_prefilter(z, "__z", intervals).filter(
         F.col("user_id").between(F.lit(qulo), F.lit(quhi))
         & F.col("t_ms").between(F.lit(qtlo), F.lit(qthi))
     )
@@ -874,19 +857,7 @@ def ex_image_dedup_apply(spark, sf_dir):
     pairs = multimodal.hamming_neardup(
         multimodal.image_dhash(media), max_hamming=C.IMG_HAM_MAX
     ).select(F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b"))
-    drops = (
-        dedup.dedup_clusters(pairs)
-        .filter(F.col("doc_id") != F.col("cluster_id"))
-        .select("doc_id")
-    )
-    return (
-        dedup.apply_drop_set(docs, drops)
-        .groupBy("source")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-        )
-    )
+    return dedup.survivor_summary(dedup.apply_pairs(docs, pairs))
 
 
 def ex_audio_dedup_apply(spark, sf_dir):
@@ -899,19 +870,7 @@ def ex_audio_dedup_apply(spark, sf_dir):
     pairs = multimodal.hamming_neardup(
         multimodal.audio_envelope_hash(media), max_hamming=C.AUD_HAM_MAX
     ).select(F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b"))
-    drops = (
-        dedup.dedup_clusters(pairs)
-        .filter(F.col("doc_id") != F.col("cluster_id"))
-        .select("doc_id")
-    )
-    return (
-        dedup.apply_drop_set(docs, drops)
-        .groupBy("source")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-        )
-    )
+    return dedup.survivor_summary(dedup.apply_pairs(docs, pairs))
 
 
 def ex_video_dedup_apply(spark, sf_dir):
@@ -924,19 +883,7 @@ def ex_video_dedup_apply(spark, sf_dir):
     pairs = multimodal.shared_frame_neardup(
         multimodal.sample_frames(multimodal.attach_binary(docs))
     ).select(F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b"))
-    drops = (
-        dedup.dedup_clusters(pairs)
-        .filter(F.col("doc_id") != F.col("cluster_id"))
-        .select("doc_id")
-    )
-    return (
-        dedup.apply_drop_set(docs, drops)
-        .groupBy("source")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-        )
-    )
+    return dedup.survivor_summary(dedup.apply_pairs(docs, pairs))
 
 
 def ex_waiting_orders(spark, sf_dir):
@@ -1645,15 +1592,6 @@ def ex_bm25(spark, sf_dir):
     return text.bm25_topk(_t(spark, sf_dir, "documents"))
 
 
-def st_bm25(spark, sf_dir):
-    """Streaming BM25: tokens extracted at ingest (stateless append
-    projection), scoring over the drained store. Shares ex_bm25's
-    oracle."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.bm25_stream(spark, sf_dir)
-
-
 def ex_tfidf(spark, sf_dir):
     """TF-IDF top-3 terms per document (doc_id < 50): token explode ->
     per-(doc, term) tf -> document-frequency join -> windowed top-k.
@@ -1760,41 +1698,6 @@ def ex_date_funcs(spark, sf_dir):
     )
 
 
-# --------------------------------------------------------------------------
-# Structured Streaming entries (replayed via availableNow; see streaming/)
-# --------------------------------------------------------------------------
-
-
-def st_latest_user(spark, sf_dir):
-    """Streaming last-value-per-key (A2/A3) — must equal batch DQ-07."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.latest_per_user_stream(spark, sf_dir)
-
-
-def st_window_counts(spark, sf_dir):
-    """Streaming tumbling-window snapshot counts (A4/T3 analog)."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.window_counts_stream(spark, sf_dir)
-
-
-def st_override_asof(spark, sf_dir):
-    """Stateful streaming as-of (A5 override semantics via
-    applyInPandasWithState) — must equal batch DQ-09."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.override_asof_stream(spark, sf_dir)
-
-
-def st_vocab(spark, sf_dir):
-    """Streaming corpus vocabulary: incrementally-maintained token counts
-    over the documents stream (vocab-sized state)."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.vocab_stream(spark, sf_dir)
-
-
 def ex_frame_decode(spark, sf_dir):
     """S3/F1 wire round-trip, driver-checkable: deterministic channel values
     derived from event_id are packed into the 16-byte ESP-NOW binary frame
@@ -1837,178 +1740,6 @@ def ex_frame_decode(spark, sf_dir):
         F.sum(1 - F.col("ok")).cast("long").alias("n_dead"),
         F.sum("rs").cast("long").alias("checksum"),
     )
-
-
-def st_sink_roundtrip(spark, sf_dir):
-    """K1/K2 delivery round-trip: events through the keyed foreachBatch
-    sink into parquet, read back and aggregated — the value hash vs the
-    source-table oracle asserts exactly-once-complete delivery."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.sink_roundtrip_stream(spark, sf_dir)
-
-
-def st_console_roundtrip(spark, sf_dir):
-    """K3 serialization round-trip: events through console_json_sink's
-    capture leg (the same to_json documents the console surface prints),
-    read back, parsed, and aggregated — the value hash vs the source-table
-    oracle proves the JSON serialization is lossless and delivery is
-    exactly-once-complete."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.console_roundtrip_stream(spark, sf_dir)
-
-
-def st_session_window(spark, sf_dir):
-    """Event-time session windows (30-min gap) per user."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.session_window_stream(spark, sf_dir)
-
-
-def st_sliding_counts(spark, sf_dir):
-    """Sliding event-time windows (1 h / 30 min slide) per event type."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.sliding_counts_stream(spark, sf_dir)
-
-
-def st_anomaly(spark, sf_dir):
-    """Streaming lambda: hourly counts maintained online, z-score anomaly
-    flags computed over the drained snapshot."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.anomaly_stream(spark, sf_dir)
-
-
-def st_quality_gate(spark, sf_dir):
-    """Streaming quality gate: stateless Gopher-rule filtering of the
-    document stream (append mode, zero state)."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.quality_gate_stream(spark, sf_dir)
-
-
-def st_dedup_substring(spark, sf_dir):
-    """Streaming substring dedup: span hashes AND positioned tokens
-    extracted at ingest (stateless append projections — the payload is
-    touched once, on arrival), the cut/rebuild analysis over the drained
-    stores. The drained extraction equals the batch extraction, so this
-    shares ex_dedup_substring's oracle."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.dedup_substring_stream(spark, sf_dir)
-
-
-def st_image_dedup_apply(spark, sf_dir):
-    """Streaming perceptual dedup APPLIED: fingerprint-at-ingest, then
-    pairs -> clusters -> drop set over the drained store and the routed
-    anti-join against the landed corpus. Shares ex_image_dedup_apply's
-    oracle (the drained hash table equals the batch one)."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.image_dedup_apply_stream(spark, sf_dir)
-
-
-def st_audio_dedup_apply(spark, sf_dir):
-    """Streaming acoustic dedup APPLIED (the st_image_dedup_apply
-    pattern). Shares ex_audio_dedup_apply's oracle."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.audio_dedup_apply_stream(spark, sf_dir)
-
-
-def st_video_dedup_apply(spark, sf_dir):
-    """Streaming video-shape dedup APPLIED (the st_image_dedup_apply
-    pattern). Shares ex_video_dedup_apply's oracle."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.video_dedup_apply_stream(spark, sf_dir)
-
-
-def st_image_neardup(spark, sf_dir):
-    """Streaming perceptual image dedup (the production lambda):
-    fingerprints extracted at ingest as a stateless append projection
-    (Arrow kernels on the stream — payloads touched exactly once),
-    banded Hamming join + exact verify over the drained fingerprint
-    store. Snapshot equals the batch hash table; shares
-    ex_image_neardup's oracle."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.image_neardup_stream(spark, sf_dir)
-
-
-def st_audio_neardup(spark, sf_dir):
-    """Streaming acoustic near-dup: envelope fingerprints at ingest
-    (stateless append), banded Hamming join over the drained store.
-    Shares ex_audio_neardup's oracle."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.audio_neardup_stream(spark, sf_dir)
-
-
-def st_video_neardup(spark, sf_dir):
-    """Streaming video-shape near-dup: keyframe hashes at ingest
-    (stateless append), shared-frame pairing over the drained store.
-    Shares ex_video_neardup's oracle."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.video_neardup_stream(spark, sf_dir)
-
-
-def st_quality_model(spark, sf_dir):
-    """Streaming model-based quality scoring (stateless zero-state
-    projection, append mode) — equals batch ex_quality_model, one
-    oracle."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.quality_model_stream(spark, sf_dir)
-
-
-def st_heavy_hitters(spark, sf_dir):
-    """Streaming heavy hitters: complete-mode token counts (vocab-sized
-    state) + the exact share filter over the drained snapshot — equals
-    the batch ex_heavy_hitters output, one oracle."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.heavy_hitters_stream(spark, sf_dir)
-
-
-def st_content_dedup(spark, sf_dir):
-    """Online SimHash content dedup over a document stream."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.content_dedup_stream(spark, sf_dir)
-
-
-def st_ack_tracker(spark, sf_dir):
-    """Ack-stream connection tracking (J7/A2) per target."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.ack_tracker_stream(spark, sf_dir)
-
-
-def st_dedup(spark, sf_dir):
-    """Streaming deduplication on (user_id, event_type); kept-key set."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.dedup_stream(spark, sf_dir)
-
-
-def st_stream_join(spark, sf_dir):
-    """Stream-stream event-time interval join (clicks x purchases, 1h
-    lookback per user) with watermarks bounding join state."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.stream_stream_join(spark, sf_dir)
-
-
-def st_command_plane(spark, sf_dir):
-    """Full command plane (parse -> validate -> dispatch) replayed as a
-    stream; per-error-class counts."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.command_plane_stream(spark, sf_dir)
 
 
 def ex_dedup_clusters(spark, sf_dir):
@@ -2182,14 +1913,7 @@ def ex_decontaminate_apply(spark, sf_dir):
         .filter(F.col("n_shared") >= C.DECON_MIN_SHARED)
         .select("doc_id")
     )
-    return (
-        dedup.apply_drop_set(train, contaminated)
-        .groupBy("source")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-        )
-    )
+    return dedup.survivor_summary(dedup.apply_drop_set(train, contaminated))
 
 
 def ex_pii_scrub(spark, sf_dir):
@@ -2227,11 +1951,7 @@ def ex_dedup_apply(spark, sf_dir):
     """End-to-end dedup retention: LSH pairs → connected components → drop
     non-canonical members, then summarize the surviving corpus per source.
     The oracle recomputes the same clusters with a recursive CTE."""
-    survivors = dedup.dedup_apply(_t(spark, sf_dir, "documents"))
-    return survivors.groupBy("source").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum("n_chars").cast("long").alias("sum_chars"),
-    )
+    return dedup.survivor_summary(dedup.dedup_apply(_t(spark, sf_dir, "documents")))
 
 
 def ex_ann_recall(spark, sf_dir):
@@ -2672,18 +2392,6 @@ def ex_hdr_quantile_grouped(spark, sf_dir):
     return quantiles.hdr_grouped_quantiles(
         _t(spark, sf_dir, "events"), "value", "event_type"
     )
-
-
-def st_hdr_quantile(spark, sf_dir):
-    """Streaming percentiles: the HDR bucket counts maintained
-    complete-mode on the event stream (sketch-sized state — the
-    st_heavy_hitters shape), quantile extraction over the drained
-    snapshot. Merge-by-addition makes the drained sketch equal the batch
-    sketch regardless of micro-batch arrival order, so this shares
-    ex_hdr_quantile's oracle."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.hdr_quantile_stream(spark, sf_dir)
 
 
 def ex_quality_model(spark, sf_dir):
@@ -3845,41 +3553,7 @@ def ex_winnow_dedup_apply(spark, sf_dir):
     the pair/cluster frames."""
     docs = _t(spark, sf_dir, "documents")
     pairs = dedup.winnow_candidates(docs).select("doc_a", "doc_b")
-    drops = (
-        dedup.dedup_clusters(pairs)
-        .filter(F.col("doc_id") != F.col("cluster_id"))
-        .select("doc_id")
-    )
-    return (
-        dedup.apply_drop_set(docs, drops)
-        .groupBy("source")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-        )
-    )
-
-
-def st_winnow_fingerprint(spark, sf_dir):
-    """Streaming winnowing: the zero-shuffle fingerprint projection runs
-    AT INGEST (stateless append — the payload is touched exactly once),
-    the ~|tokens|/w-sized fingerprint store drains through the
-    executor-parallel parquet sink, and the df-capped candidate join
-    runs over the drained store. The snapshot equals the batch
-    fingerprint table, so ex_winnow_fingerprint's oracle is exact."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.winnow_stream(spark, sf_dir)
-
-
-def st_asof_features(spark, sf_dir):
-    """Streaming point-in-time enrichment: events land from the stream
-    (stateless append passthrough into the durable store — the lambda
-    split), then the as-of composition joins the drained events against
-    the batch orders dimension. Shares ex_asof_features' oracle."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.asof_features_stream(spark, sf_dir)
+    return dedup.survivor_summary(dedup.apply_pairs(docs, pairs))
 
 
 def ex_range_join(spark, sf_dir):
@@ -3933,94 +3607,6 @@ def ex_range_join(spark, sf_dir):
     )
 
 
-def st_repetition_stats(spark, sf_dir):
-    """Streaming Gopher repetition signals: trigram extraction runs AT
-    INGEST as a stateless zero-shuffle projection (the payload is
-    touched exactly once — the exploded gram rows are what persists),
-    the corpus-proportional gram store drains through the
-    executor-parallel parquet sink, and the exact-counter rollup runs
-    over the drained store. The drained table equals the batch shingle
-    frame, so ex_repetition_stats' oracle is exact."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.repetition_stats_stream(spark, sf_dir)
-
-
-def st_lang_id(spark, sf_dir):
-    """Streaming language ID: the n-gram/stopword classifier applied to
-    documents AS THEY ARRIVE (stateless append projection — the
-    st_quality_model shape). Shares ex_lang_id's oracle."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.lang_id_stream(spark, sf_dir)
-
-
-def st_pii_scrub(spark, sf_dir):
-    """Streaming PII scrub at ingest (the production place for
-    redaction — before anything persists): stateless append projection
-    over the deterministically PII-augmented stream. Shares
-    ex_pii_scrub's oracle."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.pii_scrub_stream(spark, sf_dir)
-
-
-def st_text_stats(spark, sf_dir):
-    """Streaming per-document quality statistics (stateless append
-    projection at ingest). Shares ex_text_stats' oracle."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.text_stats_stream(spark, sf_dir)
-
-
-def st_stratified_sample(spark, sf_dir):
-    """Streaming stratified sampling at ingest (rows the sampler drops
-    are never persisted — the production rebalancing placement): the
-    md5-bucket acceptance is row-local, hence a stateless zero-shuffle
-    stream projection. Shares ex_stratified_sample's oracle."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.stratified_sample_stream(spark, sf_dir)
-
-
-def st_hash_split(spark, sf_dir):
-    """Streaming train/val/test routing at ingest (stateless hash-bucket
-    projection; the writer partitions by split), with the per-split
-    per-language audit folded INTO the stream as a complete-mode
-    aggregation — state is one row per (split, lang) pair, never
-    corpus-sized. Shares ex_hash_split's oracle."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.hash_split_stream(spark, sf_dir)
-
-
-def st_perplexity_buckets(spark, sf_dir):
-    """Streaming CCNet perplexity terciles: positional token extraction
-    at ingest (stateless zero-shuffle), parquet drain, bigram LM +
-    exact-integer tercile cut over the drained store (the corpus-global
-    LM is no stream query's state to hold — the established
-    extract/drain/rollup lambda split). Shares ex_perplexity_buckets'
-    oracle."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.perplexity_buckets_stream(spark, sf_dir)
-
-
-def st_zorder_layout(spark, sf_dir):
-    """Streaming z-SHARD assignment: the Morton key computed at ingest
-    (stateless zero-shuffle projection), sharded by its LOW interleaved
-    bits — the streaming goal is BALANCED SPREAD across writers, not
-    the batch entry's locality (locality needs corpus bounds an endless
-    stream lacks; top-bits-of-modular-grid buckets degenerate whenever
-    an axis undershoots the grid — caught by review on this fixture).
-    64 shards, all populated and balanced (pinned by test); hierarchical
-    splitting still holds (dropping one low z-bit merges shard pairs
-    adjacent in both axes' low bits)."""
-    from espkinesis_spark.streaming import jobs
-
-    return jobs.zorder_shard_stream(spark, sf_dir)
-
-
 # --------------------------------------------------------------------------
 
 
@@ -4057,20 +3643,20 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # --- window 1-16: the 16 remaining r11-green entries (r15 VERDICT mandate #1, first-green order) ---
         "ex_token_entropy": ex_token_entropy,
         "ex_ts_similarity": ex_ts_similarity,
-        "st_anomaly": st_anomaly,
-        "st_console_roundtrip": st_console_roundtrip,
-        "st_heavy_hitters": st_heavy_hitters,
-        "st_quality_gate": st_quality_gate,
-        "st_quality_model": st_quality_model,
+        "st_anomaly": jobs.anomaly_stream,
+        "st_console_roundtrip": jobs.console_roundtrip_stream,
+        "st_heavy_hitters": jobs.heavy_hitters_stream,
+        "st_quality_gate": jobs.quality_gate_stream,
+        "st_quality_model": jobs.quality_model_stream,
         "ex_audio_neardup": ex_audio_neardup,
-        "st_audio_neardup": st_audio_neardup,
-        "st_image_neardup": st_image_neardup,
-        "st_video_neardup": st_video_neardup,
-        "st_audio_dedup_apply": st_audio_dedup_apply,
-        "st_image_dedup_apply": st_image_dedup_apply,
-        "st_video_dedup_apply": st_video_dedup_apply,
-        "st_hash_split": st_hash_split,
-        "st_zorder_layout": st_zorder_layout,
+        "st_audio_neardup": jobs.audio_neardup_stream,
+        "st_image_neardup": jobs.image_neardup_stream,
+        "st_video_neardup": jobs.video_neardup_stream,
+        "st_audio_dedup_apply": jobs.audio_dedup_apply_stream,
+        "st_image_dedup_apply": jobs.image_dedup_apply_stream,
+        "st_video_dedup_apply": jobs.video_dedup_apply_stream,
+        "st_hash_split": jobs.hash_split_stream,
+        "st_zorder_layout": jobs.zorder_shard_stream,
         # --- window 17-50: the 34 oldest r12-green entries (first-green r1/r2/r3 + three r5) ---
         "dq04": dq04,
         "dq16": dq16,
@@ -4140,10 +3726,10 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ex_small_qty_revenue": ex_small_qty_revenue,
         "ex_video_dedup_apply": ex_video_dedup_apply,
         "ex_waiting_orders": ex_waiting_orders,
-        "st_bm25": st_bm25,
-        "st_containment_dedup": st_containment_dedup,
-        "st_dedup_substring": st_dedup_substring,
-        "st_hdr_quantile": st_hdr_quantile,
+        "st_bm25": jobs.bm25_stream,
+        "st_containment_dedup": jobs.containment_stream,
+        "st_dedup_substring": jobs.dedup_substring_stream,
+        "st_hdr_quantile": jobs.hdr_quantile_stream,
         "ex_grouping_sets": ex_grouping_sets,
         "ex_neardup_jaccard": ex_neardup_jaccard,
         "ex_rollup": ex_rollup,
@@ -4170,7 +3756,7 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ex_union_all": ex_union_all,
         "ex_unpivot": ex_unpivot,
         "ex_vocab": ex_vocab,
-        "st_vocab": st_vocab,
+        "st_vocab": jobs.vocab_stream,
         "ex_disjunctive_revenue": ex_disjunctive_revenue,
         "ex_volume_shipping": ex_volume_shipping,
         "ex_large_orders": ex_large_orders,
@@ -4189,10 +3775,10 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ex_top_supplier": ex_top_supplier,
         "ex_winnow_dedup_apply": ex_winnow_dedup_apply,
         "ex_winnow_fingerprint": ex_winnow_fingerprint,
-        "st_lang_id": st_lang_id,
-        "st_pii_scrub": st_pii_scrub,
-        "st_text_stats": st_text_stats,
-        "st_winnow_fingerprint": st_winnow_fingerprint,
+        "st_lang_id": jobs.lang_id_stream,
+        "st_pii_scrub": jobs.pii_scrub_stream,
+        "st_text_stats": jobs.text_stats_stream,
+        "st_winnow_fingerprint": jobs.winnow_stream,
         "dq18": dq18,
         "ex_ann_ivf": ex_ann_ivf,
         "ex_ann_lsh": ex_ann_lsh,
@@ -4223,7 +3809,7 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ex_quality_model": ex_quality_model,
         "ex_retention": ex_retention,
         "ex_asof_features": ex_asof_features,
-        "st_asof_features": st_asof_features,
+        "st_asof_features": jobs.asof_features_stream,
         "ex_ann_ivfpq": ex_ann_ivfpq,
         # --- tail: r15-green (the r15 window, freshest last) ---
         "ex_ann_pq": ex_ann_pq,
@@ -4239,9 +3825,9 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ex_token_budget_mix": ex_token_budget_mix,
         "ex_zorder_layout": ex_zorder_layout,
         "ex_zrange_query": ex_zrange_query,
-        "st_perplexity_buckets": st_perplexity_buckets,
-        "st_repetition_stats": st_repetition_stats,
-        "st_stratified_sample": st_stratified_sample,
+        "st_perplexity_buckets": jobs.perplexity_buckets_stream,
+        "st_repetition_stats": jobs.repetition_stats_stream,
+        "st_stratified_sample": jobs.stratified_sample_stream,
         "dq05": dq05,
         "dq06": dq06,
         "dq13": dq13,
@@ -4259,20 +3845,20 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dq17": dq17,
         "dq24": dq24,
         "ex_tfidf": ex_tfidf,
-        "st_ack_tracker": st_ack_tracker,
-        "st_command_plane": st_command_plane,
-        "st_content_dedup": st_content_dedup,
-        "st_dedup": st_dedup,
-        "st_latest_user": st_latest_user,
-        "st_override_asof": st_override_asof,
-        "st_session_window": st_session_window,
-        "st_sliding_counts": st_sliding_counts,
-        "st_stream_join": st_stream_join,
-        "st_window_counts": st_window_counts,
+        "st_ack_tracker": jobs.ack_tracker_stream,
+        "st_command_plane": jobs.command_plane_stream,
+        "st_content_dedup": jobs.content_dedup_stream,
+        "st_dedup": jobs.dedup_stream,
+        "st_latest_user": jobs.latest_per_user_stream,
+        "st_override_asof": jobs.override_asof_stream,
+        "st_session_window": jobs.session_window_stream,
+        "st_sliding_counts": jobs.sliding_counts_stream,
+        "st_stream_join": jobs.stream_stream_join,
+        "st_window_counts": jobs.window_counts_stream,
         "ex_approx_distinct": ex_approx_distinct,
         "ex_approx_quantile": ex_approx_quantile,
         "ex_correlated_min": ex_correlated_min,
-        "st_sink_roundtrip": st_sink_roundtrip,
+        "st_sink_roundtrip": jobs.sink_roundtrip_stream,
         "ex_retention_matrix": ex_retention_matrix,
         "ex_semdedup": ex_semdedup,
         "ex_sketch_quantile": ex_sketch_quantile,

@@ -9,12 +9,21 @@ against the same DuckDB oracles as the batch queries, e.g.:
   * window_counts_stream    == hourly tumbling counts (A4/T3 analog)
   * override_asof_stream    == DQ-09 (stateful as-of, A5) via
     applyInPandasWithState over hash buckets of the user
+
+``queries.registry()`` maps each ``st_*`` name straight to its job here.
+Every drain runs one query lifecycle, ``_replay``: stop a same-named
+active query, pin ``_state_layout``, start with availableNow, wait,
+record the plan. ``_drain`` decides the sink of summary-sized and
+per-row stores from the source table's parquet footers; corpus-sized
+stores call ``_drain_to_parquet`` directly. The two round-trip jobs
+start their queries through the ``sinks`` K1/K3 constructors.
 """
 
 from __future__ import annotations
 
 import contextlib
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -139,10 +148,21 @@ def _fresh_store_error(exc: Exception) -> bool:
 
 
 def _drain_to_parquet(
-    df: DataFrame, name: str, *, base: str | None = None, resume: bool = False
+    df: DataFrame,
+    name: str,
+    *,
+    base: str | None = None,
+    resume: bool = False,
+    mode: str = "append",
+    source_rows: int | None = None,
 ) -> DataFrame:
     """Append-mode drain for CORPUS-SIZED extraction stores (token /
     span-hash tables): a parquet file sink, read back as a batch frame.
+    ``mode="complete"`` is the executor-parallel drain for complete-mode
+    results (``_drain`` routes them here under ESPK_RESULT_SINK=parquet):
+    the file sink rejects complete output, so foreachBatch overwrites a
+    parquet snapshot of the full state each trigger and the last
+    trigger's snapshot IS the declared result.
 
     The memory sink collects every row to the driver single-threaded —
     fine for sketch/fingerprint-sized stores, but a corpus-sized store
@@ -179,8 +199,6 @@ def _drain_to_parquet(
     operator chooses explicitly — restore the old projection, or start
     a fresh base and re-extract/backfill.
     """
-    import shutil
-
     if resume and base is None:
         # an applicationId-scoped default changes on every driver restart,
         # so a resume against it would never find the checkpoint and would
@@ -255,29 +273,23 @@ def _drain_to_parquet(
                     f"projection or start a fresh base (old rows would "
                     f"otherwise silently read NULL in added columns)"
                 )
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
     if base is None:
         # scope by application id: the memory sink was implicitly
         # per-session, a bare /tmp path is not — two concurrent sessions
         # (driver gate + a local run) would race on rmtree/write otherwise
         app_id = spark.sparkContext.applicationId
         base = os.path.join(tempfile.gettempdir(), "espk_drain", app_id, name)
-    if not resume:
-        shutil.rmtree(base, ignore_errors=True)
     out_dir, ckpt = os.path.join(base, "data"), os.path.join(base, "ckpt")
-    query = (
-        df.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    _record_stream_plan(query)
+
+    def writer(w):
+        w = w.option("checkpointLocation", ckpt)
+        if mode == "complete":
+            return w.outputMode("complete").foreachBatch(
+                lambda batch_df, _id: batch_df.write.mode("overwrite").parquet(out_dir)
+            )
+        return w.outputMode("append").format("parquet").option("path", out_dir)
+
+    _replay(df, name, writer, source_rows, fresh=None if resume else base)
     # a zero-row stream leaves no sink directory — materialize it so the
     # schema-pinned read returns an empty frame instead of failing
     os.makedirs(out_dir, exist_ok=True)
@@ -306,8 +318,8 @@ def _state_partitions(spark: SparkSession, source_rows: int | None) -> str:
     STATE_ROWS_PER_PARTITION) — source rows upper-bound the state keys —
     clamped to [1, 4 x defaultParallelism]. An unknown source size falls
     back to min(8, defaultParallelism): a parallel floor that does not pay
-    one state store per core on a large cluster (every in-repo job passes
-    its source's footer row count)."""
+    one state store per core on a large cluster (every in-repo stateful
+    job passes its source's footer row count)."""
     env = os.environ.get("ESPK_STREAM_STATE_PARTITIONS")
     if env:
         return env
@@ -319,9 +331,9 @@ def _state_partitions(spark: SparkSession, source_rows: int | None) -> str:
 
 @contextlib.contextmanager
 def _state_layout(spark: SparkSession, source_rows: int | None):
-    """Pin shuffle.partitions to ``_state_partitions`` while a stateful
-    query is built (``st.asof_override`` sizes its buckets from it) and
-    started (the query keeps it as its state-partition count)."""
+    """Pin shuffle.partitions to ``_state_partitions`` while a query is
+    built (``st.asof_override`` sizes its buckets from it) and started (a
+    stateful query keeps it as its state-partition count)."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
         "spark.sql.shuffle.partitions", _state_partitions(spark, source_rows)
@@ -332,123 +344,82 @@ def _state_layout(spark: SparkSession, source_rows: int | None):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def _drain_complete_to_parquet(
-    df: DataFrame, name: str, source_rows: int | None = None
-) -> DataFrame:
-    """Executor-parallel drain for COMPLETE-mode results whose size tracks
-    the corpus (st_session_window's ~one-session-per-active-user result):
-    the file sink rejects complete output, so foreachBatch overwrites a
-    parquet snapshot of the full state each trigger — workers write in
-    parallel, the driver holds nothing, and the last trigger's snapshot
-    IS the declared result. Opt-in via ESPK_RESULT_SINK=parquet, routed
-    for EVERY complete-mode leg from ``_drain_to_memory`` (one policy
-    point): the default memory route stays the harness shape — the
-    harness collects the whole result anyway, so the memory sink is
-    merely the collect moved earlier — while a production job flips the
-    env var and lands every complete-mode result durably without a
-    driver-memory copy. Same availableNow replay + plan capture as the
-    other drains."""
-    import shutil
-
+def _replay(
+    df: DataFrame, name: str, writer, source_rows: int | None, fresh: str | None = None
+) -> None:
+    """The one availableNow query lifecycle every drain runs: stop a
+    same-named active query, then (and only then) remove ``fresh`` — the
+    drain's store directory, when it starts from scratch — and, under
+    ``_state_layout``, start ``writer(df.writeStream)`` as ``name``,
+    wait for it, and record its last micro-batch plan."""
     spark = df.sparkSession
     for q in spark.streams.active:
         if q.name == name:
             q.stop()
-    app_id = spark.sparkContext.applicationId
-    base = os.path.join(tempfile.gettempdir(), "espk_drain", app_id, name)
-    shutil.rmtree(base, ignore_errors=True)
-    out_dir, ckpt = os.path.join(base, "data"), os.path.join(base, "ckpt")
+    if fresh is not None:
+        shutil.rmtree(fresh, ignore_errors=True)
     with _state_layout(spark, source_rows):
         query = (
-            df.writeStream.outputMode("complete")
-            .foreachBatch(
-                lambda batch_df, _id: batch_df.write.mode("overwrite").parquet(out_dir)
-            )
-            .option("checkpointLocation", ckpt)
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
+            writer(df.writeStream).queryName(name).trigger(availableNow=True).start()
         )
         query.awaitTermination()
         _record_stream_plan(query)
-    os.makedirs(out_dir, exist_ok=True)
-    return spark.read.schema(df.schema).parquet(out_dir)
 
 
-def _drain_to_memory(
-    df: DataFrame, name: str, mode: str, source_rows: int | None = None
-) -> DataFrame:
-    # ESPK_RESULT_SINK=parquet: production jobs opt every COMPLETE-mode
-    # result leg into the executor-parallel snapshot drain (durable, no
-    # driver copy) — one policy point for all of them. The memory sink
-    # stays the default: it IS the declared result the harness collects.
-    if mode == "complete" and os.environ.get("ESPK_RESULT_SINK") == "parquet":
-        return _drain_complete_to_parquet(df, name, source_rows)
-    spark = df.sparkSession
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    with _state_layout(spark, source_rows):
-        query = (
-            df.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        _record_stream_plan(query)
-    return spark.table(name)
-
-
-# Crossover for the routed per-row drain below: under these SOURCE
-# bounds the driver memory sink is acceptable (fixture scale); above
-# either, a per-source-row store is large enough that single-threaded
-# driver collection dominates (the r8 st_bm25 lesson: 48x wall, almost
-# all drain). TWO bounds because the store's driver footprint scales
-# with source ROW COUNT, not bytes — a corpus of millions of tiny docs
-# stays under any byte bound yet pushes millions of rows through the
-# memory sink (r11 ADVICE). Both overridable for tests / cluster sizing.
+# Crossover for per-row stores in ``_drain``: under these SOURCE bounds
+# the driver memory sink is acceptable (fixture scale); above either, a
+# per-source-row store is large enough that single-threaded driver
+# collection dominates (the r8 st_bm25 lesson: 48x wall, almost all
+# drain). TWO bounds because the store's driver footprint scales with
+# source ROW COUNT, not bytes — a corpus of millions of tiny docs stays
+# under any byte bound yet pushes millions of rows through the memory
+# sink (r11 ADVICE). Both overridable for tests / cluster sizing.
 MEMORY_DRAIN_MAX_SOURCE_BYTES = 256 << 20
 MEMORY_DRAIN_MAX_SOURCE_ROWS = 1_000_000
 
 
-def _drain_rowstore(
-    df: DataFrame, name: str, sf_dir: str, table: str = "documents"
+def _drain(
+    df: DataFrame, name: str, source: str, mode: str = "append", *, per_row: bool = False
 ) -> DataFrame:
-    """Routed drain for per-SOURCE-ROW intermediate stores (one narrow
-    fingerprint row per document) that downstream analysis consumes.
+    """Drain a summary-sized or per-row stream result, deciding its sink
+    from the ``source`` table's parquet FOOTERS (one directory walk, read
+    before the stream runs; the row count also sizes the state layout).
 
     Three store classes, three drains (the shared policy):
       * summary-sized (sketches, complete-mode aggregates, top-k): the
-        memory sink via ``_drain_to_memory`` — bounded by design.
-      * per-source-row narrow stores (perceptual fingerprints): THIS
-        router. One row per document is fine through the driver memory
-        sink at fixture scale but still corpus-proportional, so above a
-        source-size bound the store crosses to the executor-parallel
-        parquet drain (the same size-routed style as
-        dedup.apply_drop_set's broadcast-vs-shuffled anti-join).
+        memory sink — bounded by design, and the declared result the
+        harness collects anyway. ESPK_RESULT_SINK=parquet moves EVERY
+        complete-mode leg to the executor-parallel snapshot drain
+        (durable, no driver copy): the production opt-in.
+      * per-source-row narrow stores (``per_row=True``: one fingerprint
+        row per document): the memory sink at fixture scale, but
+        corpus-proportional, so above either source bound
+        (ESPK_MEMORY_DRAIN_MAX_ROWS / _BYTES; footer row count, the
+        store's driver footprint, plus on-disk bytes) the store crosses
+        to the executor-parallel parquet drain (the same size-routed
+        style as dedup.apply_drop_set's broadcast-vs-shuffled anti-join).
       * corpus-sized stores (token/span/shingle tables, per-EVENT rows —
-        several rows per document or fact-table-sized): always
-        ``_drain_to_parquet`` per the r8 discipline; never routed here.
+        several rows per document or fact-table-sized): never routed
+        here; their jobs call ``_drain_to_parquet`` directly (the r8
+        discipline).
 
-    The route is decided from the source table's parquet FOOTERS before
-    the stream runs: row count (num_rows — the store is one row per
-    source row, so this is the store's actual driver footprint) with an
-    on-disk byte bound as a belt-and-braces second trigger. Both
-    overridable (ESPK_MEMORY_DRAIN_MAX_ROWS / _BYTES) so tests pin all
-    routes."""
-    byte_bound = int(
-        os.environ.get("ESPK_MEMORY_DRAIN_MAX_BYTES", MEMORY_DRAIN_MAX_SOURCE_BYTES)
-    )
-    row_bound = int(
-        os.environ.get("ESPK_MEMORY_DRAIN_MAX_ROWS", MEMORY_DRAIN_MAX_SOURCE_ROWS)
-    )
-    files = _source_files(table_path(sf_dir, table))  # ONE directory walk
-    rows = _rows_of(files)
-    if _bytes_of(files) > byte_bound or rows > row_bound:
-        return _drain_to_parquet(df, name)
-    return _drain_to_memory(df, name, "append", source_rows=rows or None)
+    A missing source sizes nothing (the stream's own reader raises the
+    clearer error) and routes to memory."""
+    files = _source_files(source)
+    rows = _rows_of(files) if files else None
+    if mode == "complete" and os.environ.get("ESPK_RESULT_SINK") == "parquet":
+        return _drain_to_parquet(df, name, mode="complete", source_rows=rows)
+    if per_row:
+        byte_bound = int(
+            os.environ.get("ESPK_MEMORY_DRAIN_MAX_BYTES", MEMORY_DRAIN_MAX_SOURCE_BYTES)
+        )
+        row_bound = int(
+            os.environ.get("ESPK_MEMORY_DRAIN_MAX_ROWS", MEMORY_DRAIN_MAX_SOURCE_ROWS)
+        )
+        if _bytes_of(files) > byte_bound or (rows or 0) > row_bound:
+            return _drain_to_parquet(df, name, source_rows=rows)
+    _replay(df, name, lambda w: w.outputMode(mode).format("memory"), rows)
+    return df.sparkSession.table(name)
 
 
 def _bytes_of(files: list[str]) -> int:
@@ -471,15 +442,6 @@ def _rows_of(files: list[str]) -> int:
     return total
 
 
-def _table_rows(sf_dir: str, table: str) -> int | None:
-    """Footer row count of a job's source table, for the state-partition
-    derivation (None when the table is missing — the stream's own reader
-    raises the clearer error; the derivation then falls back to the
-    cluster default). One footer read per drain call — metadata-only."""
-    files = _source_files(table_path(sf_dir, table))
-    return _rows_of(files) if files else None
-
-
 def latest_per_user_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming A2/A3: last event per user via max_by aggregation
     (complete mode). Ties on ts break by event_id, matching DQ-07."""
@@ -488,7 +450,7 @@ def latest_per_user_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("max_by(struct(event_type, value), struct(ts, event_id))").alias("m")
     )
     out = agg.select("user_id", F.col("m.event_type").alias("event_type"), F.col("m.value").alias("value"))
-    return _drain_to_memory(out, "st_latest_user_sink", "complete", source_rows=_table_rows(sf_dir, "events"))
+    return _drain(out, "st_latest_user_sink", table_path(sf_dir, "events"), "complete")
 
 
 def window_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -498,16 +460,18 @@ def window_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n")
     )
     out = agg.select(F.col("win.start").alias("w"), "event_type", "n")
-    return _drain_to_memory(out, "st_window_counts_sink", "complete", source_rows=_table_rows(sf_dir, "events"))
+    return _drain(out, "st_window_counts_sink", table_path(sf_dir, "events"), "complete")
 
 
 def override_asof_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming A5: as-of state per user hash bucket via
     applyInPandasWithState."""
-    rows = _table_rows(sf_dir, "events")
-    with _state_layout(spark, rows):
+    events = table_path(sf_dir, "events")
+    files = _source_files(events)
+    # built under the same layout _drain starts it with
+    with _state_layout(spark, _rows_of(files) if files else None):
         out = st.asof_override(_events_stream(spark, sf_dir))
-    return _drain_to_memory(out, "st_override_asof_sink", "append", source_rows=rows)
+    return _drain(out, "st_override_asof_sink", events)
 
 
 def session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -523,9 +487,9 @@ def session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = agg.select("user_id", F.col("sw.start").alias("s_start"), "n", "last_event")
     # This result leg is corpus-proportional (~one session per active
     # user) — the r11 VERDICT design-note-b case for the
-    # ESPK_RESULT_SINK=parquet opt-in, which _drain_to_memory routes for
-    # every complete-mode leg from one policy point.
-    return _drain_to_memory(out, "st_session_window_sink", "complete", source_rows=_table_rows(sf_dir, "events"))
+    # ESPK_RESULT_SINK=parquet opt-in, which _drain routes for every
+    # complete-mode leg from one policy point.
+    return _drain(out, "st_session_window_sink", table_path(sf_dir, "events"), "complete")
 
 
 def sliding_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -536,7 +500,7 @@ def sliding_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n")
     )
     out = agg.select(F.col("win.start").alias("w_start"), "event_type", "n")
-    return _drain_to_memory(out, "st_sliding_counts_sink", "complete", source_rows=_table_rows(sf_dir, "events"))
+    return _drain(out, "st_sliding_counts_sink", table_path(sf_dir, "events"), "complete")
 
 
 def content_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -549,7 +513,7 @@ def content_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _documents_stream(spark, sf_dir)
     signed = dedup.simhash(src)  # mapInPandas works on streaming DataFrames
     out = signed.dropDuplicates(["simhash"]).select("simhash")
-    return _drain_to_memory(out, "st_content_dedup_sink", "append", source_rows=_table_rows(sf_dir, "documents"))
+    return _drain(out, "st_content_dedup_sink", table_path(sf_dir, "documents"))
 
 
 def image_neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -573,7 +537,7 @@ def image_neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _documents_stream(spark, sf_dir)
     hashes = image_dhash(synthesize_gray_bmp(src))
-    store = _drain_rowstore(hashes, "st_image_neardup_sink", sf_dir)
+    store = _drain(hashes, "st_image_neardup_sink", table_path(sf_dir, "documents"), per_row=True)
     return hamming_neardup(store, max_hamming=C.IMG_HAM_MAX)
 
 
@@ -620,24 +584,12 @@ def image_dedup_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _documents_stream(spark, sf_dir)
     hashes = image_dhash(synthesize_gray_bmp(src))
-    store = _drain_rowstore(hashes, "st_image_dedup_apply_sink", sf_dir)
+    store = _drain(hashes, "st_image_dedup_apply_sink", table_path(sf_dir, "documents"), per_row=True)
     pairs = hamming_neardup(store, max_hamming=C.IMG_HAM_MAX).select(
         F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b")
     )
-    drops = (
-        dedup.dedup_clusters(pairs)
-        .filter(F.col("doc_id") != F.col("cluster_id"))
-        .select("doc_id")
-    )
     docs = load_table(spark, sf_dir, "documents")
-    return (
-        dedup.apply_drop_set(docs, drops)
-        .groupBy("source")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-        )
-    )
+    return dedup.survivor_summary(dedup.apply_pairs(docs, pairs))
 
 
 def bm25_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -672,24 +624,12 @@ def audio_dedup_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _documents_stream(spark, sf_dir)
     hashes = audio_envelope_hash(synthesize_tone_wav(src))
-    store = _drain_rowstore(hashes, "st_audio_dedup_apply_sink", sf_dir)
+    store = _drain(hashes, "st_audio_dedup_apply_sink", table_path(sf_dir, "documents"), per_row=True)
     pairs = hamming_neardup(store, max_hamming=C.AUD_HAM_MAX).select(
         F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b")
     )
-    drops = (
-        dedup.dedup_clusters(pairs)
-        .filter(F.col("doc_id") != F.col("cluster_id"))
-        .select("doc_id")
-    )
     docs = load_table(spark, sf_dir, "documents")
-    return (
-        dedup.apply_drop_set(docs, drops)
-        .groupBy("source")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-        )
-    )
+    return dedup.survivor_summary(dedup.apply_pairs(docs, pairs))
 
 
 def video_dedup_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -708,26 +648,14 @@ def video_dedup_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _documents_stream(spark, sf_dir)
     frames = sample_frames(attach_binary(src))
     # several keyframe rows PER document (sample_frames explodes the
-    # payload) — the corpus-sized class _drain_rowstore excludes, so
-    # this store always takes the executor-parallel parquet drain
+    # payload) — the corpus-sized class _drain never routes, so this
+    # store always takes the executor-parallel parquet drain
     store = _drain_to_parquet(frames, "st_video_dedup_apply_sink")
     pairs = shared_frame_neardup(store).select(
         F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b")
     )
-    drops = (
-        dedup.dedup_clusters(pairs)
-        .filter(F.col("doc_id") != F.col("cluster_id"))
-        .select("doc_id")
-    )
     docs = load_table(spark, sf_dir, "documents")
-    return (
-        dedup.apply_drop_set(docs, drops)
-        .groupBy("source")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-        )
-    )
+    return dedup.survivor_summary(dedup.apply_pairs(docs, pairs))
 
 
 def containment_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -759,7 +687,7 @@ def audio_neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _documents_stream(spark, sf_dir)
     hashes = audio_envelope_hash(synthesize_tone_wav(src))
-    store = _drain_rowstore(hashes, "st_audio_neardup_sink", sf_dir)
+    store = _drain(hashes, "st_audio_neardup_sink", table_path(sf_dir, "documents"), per_row=True)
     return hamming_neardup(store, max_hamming=C.AUD_HAM_MAX)
 
 
@@ -777,7 +705,7 @@ def video_neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _documents_stream(spark, sf_dir)
     frames = sample_frames(attach_binary(src))
     # several keyframe rows per document — always the parquet drain
-    # (the _drain_rowstore policy routes only one-row-per-doc stores)
+    # (_drain's per-row route takes only one-row-per-doc stores)
     store = _drain_to_parquet(frames, "st_video_neardup_sink")
     return shared_frame_neardup(store)
 
@@ -809,7 +737,7 @@ def anomaly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = src.groupBy(
         "event_type", F.date_trunc("hour", F.col("ts")).alias("hr")
     ).agg(F.count("*").cast("long").alias("n"))
-    counts = _drain_to_memory(agg, "st_anomaly_sink", "complete", source_rows=_table_rows(sf_dir, "events"))
+    counts = _drain(agg, "st_anomaly_sink", table_path(sf_dir, "events"), "complete")
     # the flagging self-joins the snapshot (stats side + probe side); a
     # memory-sink view can't appear twice in one plan (conflicting expr
     # ids), so freeze the calendar-sized table first
@@ -827,7 +755,7 @@ def quality_gate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _documents_stream(spark, sf_dir)
     out = quality_gate_stateless(src)
-    return _drain_to_memory(out, "st_quality_gate_sink", "append", source_rows=_table_rows(sf_dir, "documents"))
+    return _drain(out, "st_quality_gate_sink", table_path(sf_dir, "documents"))
 
 
 def quality_model_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -840,7 +768,7 @@ def quality_model_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _documents_stream(spark, sf_dir)
     out = quality_model_score(src)
-    return _drain_to_memory(out, "st_quality_model_sink", "append", source_rows=_table_rows(sf_dir, "documents"))
+    return _drain(out, "st_quality_model_sink", table_path(sf_dir, "documents"))
 
 
 def winnow_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -901,7 +829,7 @@ def lang_id_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _documents_stream(spark, sf_dir)
     out = lang_id(src).select("doc_id", "lang_pred")
-    return _drain_to_memory(out, "st_lang_id_sink", "append", source_rows=_table_rows(sf_dir, "documents"))
+    return _drain(out, "st_lang_id_sink", table_path(sf_dir, "documents"))
 
 
 def pii_scrub_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -923,7 +851,7 @@ def pii_scrub_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") + F.lit(1_000_000)).cast("string"),
         ),
     )
-    return _drain_to_memory(pii_scrub(aug), "st_pii_scrub_sink", "append", source_rows=_table_rows(sf_dir, "documents"))
+    return _drain(pii_scrub(aug), "st_pii_scrub_sink", table_path(sf_dir, "documents"))
 
 
 def text_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -933,7 +861,7 @@ def text_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from espkinesis_spark.functions.text import text_stats
 
     src = _documents_stream(spark, sf_dir)
-    return _drain_to_memory(text_stats(src), "st_text_stats_sink", "append", source_rows=_table_rows(sf_dir, "documents"))
+    return _drain(text_stats(src), "st_text_stats_sink", table_path(sf_dir, "documents"))
 
 
 def stratified_sample_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -948,7 +876,7 @@ def stratified_sample_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = sampling.stratified_sample(
         src, "lang", rates={"en": 10}, default_pct=50, key_col="doc_id"
     ).select("doc_id", "lang", "source")
-    return _drain_to_memory(out, "st_stratified_sink", "append", source_rows=_table_rows(sf_dir, "documents"))
+    return _drain(out, "st_stratified_sink", table_path(sf_dir, "documents"))
 
 
 def hash_split_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -966,7 +894,7 @@ def hash_split_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _documents_stream(spark, sf_dir)
     split = sampling.hash_split(src, "doc_id", {"train": 90, "val": 5, "test": 5})
     out = split.groupBy("split", "lang").agg(F.count("*").cast("long").alias("n"))
-    return _drain_to_memory(out, "st_hash_split_sink", "complete", source_rows=_table_rows(sf_dir, "documents"))
+    return _drain(out, "st_hash_split_sink", table_path(sf_dir, "documents"), "complete")
 
 
 def perplexity_buckets_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1049,7 +977,7 @@ def vocab_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("token")
         .agg(F.count("*").cast("long").alias("n"))
     )
-    return _drain_to_memory(out, "st_vocab_sink", "complete", source_rows=_table_rows(sf_dir, "documents"))
+    return _drain(out, "st_vocab_sink", table_path(sf_dir, "documents"), "complete")
 
 
 def heavy_hitters_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1072,7 +1000,7 @@ def heavy_hitters_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("token")
         .agg(F.count("*").cast("long").alias("n"))
     )
-    counts = _drain_to_memory(agg, "st_heavy_hitters_sink", "complete", source_rows=_table_rows(sf_dir, "documents"))
+    counts = _drain(agg, "st_heavy_hitters_sink", table_path(sf_dir, "documents"), "complete")
     counts = counts.localCheckpoint(eager=True)
     tot = counts.agg(F.sum("n").cast("long").alias("total"))
     return exact_share_filter(counts, tot, "token", C.HH_K)
@@ -1090,7 +1018,7 @@ def hdr_quantile_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _events_stream(spark, sf_dir)
     buckets = quantiles.hdr_buckets(src, "value")
-    snap = _drain_to_memory(buckets, "st_hdr_quantile_sink", "complete", source_rows=_table_rows(sf_dir, "events"))
+    snap = _drain(buckets, "st_hdr_quantile_sink", table_path(sf_dir, "events"), "complete")
     return quantiles.hdr_quantiles(snap.localCheckpoint(eager=True))
 
 
@@ -1114,7 +1042,7 @@ def ack_tracker_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(i, f"AA:BB:CC:DD:EE:{i:02X}") for i in range(1, 9)], "id int, mac string"
     )
     out = ack_tracker(acks, targets, tiebreak="ack_id")
-    return _drain_to_memory(out, "st_ack_tracker_sink", "complete", source_rows=_table_rows(sf_dir, "events"))
+    return _drain(out, "st_ack_tracker_sink", table_path(sf_dir, "events"), "complete")
 
 
 def dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1124,7 +1052,7 @@ def dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     in production with ``dropDuplicatesWithinWatermark``."""
     src = _events_stream(spark, sf_dir)
     out = src.dropDuplicates(["user_id", "event_type"]).select("user_id", "event_type")
-    return _drain_to_memory(out, "st_dedup_sink", "append", source_rows=_table_rows(sf_dir, "events"))
+    return _drain(out, "st_dedup_sink", table_path(sf_dir, "events"))
 
 
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1160,7 +1088,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") <= F.col("c_ts"))
         & (F.col("p_ts") > F.col("c_ts") - F.expr("INTERVAL 1 HOUR")),
     ).select("click_id", "purchase_id")
-    return _drain_to_memory(joined, "st_stream_join_sink", "append", source_rows=_table_rows(sf_dir, "events"))
+    return _drain(joined, "st_stream_join_sink", table_path(sf_dir, "events"))
 
 
 def _command_lines_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -1214,8 +1142,6 @@ def _command_lines_dir(spark: SparkSession, sf_dir: str) -> str:
         os.rename(tmp_dir, out_dir)
     except OSError:
         # another process won the race; its completed dir is equivalent
-        import shutil
-
         shutil.rmtree(tmp_dir, ignore_errors=True)
     return out_dir
 
@@ -1246,7 +1172,7 @@ def command_plane_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cls")
         .agg(F.count("*").alias("n"))
     )
-    return _drain_to_memory(out, "st_command_plane_sink", "complete", source_rows=_rows_of(_source_files(cmd_dir)) or None)
+    return _drain(out, "st_command_plane_sink", cmd_dir, "complete")
 
 
 _ROUNDTRIP_SCHEMA = "event_type string, n long, sum_v double, n_distinct long"
@@ -1266,8 +1192,6 @@ def _read_back_batches(spark: SparkSession, out_dir: str, data_dir: str, read_fn
     (the retry-idempotent exactly-once layout), aggregate, detach from
     the tmp files, and clean up. A zero-batch stream never creates
     data_dir — deliver an empty result rather than a read error."""
-    import shutil
-
     os.makedirs(data_dir, exist_ok=True)
     batch_dirs = [
         os.path.join(data_dir, d)

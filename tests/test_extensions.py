@@ -2886,7 +2886,7 @@ def test_st_zorder_shards_are_balanced_and_full(spark, sf_dir):
     (8 buckets, near-full spans; caught by review)."""
     from espkinesis_spark import queries
 
-    rows = queries.st_zorder_layout(spark, sf_dir).collect()
+    rows = queries.registry()["st_zorder_layout"](spark, sf_dir).collect()
     assert len(rows) == 1 << (C.ZORDER_REPORT_BITS), len(rows)
     counts = [r["n"] for r in rows]
     mean = sum(counts) / len(counts)
@@ -3165,20 +3165,17 @@ def test_z_box_intervals_lossless_at_production_bit_depth():
 
 
 def test_z_interval_filter_matches_python_membership(spark):
-    """z_interval_filter's OR-of-BETWEENs must select exactly the rows
-    whose (cheap, pre-materialized) z value lies in an interval — pinned
-    here so the helper doesn't ship as untested surface (it exists for
-    covers over already-stored z columns; ex_zrange_bigmin's prefilter
-    is a semi-join instead, per the giant-codegen note)."""
+    """z_interval_prefilter's semi-join (ex_zrange_bigmin's prefilter)
+    must select exactly the rows whose z value lies in an interval."""
     from espkinesis_spark.functions import layout
 
     ivs = layout.z_box_intervals(3, 12, 2, 9, bits=4, max_intervals=6)
     df = spark.range(256).select(F.col("id").alias("z"))
-    got = {r["z"] for r in df.filter(layout.z_interval_filter(F.col("z"), ivs)).collect()}
+    got = {r["z"] for r in layout.z_interval_prefilter(df, "z", ivs).collect()}
     want = {v for lo, hi in ivs for v in range(lo, hi + 1)}
     assert got == want and 0 < len(ivs) <= 6
     # the empty cover selects nothing
-    assert df.filter(layout.z_interval_filter(F.col("z"), [])).count() == 0
+    assert layout.z_interval_prefilter(df, "z", []).count() == 0
 
 
 def test_z_box_intervals_tighter_than_octiles_on_skewed_box():

@@ -651,8 +651,8 @@ def test_winnow_stream_multibatch_equals_batch(spark, sf_dir, tmp_path_factory):
 
 
 def test_drain_rowstore_routes_by_source_size(spark, sf_dir, monkeypatch):
-    """The shared per-row drain policy (jobs._drain_rowstore) must pin
-    BOTH routes: below the source-size bound the fingerprint store
+    """The shared per-row drain policy (jobs._drain, per_row=True) must
+    pin BOTH routes: below the source-size bound the fingerprint store
     drains through the memory sink; with the bound forced to 0 the SAME
     job crosses to the executor-parallel parquet drain — and the
     analysis result over the drained store is identical either way
@@ -713,8 +713,8 @@ def test_source_bytes_sums_directory_style_tables(tmp_path):
 
 
 def test_drain_rowstore_routes_by_source_row_count(spark, sf_dir, monkeypatch):
-    """The router's driver-footprint proxy is the source's parquet-footer
-    ROW COUNT (one store row per source row), not just bytes — a corpus
+    """jobs._drain's per-row driver-footprint proxy is the source's
+    parquet-footer ROW COUNT (one store row per source row), not just bytes — a corpus
     of millions of tiny docs stays under any byte bound yet floods the
     single-threaded memory sink (r11 ADVICE). With the row bound forced
     to 0 the job must cross to the parquet drain even though the byte
@@ -752,7 +752,7 @@ def test_complete_mode_result_sink_routes_identically(
     """ESPK_RESULT_SINK=parquet swaps EVERY complete-mode result leg from
     the driver memory sink to the foreachBatch parquet snapshot (the
     100 TB shape: executor-parallel write, no driver copy) — routed from
-    the one policy point in _drain_to_memory. Both routes must return
+    the one policy point in jobs._drain. Both routes must return
     the identical result multiset; the parquet route must leave no
     memory-sink table behind. Pinned on the corpus-proportional
     session-window leg AND a second complete-mode job to prove the
@@ -773,6 +773,71 @@ def test_complete_mode_result_sink_routes_identically(
     via_parquet = run()
     assert not spark.catalog.tableExists(sink)
     assert via_parquet == via_memory and len(via_memory) > 0
+
+
+def test_drain_failure_restores_layout_and_name_drains_again(
+    spark, sf_dir, monkeypatch
+):
+    """The shared replay lifecycle on a query that fails mid-replay: the
+    drain re-raises the query's error, spark.sql.shuffle.partitions is
+    back to what it was before the drain pinned the state layout, and
+    the same query name drains cleanly on the next call."""
+    from pyspark.errors import StreamingQueryException
+
+    from espkinesis_spark.streaming import jobs
+    from espkinesis_spark.tables import _source_files, load_table, table_path
+
+    monkeypatch.delenv("ESPK_STREAM_STATE_PARTITIONS", raising=False)
+    events = table_path(sf_dir, "events")
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    # the layout the drain pins differs from the session value, so the
+    # restore below is not vacuous
+    rows = jobs._rows_of(_source_files(events))
+    assert jobs._state_partitions(spark, rows) != prev
+    src = jobs._events_stream(spark, sf_dir)
+    failing = src.select(
+        F.when(F.col("event_id") % 7 == 3, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("event_id"))
+        .alias("event_id")
+    )
+    with pytest.raises(StreamingQueryException, match="boom"):
+        jobs._drain(failing, "lifecycle_fail_sink", events)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    assert not any(q.name == "lifecycle_fail_sink" for q in spark.streams.active)
+
+    got = jobs._drain(src.select("event_id"), "lifecycle_fail_sink", events)
+    want = load_table(spark, sf_dir, "events").select("event_id")
+    assert sorted(r[0] for r in got.collect()) == sorted(r[0] for r in want.collect())
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    spark.catalog.dropTempView("lifecycle_fail_sink")
+
+
+def test_drain_stops_active_query_holding_its_name(spark, sf_dir):
+    """A still-active processingTime query holding the drain's name is
+    stopped first (starting a second query under an active name raises),
+    and the drain returns its own full result — not the stopped query's
+    memory table, which here holds no rows."""
+    from espkinesis_spark.streaming import jobs
+    from espkinesis_spark.tables import load_table, table_path
+
+    src = jobs._events_stream(spark, sf_dir).select("event_id")
+    hog = (
+        src.filter(F.col("event_id") < 0)
+        .writeStream.format("memory")
+        .queryName("lifecycle_hog")
+        .trigger(processingTime="1 hour")
+        .start()
+    )
+    try:
+        got = jobs._drain(src, "lifecycle_hog", table_path(sf_dir, "events"))
+        assert not hog.isActive
+        want = load_table(spark, sf_dir, "events").select("event_id")
+        assert sorted(r[0] for r in got.collect()) == sorted(
+            r[0] for r in want.collect()
+        )
+    finally:
+        hog.stop()
+        spark.catalog.dropTempView("lifecycle_hog")
 
 
 def test_fresh_store_error_classification():

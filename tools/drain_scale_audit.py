@@ -22,12 +22,12 @@ of a store whose rows grow more than GROWTH_LIMIT across the step:
     harness collects anyway, so the memory sink adds no second
     corpus-sized driver copy (the r10 VERDICT st_stratified carve-out).
   * EXPECTED_GROWTH (annotated): policy-routed fingerprint stores
-    (jobs._drain_rowstore keeps them on the memory sink BELOW its
-    source-size bound and crosses to the parquet drain above it) and
+    (jobs._drain's per-row route keeps them on the memory sink BELOW
+    its source-size bound and crosses to the parquet drain above it) and
     stores whose growth tracks a dimension the fixture couples to SF
     (key cardinality, time span) rather than corpus row count.
   * anything else: FLAGGED — cross it to jobs._drain_to_parquet or
-    route it through jobs._drain_rowstore.
+    route it through jobs._drain with per_row=True.
 
 Exit 1 on unexplained flags, 0 when clean.
 
@@ -54,15 +54,15 @@ MIN_FLAG_ROWS = 1000
 # sink name -> why >GROWTH_LIMIT growth is correct for this store
 EXPECTED_GROWTH: dict[str, str] = {
     "st_image_neardup_sink": "policy-routed per-doc fingerprint store: "
-    "_drain_rowstore keeps it on the memory sink below the 256 MB "
+    "_drain's per-row route keeps it on the memory sink below the 256 MB "
     "source bound and crosses to the parquet drain above it (route "
     "pinned by tests/test_streaming.py::test_drain_rowstore_routes_by_source_size)",
     "st_image_dedup_apply_sink": "policy-routed per-doc fingerprint "
-    "store (same _drain_rowstore bound)",
+    "store (same per-row bound)",
     "st_audio_neardup_sink": "policy-routed per-doc fingerprint store "
-    "(same _drain_rowstore bound)",
+    "(same per-row bound)",
     "st_audio_dedup_apply_sink": "policy-routed per-doc fingerprint "
-    "store (same _drain_rowstore bound)",
+    "store (same per-row bound)",
     "st_anomaly_sink": "complete-mode (hour-window x type) count state: "
     "grows with the fixture's TIME SPAN (which this fixture couples to "
     "SF), not with event volume — at production rates the window x type "
@@ -124,7 +124,7 @@ def main() -> None:
     if flagged:
         print(f"\nFLAGGED ({len(flagged)}): corpus-proportional driver "
               "memory-sink stores — cross these to the parquet drain "
-              "(jobs._drain_to_parquet / _drain_rowstore):")
+              "(jobs._drain_to_parquet / _drain per_row=True):")
         for entry, sink, a, b, r in flagged:
             print(f"  {entry}: {sink} {a} -> {b} (x{r:.1f})")
         sys.exit(1)
