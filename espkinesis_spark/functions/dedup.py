@@ -654,39 +654,25 @@ def dedup_clusters(
 DEDUP_APPLY_BROADCAST_BYTES = 256 << 20
 
 
-def dedup_apply(
-    docs: DataFrame, threshold: float = C.JACCARD_THRESHOLD, impl: str = "auto"
-) -> DataFrame:
+def dedup_apply(docs: DataFrame, threshold: float = C.JACCARD_THRESHOLD) -> DataFrame:
     """Full near-dup dedup pass applied to the corpus: LSH near-dup pairs →
     connected components → keep the min-doc_id canonical per cluster, drop
-    every other member. Returns the surviving documents (original schema).
-
-    ``impl='broadcast'``: map-side probe — the drop set broadcasts into a
-    left-anti join and the corpus scan is never shuffled. Right shape only
-    while the drop set is executor-memory-sized.
-    ``impl='shuffle'``: plain shuffled left-anti — the 100 TB shape. At
-    web-scale dup rates (30-50%) the drop set is corpus-scale; forcing a
-    broadcast there OOMs every executor, while the shuffle costs one
-    exchange of bare (doc_id) keys.
-    ``impl='auto'`` (default): route on Catalyst's size estimate of the
-    corpus scan (a reliable parquet stat, unlike the multi-stage drop-set
-    plan whose estimate degrades to a sentinel): small corpus → broadcast,
-    else shuffle. Mirrors assign_ids' plan-size routing.
-    """
-    return apply_pairs(docs, neardup_minhash(docs, threshold), impl)
+    every other member. Returns the surviving documents (original schema);
+    ``apply_drop_set`` picks the anti-join's shape."""
+    return apply_pairs(docs, neardup_minhash(docs, threshold))
 
 
-def apply_pairs(docs: DataFrame, pairs: DataFrame, impl: str = "auto") -> DataFrame:
+def apply_pairs(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """The shared dedup tail of every pairs source: near-dup ``pairs``
     (doc_a, doc_b) → ``dedup_clusters`` → drop every member but the
-    cluster's min doc_id → ``apply_drop_set`` (``impl`` routes the
-    anti-join). Returns the surviving documents."""
+    cluster's min doc_id → ``apply_drop_set``. Returns the surviving
+    documents."""
     drops = (
         dedup_clusters(pairs)
         .filter(F.col("doc_id") != F.col("cluster_id"))
         .select("doc_id")
     )
-    return apply_drop_set(docs, drops, impl)
+    return apply_drop_set(docs, drops)
 
 
 def survivor_summary(docs: DataFrame) -> DataFrame:
@@ -699,26 +685,25 @@ def survivor_summary(docs: DataFrame) -> DataFrame:
     )
 
 
-def apply_drop_set(
-    docs: DataFrame, drops: DataFrame, impl: str = "auto", key: str = "doc_id"
-) -> DataFrame:
-    """The dedup_apply anti-join stage alone: remove ``drops`` (bare
-    ``key`` ids) from ``docs``, routing broadcast-vs-shuffle on the
-    corpus scan's Catalyst size estimate exactly as ``dedup_apply``
-    documents. Shared by every pairs-source (MinHash text, perceptual
-    Hamming, substring, SemDeDup embeddings via ``key='vec_id'``) so
-    each modality's dedup ends in the same never-shuffle-the-corpus
-    apply shape."""
-    if impl == "auto":
-        from espkinesis_spark.plans.audit import plan_size_bytes
+def apply_drop_set(docs: DataFrame, drops: DataFrame, key: str = "doc_id") -> DataFrame:
+    """The dedup anti-join stage alone: remove ``drops`` (bare ``key``
+    ids) from ``docs``. Shared by every pairs-source (MinHash text,
+    perceptual Hamming, substring, SemDeDup embeddings via
+    ``key='vec_id'``) so each modality's dedup ends in the same apply
+    shape. Routes on Catalyst's size estimate of the corpus scan (a
+    reliable parquet stat, unlike the multi-stage drop-set plan's):
 
-        size = plan_size_bytes(docs)
-        impl = (
-            "broadcast"
-            if size is not None and size <= DEDUP_APPLY_BROADCAST_BYTES
-            else "shuffle"
-        )
-    if impl == "broadcast":
+    * within ``DEDUP_APPLY_BROADCAST_BYTES``: map-side probe — the drop
+      set broadcasts into a left-anti join and the corpus scan is never
+      shuffled;
+    * above it, or with no estimate: plain shuffled left-anti — the
+      100 TB shape. At web-scale dup rates (30-50%) the drop set is
+      corpus-scale; a broadcast there OOMs every executor, while the
+      shuffle costs one exchange of bare keys."""
+    from espkinesis_spark.plans.audit import plan_size_bytes
+
+    size = plan_size_bytes(docs)
+    if size is not None and size <= DEDUP_APPLY_BROADCAST_BYTES:
         return docs.join(F.broadcast(drops), key, "left_anti")
     # hint AGAINST broadcast so AQE keeps the exchange even if the drop
     # set's runtime stats look small mid-query
@@ -876,18 +861,7 @@ def dup_spans(
     """
     from pyspark.sql import Window
 
-    toks = tokens(F.col(text_col))
-    spans_expr = F.expr(
-        f"transform(sequence(1, size(__toks) - {span} + 1),"
-        f" i -> md5(concat_ws(' ', slice(__toks, i, {span}))))"
-    )
-    occ = (
-        docs.withColumn("__toks", toks)
-        .filter(F.size("__toks") >= span)
-        .select("doc_id", F.posexplode(spans_expr).alias("__p0", "__h"))
-        # posexplode is 0-based; the oracle's range() is 1-based
-        .select("doc_id", (F.col("__p0") + 1).alias("pos"), "__h")
-    )
+    occ, _ = dup_spans_tables(docs, span, text_col)
     w = Window.partitionBy("__h")
     # first-occurrence order is the lexicographic MIN of (doc_id, pos) —
     # struct ordering, not a doc_id*BASE+pos int64 composite, so there is
@@ -950,6 +924,7 @@ def dup_spans_tables(
     occ = (
         base.filter(F.size("__toks") >= span)
         .select("doc_id", F.posexplode(spans_expr).alias("__p0", "__h"))
+        # posexplode is 0-based; the oracle's range() is 1-based
         .select("doc_id", (F.col("__p0") + 1).alias("pos"), "__h")
     )
     # empty-string tokens filtered (the token_entropy convention): an

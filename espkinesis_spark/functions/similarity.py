@@ -69,15 +69,12 @@ def _fanout_width(df: DataFrame, expand: int) -> int:
     spark = df.sparkSession
     floor = spark.sparkContext.defaultParallelism
     est = _plan_size_bytes(df)
-    # None or the no-stats sentinel (Catalyst reports ~8 EB for unknown
-    # sources): fall back to the parallelism floor rather than asking for
-    # an absurd partition count. The sentinel gate sits at 2^60 (~1 EB)
-    # so genuine petabyte-scale estimates still derive a real width; the
-    # 2^17 cap bounds the result — a single shuffle wider than that is
-    # operationally wrong anyway.
-    if est is None or est >= (1 << 60):
+    # unknown size: the parallelism floor, not an absurd partition count;
+    # the 2^17 cap bounds the result — a single shuffle wider than that
+    # is operationally wrong anyway
+    if est is None:
         return floor
-    return min(max(floor, int(est) * max(expand, 1) // (64 << 20)), 1 << 17)
+    return min(max(floor, est * max(expand, 1) // (64 << 20)), 1 << 17)
 
 
 def sq_norm(a: Column) -> Column:
@@ -206,10 +203,11 @@ def neardup_cosine(vecs: DataFrame, threshold: float = C.NEARDUP_COSINE) -> Data
         return _neardup_cosine_numpy(vecs, threshold)
     import math
 
+    # unknown size: the widest blocking, the safe direction
     n_blocks = (
-        min(NEARDUP_MAX_BLOCKS, max(2, math.ceil(size / NEARDUP_BROADCAST_BYTES)))
-        if size is not None
-        else 8
+        NEARDUP_MAX_BLOCKS
+        if size is None
+        else min(NEARDUP_MAX_BLOCKS, max(2, math.ceil(size / NEARDUP_BROADCAST_BYTES)))
     )
     return neardup_cosine_blocked(vecs, threshold, n_blocks)
 

@@ -170,52 +170,42 @@ def resample_last(
 ASSIGN_IDS_WINDOW_BYTES = 16 << 20
 
 
-def assign_ids(
-    df: DataFrame, order_col: str, impl: str = "auto", n_buckets: int | None = None
-) -> DataFrame:
+def assign_ids(df: DataFrame, order_col: str) -> DataFrame:
     """J4 — registration-order dense id assignment (``next_id++``).
 
     Ref: lib/TargetManager/TargetManager.h:46-63 (ids start at 1, dense,
     insertion order).
 
-    ``impl='window'``: global ``row_number`` — a single-partition sort, fine
-    for dimension-sized inputs (the reference's registry is 8 rows).
-    ``impl='ranged'``: the fact-scale form — quantile range-bucket on
-    ``order_col`` (fixed boundary literals, so bucketing is deterministic),
-    per-bucket parallel sort + ``row_number``, then add each bucket's
-    cumulative row-count offset. Only bucket boundaries (n-1 values) and
-    bucket counts (n rows) ever reach the driver; no single-partition
-    exchange (plan-audited). Requires an orderable numeric/timestamp
-    ``order_col``; equal values land in one bucket, so ties behave exactly
-    as in the window form.
-    ``impl='auto'`` (default): pick by Catalyst's plan-size estimate.
+    Catalyst's plan-size estimate picks the form. Within
+    ``ASSIGN_IDS_WINDOW_BYTES`` (or for a non-orderable ``order_col``):
+    global ``row_number`` — a single-partition sort, fine for
+    dimension-sized inputs (the reference's registry is 8 rows). Above
+    it, or with no estimate: the fact-scale form — quantile range-bucket
+    on ``order_col`` into ``spark.sql.shuffle.partitions`` buckets
+    (fixed boundary literals, so bucketing is deterministic), per-bucket
+    parallel sort + ``row_number``, then add each bucket's cumulative
+    row-count offset. Only bucket boundaries (n-1 values) and bucket
+    counts (n rows) ever reach the driver; no single-partition exchange
+    (plan-audited). Equal values land in one bucket, so ties behave
+    exactly as in the window form.
     """
-    if impl == "auto":
-        from espkinesis_spark.plans.audit import plan_size_bytes
+    from espkinesis_spark.plans.audit import plan_size_bytes
 
-        size = plan_size_bytes(df)
-        dtype = dict(df.dtypes).get(order_col, "")
-        rangeable = dtype in {
-            "tinyint", "smallint", "int", "bigint", "float", "double", "date", "timestamp",
-        } or dtype.startswith("decimal")
-        impl = (
-            "ranged"
-            if rangeable and (size is None or size > ASSIGN_IDS_WINDOW_BYTES)
-            else "window"
-        )
-    if impl == "window":
-        w = Window.orderBy(F.col(order_col))
-        return df.withColumn("reg_id", F.row_number().over(w).cast("long"))
-
-    n = n_buckets or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    size = plan_size_bytes(df)
+    dtype = dict(df.dtypes).get(order_col, "")
+    rangeable = dtype in {
+        "tinyint", "smallint", "int", "bigint", "float", "double", "date", "timestamp",
+    } or dtype.startswith("decimal")
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     numeric = F.col(order_col).cast("double")
-    qs = [i / n for i in range(1, n)]
-    boundaries = (
-        df.agg(F.percentile_approx(numeric, qs, 100_000).alias("b")).first()["b"] or []
-        if qs
-        else []
-    )
-    if not boundaries:  # empty input or n_buckets=1 → nothing to range over
+    boundaries = []
+    if rangeable and (size is None or size > ASSIGN_IDS_WINDOW_BYTES) and n > 1:
+        qs = [i / n for i in range(1, n)]
+        boundaries = (
+            df.agg(F.percentile_approx(numeric, qs, 100_000).alias("b")).first()["b"]
+            or []
+        )
+    if not boundaries:  # small, unorderable, one bucket or empty: window form
         w = Window.orderBy(F.col(order_col))
         return df.withColumn("reg_id", F.row_number().over(w).cast("long"))
     # value-based bucketing: count of boundaries strictly below the value —

@@ -20,17 +20,25 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().explainString(mode)
 
 
+# Catalyst reports sizeInBytes = Long.MaxValue (~8 EB) for a plan it has
+# no statistics for; any estimate at or past 2^60 (~1 EB) is that
+# sentinel, not a measurement — genuine petabyte estimates stay below it.
+NO_STATS_BYTES = 1 << 60
+
+
 def plan_size_bytes(df: DataFrame) -> int | None:
     """Catalyst's optimized-plan size estimate — no job, no collect.
 
-    For a parquet scan this is the (filtered) file size; unknown sources get
-    a huge sentinel, which auto-routing callers treat as "too big to
-    collect/broadcast" — the safe direction.
+    For a parquet scan this is the (filtered) file size. ``None`` means
+    "size unknown": the plan has no statistics (Catalyst's no-stats
+    sentinel) or the estimate failed. Auto-routing callers treat
+    ``None`` as too big to collect or broadcast — the safe direction.
     """
     try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:
         return None
+    return None if size >= NO_STATS_BYTES else size
 
 
 def pushed_filters(df: DataFrame) -> list[str]:

@@ -83,13 +83,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the tuned SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (fallback local[*]).
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (fallback local[*]),
+    and the driver memory to ``$SPARK_GRAFT_DRIVER_MEM`` (fallback 24g):
+    the only two settings the library reads from the environment.
     """
-    # before the JVM exists: state-API workers (transformWithStateInPandas)
-    # inherit the JVM env, which inherits ours — see protobuf_compat
-    from espkinesis_spark.protobuf_compat import ensure_protobuf_runtime
-
-    ensure_protobuf_runtime()
     _put_package_on_pythonpath()
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")

@@ -13,10 +13,11 @@ against the same DuckDB oracles as the batch queries, e.g.:
 ``queries.registry()`` maps each ``st_*`` name straight to its job here.
 Every drain runs one query lifecycle, ``_replay``: stop a same-named
 active query, pin ``_state_layout``, start with availableNow, wait,
-record the plan. ``_drain`` decides the sink of summary-sized and
-per-row stores from the source table's parquet footers; corpus-sized
-stores call ``_drain_to_parquet`` directly. The two round-trip jobs
-start their queries through the ``sinks`` K1/K3 constructors.
+record the plan. ``_drain`` picks the sink of every other leg by one
+rule on the source table's parquet footers: above either source bound
+the parquet drain, otherwise the memory sink. Corpus-sized stores call
+``_drain_to_parquet`` directly. The two round-trip jobs start their
+queries through the ``sinks`` K1/K3 constructors.
 """
 
 from __future__ import annotations
@@ -156,13 +157,14 @@ def _drain_to_parquet(
     mode: str = "append",
     source_rows: int | None = None,
 ) -> DataFrame:
-    """Append-mode drain for CORPUS-SIZED extraction stores (token /
-    span-hash tables): a parquet file sink, read back as a batch frame.
-    ``mode="complete"`` is the executor-parallel drain for complete-mode
-    results (``_drain`` routes them here under ESPK_RESULT_SINK=parquet):
-    the file sink rejects complete output, so foreachBatch overwrites a
-    parquet snapshot of the full state each trigger and the last
-    trigger's snapshot IS the declared result.
+    """The executor-parallel drain: a parquet store, read back as a batch
+    frame. Corpus-sized extraction stores (token / span-hash tables) come
+    here directly; ``_drain`` sends any other leg here once its source
+    crosses a memory-drain bound. ``mode="append"`` uses the parquet file
+    sink. ``mode="complete"`` cannot (the file sink rejects complete
+    output), so foreachBatch overwrites a parquet snapshot of the full
+    state each trigger and the last trigger's snapshot IS the declared
+    result.
 
     The memory sink collects every row to the driver single-threaded —
     fine for sketch/fingerprint-sized stores, but a corpus-sized store
@@ -314,15 +316,12 @@ STATE_ROWS_PER_PARTITION = 250_000
 
 def _state_partitions(spark: SparkSession, source_rows: int | None) -> str:
     """Derived state-store partition count for one streaming query:
-    ESPK_STREAM_STATE_PARTITIONS overrides; otherwise ceil(source_rows /
-    STATE_ROWS_PER_PARTITION) — source rows upper-bound the state keys —
-    clamped to [1, 4 x defaultParallelism]. An unknown source size falls
-    back to min(8, defaultParallelism): a parallel floor that does not pay
-    one state store per core on a large cluster (every in-repo stateful
-    job passes its source's footer row count)."""
-    env = os.environ.get("ESPK_STREAM_STATE_PARTITIONS")
-    if env:
-        return env
+    ceil(source_rows / STATE_ROWS_PER_PARTITION) — source rows
+    upper-bound the state keys — clamped to [1, 4 x defaultParallelism].
+    An unknown source size falls back to min(8, defaultParallelism): a
+    parallel floor that does not pay one state store per core on a large
+    cluster (every in-repo stateful job passes its source's footer row
+    count)."""
     cores = spark.sparkContext.defaultParallelism
     if source_rows is None:
         return str(min(8, cores))
@@ -366,58 +365,39 @@ def _replay(
         _record_stream_plan(query)
 
 
-# Crossover for per-row stores in ``_drain``: under these SOURCE bounds
-# the driver memory sink is acceptable (fixture scale); above either, a
-# per-source-row store is large enough that single-threaded driver
-# collection dominates (the r8 st_bm25 lesson: 48x wall, almost all
-# drain). TWO bounds because the store's driver footprint scales with
-# source ROW COUNT, not bytes — a corpus of millions of tiny docs stays
-# under any byte bound yet pushes millions of rows through the memory
-# sink (r11 ADVICE). Both overridable for tests / cluster sizing.
+# Source bounds of the memory sink in ``_drain``: under both, a leg's
+# driver-collected result is fixture-sized; above either, single-threaded
+# driver collection dominates (the r8 st_bm25 lesson: 48x wall, almost
+# all drain) and the leg takes the executor-parallel parquet drain. TWO
+# bounds because a store's driver footprint scales with source ROW COUNT,
+# not bytes — a corpus of millions of tiny docs stays under any byte
+# bound yet pushes millions of rows through the memory sink (r11 ADVICE).
 MEMORY_DRAIN_MAX_SOURCE_BYTES = 256 << 20
 MEMORY_DRAIN_MAX_SOURCE_ROWS = 1_000_000
 
 
-def _drain(
-    df: DataFrame, name: str, source: str, mode: str = "append", *, per_row: bool = False
-) -> DataFrame:
-    """Drain a summary-sized or per-row stream result, deciding its sink
-    from the ``source`` table's parquet FOOTERS (one directory walk, read
-    before the stream runs; the row count also sizes the state layout).
-
-    Three store classes, three drains (the shared policy):
-      * summary-sized (sketches, complete-mode aggregates, top-k): the
-        memory sink — bounded by design, and the declared result the
-        harness collects anyway. ESPK_RESULT_SINK=parquet moves EVERY
-        complete-mode leg to the executor-parallel snapshot drain
-        (durable, no driver copy): the production opt-in.
-      * per-source-row narrow stores (``per_row=True``: one fingerprint
-        row per document): the memory sink at fixture scale, but
-        corpus-proportional, so above either source bound
-        (ESPK_MEMORY_DRAIN_MAX_ROWS / _BYTES; footer row count, the
-        store's driver footprint, plus on-disk bytes) the store crosses
-        to the executor-parallel parquet drain (the same size-routed
-        style as dedup.apply_drop_set's broadcast-vs-shuffled anti-join).
-      * corpus-sized stores (token/span/shingle tables, per-EVENT rows —
-        several rows per document or fact-table-sized): never routed
-        here; their jobs call ``_drain_to_parquet`` directly (the r8
-        discipline).
+def _drain(df: DataFrame, name: str, source: str, mode: str = "append") -> DataFrame:
+    """Drain a stream result whose size the ``source`` table bounds,
+    deciding its sink from that table's parquet FOOTERS (one directory
+    walk, read before the stream runs; the row count also sizes the
+    state layout). One rule for every leg: if the source's bytes exceed
+    ``MEMORY_DRAIN_MAX_SOURCE_BYTES`` or its rows exceed
+    ``MEMORY_DRAIN_MAX_SOURCE_ROWS``, the leg drains executor-parallel
+    through ``_drain_to_parquet(mode=mode)``; otherwise through the
+    driver memory sink, read back as the table ``name``. Corpus-sized
+    stores (token/span/shingle tables, per-EVENT rows — several rows per
+    document) never come here; their jobs call ``_drain_to_parquet``
+    directly (the r8 discipline).
 
     A missing source sizes nothing (the stream's own reader raises the
     clearer error) and routes to memory."""
     files = _source_files(source)
     rows = _rows_of(files) if files else None
-    if mode == "complete" and os.environ.get("ESPK_RESULT_SINK") == "parquet":
-        return _drain_to_parquet(df, name, mode="complete", source_rows=rows)
-    if per_row:
-        byte_bound = int(
-            os.environ.get("ESPK_MEMORY_DRAIN_MAX_BYTES", MEMORY_DRAIN_MAX_SOURCE_BYTES)
-        )
-        row_bound = int(
-            os.environ.get("ESPK_MEMORY_DRAIN_MAX_ROWS", MEMORY_DRAIN_MAX_SOURCE_ROWS)
-        )
-        if _bytes_of(files) > byte_bound or (rows or 0) > row_bound:
-            return _drain_to_parquet(df, name, source_rows=rows)
+    if (
+        _bytes_of(files) > MEMORY_DRAIN_MAX_SOURCE_BYTES
+        or (rows or 0) > MEMORY_DRAIN_MAX_SOURCE_ROWS
+    ):
+        return _drain_to_parquet(df, name, mode=mode, source_rows=rows)
     _replay(df, name, lambda w: w.outputMode(mode).format("memory"), rows)
     return df.sparkSession.table(name)
 
@@ -485,10 +465,8 @@ def session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n"), F.max("event_id").alias("last_event")
     )
     out = agg.select("user_id", F.col("sw.start").alias("s_start"), "n", "last_event")
-    # This result leg is corpus-proportional (~one session per active
-    # user) — the r11 VERDICT design-note-b case for the
-    # ESPK_RESULT_SINK=parquet opt-in, which _drain routes for every
-    # complete-mode leg from one policy point.
+    # corpus-proportional (~one session per active user): past the
+    # source bounds _drain sends it to the foreachBatch parquet snapshot
     return _drain(out, "st_session_window_sink", table_path(sf_dir, "events"), "complete")
 
 
@@ -537,7 +515,7 @@ def image_neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _documents_stream(spark, sf_dir)
     hashes = image_dhash(synthesize_gray_bmp(src))
-    store = _drain(hashes, "st_image_neardup_sink", table_path(sf_dir, "documents"), per_row=True)
+    store = _drain(hashes, "st_image_neardup_sink", table_path(sf_dir, "documents"))
     return hamming_neardup(store, max_hamming=C.IMG_HAM_MAX)
 
 
@@ -584,7 +562,7 @@ def image_dedup_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _documents_stream(spark, sf_dir)
     hashes = image_dhash(synthesize_gray_bmp(src))
-    store = _drain(hashes, "st_image_dedup_apply_sink", table_path(sf_dir, "documents"), per_row=True)
+    store = _drain(hashes, "st_image_dedup_apply_sink", table_path(sf_dir, "documents"))
     pairs = hamming_neardup(store, max_hamming=C.IMG_HAM_MAX).select(
         F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b")
     )
@@ -624,7 +602,7 @@ def audio_dedup_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _documents_stream(spark, sf_dir)
     hashes = audio_envelope_hash(synthesize_tone_wav(src))
-    store = _drain(hashes, "st_audio_dedup_apply_sink", table_path(sf_dir, "documents"), per_row=True)
+    store = _drain(hashes, "st_audio_dedup_apply_sink", table_path(sf_dir, "documents"))
     pairs = hamming_neardup(store, max_hamming=C.AUD_HAM_MAX).select(
         F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b")
     )
@@ -687,7 +665,7 @@ def audio_neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _documents_stream(spark, sf_dir)
     hashes = audio_envelope_hash(synthesize_tone_wav(src))
-    store = _drain(hashes, "st_audio_neardup_sink", table_path(sf_dir, "documents"), per_row=True)
+    store = _drain(hashes, "st_audio_neardup_sink", table_path(sf_dir, "documents"))
     return hamming_neardup(store, max_hamming=C.AUD_HAM_MAX)
 
 
@@ -705,7 +683,7 @@ def video_neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _documents_stream(spark, sf_dir)
     frames = sample_frames(attach_binary(src))
     # several keyframe rows per document — always the parquet drain
-    # (_drain's per-row route takes only one-row-per-doc stores)
+    # (_drain's source bounds assume at most one row per source row)
     store = _drain_to_parquet(frames, "st_video_neardup_sink")
     return shared_frame_neardup(store)
 

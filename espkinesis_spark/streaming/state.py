@@ -3,9 +3,12 @@
 The one genuinely stateful construct in the reference is the override
 session (A5): a command patches a target's channels and sets an absolute
 expiry; frames re-use the override until it lapses, checked lazily at frame
-time (ref: src/transmitter/main.cpp:84-87,215-217). Both processors here use
-``applyInPandasWithState`` — keyed state in the state store, Arrow-batched
-user code, event-time logic so replays are deterministic.
+time (ref: src/transmitter/main.cpp:84-87,215-217). Both processors here
+(the override session and the as-of matcher) use ``applyInPandasWithState``
+— keyed state in the state store, Arrow-batched user code, event-time
+logic so replays are deterministic. ``override_sessions`` is the one
+override session; its (patch, expiry) state checkpoints on either state
+store provider (the HDFS-backed default or RocksDB).
 
 Scale: the override session keys state by target, the as-of matcher by a
 hash bucket of the user (one ``operators.core.asof_window_max`` call per
@@ -138,22 +141,21 @@ OVERRIDE_STATE_SCHEMA = T.StructType(
 )
 
 
-def _override_step(
-    key, patch: list[int] | None, expiry: int, pdf: pd.DataFrame
-) -> tuple[list[int] | None, int, pd.DataFrame]:
-    """One override-session step for one target, shared by both state APIs
-    (ref semantics, event time, rows in (ts, seq) order):
+def _override_fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+    """One override-session step for one target (ref semantics, event
+    time, rows in (ts, seq) order):
 
     * command row -> store (patch, expiry = cmd_ts + duration ms)
       (ref: src/transmitter/main.cpp:215-217)
     * frame row   -> if frame_ts < expiry apply patch (-1 keeps live value,
       ref :190-213), else the override has lapsed (lazy check, ref :84-87).
     """
+    patch, expiry = state.get if state.exists else (None, -1)
     # plain Python ints: numpy scalars don't survive the state round trip
     patch = None if patch is None else [int(c) for c in patch]
     expiry = int(expiry)
     rows: list[tuple] = []
-    for row in pdf.sort_values(["ts", "seq"]).itertuples():
+    for row in pd.concat(list(pdfs)).sort_values(["ts", "seq"]).itertuples():
         t_us = row.ts.value // 1000
         if row.kind == "command":
             patch = [int(c) for c in row.channels]
@@ -165,14 +167,8 @@ def _override_step(
                 rows.append((int(key[0]), row.ts, int(row.frame_id), merged, True))
             else:
                 rows.append((int(key[0]), row.ts, int(row.frame_id), live, False))
-    return patch, expiry, pd.DataFrame(rows, columns=OVERRIDE_OUTPUT_SCHEMA.names)
-
-
-def _override_fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-    patch, expiry = state.get if state.exists else (None, -1)
-    patch, expiry, out = _override_step(key, patch, expiry, pd.concat(list(pdfs)))
     state.update((patch, expiry))
-    yield out
+    yield pd.DataFrame(rows, columns=OVERRIDE_OUTPUT_SCHEMA.names)
 
 
 def override_sessions(tagged: DataFrame) -> DataFrame:
@@ -190,40 +186,3 @@ def override_sessions(tagged: DataFrame) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-def override_sessions_tws(tagged: DataFrame) -> DataFrame:
-    """The same override session on Spark 4's ``transformWithStateInPandas``
-    (the successor stateful API: typed state handles, timer support, state
-    schema evolution). Semantics identical to ``override_sessions``;
-    requires the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass`` — the production
-    provider recommended at scale anyway). NOTE: the API's state workers
-    need the ``google.protobuf`` runtime (they import pyspark's generated
-    ``StateMessage_pb2``); an interpreter without protobuf crashes the
-    "TransformWithStateInPySpark driver worker" at PRE_INIT —
-    ``protobuf_compat.ensure_protobuf_runtime`` (called by
-    ``session.get_spark``) shims a vendored runtime when one exists, and
-    the test suite skips when none can be found. ``override_sessions`` is
-    the portable default.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class OverrideProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("override", OVERRIDE_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            patch, expiry = self._state.get() if self._state.exists() else (None, -1)
-            patch, expiry, out = _override_step(key, patch, expiry, pd.concat(list(rows)))
-            self._state.update((patch, expiry))
-            yield out
-
-    return tagged.groupBy("target_id").transformWithStateInPandas(
-        statefulProcessor=OverrideProcessor(),
-        outputStructType=OVERRIDE_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )

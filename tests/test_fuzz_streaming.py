@@ -13,12 +13,9 @@ a replayed batch — are exactly the class a fixed 3-chunk replay
 (tests/test_streaming.py's multibatch tests) can miss when the bug needs
 a specific boundary placement.
 
-Nine families across the five streaming execution models the engine
+Eight families across the four streaming execution models the engine
 uses (families 4/4b/4c/5 target applyInPandasWithState — one per
-stateful processor plus the bounded-lateness and oracle-model variants;
-family 7 targets transformWithStateInPandas, runnable since
-protobuf_compat unblocked its state workers in r16 — it self-skips where
-no protobuf runtime exists):
+stateful processor plus the bounded-lateness and oracle-model variants):
  1. complete-mode grouped aggregation (streaming-agg state accumulates
     partials across triggers) — random filter + group key + exact
     aggregates over events;
@@ -63,15 +60,7 @@ no protobuf runtime exists):
     jobs._drain_to_parquet(resume=True) legs on one stable base, and
     after EVERY seam the store must equal the batch transform over the
     rows exposed so far (exactly-once across any seam placement,
-    including nothing-new legs and a seam before the first commit);
- 7. transformWithStateInPandas override sessions — the SAME randomly-cut
-    replay as family 5 driven through override_sessions_tws (RocksDB
-    state store, the Spark-4 typed-state API): its output must be
-    frame-for-frame identical to the classic applyInPandasWithState
-    processor's on identical boundaries — value-state carryover, ties,
-    and expiry semantics must agree between the two state APIs at every
-    boundary placement, not just on the fixed fixture the deterministic
-    TWS test pins.
+    including nothing-new legs and a seam before the first commit).
 
 Families 4/4b/4c/5 order chunks BY TIME (unlike the hash-random chunks of
 1-3): the stateful processors' contract is bounded disorder — state is
@@ -432,15 +421,13 @@ _OVR_SPEC = st.fixed_dictionaries(
 )
 
 
-def _override_session_run(spark, src, spec, variant="classic"):
+def _override_session_run(spark, src, spec):
     """Derive frames + commands in-stream from a cut events source, route
     them through the REAL tagging + override-session path, and drain.
     Command patch/duration depend only on ts (not event_id) so two
     commands landing on the same (target, ts) are identical — the
     processor's (ts, seq) sort cannot order such ties, and value-equal
-    ties keep both replays deterministic. ``variant`` picks the state
-    API: the classic applyInPandasWithState processor or the Spark-4
-    transformWithStateInPandas one (family 7)."""
+    ties keep both replays deterministic."""
     from espkinesis_spark.streaming import pipeline as stp
     from espkinesis_spark.streaming import state as sst
 
@@ -469,10 +456,7 @@ def _override_session_run(spark, src, spec, variant="classic"):
     )
     targets = spark.createDataFrame([(0,), (1,), (2,)], "id int")
     tagged = stp.tag_frames_and_commands(frames, cmds, targets)
-    session_fn = (
-        sst.override_sessions_tws if variant == "tws" else sst.override_sessions
-    )
-    out = _run_available_now(session_fn(tagged), "append", spark)
+    out = _run_available_now(sst.override_sessions(tagged), "append", spark)
     return {
         (r["target_id"], r["frame_id"]): (tuple(r["channels"]), r["overridden"])
         for r in out.collect()
@@ -1018,66 +1002,3 @@ def test_checkpoint_loss_witness_resume_refuses_orphaned_store(
     )
     assert replayed.count() == len(pdf)
     assert {r[0] for r in replayed.collect()} == set(pdf["doc_id"])
-
-
-# --- family 7: transformWithStateInPandas equivalence (unblocked r16) ------
-
-_TWS_SPEC = st.fixed_dictionaries(
-    {
-        "cuts": st.lists(
-            st.integers(min_value=0, max_value=1000), min_size=1, max_size=4
-        ),
-        "cmd_mod": st.integers(min_value=12, max_value=40),
-        "salt": st.integers(min_value=0, max_value=2**31),
-    }
-)
-
-
-@given(spec=_TWS_SPEC)
-@settings(
-    max_examples=5,  # each example runs TWO full streaming replays (TWS + classic)
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-def test_tws_override_sessions_match_classic_at_random_boundaries(
-    spark, stream_fuzz_ctx, asof_batch_ctx, spec
-):
-    """Family 7: the Spark-4 transformWithStateInPandas implementation of
-    A5 (override_sessions_tws) must emit frame-for-frame the classic
-    applyInPandasWithState processor's output on the SAME randomly-cut
-    time-ordered replay. The deterministic TWS test pins one fixture and
-    one boundary shape; this family randomizes boundary placement and the
-    command density, so a divergence in value-state carryover across a
-    batch seam, in (ts, seq) tie handling, or in expiry arithmetic between
-    the two state APIs shows up as a dict mismatch. Classic is the
-    reference: it is itself pinned against an independent pandas oracle
-    (test_streaming.py) and fuzz family 5."""
-    from hypothesis import assume
-
-    from espkinesis_spark.protobuf_compat import ensure_protobuf_runtime
-
-    if not ensure_protobuf_runtime():
-        pytest.skip("no google.protobuf runtime for the TWS state workers")
-
-    ev, _, tmp = stream_fuzz_ctx
-    pdf, _ = asof_batch_ctx
-    src = _ordered_boundary_source(
-        spark, tmp, pdf, ev.schema, ["ts", "event_id"], spec["cuts"]
-    )
-    # classic reference FIRST: the vacuity assume depends only on it, so a
-    # vacuous draw is rejected before paying for the TWS/RocksDB replay
-    want = _override_session_run(spark, src, spec)
-    assume(any(over for _, over in want.values()))
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        got = _override_session_run(spark, src, spec, variant="tws")
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    assert got == want

@@ -2,6 +2,12 @@
 
 from __future__ import annotations
 
+import contextlib
+from types import SimpleNamespace
+
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from espkinesis_spark.functions import similarity
@@ -55,27 +61,117 @@ def test_neardup_auto_routes_by_size(spark, sf_dir, monkeypatch):
     assert _pairs_set(blocked) == baseline and len(baseline) > 0
 
 
-def test_assign_ids_ranged_equals_window(spark, sf_dir):
+# Catalyst estimates a size-routed caller can see: failed (None), empty,
+# tiny, a genuine ~576 PB, and the no-stats sentinel Long.MaxValue
+_ESTIMATES = [None, 0, 1, 1 << 59, (1 << 63) - 1]
+
+
+def _estimated_frame(est, cores=4):
+    """A stand-in DataFrame whose Catalyst estimate is ``est`` (None: the
+    estimate raises) — just the attributes plan_size_bytes and the
+    routers read."""
+
+    def size_in_bytes():
+        if est is None:
+            raise RuntimeError("no estimate")
+        return est
+
+    stats = SimpleNamespace(sizeInBytes=size_in_bytes)
+    plan = SimpleNamespace(stats=lambda: stats)
+    qe = SimpleNamespace(optimizedPlan=lambda: plan)
+    ctx = SimpleNamespace(defaultParallelism=cores)
+    return SimpleNamespace(
+        _jdf=SimpleNamespace(queryExecution=lambda: qe),
+        sparkSession=SimpleNamespace(sparkContext=ctx),
+    )
+
+
+@pytest.mark.parametrize("est", _ESTIMATES)
+def test_plan_size_bytes_reads_no_stats_as_unknown(est):
+    from espkinesis_spark.plans import audit
+
+    want = None if est is None or est >= 1 << 60 else est
+    assert audit.plan_size_bytes(_estimated_frame(est)) == want
+
+
+def test_rdd_frame_without_stats_has_unknown_size(spark):
+    from espkinesis_spark.plans import audit
+
+    df = spark.sparkContext.parallelize([(1,), (2,)]).toDF(["x"])
+    assert audit.plan_size_bytes(df) is None
+
+
+@given(
+    est=st.sampled_from(_ESTIMATES),
+    expand=st.integers(min_value=0, max_value=1 << 20),
+    cores=st.integers(min_value=1, max_value=4096),
+)
+@settings(max_examples=200, deadline=None)
+def test_fanout_width_stays_in_bounds(est, expand, cores):
+    width = similarity._fanout_width(_estimated_frame(est, cores), expand)
+    assert cores <= width <= 1 << 17
+    if est is None or est >= 1 << 60:
+        assert width == cores
+
+
+@pytest.mark.parametrize("est", _ESTIMATES)
+def test_neardup_cosine_route_for_every_estimate(est, monkeypatch):
+    """Broadcast exactly when the estimate is known and within the
+    budget; otherwise the blocked path with 2 <= n_blocks <= 64."""
+    monkeypatch.setattr(
+        similarity, "_neardup_cosine_numpy", lambda vecs, threshold: ("broadcast",)
+    )
+    monkeypatch.setattr(
+        similarity,
+        "neardup_cosine_blocked",
+        lambda vecs, threshold, n_blocks: ("blocked", n_blocks),
+    )
+    route = similarity.neardup_cosine(_estimated_frame(est))
+    known = est is not None and est < 1 << 60
+    if known and est <= similarity.NEARDUP_BROADCAST_BYTES:
+        assert route == ("broadcast",)
+    else:
+        assert route[0] == "blocked"
+        assert 2 <= route[1] <= similarity.NEARDUP_MAX_BLOCKS
+
+
+@contextlib.contextmanager
+def _shuffle_partitions(spark, n):
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_assign_ids_ranged_equals_window(spark, sf_dir, monkeypatch):
     cust = load_table(spark, sf_dir, "customer").select("c_custkey")
+    monkeypatch.setattr(ops, "ASSIGN_IDS_WINDOW_BYTES", 1 << 60)  # force window
     want = {
         (r["c_custkey"], r["reg_id"])
-        for r in ops.assign_ids(cust, "c_custkey", impl="window").collect()
+        for r in ops.assign_ids(cust, "c_custkey").collect()
     }
-    got = {
-        (r["c_custkey"], r["reg_id"])
-        for r in ops.assign_ids(cust, "c_custkey", impl="ranged", n_buckets=7).collect()
-    }
+    monkeypatch.setattr(ops, "ASSIGN_IDS_WINDOW_BYTES", 1)  # force ranged
+    with _shuffle_partitions(spark, 7):
+        got = {
+            (r["c_custkey"], r["reg_id"])
+            for r in ops.assign_ids(cust, "c_custkey").collect()
+        }
     assert got == want and len(want) > 0
 
 
-def test_assign_ids_ranged_has_no_single_partition_exchange(spark, sf_dir):
+def test_assign_ids_ranged_has_no_single_partition_exchange(spark, sf_dir, monkeypatch):
     from espkinesis_spark.plans import audit
 
     cust = load_table(spark, sf_dir, "customer").select("c_custkey")
-    plan = audit.physical_plan(ops.assign_ids(cust, "c_custkey", impl="ranged", n_buckets=7))
+    monkeypatch.setattr(ops, "ASSIGN_IDS_WINDOW_BYTES", 1)  # force ranged
+    with _shuffle_partitions(spark, 7):
+        plan = audit.physical_plan(ops.assign_ids(cust, "c_custkey"))
     assert "SinglePartition" not in plan
     # the dimension form, by contrast, is the documented single sort
-    plan_w = audit.physical_plan(ops.assign_ids(cust, "c_custkey", impl="window"))
+    monkeypatch.setattr(ops, "ASSIGN_IDS_WINDOW_BYTES", 1 << 60)  # force window
+    plan_w = audit.physical_plan(ops.assign_ids(cust, "c_custkey"))
     assert "SinglePartition" in plan_w
 
 
@@ -136,7 +232,7 @@ def test_pandas_asof_null_keys_and_times_match_nothing(spark):
     }
 
 
-def test_dedup_apply_shuffle_equals_broadcast(spark, sf_dir):
+def test_dedup_apply_shuffle_equals_broadcast(spark, sf_dir, monkeypatch):
     """The big-drop-set path (shuffled left-anti) must produce exactly the
     broadcast path's survivors, and its plan must contain NO
     BroadcastExchange feeding the anti join — at web-scale dup rates the
@@ -145,8 +241,10 @@ def test_dedup_apply_shuffle_equals_broadcast(spark, sf_dir):
     from espkinesis_spark.plans import audit
 
     docs = load_table(spark, sf_dir, "documents")
-    bc = dedup.dedup_apply(docs, impl="broadcast")
-    sh = dedup.dedup_apply(docs, impl="shuffle")
+    monkeypatch.setattr(dedup, "DEDUP_APPLY_BROADCAST_BYTES", 1 << 60)
+    bc = dedup.dedup_apply(docs)
+    monkeypatch.setattr(dedup, "DEDUP_APPLY_BROADCAST_BYTES", 1)
+    sh = dedup.dedup_apply(docs)
     want = {r["doc_id"] for r in bc.select("doc_id").collect()}
     got = {r["doc_id"] for r in sh.select("doc_id").collect()}
     assert got == want and len(want) > 0

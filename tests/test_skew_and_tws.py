@@ -1,12 +1,12 @@
-"""Salted-join equivalence + transformWithStateInPandas override session."""
+"""Salted-join equivalence + override-session state across a RocksDB
+checkpoint restart."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from espkinesis_spark.operators.skew import salted_join
-from espkinesis_spark.streaming import fixtures, pipeline, sources, state
+from espkinesis_spark.streaming import pipeline, sources, state
 from espkinesis_spark.tables import load_table
 
 
@@ -55,90 +55,21 @@ def test_salted_join_plan_spreads_hot_key(spark, sf_dir):
     assert re.search(r"hashpartitioning\([^)]*skew_key[^)]*__salt", plan), plan[:2000]
 
 
-@pytest.fixture(scope="module")
-def fixture_paths(spark, tmp_path_factory):
-    out = tmp_path_factory.mktemp("tws_fixtures")
-    return fixtures.write_fixtures(spark, str(out))
-
-
-def test_tws_override_session_matches_classic(spark, fixture_paths):
-    targets = fixtures.targets_df(spark)
-    frames = sources.file_stream(spark, fixture_paths["frames"], sources.FRAME_SCHEMA)
-    lines = sources.file_stream(
-        spark, fixture_paths["commands"], sources.COMMAND_LINE_SCHEMA, fmt="json"
-    )
-    valid, _ = pipeline.command_plane(lines, targets)
-    tagged = pipeline.tag_frames_and_commands(frames, valid, targets)
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        out = state.override_sessions_tws(tagged)
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("tws_out")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        except Exception as exc:  # noqa: BLE001
-            if "TransformWithStateInPySpark driver worker" in str(exc):
-                pytest.skip(
-                    "transformWithStateInPandas state workers cannot start here "
-                    "(no google.protobuf runtime and no vendored copy for "
-                    "protobuf_compat to shim); API exercised where one exists"
-                )
-            raise
-        got = {
-            (r["target_id"], r["frame_id"]): (list(r["channels"]), r["overridden"])
-            for r in spark.table("tws_out").collect()
-        }
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-    classic = state.override_sessions(tagged)
-    q2 = (
-        classic.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("classic_out")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination()
-    want = {
-        (r["target_id"], r["frame_id"]): (list(r["channels"]), r["overridden"])
-        for r in spark.table("classic_out").collect()
-    }
-    assert got == want and len(got) == 400 * 8
-
-
-def test_tws_state_survives_query_restart(spark, tmp_path_factory):
-    """The TWS value state must be RESTORED from the RocksDB checkpoint
-    across a full query stop/restart: a command consumed in leg 1 sets
-    (patch, expiry); a frame delivered only in leg 2 — a brand-new query
-    resuming the same checkpoint — must still be patched by it, and a
-    frame past expiry must not. A processor whose state silently resets
-    on restart (init() ignoring the restored store, a state schema
-    mismatch, a checkpoint not carrying the store) emits f2 unpatched and
-    fails the exact-tuple compare. Hand-computed expectation — no reuse
-    of either engine path as its own oracle."""
+def test_override_session_state_survives_query_restart(spark, tmp_path_factory):
+    """The override session's (patch, expiry) state must be RESTORED
+    from the RocksDB checkpoint across a full query stop/restart: a
+    command consumed in leg 1 sets (patch, expiry); a frame delivered
+    only in leg 2 — a brand-new query resuming the same checkpoint —
+    must still be patched by it, and a frame past expiry must not. A
+    processor whose state silently resets on restart (the restored
+    state ignored, a state schema mismatch, a checkpoint not carrying
+    the store) emits f2 unpatched and fails the exact-tuple compare.
+    Hand-computed expectation — no reuse of the engine path as its own
+    oracle."""
     from datetime import datetime, timezone
 
-    from espkinesis_spark.protobuf_compat import ensure_protobuf_runtime
-
-    if not ensure_protobuf_runtime():
-        pytest.skip("no google.protobuf runtime for the TWS state workers")
-
     t = lambda m, s=0: datetime(2024, 1, 1, 10, m, s, tzinfo=timezone.utc)  # noqa: E731
-    base = tmp_path_factory.mktemp("tws_restart")
+    base = tmp_path_factory.mktemp("override_restart")
     frames_dir, cmds_dir = str(base / "frames"), str(base / "cmds")
     sink, ckpt = str(base / "sink"), str(base / "ckpt")
 
@@ -164,7 +95,7 @@ def test_tws_state_survives_query_restart(spark, tmp_path_factory):
         targets = spark.createDataFrame([(1,)], "id int")
         tagged = pipeline.tag_frames_and_commands(frames, cmds, targets)
         q = (
-            state.override_sessions_tws(tagged)
+            state.override_sessions(tagged)
             .writeStream.outputMode("append")
             .format("parquet")
             .option("path", sink)

@@ -651,12 +651,12 @@ def test_winnow_stream_multibatch_equals_batch(spark, sf_dir, tmp_path_factory):
 
 
 def test_drain_rowstore_routes_by_source_size(spark, sf_dir, monkeypatch):
-    """The shared per-row drain policy (jobs._drain, per_row=True) must
-    pin BOTH routes: below the source-size bound the fingerprint store
-    drains through the memory sink; with the bound forced to 0 the SAME
-    job crosses to the executor-parallel parquet drain — and the
-    analysis result over the drained store is identical either way
-    (route choice is a pure placement decision, never a semantics one)."""
+    """The shared drain rule (jobs._drain) must pin BOTH routes: below
+    the source-size bound the fingerprint store drains through the
+    memory sink; with the bound forced to 0 the SAME job crosses to the
+    executor-parallel parquet drain — and the analysis result over the
+    drained store is identical either way (route choice is a pure
+    placement decision, never a semantics one)."""
     from espkinesis_spark.streaming import jobs
 
     def run():
@@ -666,14 +666,13 @@ def test_drain_rowstore_routes_by_source_size(spark, sf_dir, monkeypatch):
         }
 
     # default bound (256 MB) >> any fixture table: memory route
-    monkeypatch.delenv("ESPK_MEMORY_DRAIN_MAX_BYTES", raising=False)
     via_memory = run()
     # the memory route leaves a registered sink table behind
     assert spark.catalog.tableExists("st_image_neardup_sink")
     spark.catalog.dropTempView("st_image_neardup_sink")
 
     # bound forced to 0: every source is "too big", parquet route
-    monkeypatch.setenv("ESPK_MEMORY_DRAIN_MAX_BYTES", "0")
+    monkeypatch.setattr(jobs, "MEMORY_DRAIN_MAX_SOURCE_BYTES", 0)
     via_parquet = run()
     # the parquet route never registers the memory-sink table
     assert not spark.catalog.tableExists("st_image_neardup_sink")
@@ -713,10 +712,10 @@ def test_source_bytes_sums_directory_style_tables(tmp_path):
 
 
 def test_drain_rowstore_routes_by_source_row_count(spark, sf_dir, monkeypatch):
-    """jobs._drain's per-row driver-footprint proxy is the source's
-    parquet-footer ROW COUNT (one store row per source row), not just bytes — a corpus
-    of millions of tiny docs stays under any byte bound yet floods the
-    single-threaded memory sink (r11 ADVICE). With the row bound forced
+    """jobs._drain's driver-footprint proxy is the source's parquet-footer
+    ROW COUNT (at most one store row per source row), not just bytes — a
+    corpus of millions of tiny docs stays under any byte bound yet floods
+    the single-threaded memory sink (r11 ADVICE). With the row bound forced
     to 0 the job must cross to the parquet drain even though the byte
     bound is untouched, with identical results."""
     from espkinesis_spark.streaming import jobs
@@ -727,13 +726,11 @@ def test_drain_rowstore_routes_by_source_row_count(spark, sf_dir, monkeypatch):
             for r in jobs.image_neardup_stream(spark, sf_dir).collect()
         }
 
-    monkeypatch.delenv("ESPK_MEMORY_DRAIN_MAX_BYTES", raising=False)
-    monkeypatch.delenv("ESPK_MEMORY_DRAIN_MAX_ROWS", raising=False)
     via_memory = run()
     assert spark.catalog.tableExists("st_image_neardup_sink")
     spark.catalog.dropTempView("st_image_neardup_sink")
 
-    monkeypatch.setenv("ESPK_MEMORY_DRAIN_MAX_ROWS", "0")
+    monkeypatch.setattr(jobs, "MEMORY_DRAIN_MAX_SOURCE_ROWS", 0)
     via_parquet = run()
     assert not spark.catalog.tableExists("st_image_neardup_sink")
     assert via_parquet == via_memory and len(via_memory) > 0
@@ -744,19 +741,22 @@ def test_drain_rowstore_routes_by_source_row_count(spark, sf_dir, monkeypatch):
     [
         ("session_window_stream", "st_session_window_sink"),
         ("latest_per_user_stream", "st_latest_user_sink"),
+        ("override_asof_stream", "st_override_asof_sink"),
+        ("stream_stream_join", "st_stream_join_sink"),
     ],
 )
 def test_complete_mode_result_sink_routes_identically(
     spark, sf_dir, monkeypatch, job_name, sink
 ):
-    """ESPK_RESULT_SINK=parquet swaps EVERY complete-mode result leg from
-    the driver memory sink to the foreachBatch parquet snapshot (the
-    100 TB shape: executor-parallel write, no driver copy) — routed from
-    the one policy point in jobs._drain. Both routes must return
-    the identical result multiset; the parquet route must leave no
-    memory-sink table behind. Pinned on the corpus-proportional
-    session-window leg AND a second complete-mode job to prove the
-    policy is general, not entry-special-cased."""
+    """Past the source bounds jobs._drain moves a result leg from the
+    driver memory sink to the executor-parallel parquet drain (the
+    100 TB shape, no driver copy): the foreachBatch snapshot for
+    complete mode, the file sink for append mode. Both routes must
+    return the identical result multiset; the parquet route must leave
+    no memory-sink table behind. Pinned on two complete-mode legs (the
+    corpus-proportional session window and latest-per-user), a stateful
+    append leg (the applyInPandasWithState as-of) and the stream-stream
+    join, to prove the rule is general, not entry-special-cased."""
     from espkinesis_spark.streaming import jobs
 
     job = getattr(jobs, job_name)
@@ -764,20 +764,17 @@ def test_complete_mode_result_sink_routes_identically(
     def run():
         return sorted(tuple(r) for r in job(spark, sf_dir).collect())
 
-    monkeypatch.delenv("ESPK_RESULT_SINK", raising=False)
     via_memory = run()
     assert spark.catalog.tableExists(sink)
     spark.catalog.dropTempView(sink)
 
-    monkeypatch.setenv("ESPK_RESULT_SINK", "parquet")
+    monkeypatch.setattr(jobs, "MEMORY_DRAIN_MAX_SOURCE_BYTES", 0)
     via_parquet = run()
     assert not spark.catalog.tableExists(sink)
     assert via_parquet == via_memory and len(via_memory) > 0
 
 
-def test_drain_failure_restores_layout_and_name_drains_again(
-    spark, sf_dir, monkeypatch
-):
+def test_drain_failure_restores_layout_and_name_drains_again(spark, sf_dir):
     """The shared replay lifecycle on a query that fails mid-replay: the
     drain re-raises the query's error, spark.sql.shuffle.partitions is
     back to what it was before the drain pinned the state layout, and
@@ -787,7 +784,6 @@ def test_drain_failure_restores_layout_and_name_drains_again(
     from espkinesis_spark.streaming import jobs
     from espkinesis_spark.tables import _source_files, load_table, table_path
 
-    monkeypatch.delenv("ESPK_STREAM_STATE_PARTITIONS", raising=False)
     events = table_path(sf_dir, "events")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     # the layout the drain pins differs from the session value, so the
@@ -924,7 +920,7 @@ def test_source_files_prunes_metadata_directories(tmp_path):
 
 
 @pytest.mark.parametrize("cores", [1, 4, 32])
-def test_state_partitions_stay_in_clamp(cores, monkeypatch):
+def test_state_partitions_stay_in_clamp(cores):
     """The derived state-partition count stays inside [1, 4 x
     defaultParallelism] for every source size, and an unknown size takes
     the min(8, defaultParallelism) floor, not one store per core."""
@@ -932,7 +928,6 @@ def test_state_partitions_stay_in_clamp(cores, monkeypatch):
 
     from espkinesis_spark.streaming.jobs import _state_partitions
 
-    monkeypatch.delenv("ESPK_STREAM_STATE_PARTITIONS", raising=False)
     spark = SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=cores))
     got = {
         rows: int(_state_partitions(spark, rows))

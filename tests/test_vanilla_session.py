@@ -103,3 +103,51 @@ def test_round3_entries_on_vanilla_session(spark, sf_dir):
         assert len(qs["ex_quality_filter"](spark, sf_dir).collect()) > 0
         assert len(qs["ex_dedup_incremental"](spark, sf_dir).collect()) >= 0
         assert len(qs["ex_kmeans"](spark, sf_dir).collect()) > 0
+
+
+def test_library_reads_no_route_override_from_env():
+    """No module under espkinesis_spark/ reads an ESPK_* environment
+    variable — every route is derived from the data or the session — and
+    the only environment keys it reads at all are the session's two
+    sizing settings and PYTHONPATH, which get_spark extends for the
+    Python workers."""
+    import ast
+    import pathlib
+
+    import espkinesis_spark
+
+    def env_key(node):
+        # os.environ.get("K"), os.getenv("K"), os.environ["K"]
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            f = node.func
+            reads = f.attr == "getenv" or (
+                f.attr == "get"
+                and isinstance(f.value, ast.Attribute)
+                and f.value.attr == "environ"
+            )
+            if reads and node.args and isinstance(node.args[0], ast.Constant):
+                return node.args[0].value
+        if (
+            isinstance(node, ast.Subscript)
+            and isinstance(node.value, ast.Attribute)
+            and node.value.attr == "environ"
+            and isinstance(node.slice, ast.Constant)
+        ):
+            return node.slice.value
+        return None
+
+    root = pathlib.Path(espkinesis_spark.__file__).parent
+    espk, keys = [], set()
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and node.value.startswith("ESPK_")
+            ):
+                espk.append(f"{path.relative_to(root)}:{node.lineno}")
+            key = env_key(node)
+            if key is not None:
+                keys.add(key)
+    assert espk == []
+    assert keys == {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM", "PYTHONPATH"}

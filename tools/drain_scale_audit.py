@@ -21,13 +21,13 @@ of a store whose rows grow more than GROWTH_LIMIT across the step:
     the big SF — the drained frame IS the result set, which the
     harness collects anyway, so the memory sink adds no second
     corpus-sized driver copy (the r10 VERDICT st_stratified carve-out).
-  * EXPECTED_GROWTH (annotated): policy-routed fingerprint stores
-    (jobs._drain's per-row route keeps them on the memory sink BELOW
-    its source-size bound and crosses to the parquet drain above it) and
-    stores whose growth tracks a dimension the fixture couples to SF
-    (key cardinality, time span) rather than corpus row count.
-  * anything else: FLAGGED — cross it to jobs._drain_to_parquet or
-    route it through jobs._drain with per_row=True.
+  * EXPECTED_GROWTH (annotated): per-doc fingerprint stores (one row
+    per source row, so jobs._drain's source bounds cap them: the memory
+    sink BELOW the bounds, the parquet drain above) and stores whose
+    growth tracks a dimension the fixture couples to SF (key
+    cardinality, time span) rather than corpus row count.
+  * anything else: FLAGGED — cross it to jobs._drain_to_parquet, or
+    to jobs._drain if at most one store row per source row.
 
 Exit 1 on unexplained flags, 0 when clean.
 
@@ -53,16 +53,16 @@ MIN_FLAG_ROWS = 1000
 
 # sink name -> why >GROWTH_LIMIT growth is correct for this store
 EXPECTED_GROWTH: dict[str, str] = {
-    "st_image_neardup_sink": "policy-routed per-doc fingerprint store: "
-    "_drain's per-row route keeps it on the memory sink below the 256 MB "
-    "source bound and crosses to the parquet drain above it (route "
+    "st_image_neardup_sink": "size-routed per-doc fingerprint store: "
+    "_drain keeps it on the memory sink below the 256 MB / 1M-row "
+    "source bounds and crosses to the parquet drain above them (route "
     "pinned by tests/test_streaming.py::test_drain_rowstore_routes_by_source_size)",
-    "st_image_dedup_apply_sink": "policy-routed per-doc fingerprint "
-    "store (same per-row bound)",
-    "st_audio_neardup_sink": "policy-routed per-doc fingerprint store "
-    "(same per-row bound)",
-    "st_audio_dedup_apply_sink": "policy-routed per-doc fingerprint "
-    "store (same per-row bound)",
+    "st_image_dedup_apply_sink": "size-routed per-doc fingerprint "
+    "store (same source bounds)",
+    "st_audio_neardup_sink": "size-routed per-doc fingerprint store "
+    "(same source bounds)",
+    "st_audio_dedup_apply_sink": "size-routed per-doc fingerprint "
+    "store (same source bounds)",
     "st_anomaly_sink": "complete-mode (hour-window x type) count state: "
     "grows with the fixture's TIME SPAN (which this fixture couples to "
     "SF), not with event volume — at production rates the window x type "
@@ -124,7 +124,7 @@ def main() -> None:
     if flagged:
         print(f"\nFLAGGED ({len(flagged)}): corpus-proportional driver "
               "memory-sink stores — cross these to the parquet drain "
-              "(jobs._drain_to_parquet / _drain per_row=True):")
+              "(jobs._drain_to_parquet):")
         for entry, sink, a, b, r in flagged:
             print(f"  {entry}: {sink} {a} -> {b} (x{r:.1f})")
         sys.exit(1)
