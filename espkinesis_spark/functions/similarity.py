@@ -13,9 +13,15 @@ threshold; ties break to the lowest neighbor id):
   assignment pass is a broadcast join against the (small) centroid set,
   and the probe is an equi-join on centroid id — no all-pairs anywhere.
 
-The exact kernels (top-k, near-dup, IVF assignment) are Arrow-batched
-numpy matmuls; the candidate-scoring joins compute dot products JVM-side
-via zip_with/aggregate in whole-stage codegen.
+k-means (``kmeans_train``) keeps its Lloyd trajectory on the driver: the
+centroids are a k-row array pair broadcast into the assignment matmul,
+and each round is one aggregate collected back. SemDeDup (``semdedup``)
+scores pairs cluster by cluster in one grouped Arrow stage.
+
+The exact kernels (top-k, near-dup, IVF assignment, the SemDeDup cluster
+stage) are Arrow-batched numpy matmuls sharing one rounded-cosine form
+(``_cosine6``); the candidate-scoring joins compute dot products
+JVM-side via zip_with/aggregate in whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -90,6 +96,18 @@ def cosine(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
     return F.round(dot(_as_double(a), _as_double(b)) / (norm_a * norm_b), C.COSINE_ROUND)
 
 
+def _cosine6(a, b):
+    """Rounded cosine of every row of ``a`` against every row of ``b``
+    (float64 matrices): one BLAS matmul over the product of the L2 row
+    norms, rounded to ``COSINE_ROUND`` dp — the numpy form of ``cosine``
+    that every Arrow kernel here scores with."""
+    import numpy as np
+
+    na = np.sqrt((a * a).sum(axis=1))
+    nb = na if b is a else np.sqrt((b * b).sum(axis=1))
+    return np.round((a @ b.T) / (na[:, None] * nb[None, :]), C.COSINE_ROUND)
+
+
 # NOTE (r16, measured twice): statically unrolling FULL-WIDTH (64-dim)
 # kernels is a LOSS — an unrolled 64-term cosine A/B'd ~2.5× slower than
 # the interpreted fold with identical plan shape and single evaluation
@@ -133,16 +151,14 @@ def _topk_candidates_numpy(
     rows = queries.select("vec_id", vec_col).collect()  # broadcast build side
     q_ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
     q_mat = np.array([list(r[vec_col]) for r in rows], dtype=np.float64)
-    q_norms = np.sqrt((q_mat * q_mat).sum(axis=1))
-    bc = queries.sparkSession.sparkContext.broadcast((q_ids, q_mat, q_norms))
+    bc = queries.sparkSession.sparkContext.broadcast((q_ids, q_mat))
 
     def run(batches):
-        qi, qm, qn = bc.value
+        qi, qm = bc.value
         for pdf in batches:
             c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             c_mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            c_norms = np.sqrt((c_mat * c_mat).sum(axis=1))
-            cos = np.round((c_mat @ qm.T) / (c_norms[:, None] * qn[None, :]), C.COSINE_ROUND)
+            cos = _cosine6(c_mat, qm)
             out_q, out_n, out_c = [], [], []
             for j in range(len(qi)):
                 col = np.where(c_ids != qi[j], cos[:, j], -np.inf)
@@ -230,18 +246,14 @@ def _neardup_cosine_numpy(probe: DataFrame, threshold: float) -> DataFrame:
         )
     ids = pdf["vec_id"].to_numpy(dtype=np.int64)
     mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-    norms = np.sqrt((mat * mat).sum(axis=1))
-    bc = probe.sparkSession.sparkContext.broadcast((ids, mat, norms))
+    bc = probe.sparkSession.sparkContext.broadcast((ids, mat))
 
     def run(batches):
-        b_ids, b_mat, b_norms = bc.value
+        b_ids, b_mat = bc.value
         for pdf in batches:
             a_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             a_mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            a_norms = np.sqrt((a_mat * a_mat).sum(axis=1))
-            cos = np.round(
-                (a_mat @ b_mat.T) / (a_norms[:, None] * b_norms[None, :]), C.COSINE_ROUND
-            )
+            cos = _cosine6(a_mat, b_mat)
             ai, bi = np.nonzero((cos >= threshold) & (a_ids[:, None] < b_ids[None, :]))
             yield pd.DataFrame(
                 {"vec_a": a_ids[ai], "vec_b": b_ids[bi], "cos": cos[ai, bi]}
@@ -308,9 +320,7 @@ def neardup_cosine_blocked(
         b_ids = b["vec_id"].to_numpy(dtype=np.int64)
         a_mat = np.stack(a["embedding"].to_numpy()).astype(np.float64)
         b_mat = a_mat if i == j else np.stack(b["embedding"].to_numpy()).astype(np.float64)
-        a_n = np.sqrt((a_mat * a_mat).sum(axis=1))
-        b_n = a_n if i == j else np.sqrt((b_mat * b_mat).sum(axis=1))
-        cos = np.round((a_mat @ b_mat.T) / (a_n[:, None] * b_n[None, :]), C.COSINE_ROUND)
+        cos = _cosine6(a_mat, b_mat)
         hit = cos >= threshold
         if i == j:
             hit &= a_ids[:, None] < b_ids[None, :]
@@ -486,39 +496,44 @@ def ivf_assign(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
     the assignment is a pure map over the corpus, which is what makes IVF
     the scale path in the first place.
     """
-    return _ivf_assign_numpy(vecs, centroids)
+    return _ivf_assign_numpy(vecs, _centroid_arrays(centroids))
 
 
-def _ivf_assign_numpy(
-    vecs: DataFrame, centroids: DataFrame, keep_vec: bool = False
-) -> DataFrame:
-    """Matmul assignment kernel. Centroid ids are sorted ascending so a
-    plain argmax over rounded cosines lands on the lowest id at ties.
+def _centroid_arrays(centroids: DataFrame):
+    """The (vec_id, embedding) centroid table as driver arrays
+    ``(ids, mat)``, ids ascending: the one ``collect`` a DataFrame-held
+    centroid set costs."""
+    import numpy as np
+
+    rows = sorted(centroids.select("vec_id", "embedding").collect(), key=lambda r: r["vec_id"])
+    return (
+        np.array([r["vec_id"] for r in rows], dtype=np.int64),
+        np.array([list(r["embedding"]) for r in rows], dtype=np.float64),
+    )
+
+
+def _ivf_assign_numpy(vecs: DataFrame, centroids, keep_vec: bool = False) -> DataFrame:
+    """Matmul assignment kernel against driver-held centroids
+    ``(ids, mat)`` with ids ascending (``_centroid_arrays`` or the Lloyd
+    loop), so a plain argmax over rounded cosines lands on the lowest id
+    at ties. The arrays are broadcast; the corpus is one Arrow map.
 
     ``keep_vec=True`` passes the embedding column through the kernel
-    unchanged (r16): kmeans_train's update step previously JOINED the
-    assignment back to the corpus to re-fetch the vector — a full
-    corpus-by-corpus equi-join per Lloyd round — when the Arrow batch
-    already held it; the pass-through trades a few extra Arrow bytes for
-    removing that shuffle join entirely (guide §2.4)."""
+    unchanged: the k-means update and the SemDeDup cluster stage read the
+    vector from the assignment's own rows instead of joining the
+    assignment back to the corpus (a corpus-keyed shuffle join per use)."""
     import numpy as np
     import pandas as pd
 
-    rows = sorted(centroids.select("vec_id", "embedding").collect(), key=lambda r: r["vec_id"])
-    c_ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    c_mat = np.array([list(r["embedding"]) for r in rows], dtype=np.float64)
-    c_norms = np.sqrt((c_mat * c_mat).sum(axis=1))
-    bc = vecs.sparkSession.sparkContext.broadcast((c_ids, c_mat, c_norms))
+    bc = vecs.sparkSession.sparkContext.broadcast(centroids)
     vec_field = next(f for f in vecs.schema.fields if f.name == "embedding")
 
     def run(batches):
-        ci, cm, cn = bc.value
+        ci, cm = bc.value
         for pdf in batches:
             v_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             v_mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            v_norms = np.sqrt((v_mat * v_mat).sum(axis=1))
-            cos = np.round((v_mat @ cm.T) / (v_norms[:, None] * cn[None, :]), C.COSINE_ROUND)
-            out = {"vec_id": v_ids, "centroid_id": ci[np.argmax(cos, axis=1)]}
+            out = {"vec_id": v_ids, "centroid_id": ci[np.argmax(_cosine6(v_mat, cm), axis=1)]}
             if keep_vec:
                 out["embedding"] = pdf["embedding"]
             yield pd.DataFrame(out)
@@ -631,56 +646,52 @@ def kmeans_train(
 ) -> DataFrame:
     """Lloyd's k-means over the embedding table with a deterministic,
     engine-portable trajectory: init centroids are the vectors with
-    vec_id < k, assignment is the rounded-cosine argmin (``ivf_assign`` —
-    ties to the lowest centroid id), and updated centroids are per-dim
-    means rounded to 6 dp each round, so a SQL oracle replays the exact
-    same path. Returns (centroid_id, c: array<double>).
-
-    Scale shape per round: assignment broadcasts the k-row centroid matrix
-    and is a pure map over the corpus (one BLAS matmul per Arrow batch);
-    the update shuffles only (centroid_id) + dim doubles per row with
-    map-side partial aggregation. ``iters`` is a fixed budget — no
-    convergence collect, no driver-side data, so the loop costs exactly
-    iters × (map + narrow shuffle) at any corpus size.
-
-    r16 shuffle cut (guide §2.4): the assignment kernel passes the vector
-    THROUGH (keep_vec), so the update no longer joins the assignment back
-    to the corpus — one full corpus-keyed shuffle join per Lloyd round
-    removed; the per-dim mean keeps the posexplode → (centroid, dim)
-    aggregate → collect_list shape (an A/B of a fused 64-avg aggregate
-    measured it 2× SLOWER — the same giant-generated-method pathology as
-    the width-64 unrolled cosine, see cosine_w). Identical values: same
-    mean multisets, same 6-dp round. The returned centroid table is
-    locally checkpointed — consumers broadcast/collect it several times
-    (probe build sides, assignment matmuls) and each use otherwise
-    re-runs the final Lloyd round."""
-    cents = vecs.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("centroid_id"), _as_double(F.col(vec_col)).alias("c")
+    vec_id < k, assignment is the rounded-cosine argmax (ties to the
+    lowest centroid id), and updated centroids are per-dim means rounded
+    to 6 dp each round, so a SQL oracle replays the exact same path. A
+    centroid that wins no vector drops out. Returns (centroid_id,
+    c: array<double>), one row per surviving centroid, built from the
+    driver-held centroids (``_lloyd``) — no Spark job beyond the
+    trajectory's own."""
+    ids, mat = _lloyd(vecs.select("vec_id", F.col(vec_col).alias("embedding")), k, iters)
+    return vecs.sparkSession.createDataFrame(
+        [(int(i), [float(x) for x in row]) for i, row in zip(ids, mat)],
+        "centroid_id long, c array<double>",
     )
+
+
+def _lloyd(emb: DataFrame, k: int, iters: int):
+    """The k-means trajectory over (vec_id, embedding), held on the
+    driver: returns the centroids as ``(ids, mat)``, ids ascending.
+
+    The init is one collect of the vec_id < k rows. Each round is ONE
+    action: the assignment kernel matmuls against the broadcast arrays
+    and passes the vector through (keep_vec), ``posexplode`` →
+    ``groupBy(centroid_id, dim)`` takes ``round(avg(x), 6)`` with
+    map-side partials, and the k × dim means are collected and rebuilt
+    in dim order. The per-dim mean is still Spark's ``avg`` and 6-dp
+    round, so the trajectory is the one the oracle replays; the round's
+    shuffle is (centroid_id, dim, x) rows, never the corpus. ``iters`` is a fixed budget, so the loop
+    costs iters × (map + narrow shuffle + k·dim collect) at any corpus
+    size. (A fused 64-avg aggregate measured 2× slower than the
+    posexplode form — the giant-generated-method pathology of the
+    width-64 unrolled cosine.)"""
+    import numpy as np
+
+    ids, mat = _centroid_arrays(emb.filter(F.col("vec_id") < k))
     for _ in range(iters):
-        # ivf_assign's kernel reads the canonical 'embedding' column —
-        # rename at the boundary so any vec_col works
-        assign = _ivf_assign_numpy(
-            vecs.select("vec_id", F.col(vec_col).alias("embedding")),
-            cents.select(F.col("centroid_id").alias("vec_id"), F.col("c").alias("embedding")),
-            keep_vec=True,
-        )
-        per = (
-            assign.select(
-                "centroid_id", F.posexplode(_as_double(F.col("embedding"))).alias("dim", "x")
-            )
+        rows = sorted(
+            _ivf_assign_numpy(emb, (ids, mat), keep_vec=True)
+            .select("centroid_id", F.posexplode(_as_double(F.col("embedding"))).alias("dim", "x"))
             .groupBy("centroid_id", "dim")
-            .agg(F.avg("x").alias("m"))
+            .agg(F.round(F.avg("x"), 6).alias("m"))
+            .collect()
         )
-        cents = (
-            per.groupBy("centroid_id")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("dm"))
-            .select(
-                "centroid_id",
-                F.transform("dm", lambda s: F.round(s["m"], 6)).alias("c"),
-            )
+        ids = np.unique(np.array([r["centroid_id"] for r in rows], dtype=np.int64))
+        mat = np.array([r["m"] for r in rows], dtype=np.float64).reshape(
+            len(ids), len(rows) // max(len(ids), 1)
         )
-    return cents.localCheckpoint(eager=True)
+    return ids, mat
 
 
 def _probe_sub_dim(vecs: DataFrame, m: int, vec_col: str) -> int:
@@ -991,6 +1002,13 @@ def semdedup_auto_k(n: int, target_cluster: int = C.SEMDEDUP_TARGET_CLUSTER) -> 
     return max(C.KMEANS_K, n // target_cluster)
 
 
+# Row block of the SemDeDup cluster stage: a cluster's pairs are scored
+# BLOCK rows at a time against the cluster's later vectors, so the cosine
+# tile is at most BLOCK x cluster doubles (4 MiB per 1,024-vector
+# cluster), never cluster².
+SEMDEDUP_ROW_BLOCK = 512
+
+
 def semdedup(
     vecs: DataFrame,
     k: int | None = None,
@@ -1012,63 +1030,58 @@ def semdedup(
     witness pair (it can only over-drop vs greedy when a dropped vector is
     itself the sole witness for a later one).
 
-    Scale shape: clustering is what makes this tractable at 100 TB — the
-    pairwise cosine is an equi-join keyed on centroid_id, so candidate
-    pairs shrink from O(n²) to O(Σ cluster²). A FIXED k would creep back
-    to quadratic (pairs ~ n²/k; measured 130x wall at 30x data), so when
-    ``k`` is None it auto-scales as max(KMEANS_K, n // target_cluster) —
-    the paper's n/k ≈ constant regime, which keeps pairs-per-vector at
-    ~target_cluster/2 at any corpus size; at oracle scales the auto-k
-    equals KMEANS_K so the SQL replay stays exact. Assignment is a
-    broadcast-centroid pure map (``ivf_assign``); norms are computed once
-    per side; a skewed giant cluster is a key-skew problem with the
-    standard salting fix (operators/skew.py). The centroid table is the
-    bounded build side (k rows, collected for the matmul broadcast) — at
-    corpus sizes where n/1024 outgrows broadcast limits, raise
-    ``target_cluster`` so k stays build-side-sized (the paper's 5B-doc
-    runs use ~100k clusters, i.e. clusters of ~50k).
+    Two executor stages after the driver-held Lloyd trajectory
+    (``_lloyd``): the assignment kernel matmuls every Arrow batch against
+    the broadcast centroid arrays and passes the vector through, then ONE
+    ``groupBy(centroid_id).applyInPandas`` scores each cluster: sorted by
+    vec_id, the rounded cosine (``_cosine6``) of ``SEMDEDUP_ROW_BLOCK``
+    rows at a time against the cluster's later vectors, so a cluster's
+    memory is O(block × cluster) and its pair work O(cluster²).
+
+    Scale shape: clustering is what makes this tractable at 100 TB —
+    candidate pairs shrink from O(n²) to O(Σ cluster²). A FIXED k would
+    creep back to quadratic (pairs ~ n²/k; measured 130x wall at 30x
+    data), so when ``k`` is None it auto-scales as max(KMEANS_K,
+    n // target_cluster) — the paper's n/k ≈ constant regime, which keeps
+    pairs-per-vector at ~target_cluster/2 at any corpus size; at oracle
+    scales the auto-k equals KMEANS_K so the SQL replay stays exact. A
+    skewed giant cluster is one group (the skew fix is salting,
+    operators/skew.py). The centroids are the bounded build side (k rows,
+    held on the driver and broadcast) — at corpus sizes where n/1024
+    outgrows broadcast limits, raise ``target_cluster`` so k stays
+    build-side-sized (the paper's 5B-doc runs use ~100k clusters, i.e.
+    clusters of ~50k).
     """
+    import numpy as np
+    import pandas as pd
+
     if k is None:
         k = semdedup_auto_k(vecs.count(), target_cluster)
-    cents = kmeans_train(vecs, k=k, iters=iters, vec_col=vec_col)
-    # ivf_assign's kernel reads the canonical 'embedding' column — rename
-    # at the boundary so any vec_col works
-    assign = ivf_assign(
-        vecs.select("vec_id", F.col(vec_col).alias("embedding")),
-        cents.select(F.col("centroid_id").alias("vec_id"), F.col("c").alias("embedding")),
-    )
-    # v feeds three plan subtrees (pair left side, pair right side, keep
-    # output); truncate lineage once so the corpus-wide norm + assignment
-    # matmul runs once per action, not three times
-    v = (
-        with_norm(vecs, vec_col)
-        .select("vec_id", F.col(vec_col).alias("__v"), F.col("__norm").alias("__vn"))
-        .join(assign, "vec_id")
-        .localCheckpoint(eager=True)
-    )
-    lo = v.select(
-        "centroid_id",
-        F.col("vec_id").alias("__lo_id"),
-        F.col("__v").alias("__a"),
-        F.col("__vn").alias("__an"),
-    )
-    drops = (
-        lo.join(v, "centroid_id")
-        .filter(F.col("__lo_id") < F.col("vec_id"))
-        .filter(
-            cosine(F.col("__a"), F.col("__v"), F.col("__an"), F.col("__vn"))
-            >= F.lit(threshold)
+    # the kernels read the canonical 'embedding' column — rename at the
+    # boundary so any vec_col works
+    emb = vecs.select("vec_id", F.col(vec_col).alias("embedding"))
+    block = SEMDEDUP_ROW_BLOCK
+
+    def keep_flags(pdf):
+        pdf = pdf.sort_values("vec_id", kind="stable")
+        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+        mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+        dropped = np.zeros(len(ids), dtype=bool)
+        for lo in range(0, len(ids), block):
+            # rows lo..lo+block against every vector from lo on: a vector
+            # these rows can drop has a larger id, so it sits at or past lo
+            hit = (_cosine6(mat[lo : lo + block], mat[lo:]) >= threshold) & (
+                ids[lo : lo + block, None] < ids[None, lo:]
+            )
+            dropped[lo:] |= hit.any(axis=0)
+        return pd.DataFrame(
+            {"vec_id": ids, "centroid_id": pdf["centroid_id"].to_numpy(), "keep": ~dropped}
         )
-        .select("vec_id")
-        .distinct()
-    )
+
     return (
-        v.join(drops.withColumn("__dropped", F.lit(True)), "vec_id", "left")
-        .select(
-            "vec_id",
-            "centroid_id",
-            F.coalesce(~F.col("__dropped"), F.lit(True)).alias("keep"),
-        )
+        _ivf_assign_numpy(emb, _lloyd(emb, k, iters), keep_vec=True)
+        .groupBy("centroid_id")
+        .applyInPandas(keep_flags, schema="vec_id long, centroid_id long, keep boolean")
     )
 
 

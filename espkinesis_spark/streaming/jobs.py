@@ -384,7 +384,9 @@ def _drain(df: DataFrame, name: str, source: str, mode: str = "append") -> DataF
     ``MEMORY_DRAIN_MAX_SOURCE_BYTES`` or its rows exceed
     ``MEMORY_DRAIN_MAX_SOURCE_ROWS``, the leg drains executor-parallel
     through ``_drain_to_parquet(mode=mode)``; otherwise through the
-    driver memory sink, read back as the table ``name``. Corpus-sized
+    driver memory sink, read back as the table ``name`` whose temp view
+    is then dropped: the returned frame keeps the sink's rows alive, and
+    nothing else does once the caller lets it go. Corpus-sized
     stores (token/span/shingle tables, per-EVENT rows — several rows per
     document) never come here; their jobs call ``_drain_to_parquet``
     directly (the r8 discipline).
@@ -399,7 +401,9 @@ def _drain(df: DataFrame, name: str, source: str, mode: str = "append") -> DataF
     ):
         return _drain_to_parquet(df, name, mode=mode, source_rows=rows)
     _replay(df, name, lambda w: w.outputMode(mode).format("memory"), rows)
-    return df.sparkSession.table(name)
+    out = df.sparkSession.table(name)
+    df.sparkSession.catalog.dropTempView(name)
+    return out
 
 
 def _bytes_of(files: list[str]) -> int:

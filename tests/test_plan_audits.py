@@ -266,13 +266,50 @@ def test_embed_gram_ships_partial_gramians(spark, sf_dir):
 
 
 def test_semdedup_pairs_are_cluster_keyed(spark, sf_dir):
-    """The pairwise-cosine stage must be an equi-join keyed on centroid_id
-    — a CartesianProduct here is the O(n²) cliff SemDeDup exists to
-    avoid."""
+    """The pairwise-cosine stage must be one grouped Arrow stage per
+    cluster: a FlatMapGroupsInPandas fed by a hash exchange on
+    centroid_id. A CartesianProduct here is the O(n²) cliff SemDeDup
+    exists to avoid, and a SortMergeJoin is the self-join form the
+    cluster stage replaced."""
+    import re
+
     from espkinesis_spark.plans import physical_plan
 
-    df = _q(spark, sf_dir, "ex_semdedup")
-    assert "CartesianProduct" not in physical_plan(df)
+    plan = physical_plan(_q(spark, sf_dir, "ex_semdedup"))
+    assert "FlatMapGroupsInPandas" in plan
+    assert re.search(r"hashpartitioning\(centroid_id#\d+L?, \d+\)", plan)
+    assert "CartesianProduct" not in plan
+    assert "SortMergeJoin" not in plan
+
+
+def test_semdedup_build_and_collect_run_at_most_ten_jobs(spark, sf_dir, monkeypatch):
+    """One ex_semdedup build plus its toPandas runs at most 10 Spark jobs
+    (the auto-k count, the k-means init collect, one collect per Lloyd
+    round, the cluster stage), and neither
+    kmeans_train nor semdedup truncates lineage with localCheckpoint."""
+    import uuid
+
+    checkpoints = []
+    frame = type(spark.range(1))
+    real = frame.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        checkpoints.append(args)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "localCheckpoint", spy)
+    sc = spark.sparkContext
+    group = f"semdedup-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "ex_semdedup build + toPandas")
+    try:
+        pdf = _q(spark, sf_dir, "ex_semdedup").toPandas()
+    finally:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(pdf) > 0
+    assert 0 < len(jobs) <= 10, f"{len(jobs)} jobs"
+    assert checkpoints == []
 
 
 def test_pagerank_iterations_have_no_cartesian(spark, sf_dir):

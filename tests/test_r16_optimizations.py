@@ -123,8 +123,9 @@ def test_dedup_clusters_window_form_components(spark):
 def test_ivf_assign_keep_vec_matches_joinback(spark, sf_dir):
     emb = Q._t(spark, sf_dir, "embeddings")
     cents = emb.filter(F.col("vec_id") % C.IVF_CENTROID_MOD == 0)
-    plain = similarity._ivf_assign_numpy(emb, cents)
-    kept = similarity._ivf_assign_numpy(emb, cents, keep_vec=True)
+    arrays = similarity._centroid_arrays(cents)
+    plain = similarity._ivf_assign_numpy(emb, arrays)
+    kept = similarity._ivf_assign_numpy(emb, arrays, keep_vec=True)
     assert _sets_equal(
         kept.select("vec_id", "centroid_id"), plain.select("vec_id", "centroid_id")
     )

@@ -650,6 +650,39 @@ def test_winnow_stream_multibatch_equals_batch(spark, sf_dir, tmp_path_factory):
     assert got == want and len(want) > 0
 
 
+def _spy_parquet_drains(monkeypatch, jobs):
+    """The names ``jobs._drain`` sends to the parquet drain from now on:
+    the route record, since neither route leaves a view behind."""
+    names = []
+    real = jobs._drain_to_parquet
+
+    def spy(df, name, **kwargs):
+        names.append(name)
+        return real(df, name, **kwargs)
+
+    monkeypatch.setattr(jobs, "_drain_to_parquet", spy)
+    return names
+
+
+def test_memory_drain_leaves_no_sink_view(spark, sf_dir):
+    """A memory-routed drain drops its sink's temp view before it returns,
+    so the session does not keep every drained result in the driver; the
+    returned frame still holds the sink's rows, equal to the oracle."""
+    from espkinesis_spark import queries, verify
+    from espkinesis_spark.oracles import ORACLES
+
+    df = queries.registry()["st_latest_user"](spark, sf_dir)
+    sinks = [
+        t.name
+        for t in spark.catalog.listTables()
+        if t.name.startswith("st_") and t.name.endswith("_sink")
+    ]
+    assert sinks == []
+    con = verify.duck_connection(sf_dir)
+    verify.compare(df, con.execute(ORACLES["st_latest_user"]).df())
+    con.close()
+
+
 def test_drain_rowstore_routes_by_source_size(spark, sf_dir, monkeypatch):
     """The shared drain rule (jobs._drain) must pin BOTH routes: below
     the source-size bound the fingerprint store drains through the
@@ -665,15 +698,16 @@ def test_drain_rowstore_routes_by_source_size(spark, sf_dir, monkeypatch):
             for r in jobs.image_neardup_stream(spark, sf_dir).collect()
         }
 
+    parquet = _spy_parquet_drains(monkeypatch, jobs)
     # default bound (256 MB) >> any fixture table: memory route
     via_memory = run()
-    # the memory route leaves a registered sink table behind
-    assert spark.catalog.tableExists("st_image_neardup_sink")
-    spark.catalog.dropTempView("st_image_neardup_sink")
+    assert "st_image_neardup_sink" not in parquet
+    assert not spark.catalog.tableExists("st_image_neardup_sink")
 
     # bound forced to 0: every source is "too big", parquet route
     monkeypatch.setattr(jobs, "MEMORY_DRAIN_MAX_SOURCE_BYTES", 0)
     via_parquet = run()
+    assert "st_image_neardup_sink" in parquet
     # the parquet route never registers the memory-sink table
     assert not spark.catalog.tableExists("st_image_neardup_sink")
     assert via_parquet == via_memory and len(via_memory) > 0
@@ -726,12 +760,13 @@ def test_drain_rowstore_routes_by_source_row_count(spark, sf_dir, monkeypatch):
             for r in jobs.image_neardup_stream(spark, sf_dir).collect()
         }
 
+    parquet = _spy_parquet_drains(monkeypatch, jobs)
     via_memory = run()
-    assert spark.catalog.tableExists("st_image_neardup_sink")
-    spark.catalog.dropTempView("st_image_neardup_sink")
+    assert "st_image_neardup_sink" not in parquet
 
     monkeypatch.setattr(jobs, "MEMORY_DRAIN_MAX_SOURCE_ROWS", 0)
     via_parquet = run()
+    assert "st_image_neardup_sink" in parquet
     assert not spark.catalog.tableExists("st_image_neardup_sink")
     assert via_parquet == via_memory and len(via_memory) > 0
 
@@ -764,12 +799,13 @@ def test_complete_mode_result_sink_routes_identically(
     def run():
         return sorted(tuple(r) for r in job(spark, sf_dir).collect())
 
+    parquet = _spy_parquet_drains(monkeypatch, jobs)
     via_memory = run()
-    assert spark.catalog.tableExists(sink)
-    spark.catalog.dropTempView(sink)
+    assert sink not in parquet
 
     monkeypatch.setattr(jobs, "MEMORY_DRAIN_MAX_SOURCE_BYTES", 0)
     via_parquet = run()
+    assert sink in parquet
     assert not spark.catalog.tableExists(sink)
     assert via_parquet == via_memory and len(via_memory) > 0
 

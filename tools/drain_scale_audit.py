@@ -11,11 +11,11 @@ Run every st_* registry entry at TWO scale factors (default sf0.01 and
 sf0.1 — the only step where BOTH the documents table (500 -> 5000) and
 the events table (10k -> 100k) actually grow 10x; sf0.001 -> sf0.01
 leaves documents flat at 500, which would blind the doc-side leg).
-For each entry, capture the streaming query names it executed
-(jobs.LAST_STREAM_PLANS, cleared per entry) and, for every name that
-left a memory-sink table in the session catalog, record the table's
-row count at each SF plus the entry's RESULT row count. Classification
-of a store whose rows grow more than GROWTH_LIMIT across the step:
+For each entry, record the row count of every frame jobs._drain
+returned through the memory sink (its name did not go to
+jobs._drain_to_parquet) at each SF, plus the entry's RESULT row count.
+Classification of a store whose rows grow more than GROWTH_LIMIT across
+the step:
 
   * result leg (mechanical): sink rows == the entry's returned rows at
     the big SF — the drained frame IS the result set, which the
@@ -71,25 +71,37 @@ EXPECTED_GROWTH: dict[str, str] = {
 
 
 def _run_entries(spark, sf_dir: str):
-    """entry -> ({sink table -> rows}, entry result rows) at one SF."""
+    """entry -> ({memory-sink store -> rows}, entry result rows) at one SF.
+    ``jobs._drain`` drops the sink's temp view before it returns, so the
+    store is counted from the frame it returns."""
     from espkinesis_spark.streaming import jobs
 
+    drain, to_parquet = jobs._drain, jobs._drain_to_parquet
+    parquet: set[str] = set()
+    sizes: dict[str, int] = {}
+
+    def parquet_spy(df, name, **kwargs):
+        parquet.add(name)
+        return to_parquet(df, name, **kwargs)
+
+    def drain_spy(df, name, source, mode="append"):
+        out = drain(df, name, source, mode)
+        if name not in parquet:
+            sizes[name] = out.count()
+        return out
+
+    jobs._drain, jobs._drain_to_parquet = drain_spy, parquet_spy
     out = {}
-    for name, fn in queries.registry().items():
-        if not name.startswith("st_"):
-            continue
-        jobs.LAST_STREAM_PLANS.clear()
-        n_result = fn(spark, sf_dir).count()
-        sizes = {}
-        for qname in sorted(jobs.LAST_STREAM_PLANS):
-            if spark.catalog.tableExists(qname):
-                sizes[qname] = spark.table(qname).count()
-                # drop after counting: memory-sink temp views persist in
-                # the session, and a later run that routes the SAME query
-                # name to the parquet drain would otherwise read this
-                # run's stale table as a phantom memory-sink store
-                spark.catalog.dropTempView(qname)
-        out[name] = (sizes, n_result)
+    try:
+        for name, fn in queries.registry().items():
+            if not name.startswith("st_"):
+                continue
+            parquet.clear()
+            sizes.clear()
+            n_result = fn(spark, sf_dir).count()
+            out[name] = (dict(sizes), n_result)
+    finally:
+        jobs._drain, jobs._drain_to_parquet = drain, to_parquet
     return out
 
 
