@@ -141,23 +141,37 @@ def exact_jaccard(pairs: DataFrame, doc_shingles: DataFrame) -> DataFrame:
     count, union = |A| + |B| - intersection. Shuffles on doc_id / pair keys
     only — never materializes non-candidate pairs.
     """
-    sizes = doc_shingles.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    sa = doc_shingles.select(F.col("doc_id").alias("doc_a"), "s")
-    sb = doc_shingles.select(F.col("doc_id").alias("doc_b"), "s")
-    inter = (
-        pairs.join(sa, "doc_a")
-        .join(sb, ["doc_b", "s"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("i"))
-    )
+    return _jaccard(_pair_overlap(pairs, doc_shingles, "i"), doc_shingles)
+
+
+def _pair_overlap(pairs: DataFrame, sh: DataFrame, name: str) -> DataFrame:
+    """(doc_a, doc_b, ``name``): the shingles each listed pair shares, by
+    joining the pair list to both shingle sets — pair-keyed, so no pair
+    outside the list is ever formed."""
     return (
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "na"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "nb"), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(F.col("i") / (F.col("na") + F.col("nb") - F.col("i")), 6).alias("jaccard"),
-        )
+        pairs.join(sh.select(F.col("doc_id").alias("doc_a"), "s"), "doc_a")
+        .join(sh.select(F.col("doc_id").alias("doc_b"), "s"), ["doc_b", "s"])
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count("*").alias(name))
+    )
+
+
+def _with_sizes(inter: DataFrame, sh: DataFrame) -> DataFrame:
+    """An (doc_a, doc_b, i) intersection table with both shingle-set
+    sizes attached as ``na`` and ``nb`` (one doc-keyed aggregate)."""
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+    return inter.join(
+        sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na")), "doc_a"
+    ).join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb")), "doc_b")
+
+
+def _jaccard(inter: DataFrame, sh: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard) from an intersection table: i / (na + nb - i),
+    rounded to 6 dp."""
+    return _with_sizes(inter, sh).select(
+        "doc_a",
+        "doc_b",
+        F.round(F.col("i") / (F.col("na") + F.col("nb") - F.col("i")), 6).alias("jaccard"),
     )
 
 
@@ -294,11 +308,11 @@ def containment_pairs(
     this is the template/boilerplate detector of the dedup stack
     (Broder's containment measure).
 
-    Scale shape: the single-pass shared-shingle self-join IS the
-    intersection count (the neardup_jaccard_exact shape — one s-keyed
-    exchange, no pair list materialized separately); sizes ride a
-    doc-keyed aggregate. ``df_cap`` applies the neardup_jaccard_exact
-    hot-shingle guard — REQUIRED at corpus scale on natural text, where
+    Scale shape: the intersection counts come from ``_intersections``,
+    the one shared-shingle stage ``neardup_jaccard_exact`` also scores
+    (one s-keyed exchange, no pair list materialized separately); sizes
+    ride a doc-keyed aggregate. ``df_cap`` is that stage's hot-shingle
+    guard — REQUIRED at corpus scale on natural text, where
     stopword-ish shingles shared by thousands of docs make the capless
     self-join quadratic: the 30x ladder (bounded-vocab corpus, ~50x
     shingle volume) did not finish capless inside 10 min, while
@@ -324,57 +338,8 @@ def containment_from_shingles(
     # shuffle, and replaces a second tokenize+explode+distinct pass.
     # A/B at sf0.1: batch leg 2.03 → 1.86 s, values identical.
     sh = sh.localCheckpoint(eager=True)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    if df_cap is None:
-        sa = sh.select(F.col("doc_id").alias("doc_a"), "s")
-        sb = sh.select(F.col("doc_id").alias("doc_b"), "s")
-        inter = (
-            sa.join(sb, "s")
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("i"))
-        )
-    else:
-        # the neardup_jaccard_exact cap rule: candidates from sub-cap
-        # shingles only (join bounded by cap² per shingle), exact
-        # intersection completed with the hot part restricted to
-        # already-candidate pairs — containment values stay EXACT for
-        # every pair sharing >= 1 cold shingle (equivalence-tested)
-        from pyspark.sql import Window
-
-        annotated = sh.withColumn(
-            "__df", F.count("*").over(Window.partitionBy("s"))
-        )
-        cold = annotated.filter(F.col("__df") <= df_cap).select("doc_id", "s")
-        hot = annotated.filter(F.col("__df") > df_cap).select("doc_id", "s")
-        i_cold = (
-            cold.select(F.col("doc_id").alias("doc_a"), "s")
-            .join(cold.select(F.col("doc_id").alias("doc_b"), "s"), "s")
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("ic"))
-        )
-        i_hot = (
-            i_cold.select("doc_a", "doc_b")
-            .join(hot.withColumnRenamed("doc_id", "doc_a"), "doc_a")
-            .join(hot.withColumnRenamed("doc_id", "doc_b"), ["doc_b", "s"])
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("ih"))
-        )
-        inter = i_cold.join(i_hot, ["doc_a", "doc_b"], "left").select(
-            "doc_a",
-            "doc_b",
-            (F.col("ic") + F.coalesce(F.col("ih"), F.lit(0))).alias("i"),
-        )
     return (
-        inter.join(
-            sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "na"),
-            "doc_a",
-        )
-        .join(
-            sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "nb"),
-            "doc_b",
-        )
+        _with_sizes(_intersections(sh, df_cap), sh)
         .select(
             "doc_a",
             "doc_b",
@@ -384,6 +349,44 @@ def containment_from_shingles(
         .filter(
             (F.col("cont_a_in_b") >= threshold) | (F.col("cont_b_in_a") >= threshold)
         )
+    )
+
+
+def _intersections(sh: DataFrame, df_cap: int | None) -> DataFrame:
+    """(doc_a, doc_b, i) with doc_a < doc_b and i = |A ∩ B| for every pair
+    of a distinct (doc_id, s) table that shares a candidate shingle.
+
+    Without a cap every shingle is a candidate and the shared-shingle
+    self-join *is* the intersection count (each matching shingle
+    contributes one row). With ``df_cap``, shingles in more than
+    ``df_cap`` documents are hot: they generate no candidates (the join
+    stays bounded by cap² per shingle) but still count — the hot part of
+    i is joined on the pair list the cold part produced, never all-pairs
+    — so i stays exact for every pair sharing >= 1 sub-cap shingle."""
+    if df_cap is None:
+        cold, hot = sh, None
+    else:
+        from pyspark.sql import Window
+
+        # df via a window over the SAME s-partitioning the self-join needs:
+        # the exchange is shared, so the cap costs no extra shuffle of sh
+        annotated = sh.withColumn("__df", F.count("*").over(Window.partitionBy("s")))
+        cold = annotated.filter(F.col("__df") <= df_cap).select("doc_id", "s")
+        hot = annotated.filter(F.col("__df") > df_cap).select("doc_id", "s")
+    i_cold = (
+        cold.select(F.col("doc_id").alias("doc_a"), "s")
+        .join(cold.select(F.col("doc_id").alias("doc_b"), "s"), "s")
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count("*").alias("i" if hot is None else "ic"))
+    )
+    if hot is None:
+        return i_cold
+    i_hot = _pair_overlap(i_cold.select("doc_a", "doc_b"), hot, "ih")
+    return i_cold.join(i_hot, ["doc_a", "doc_b"], "left").select(
+        "doc_a",
+        "doc_b",
+        (F.col("ic") + F.coalesce(F.col("ih"), F.lit(0))).alias("i"),
     )
 
 
@@ -404,75 +407,14 @@ def neardup_jaccard_exact(
     jaccard. Near-dup pairs above a meaningful threshold share many
     shingles, so recall loss requires EVERY shared shingle to be hot —
     df_cap trades that sliver of recall for a join bounded by cap² per
-    shingle. The hot-shingle set is tiny by construction and broadcast.
-
-    Without a cap, single-pass: the shared-shingle self-join *is* the
-    intersection count (each matching shingle contributes one row), so the
-    pair list never materializes separately from the verification join.
+    shingle (``_intersections``).
     """
     # Two-to-three consumers of the shingle table (df window / join sides /
     # sizes) — checkpoint once instead of re-running tokenize + explode +
     # distinct per branch (r17, guide §5). A/B at sf0.1: 2.69 → 2.32 s,
     # values identical.
     sh = shingles(docs).localCheckpoint(eager=True)
-    if df_cap is not None:
-        from pyspark.sql import Window
-
-        # df via a window over the SAME s-partitioning the self-join needs:
-        # the exchange is shared, so the cap costs no extra shuffle of sh
-        annotated = sh.withColumn("__df", F.count("*").over(Window.partitionBy("s")))
-        cold = annotated.filter(F.col("__df") <= df_cap).select("doc_id", "s")
-        hot = annotated.filter(F.col("__df") > df_cap).select("doc_id", "s")
-        i_cold = (
-            cold.select(F.col("doc_id").alias("doc_a"), "s")
-            .join(cold.select(F.col("doc_id").alias("doc_b"), "s"), "s")
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("ic"))
-        )
-        # exact intersection = cold part + hot part, the latter restricted to
-        # already-candidate pairs (never an all-pairs join on hot shingles)
-        i_hot = (
-            i_cold.select("doc_a", "doc_b")
-            .join(hot.withColumnRenamed("doc_id", "doc_a"), "doc_a")
-            .join(hot.withColumnRenamed("doc_id", "doc_b"), ["doc_b", "s"])
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("ih"))
-        )
-        inter = i_cold.join(i_hot, ["doc_a", "doc_b"], "left").select(
-            "doc_a",
-            "doc_b",
-            (F.col("ic") + F.coalesce(F.col("ih"), F.lit(0))).alias("i"),
-        )
-        sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-        return (
-            inter.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na")), "doc_a")
-            .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb")), "doc_b")
-            .select(
-                "doc_a",
-                "doc_b",
-                F.round(F.col("i") / (F.col("na") + F.col("nb") - F.col("i")), 6).alias("jaccard"),
-            )
-            .filter(F.col("jaccard") >= threshold)
-        )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    inter = (
-        sh.select(F.col("doc_id").alias("doc_a"), "s")
-        .join(sh.select(F.col("doc_id").alias("doc_b"), "s"), "s")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("i"))
-    )
-    return (
-        inter.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na")), "doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb")), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(F.col("i") / (F.col("na") + F.col("nb") - F.col("i")), 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _jaccard(_intersections(sh, df_cap), sh).filter(F.col("jaccard") >= threshold)
 
 
 def simhash(docs: DataFrame, bits: int = C.SIMHASH_BITS) -> DataFrame:
@@ -810,11 +752,11 @@ def winnow_candidates(
     """Near-dup candidate pairs from winnowing fingerprints: docs sharing
     ≥ ``min_shared`` fingerprints, after dropping boilerplate
     fingerprints appearing in more than ``max_df`` docs (the df cap that
-    bounds per-fingerprint join fanout at corpus scale — the containment
-    df-cap precedent). One fingerprint-keyed equi-join, never all-pairs;
-    the df filter shares the join's fp partitioning. The fingerprint
-    table feeds three plan branches (df counts + both join sides), so it
-    is localCheckpointed once (the hamming fingerprint-table rule)."""
+    bounds per-fingerprint join fanout at corpus scale). One
+    fingerprint-keyed equi-join, never all-pairs; the df filter shares
+    the join's fp partitioning. The fingerprint table feeds three plan
+    branches (df counts + both join sides), so it is localCheckpointed
+    once (the hamming fingerprint-table rule)."""
     fp = winnow_fingerprints(docs, text_col=text_col)
     return winnow_candidates_from(fp, min_shared=min_shared, max_df=max_df)
 
@@ -824,9 +766,12 @@ def winnow_candidates_from(
     min_shared: int = C.WINNOW_MIN_SHARED,
     max_df: int = C.WINNOW_MAX_DF,
 ) -> DataFrame:
-    """``winnow_candidates`` from an existing (doc_id, fp) fingerprint
+    """``winnow_candidates`` from an existing distinct (doc_id, fp) key
     table — the entry point for a persisted store (the streaming leg
-    drains fingerprints extracted at ingest into exactly this shape)."""
+    drains fingerprints extracted at ingest into exactly this shape) and
+    the one drop-hot shared-key count: ``multimodal.shared_frame_neardup``
+    runs its frame-hash table through it. Unlike ``_intersections``'
+    cap, a key past ``max_df`` is dropped, so it counts toward no pair."""
     fp = fp.localCheckpoint(eager=True)
     dfc = fp.groupBy("fp").agg(F.count("*").cast("long").alias("df"))
     kept = fp.join(dfc.filter(F.col("df") <= max_df), "fp").select("doc_id", "fp")

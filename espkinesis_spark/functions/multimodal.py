@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from espkinesis_spark.functions import common as C
+from espkinesis_spark.functions.dedup import winnow_candidates_from
 
 # Integer-exact features only: derived ratios (mean amplitude etc.) belong
 # in engine SQL (F.round is HALF_UP, matching DuckDB's ties-away for
@@ -574,8 +575,21 @@ def hamming_neardup(
             .select("__ia", "__ib")
             .distinct()
         )
-    x = hashes.select(F.col("doc_id").alias("__ia"), "band", F.col("val").alias("__xa"))
-    y = hashes.select(F.col("doc_id").alias("__ib"), "band", F.col("val").alias("__xb"))
+    return _hamming_verify(cand, hashes, hashes, max_hamming).select(
+        F.col("__ia").alias("doc_id_a"), F.col("__ib").alias("doc_id_b"), "hamming"
+    )
+
+
+def _hamming_verify(
+    cand: DataFrame, left: DataFrame, right: DataFrame, max_hamming: int
+) -> DataFrame:
+    """(__ia, __ib, hamming) for each candidate pair (__ia from ``left``,
+    __ib from ``right``) within ``max_hamming``: the exact distance is the
+    summed xor popcount of the two band vectors, joined per band on the
+    candidate keys — every emitted distance is true, whatever rule made
+    the candidates."""
+    x = left.select(F.col("doc_id").alias("__ia"), "band", F.col("val").alias("__xa"))
+    y = right.select(F.col("doc_id").alias("__ib"), "band", F.col("val").alias("__xb"))
     return (
         cand.join(x, "__ia")
         .join(y, ["__ib", "band"])
@@ -586,11 +600,6 @@ def hamming_neardup(
             .alias("hamming")
         )
         .filter(F.col("hamming") <= max_hamming)
-        .select(
-            F.col("__ia").alias("doc_id_a"),
-            F.col("__ib").alias("doc_id_b"),
-            "hamming",
-        )
     )
 
 
@@ -620,27 +629,8 @@ def hamming_neardup_incremental(
         .select("__ia", "__ib")
         .distinct()
     )
-    x = new_hashes.select(
-        F.col("doc_id").alias("__ia"), "band", F.col("val").alias("__xa")
-    )
-    y = corpus_hashes.select(
-        F.col("doc_id").alias("__ib"), "band", F.col("val").alias("__xb")
-    )
-    return (
-        cand.join(x, "__ia")
-        .join(y, ["__ib", "band"])
-        .groupBy("__ia", "__ib")
-        .agg(
-            F.sum(F.bit_count(F.col("__xa").bitwiseXOR(F.col("__xb"))))
-            .cast("long")
-            .alias("hamming")
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select(
-            F.col("__ia").alias("doc_new"),
-            F.col("__ib").alias("doc_old"),
-            "hamming",
-        )
+    return _hamming_verify(cand, new_hashes, corpus_hashes, max_hamming).select(
+        F.col("__ia").alias("doc_new"), F.col("__ib").alias("doc_old"), "hamming"
     )
 
 
@@ -654,39 +644,15 @@ def shared_frame_neardup(
     frame hashes are near-dup candidates (clips containing the same
     scenes). Output (doc_id_a, doc_id_b, n_shared).
 
-    Scale shape: the shared-shingle pipeline over frame hashes — distinct
-    per (doc, hash), drop hashes appearing in more than ``df_cap``
-    documents (a boilerplate frame shared by k docs would emit k²/2
-    pairs; the df cap is the same hot-shingle guard the text dedup
-    pipeline uses, and changes semantics only for frames too common to
-    indicate pairwise duplication), then one hash-keyed equi-join and a
-    pair-keyed count — never all-pairs, every stage map-side-partial.
+    Scale shape: the distinct (doc, hash) table runs through
+    ``dedup.winnow_candidates_from``, the shared-key pair count: hashes
+    appearing in more than ``df_cap`` documents are dropped (a
+    boilerplate frame shared by k docs would emit k²/2 pairs; this
+    changes semantics only for frames too common to indicate pairwise
+    duplication), then one hash-keyed equi-join and a pair-keyed count
+    — never all-pairs, every stage map-side-partial.
     """
-    # the distinct frame table feeds three branches (df filter + both
-    # pair sides): materialize once, like the hamming_neardup hash table
-    fr = (
-        frames.select("doc_id", F.col("frame_md5").alias("h"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    rare = (
-        fr.groupBy("h")
-        .agg(F.count("*").alias("__df"))
-        .filter(F.col("__df") <= df_cap)
-        .select("h")
-    )
-    fr = fr.join(rare, "h")
-    a = fr.select(F.col("doc_id").alias("__ia"), "h")
-    b = fr.select(F.col("doc_id").alias("__ib"), "h")
-    return (
-        a.join(b, "h")
-        .filter(F.col("__ia") < F.col("__ib"))
-        .groupBy("__ia", "__ib")
-        .agg(F.count("*").cast("long").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-        .select(
-            F.col("__ia").alias("doc_id_a"),
-            F.col("__ib").alias("doc_id_b"),
-            "n_shared",
-        )
+    fr = frames.select("doc_id", F.col("frame_md5").alias("fp")).distinct()
+    return winnow_candidates_from(fr, min_shared, df_cap).select(
+        F.col("doc_a").alias("doc_id_a"), F.col("doc_b").alias("doc_id_b"), "n_shared"
     )

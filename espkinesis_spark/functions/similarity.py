@@ -130,12 +130,19 @@ def topk_bruteforce(
     window merge over batches*k candidates — the scan over the corpus is a
     pure map, so the shape holds at any corpus size.
     """
+    return _topk_per_query(_topk_candidates_numpy(queries, corpus, k, vec_col), k, "cos")
+
+
+def _topk_per_query(scored: DataFrame, k: int, *extra: str) -> DataFrame:
+    """The exact top-k tail every ANN path shares: rank each query's
+    scored (vec_id, neighbor_id, cos) candidates by cos descending, ties
+    to the lowest neighbor_id (deterministic for the oracle), and keep
+    ranks 1..k as (vec_id, rnk, neighbor_id, *extra)."""
     w = Window.partitionBy("vec_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
     return (
-        _topk_candidates_numpy(queries, corpus, k, vec_col)
-        .withColumn("rnk", F.row_number().over(w).cast("long"))
+        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
         .filter(F.col("rnk") <= k)
-        .select("vec_id", "rnk", "neighbor_id", "cos")
+        .select("vec_id", "rnk", "neighbor_id", *extra)
     )
 
 
@@ -396,12 +403,7 @@ def topk_lsh(
         q.join(c, (F.col("__probe") == F.col("__cbucket")) & (F.col("vec_id") != F.col("neighbor_id")))
         .withColumn("cos", cosine(F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn")))
     )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("vec_id", "rnk", "neighbor_id")
-    )
+    return _topk_per_query(scored, k)
 
 
 def knn_graph_auto_bits(n: int, target_bucket: int = C.KNN_BUCKET_TARGET) -> int:
@@ -562,10 +564,32 @@ def topk_ivf(
     """
     if centroids is None:
         centroids = vecs.filter(F.col("vec_id") % centroid_mod == 0)
-    assignment = ivf_assign(vecs, centroids)
     queries = vecs.filter(F.col("vec_id") < query_max_id)
+    cand_ids = _ivf_candidates(vecs, queries, centroids, nprobe)
+    q = with_norm(queries).select(
+        "vec_id", F.col("embedding").alias("__qv"), F.col("__norm").alias("__qn")
+    )
+    c = with_norm(vecs).select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cv"), F.col("__norm").alias("__cn")
+    )
+    scored = (
+        cand_ids.filter(F.col("vec_id") != F.col("neighbor_id"))
+        .join(q, "vec_id")
+        .join(c, "neighbor_id")
+        .withColumn("cos", cosine(F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn")))
+    )
+    return _topk_per_query(scored, k)
 
-    # nprobe nearest centroids per query
+
+def _ivf_candidates(
+    vecs: DataFrame, queries: DataFrame, centroids: DataFrame, nprobe: int
+) -> DataFrame:
+    """The IVF probe rule as (vec_id, neighbor_id) pairs: each query's
+    ``nprobe`` nearest centroids (broadcast centroid cross-join, cosine
+    descending, ties to the lowest centroid id), joined to every vector
+    ``ivf_assign`` put in those buckets. Self-pairs are kept; the
+    scorer drops them."""
+    assignment = ivf_assign(vecs, centroids)
     qc = (
         with_norm(queries)
         .select("vec_id", F.col("embedding").alias("__v"), F.col("__norm").alias("__vn"))
@@ -586,29 +610,9 @@ def topk_ivf(
         .filter(F.col("__rn") <= nprobe)
         .select("vec_id", "centroid_id")
     )
-
-    # candidates = vectors assigned to probed centroids
-    cand_ids = probes.join(assignment.withColumnRenamed("vec_id", "neighbor_id"), "centroid_id").select(
-        "vec_id", "neighbor_id"
-    )
-    q = with_norm(queries).select(
-        "vec_id", F.col("embedding").alias("__qv"), F.col("__norm").alias("__qn")
-    )
-    c = with_norm(vecs).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cv"), F.col("__norm").alias("__cn")
-    )
-    scored = (
-        cand_ids.filter(F.col("vec_id") != F.col("neighbor_id"))
-        .join(q, "vec_id")
-        .join(c, "neighbor_id")
-        .withColumn("cos", cosine(F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn")))
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("vec_id", "rnk", "neighbor_id")
-    )
+    return probes.join(
+        assignment.withColumnRenamed("vec_id", "neighbor_id"), "centroid_id"
+    ).select("vec_id", "neighbor_id")
 
 
 def quantize_int8(vecs: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -933,14 +937,7 @@ def topk_pq(
             ).alias("cos"),
         )
     )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= topk)
-        .select("vec_id", "rnk", "neighbor_id")
-    )
+    return _topk_per_query(scored, topk)
 
 
 def topk_ivfpq(
@@ -955,42 +952,18 @@ def topk_ivfpq(
     IVF probe rule prunes candidates to nprobe buckets (the compute-side
     cut), then PQ codes score ONLY those candidates via ADC (the
     memory-side cut — the corpus lives as PQ_M bytes/vector, never full
-    floats). Both stages are the existing DataFrames (topk_ivf's
-    probe/assignment rule; topk_pq's candidate-restricted scorer), which
-    is the point: composing indexes is a join, not a new engine path.
+    floats). The probe stage is ``_ivf_candidates``, the one IVF probe
+    rule ``topk_ivf`` also runs, and the scorer is ``topk_pq`` restricted
+    to those candidates: composing indexes is a join, not a new engine
+    path.
 
     Scale: candidate volume is queries × (nprobe/n_centroids) × corpus —
     the IVF fraction — and each candidate costs m narrow LUT rows; the
     full-float corpus is touched only at train/encode time.
     """
     centroids = vecs.filter(F.col("vec_id") % centroid_mod == 0)
-    assignment = ivf_assign(vecs, centroids)
     queries = vecs.filter(F.col("vec_id") < query_max_id)
-    qc = (
-        with_norm(queries)
-        .select("vec_id", F.col("embedding").alias("__v"), F.col("__norm").alias("__vn"))
-        .crossJoin(
-            F.broadcast(
-                with_norm(centroids).select(
-                    F.col("vec_id").alias("centroid_id"),
-                    F.col("embedding").alias("__c"),
-                    F.col("__norm").alias("__cn"),
-                )
-            )
-        )
-        .withColumn("cos", cosine(F.col("__v"), F.col("__c"), F.col("__vn"), F.col("__cn")))
-    )
-    wq = Window.partitionBy("vec_id").orderBy(
-        F.col("cos").desc(), F.col("centroid_id").asc()
-    )
-    probes = (
-        qc.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= nprobe)
-        .select("vec_id", "centroid_id")
-    )
-    cand = probes.join(
-        assignment.withColumnRenamed("vec_id", "neighbor_id"), "centroid_id"
-    ).select("vec_id", "neighbor_id")
+    cand = _ivf_candidates(vecs, queries, centroids, nprobe)
     return topk_pq(vecs, query_max_id, topk=topk, candidates=cand)
 
 

@@ -213,38 +213,61 @@ def quality_model_score(df: DataFrame, text_col: str = "text") -> DataFrame:
 def quality_filter(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Repetition-aware quality gate (Gopher-style rules): duplicate-token
     fraction, top-token share, and mean token length, with a boolean
-    ``keep`` verdict from the common.QF_* thresholds.
+    ``keep`` verdict from the common.QF_* thresholds. A doc whose text is
+    null has no tokens and emits no row.
 
-    Distributed shape: explode → count per (doc_id, token) → one groupBy
-    per doc. Both aggregations partial-aggregate map-side, so the only
-    full shuffle is keyed by doc_id — no per-doc collect, no window over
-    the exploded rows. Ratios are rounded to 4 dp BEFORE thresholding so
-    the verdict is bit-stable across engines.
+    A STATELESS per-row projection (array expressions only — no explode,
+    no groupBy, no shuffle), so the same stats run on an unbounded
+    stream in append mode with zero state and no watermark
+    (``quality_gate_stateless``). Ratios are rounded to 4 dp BEFORE
+    thresholding so the verdict is bit-stable across engines.
+
+    The token counts come from the SORTED token array: ``__e`` holds the
+    1-based positions where a run of equal tokens ends, so the distinct
+    count is the number of runs and the top-token count the widest gap
+    between consecutive run ends — one sort_array and a few linear
+    passes, O(n log n) per doc against O(distinct·n) for a
+    distinct×filter scan. The character sum is the length of the joined
+    tokens. No lambda body reads an array column: a ``filter("keep")``
+    downstream is pushed below these projections with every column
+    inlined, and an array read inside a lambda would then be rebuilt per
+    element (the nested-lambda re-evaluation hazard, NOTES.md).
     """
-    tok = df.select("doc_id", F.explode(tokens(F.col(text_col))).alias("tok"))
-    per_tok = tok.groupBy("doc_id", "tok").agg(F.count("*").alias("c"))
-    stats = per_tok.groupBy("doc_id").agg(
-        F.sum("c").cast("long").alias("n_tokens"),
-        F.count("*").cast("long").alias("n_distinct"),
-        F.max("c").cast("long").alias("top_n"),
-        F.sum(F.length("tok") * F.col("c")).cast("long").alias("char_sum"),
+    t = (
+        df.filter(F.col(text_col).isNotNull())
+        .withColumn("__toks", tokens(F.col(text_col)))
+        .withColumn("__st", F.sort_array(F.col("__toks")))
+        .withColumn(
+            "__e",
+            F.expr(
+                "filter(transform(zip_with(__st, slice(__st, 2, size(__st)),"
+                " (a, b) -> coalesce(a != b, true)), (m, i) -> IF(m, i + 1, 0)),"
+                " p -> p > 0)"
+            ),
+        )
     )
-    n = F.col("n_tokens")
-    dup_frac = F.round(F.lit(1.0) - F.col("n_distinct") / n, 4)
-    top_frac = F.round(F.col("top_n") / n, 4)
-    mean_len = F.round(F.col("char_sum") / n, 4)
-    return stats.select(
+    n = F.size("__toks").cast("long")
+    n_distinct = F.size("__e").cast("long")
+    top_n = F.expr(
+        "array_max(zip_with(__e, concat(array(0), __e), (a, b) -> a - b))"
+    ).cast("long")
+    char_sum = F.length(F.array_join("__toks", "")).cast("long")
+    dup_frac = F.round(F.lit(1.0) - n_distinct / n, 4)
+    top_frac = F.round(top_n / n, 4)
+    mean_len = F.round(char_sum / n, 4)
+    keep = (
+        (n >= C.QF_MIN_TOKENS)
+        & (top_frac <= C.QF_MAX_TOP_FRAC)
+        & (mean_len >= C.QF_MIN_MEAN_LEN)
+        & (mean_len <= C.QF_MAX_MEAN_LEN)
+    )
+    return t.select(
         "doc_id",
-        "n_tokens",
+        n.alias("n_tokens"),
         dup_frac.alias("dup_frac"),
         top_frac.alias("top_frac"),
         mean_len.alias("mean_len"),
-        (
-            (n >= C.QF_MIN_TOKENS)
-            & (top_frac <= C.QF_MAX_TOP_FRAC)
-            & (mean_len >= C.QF_MIN_MEAN_LEN)
-            & (mean_len <= C.QF_MAX_MEAN_LEN)
-        ).alias("keep"),
+        keep.alias("keep"),
     )
 
 
@@ -927,63 +950,10 @@ def heavy_hitters(df: DataFrame, text_col: str = "text", k: int = C.HH_K) -> Dat
 
 
 def quality_gate_stateless(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """The quality_filter gate re-expressed as a STATELESS projection
-    (array expressions only — no explode, no groupBy), emitting the
-    documents that pass. Identical semantics/rounding to quality_filter,
-    so the two forms share one oracle; this form runs on an unbounded
-    stream in append mode with zero state and no watermark — the shape a
-    100 TB/day ingest gate needs (the batch form's per-doc aggregation
-    would accumulate corpus-sized state on a stream).
-
-    The top-token count is the longest equal-run in the SORTED token
-    array (one array_sort + one linear fold) — O(n log n) per doc versus
-    the naive O(distinct·n) distinct×filter scan, measured 5.3× faster at
-    the 30× ladder (52 s → 9.8 s for 150k docs). Token arrays are
-    materialized as real columns first (nested-lambda re-evaluation
-    hazard, NOTES.md).
-    """
-    toks = tokens(F.col(text_col))
-    t = df.withColumn("__toks", toks).withColumn(
-        "__st", F.array_sort(F.col("__toks"))
-    )
-    n = F.size("__toks").cast("long")
-    n_distinct = F.size(F.array_distinct("__toks")).cast("long")
-    run_acc = F.struct(
-        F.lit("").alias("prev"), F.lit(0).alias("run"), F.lit(0).alias("best")
-    )
-    top_n = F.aggregate(
-        F.col("__st"),
-        run_acc,
-        lambda a, x: F.struct(
-            x.alias("prev"),
-            F.when(x == a["prev"], a["run"] + 1).otherwise(F.lit(1)).alias("run"),
-            F.greatest(
-                a["best"],
-                F.when(x == a["prev"], a["run"] + 1).otherwise(F.lit(1)),
-            ).alias("best"),
-        ),
-        lambda a: a["best"],
-    ).cast("long")
-    char_sum = F.aggregate(
-        F.col("__toks"), F.lit(0).cast("long"), lambda a, x: a + F.length(x)
-    )
-    dup_frac = F.round(F.lit(1.0) - n_distinct / n, 4)
-    top_frac = F.round(top_n / n, 4)
-    mean_len = F.round(char_sum / n, 4)
-    keep = (
-        (n >= C.QF_MIN_TOKENS)
-        & (top_frac <= C.QF_MAX_TOP_FRAC)
-        & (mean_len >= C.QF_MIN_MEAN_LEN)
-        & (mean_len <= C.QF_MAX_MEAN_LEN)
-    )
-    return t.select(
-        "doc_id",
-        n.alias("n_tokens"),
-        dup_frac.alias("dup_frac"),
-        top_frac.alias("top_frac"),
-        mean_len.alias("mean_len"),
-        keep.alias("keep"),
-    ).filter("keep").drop("keep")
+    """The documents ``quality_filter`` keeps, without the ``keep``
+    column: a stateless append-mode projection, the streaming gate's
+    form (no per-doc aggregation, so no corpus-sized state)."""
+    return quality_filter(df, text_col).filter("keep").drop("keep")
 
 
 def bm25_topk(

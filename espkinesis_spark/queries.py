@@ -854,10 +854,10 @@ def ex_image_dedup_apply(spark, sf_dir):
     fingerprint table and the pair/cluster frames."""
     docs = _t(spark, sf_dir, "documents")
     media = multimodal.synthesize_gray_bmp(docs)
-    pairs = multimodal.hamming_neardup(
-        multimodal.image_dhash(media), max_hamming=C.IMG_HAM_MAX
-    ).select(F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b"))
-    return dedup.survivor_summary(dedup.apply_pairs(docs, pairs))
+    return media_dedup_summary(
+        docs,
+        multimodal.hamming_neardup(multimodal.image_dhash(media), max_hamming=C.IMG_HAM_MAX),
+    )
 
 
 def ex_audio_dedup_apply(spark, sf_dir):
@@ -867,10 +867,12 @@ def ex_audio_dedup_apply(spark, sf_dir):
     (``dedup.apply_drop_set``). Corpus scan never shuffled."""
     docs = _t(spark, sf_dir, "documents")
     media = multimodal.synthesize_tone_wav(docs)
-    pairs = multimodal.hamming_neardup(
-        multimodal.audio_envelope_hash(media), max_hamming=C.AUD_HAM_MAX
-    ).select(F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b"))
-    return dedup.survivor_summary(dedup.apply_pairs(docs, pairs))
+    return media_dedup_summary(
+        docs,
+        multimodal.hamming_neardup(
+            multimodal.audio_envelope_hash(media), max_hamming=C.AUD_HAM_MAX
+        ),
+    )
 
 
 def ex_video_dedup_apply(spark, sf_dir):
@@ -880,10 +882,24 @@ def ex_video_dedup_apply(spark, sf_dir):
     near-dup pairs source (text MinHash, substring, image, audio, video)
     now ends in a deduplicated corpus."""
     docs = _t(spark, sf_dir, "documents")
-    pairs = multimodal.shared_frame_neardup(
-        multimodal.sample_frames(multimodal.attach_binary(docs))
-    ).select(F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b"))
-    return dedup.survivor_summary(dedup.apply_pairs(docs, pairs))
+    return media_dedup_summary(
+        docs,
+        multimodal.shared_frame_neardup(
+            multimodal.sample_frames(multimodal.attach_binary(docs))
+        ),
+    )
+
+
+def media_dedup_summary(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """The tail of every media dedup-apply entry, batch and stream:
+    (doc_id_a, doc_id_b) near-dup pairs → ``dedup.apply_pairs`` →
+    ``dedup.survivor_summary`` over ``docs``."""
+    return dedup.survivor_summary(
+        dedup.apply_pairs(
+            docs,
+            pairs.select(F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b")),
+        )
+    )
 
 
 def ex_waiting_orders(spark, sf_dir):
@@ -1917,12 +1933,18 @@ def ex_decontaminate_apply(spark, sf_dir):
 
 
 def ex_pii_scrub(spark, sf_dir):
-    """PII redaction over a deterministically PII-augmented corpus: the
-    synthetic documents carry no addresses, so each doc gets an email and a
-    long id derived from doc_id appended (same expression in the oracle) —
-    the scrub path then has real matches to find. Zero-shuffle projection."""
-    docs = _t(spark, sf_dir, "documents")
-    aug = docs.withColumn(
+    """PII redaction over a deterministically PII-augmented corpus
+    (``pii_augmented``) — the scrub path has real matches to find.
+    Zero-shuffle projection."""
+    return text.pii_scrub(pii_augmented(_t(spark, sf_dir, "documents")))
+
+
+def pii_augmented(docs: DataFrame) -> DataFrame:
+    """The PII entries' input: the synthetic documents carry no
+    addresses, so each doc gets an email and a long id derived from
+    doc_id appended (same expression in the oracle). Per-row, so a
+    stream applies it at ingest (``jobs.pii_scrub_stream``)."""
+    return docs.withColumn(
         "text",
         F.concat(
             F.col("text"),
@@ -1932,7 +1954,6 @@ def ex_pii_scrub(spark, sf_dir):
             (F.col("doc_id") + F.lit(1_000_000)).cast("string"),
         ),
     )
-    return text.pii_scrub(aug)
 
 
 def ex_quality_filter(spark, sf_dir):

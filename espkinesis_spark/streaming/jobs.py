@@ -556,22 +556,21 @@ def image_dedup_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     lambda, the ingested store itself). The drained hash table equals
     the batch one, so ex_image_dedup_apply's oracle is exact."""
     from espkinesis_spark.functions import common as C
-    from espkinesis_spark.functions import dedup
     from espkinesis_spark.functions.multimodal import (
         hamming_neardup,
         image_dhash,
         synthesize_gray_bmp,
     )
+    from espkinesis_spark.queries import media_dedup_summary
     from espkinesis_spark.tables import load_table
 
     src = _documents_stream(spark, sf_dir)
     hashes = image_dhash(synthesize_gray_bmp(src))
     store = _drain(hashes, "st_image_dedup_apply_sink", table_path(sf_dir, "documents"))
-    pairs = hamming_neardup(store, max_hamming=C.IMG_HAM_MAX).select(
-        F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b")
+    return media_dedup_summary(
+        load_table(spark, sf_dir, "documents"),
+        hamming_neardup(store, max_hamming=C.IMG_HAM_MAX),
     )
-    docs = load_table(spark, sf_dir, "documents")
-    return dedup.survivor_summary(dedup.apply_pairs(docs, pairs))
 
 
 def bm25_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -596,22 +595,21 @@ def audio_dedup_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join against the landed corpus. Shares ex_audio_dedup_apply's
     oracle."""
     from espkinesis_spark.functions import common as C
-    from espkinesis_spark.functions import dedup
     from espkinesis_spark.functions.multimodal import (
         audio_envelope_hash,
         hamming_neardup,
         synthesize_tone_wav,
     )
+    from espkinesis_spark.queries import media_dedup_summary
     from espkinesis_spark.tables import load_table
 
     src = _documents_stream(spark, sf_dir)
     hashes = audio_envelope_hash(synthesize_tone_wav(src))
     store = _drain(hashes, "st_audio_dedup_apply_sink", table_path(sf_dir, "documents"))
-    pairs = hamming_neardup(store, max_hamming=C.AUD_HAM_MAX).select(
-        F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b")
+    return media_dedup_summary(
+        load_table(spark, sf_dir, "documents"),
+        hamming_neardup(store, max_hamming=C.AUD_HAM_MAX),
     )
-    docs = load_table(spark, sf_dir, "documents")
-    return dedup.survivor_summary(dedup.apply_pairs(docs, pairs))
 
 
 def video_dedup_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -619,12 +617,12 @@ def video_dedup_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared-frame pairs -> clusters -> drop set over the drained store,
     routed anti-join against the landed corpus. Shares
     ex_video_dedup_apply's oracle."""
-    from espkinesis_spark.functions import dedup
     from espkinesis_spark.functions.multimodal import (
         attach_binary,
         sample_frames,
         shared_frame_neardup,
     )
+    from espkinesis_spark.queries import media_dedup_summary
     from espkinesis_spark.tables import load_table
 
     src = _documents_stream(spark, sf_dir)
@@ -633,11 +631,9 @@ def video_dedup_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # payload) — the corpus-sized class _drain never routes, so this
     # store always takes the executor-parallel parquet drain
     store = _drain_to_parquet(frames, "st_video_dedup_apply_sink")
-    pairs = shared_frame_neardup(store).select(
-        F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b")
+    return media_dedup_summary(
+        load_table(spark, sf_dir, "documents"), shared_frame_neardup(store)
     )
-    docs = load_table(spark, sf_dir, "documents")
-    return dedup.survivor_summary(dedup.apply_pairs(docs, pairs))
 
 
 def containment_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -729,10 +725,10 @@ def anomaly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def quality_gate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming document quality gate: the Gopher-style repetition rules
-    applied to documents AS THEY ARRIVE, via the stateless projection form
-    (text.quality_gate_stateless) — zero state, no watermark, append mode,
-    so the gate keeps up at any ingest rate; the batch form's per-doc
-    aggregation shares the same thresholds/rounding and one oracle."""
+    applied to documents AS THEY ARRIVE (text.quality_gate_stateless, the
+    documents ``text.quality_filter``'s per-row projection keeps) — zero
+    state, no watermark, append mode, so the gate keeps up at any ingest
+    rate; it shares one oracle with the batch gate."""
     from espkinesis_spark.functions.text import quality_gate_stateless
 
     src = _documents_stream(spark, sf_dir)
@@ -821,18 +817,9 @@ def pii_scrub_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries no addresses), then the regex scrub runs as a stateless
     zero-shuffle append projection. Shares ex_pii_scrub's oracle."""
     from espkinesis_spark.functions.text import pii_scrub
+    from espkinesis_spark.queries import pii_augmented
 
-    src = _documents_stream(spark, sf_dir)
-    aug = src.withColumn(
-        "text",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact user"),
-            F.col("doc_id"),
-            F.lit("@testmail.org ref "),
-            (F.col("doc_id") + F.lit(1_000_000)).cast("string"),
-        ),
-    )
+    aug = pii_augmented(_documents_stream(spark, sf_dir))
     return _drain(pii_scrub(aug), "st_pii_scrub_sink", table_path(sf_dir, "documents"))
 
 

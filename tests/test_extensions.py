@@ -1110,13 +1110,52 @@ def test_downsample_pins_endpoints_and_bucket_bounds(spark, sf_dir):
             assert r["area"] >= 0.0
 
 
+# null, empty and whitespace-only text (spaces, tabs, a newline) plus
+# repeated and one-token docs: the tokenizer's degenerate cases
+_QUALITY_EDGE_TEXT = [
+    (900001, None),
+    (900002, ""),
+    (900003, "   "),
+    (900004, "\t \t"),
+    (900005, "\n"),
+    (900006, " word "),
+    (900007, "aa aa aa aa aa aa aa aa aa aa aa aa aa aa aa aa aa aa aa aa"),
+    (900008, "  lead and trail  spaces  in a  longer line of plain words here  "),
+]
+
+
+def test_quality_filter_edge_text_equals_sql(spark):
+    """quality_filter on degenerate text equals the ex_quality_filter
+    oracle SQL row for row: a null text emits no row (the oracle's unnest
+    of a NULL list), and empty or whitespace-only text is scored over
+    its empty-string tokens exactly as DuckDB splits them."""
+    import duckdb
+    import pandas as pd
+
+    from espkinesis_spark import verify
+    from espkinesis_spark.functions import text as T
+    from espkinesis_spark.oracles import ORACLES
+
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(_QUALITY_EDGE_TEXT, columns=["doc_id", "text"]))
+    want = con.execute(ORACLES["ex_quality_filter"]).df()
+    con.close()
+    docs = spark.createDataFrame(_QUALITY_EDGE_TEXT, "doc_id long, text string")
+    got = T.quality_filter(docs)
+    verify.compare(got.select(*want.columns), want)
+    assert 900001 not in {r["doc_id"] for r in got.collect()}
+    assert len(want) == len(_QUALITY_EDGE_TEXT) - 1
+
+
 def test_quality_gate_stateless_equals_batch(spark, sf_dir):
-    """The streaming (stateless projection) gate and the batch
-    (explode+groupBy) gate agree document-by-document."""
+    """The streaming gate (``quality_gate_stateless``) emits exactly the
+    documents ``quality_filter`` keeps, with the same stats, on the
+    corpus plus the degenerate-text docs."""
     from espkinesis_spark.functions import text as T
     from espkinesis_spark.tables import load_table
 
-    docs = load_table(spark, sf_dir, "documents")
+    edge = spark.createDataFrame(_QUALITY_EDGE_TEXT, "doc_id long, text string")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").unionByName(edge)
     batch = {
         r["doc_id"]: (r["n_tokens"], r["dup_frac"], r["top_frac"], r["mean_len"])
         for r in T.quality_filter(docs).collect()

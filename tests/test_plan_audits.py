@@ -438,6 +438,49 @@ def test_quality_model_is_zero_shuffle(spark, sf_dir):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+def test_quality_filter_is_zero_shuffle(spark, sf_dir):
+    """The rule-based quality gate is one per-row projection over the
+    token array (the form the streaming gate runs): no exchange, no
+    aggregate, no Python."""
+    from espkinesis_spark.plans import physical_plan
+
+    df = _q(spark, sf_dir, "ex_quality_filter")
+    assert exchange_count(df) == 0
+    plan = physical_plan(df)
+    assert "HashAggregate" not in plan and "Generate" not in plan
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def _lambda_bodies(plan: str) -> list[str]:
+    out, start = [], 0
+    while (i := plan.find("lambdafunction(", start)) >= 0:
+        depth, j = 0, i + len("lambdafunction")
+        while True:
+            depth += {"(": 1, ")": -1}.get(plan[j], 0)
+            if depth == 0:
+                break
+            j += 1
+        out.append(plan[i : j + 1])
+        start = i + 1
+    return out
+
+
+def test_quality_gate_lambdas_do_not_rebuild_token_arrays(spark, sf_dir):
+    """``filter("keep")`` is pushed below quality_filter's projections
+    with every column inlined; no lambda body may then hold the token
+    split or sort, or each array element would rebuild the array (a
+    sf0.001 gate over 500 docs took 50 s that way)."""
+    from espkinesis_spark.functions import text
+    from espkinesis_spark.tables import load_table
+
+    gate = text.quality_gate_stateless(load_table(spark, sf_dir, "documents"))
+    plan = gate._jdf.queryExecution().optimizedPlan().toString()
+    bodies = _lambda_bodies(plan)
+    assert bodies
+    for body in bodies:
+        assert "split(" not in body and "sort_array(" not in body, body
+
+
 # ---- round-9 additions ----
 
 

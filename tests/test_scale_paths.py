@@ -334,3 +334,67 @@ def test_bucketed_scratch_sweep(tmp_path):
     os.utime(old, (past, past))
     _sweep_stale_scratch(str(tmp_path))
     assert not old.exists() and young.exists()
+
+
+_DRAIN_BYTES = [0, 1, 256 << 20, (256 << 20) + 1, 1 << 62]
+_DRAIN_ROWS = [None, 0, 1, 1_000_000, 1_000_001, 1 << 62]
+
+
+@given(
+    nbytes=st.one_of(st.sampled_from(_DRAIN_BYTES), st.integers(0, 1 << 40)),
+    rows=st.one_of(st.sampled_from(_DRAIN_ROWS), st.integers(0, 1 << 30)),
+    mode=st.sampled_from(["append", "complete"]),
+)
+@settings(max_examples=200, deadline=None)
+def test_drain_route_for_every_source_size(nbytes, rows, mode):
+    """jobs._drain's one rule, over degenerate source sizes: the parquet
+    drain iff the source's footer bytes exceed MEMORY_DRAIN_MAX_SOURCE_BYTES
+    or its rows exceed MEMORY_DRAIN_MAX_SOURCE_ROWS; a missing source
+    (``rows`` None: no files, no footer read) sizes nothing and goes to
+    the memory sink. Both routes get the drain mode and the row count."""
+    from espkinesis_spark.streaming import jobs
+
+    files = [] if rows is None else ["part-0.parquet"]
+    calls = []
+    mp = pytest.MonkeyPatch()
+    try:
+        mp.setattr(jobs, "_source_files", lambda source: files)
+        mp.setattr(jobs, "_bytes_of", lambda fs: nbytes if fs else 0)
+        mp.setattr(jobs, "_rows_of", lambda fs: calls.append("rows_of") or rows)
+        mp.setattr(
+            jobs,
+            "_drain_to_parquet",
+            lambda df, name, mode, source_rows: calls.append(
+                ("parquet", name, mode, source_rows)
+            )
+            or "parquet frame",
+        )
+        mp.setattr(
+            jobs,
+            "_replay",
+            lambda df, name, writer, source_rows: calls.append(
+                ("memory", name, source_rows)
+            ),
+        )
+        dropped = []
+        session = SimpleNamespace(
+            table=lambda name: ("memory frame", name),
+            catalog=SimpleNamespace(dropTempView=dropped.append),
+        )
+        out = jobs._drain(SimpleNamespace(sparkSession=session), "sink", "src", mode)
+    finally:
+        mp.undo()
+
+    size = 0 if rows is None else nbytes
+    to_parquet = (
+        size > jobs.MEMORY_DRAIN_MAX_SOURCE_BYTES
+        or (rows or 0) > jobs.MEMORY_DRAIN_MAX_SOURCE_ROWS
+    )
+    assert ("rows_of" in calls) == (rows is not None)
+    route = [c for c in calls if c != "rows_of"]
+    if to_parquet:
+        assert route == [("parquet", "sink", mode, rows)]
+        assert out == "parquet frame" and dropped == []
+    else:
+        assert route == [("memory", "sink", rows)]
+        assert out == ("memory frame", "sink") and dropped == ["sink"]

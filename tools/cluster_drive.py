@@ -13,7 +13,7 @@ network shuffles, same storage — the closest in-sandbox approximation of
 the 1000-executor target.
 
 Usage: python tools/cluster_drive.py [SF_DIR] [window|all|name,name,...]
-Requires PYTHONPATH=/root/repo (the executors get it via executorEnv).
+The executors get the repo root on PYTHONPATH via executorEnv.
 Exit code 0 = every driven entry value-matched (plus both executors seen).
 """
 
@@ -28,6 +28,7 @@ import time
 
 SPARK_HOME = os.environ.get("SPARK_HOME", "/opt/spark")
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def _free_port() -> int:

@@ -36,7 +36,10 @@ Usage: python tools/drain_scale_audit.py [SMALL_SF_DIR] [BIG_SF_DIR]
 
 from __future__ import annotations
 
+import os
 import sys
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from espkinesis_spark import queries
 from espkinesis_spark.session import get_spark

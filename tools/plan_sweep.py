@@ -29,7 +29,10 @@ Usage: python tools/plan_sweep.py [SF_DIR]   (default sf0.001)
 
 from __future__ import annotations
 
+import os
 import sys
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from espkinesis_spark import queries
 from espkinesis_spark.plans import physical_plan

@@ -29,7 +29,10 @@ Usage: python tools/vacuity_audit.py [SF_DIR]   (default sf0.01)
 
 from __future__ import annotations
 
+import os
 import sys
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
