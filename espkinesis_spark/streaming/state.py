@@ -81,6 +81,10 @@ def _make_asof_fn(late_slack_us: int, n_buckets: int):
         state.update(
             (n_buckets, p_uid[keep].tolist(), p_ts[keep].tolist(), p_id[keep].tolist())
         )
+        # ints and None, not the nullable Int64 array: pyspark pads each
+        # output batch with an all-None frame, and pandas deprecates
+        # concatenating that pad with an Int64 column
+        over = over.to_numpy(dtype=object, na_value=None)
         yield pd.DataFrame({"event_id": eid[click], "active_override": over})
 
     return _asof_fn

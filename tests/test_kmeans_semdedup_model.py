@@ -1,6 +1,7 @@
-"""Random property tests of ``similarity.kmeans_train`` and
-``similarity.semdedup`` against a small pure-Python model of the Lloyd
-trajectory and the SemDeDup drop rule.
+"""Random property tests of ``similarity.kmeans_train``,
+``similarity.semdedup``, ``similarity.pq_train`` and
+``similarity.pq_encode`` against a small pure-Python model of the Lloyd
+trajectory, the SemDeDup drop rule and the PQ trajectory.
 
 The model is the contract the oracle SQL also replays:
 
@@ -20,12 +21,21 @@ model's in the last ulp; the 6-dp round absorbs that. ``_cos6`` rounds as
 ``np.round(x, 6)`` does (``rint(x * 1e6) / 1e6``). Clusters stay under
 128 members, so no mean has a 7th decimal of exactly 5, where Spark's
 HALF_UP ``round`` and Python's ``round`` would part.
+
+The PQ model is the same Lloyd run once per subspace: a vector of
+``d = m * w`` dims splits into ``m`` contiguous ``w``-dim subvectors, init
+codewords are the subvectors of vec_id < k, and a subvector goes to the
+codeword with the smallest ``round(svv - 2 * sv.c + cc, 6)``, ties to the
+lowest id. Each dot product is the left-to-right fold
+``x0*y0 + x1*y1 + ...`` in IEEE doubles, and the round is Spark's
+(HALF_UP on the shortest decimal form of the double).
 """
 
 from __future__ import annotations
 
 import math
 from collections import defaultdict
+from decimal import ROUND_HALF_UP, Decimal
 
 from hypothesis import Phase, example, given, settings
 from hypothesis import strategies as st
@@ -134,3 +144,93 @@ def test_kmeans_and_semdedup_match_python_model(spark, monkeypatch):
         "k > n",
         "cluster larger than the row block",
     }
+
+
+def _fold(a, b):
+    acc = a[0] * b[0]
+    for x, y in zip(a[1:], b[1:]):
+        acc = acc + x * y
+    return acc
+
+
+def _round6(x):
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
+def _nearest_codeword(sv, book):
+    # min keeps the first minimum of the ascending ids: ties go to the lowest
+    return min(
+        sorted(book),
+        key=lambda c: _round6(_fold(sv, sv) - 2 * _fold(sv, book[c]) + _fold(book[c], book[c])),
+    )
+
+
+def _pq(vecs, m, k, iters):
+    """The codebooks {(subspace, id): codeword} after ``iters`` rounds and
+    the codes {(vec_id, subspace): id} against them."""
+    w = len(next(iter(vecs.values()))) // m
+    subs = [{i: v[s * w : (s + 1) * w] for i, v in vecs.items()} for s in range(m)]
+    books = [{i: sv for i, sv in sub.items() if i < k} for sub in subs]
+    for _ in range(iters):
+        for s, sub in enumerate(subs):
+            members = defaultdict(list)
+            for sv in sub.values():
+                members[_nearest_codeword(sv, books[s])].append(sv)
+            books[s] = {
+                c: [round(sum(xs) / len(xs), 6) for xs in zip(*svs)]
+                for c, svs in members.items()
+            }
+    cents = {(s, c): cw for s, book in enumerate(books) for c, cw in book.items()}
+    codes = {
+        (i, s): _nearest_codeword(sv, books[s]) for s, sub in enumerate(subs) for i, sv in sub.items()
+    }
+    return cents, codes
+
+
+@st.composite
+def _pq_draws(draw):
+    m, w = draw(st.integers(1, 3)), draw(st.integers(1, 2))
+    vec = st.lists(st.integers(-3, 3), min_size=m * w, max_size=m * w)
+    vecs = draw(st.lists(vec, min_size=1, max_size=12))
+    for src, dst in draw(st.lists(st.tuples(st.integers(0, 11), st.integers(0, 11)), max_size=3)):
+        if max(src, dst) < len(vecs):
+            vecs[dst] = vecs[src]
+    return vecs, m, draw(st.integers(1, len(vecs) + 3)), draw(st.integers(0, 3))
+
+
+def test_pq_train_and_encode_match_python_model(spark):
+    seen = set()
+
+    @settings(max_examples=8, deadline=None, phases=_NO_SHRINK)
+    @given(_pq_draws())
+    # codewords 0 and 1 start equal: 1 ties 0 on every subvector and
+    # loses every member; subvector [0] sits at d² = 1 from both -1 and 1
+    @example(([[1, 1], [1, 1], [-1, 0], [0, 2], [2, -1]], 2, 3, 2))
+    # k > n: every vector starts as a codeword
+    @example(([[-1, 2], [1, 0], [0, 1]], 1, 5, 1))
+    def run(draw):
+        rows, m, k, iters = draw
+        vecs = {i: [float(x) for x in v] for i, v in enumerate(rows)}
+        df = spark.createDataFrame(list(vecs.items()), "vec_id long, embedding array<float>")
+
+        want_cents, want_codes = _pq(vecs, m, k, iters)
+        cents = similarity.pq_train(df, m, k, iters)
+        got_cents = {(r["m"], r["centroid_id"]): list(r["c"]) for r in cents.collect()}
+        assert got_cents == want_cents
+        got_codes = {
+            (r["vec_id"], r["m"]): r["code"] for r in similarity.pq_encode(df, cents, m).collect()
+        }
+        assert got_codes == want_codes
+
+        w = len(rows[0]) // m
+        per_sub = [[tuple(v[s * w : (s + 1) * w]) for v in rows] for s in range(m)]
+        init = [sub[: min(k, len(rows))] for sub in per_sub]
+        if any(len(set(b)) < len(b) for b in init):
+            seen.add("tied init codewords")
+        if iters and len(want_cents) < m * min(k, len(rows)):
+            seen.add("codeword lost every member")
+        if k > len(rows):
+            seen.add("k > n")
+
+    run()
+    assert seen == {"tied init codewords", "codeword lost every member", "k > n"}

@@ -312,6 +312,41 @@ def test_semdedup_build_and_collect_run_at_most_ten_jobs(spark, sf_dir, monkeypa
     assert checkpoints == []
 
 
+def test_ann_pq_build_and_collect_job_count(spark, sf_dir, monkeypatch):
+    """One ex_ann_pq build plus its toPandas runs at most 14 Spark jobs:
+    the PQ codebooks train on the driver (the init collect and one
+    collect per Lloyd round), and neither pq_train nor topk_pq truncates
+    lineage with localCheckpoint. The DataFrame Lloyd loop this replaced
+    ran 21."""
+    import uuid
+
+    from espkinesis_spark.functions import similarity
+    from espkinesis_spark.tables import load_table
+
+    checkpoints = []
+    frame = type(spark.range(1))
+    real = frame.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        checkpoints.append(args)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "localCheckpoint", spy)
+    sc = spark.sparkContext
+    group = f"ann-pq-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "ex_ann_pq build + toPandas")
+    try:
+        pdf = _q(spark, sf_dir, "ex_ann_pq").toPandas()
+    finally:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(pdf) > 0
+    assert 0 < len(jobs) <= 14, f"{len(jobs)} jobs"
+    similarity.pq_train(load_table(spark, sf_dir, "embeddings")).collect()
+    assert checkpoints == []
+
+
 def test_pagerank_iterations_have_no_cartesian(spark, sf_dir):
     """Each PageRank round is a dst-keyed aggregation over src-keyed
     equi-joins; the only nested-loop join allowed is the 1-row node-count

@@ -8,10 +8,11 @@ mysterious oracle diff):
 
   * ``dot_w`` / the unrolled ts-similarity distance == the sequential
     fold (the 0.0 + x == x seed argument),
-  * ``_pq_assign(keep_sv=True)`` == argmin + join-back-to-sub,
+  * the numpy PQ assignment (``_nearest_l2`` in the one assignment
+    kernel) == the DataFrame dot-fold argmin it replaced,
   * the star rounds without large-star's trailing distinct == the
     both-distinct reference form,
-  * ``_ivf_assign_numpy(keep_vec=True)`` == assignment ⋈ corpus,
+  * the assignment kernel's ``keep_vec`` subvector == assignment ⋈ corpus,
   * ex_pagerank's numeric node relabeling == the string-key trajectory.
 """
 
@@ -46,24 +47,37 @@ def test_dot_w_matches_fold(spark):
         assert r["fold"] == r["unrolled"]
 
 
+def _pq_reference_codes(sub, cents):
+    """The DataFrame PQ argmin the numpy kernel replaced: d² =
+    round(svv − 2·sv·c + cc, 6) over sequential dot folds, and a
+    lexicographic struct-min over (d², centroid_id), so ties go to the
+    lowest id."""
+    s = sub.withColumn("__svv", similarity.dot(F.col("sv"), F.col("sv")))
+    c = F.broadcast(cents.withColumn("__scc", similarity.dot(F.col("c"), F.col("c"))))
+    d2 = F.round(
+        F.col("__svv") - 2 * similarity.dot(F.col("sv"), F.col("c")) + F.col("__scc"),
+        C.COSINE_ROUND,
+    )
+    return (
+        s.join(c, "m")
+        .groupBy("vec_id", "m")
+        .agg(
+            F.min(F.struct(d2.alias("d2"), F.col("centroid_id")))
+            .getField("centroid_id")
+            .alias("code")
+        )
+    )
+
+
 def test_pq_assign_keep_sv_matches_joinback(spark, sf_dir):
-    emb = Q._t(spark, sf_dir, "embeddings")
-    sub = similarity._subvectors(emb, C.PQ_M).repartition(4, "vec_id", "m")
-    cents = sub.filter(F.col("vec_id") < C.PQ_K).select(
-        "m", F.col("vec_id").alias("centroid_id"), F.col("sv").alias("c")
-    )
-    fused = similarity._pq_assign(sub, cents, keep_sv=True, width=None)
-    plain = similarity._pq_assign(sub, cents)
-    joined_back = plain.join(sub, ["vec_id", "m"]).select(
-        "vec_id", "m", "centroid_id", "sv"
-    )
-    assert _sets_equal(fused, joined_back)
-    # and the static-width argmin picks identical codewords
-    wide = similarity._pq_assign(sub, cents, keep_sv=True, width=4)
-    assert _sets_equal(
-        fused.select("vec_id", "m", "centroid_id"),
-        wide.select("vec_id", "m", "centroid_id"),
-    )
+    # the init codebook (float32 subvectors) and the one after a Lloyd
+    # round (6-dp means)
+    emb = Q._t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    sub = similarity._subvectors(emb, C.PQ_M)
+    for iters in (0, 1):
+        books = similarity._lloyd(emb, C.PQ_M, C.PQ_K, iters, similarity._nearest_l2)
+        want = _pq_reference_codes(sub, similarity._books_frame(spark, books))
+        assert _sets_equal(similarity._pq_codes(emb, books), want)
 
 
 def test_star_rounds_no_large_distinct_matches_reference(spark):
@@ -123,15 +137,15 @@ def test_dedup_clusters_window_form_components(spark):
 def test_ivf_assign_keep_vec_matches_joinback(spark, sf_dir):
     emb = Q._t(spark, sf_dir, "embeddings")
     cents = emb.filter(F.col("vec_id") % C.IVF_CENTROID_MOD == 0)
-    arrays = similarity._centroid_arrays(cents)
-    plain = similarity._ivf_assign_numpy(emb, arrays)
-    kept = similarity._ivf_assign_numpy(emb, arrays, keep_vec=True)
+    books = similarity._vector_books(cents, 1)
+    plain = similarity._assign(emb, books, similarity._nearest_cosine)
+    kept = similarity._assign(emb, books, similarity._nearest_cosine, keep_vec=True)
     assert _sets_equal(
         kept.select("vec_id", "centroid_id"), plain.select("vec_id", "centroid_id")
     )
     # the passed-through vector is the original corpus vector
-    back = kept.select("vec_id", "embedding")
-    orig = emb.select("vec_id", "embedding")
+    back = kept.select("vec_id", F.col("sv").alias("embedding"))
+    orig = emb.select("vec_id", F.col("embedding").cast("array<double>"))
     assert _sets_equal(back, orig)
 
 

@@ -66,7 +66,7 @@ def test_neardup_auto_routes_by_size(spark, sf_dir, monkeypatch):
 _ESTIMATES = [None, 0, 1, 1 << 59, (1 << 63) - 1]
 
 
-def _estimated_frame(est, cores=4):
+def _estimated_frame(est):
     """A stand-in DataFrame whose Catalyst estimate is ``est`` (None: the
     estimate raises) — just the attributes plan_size_bytes and the
     routers read."""
@@ -79,11 +79,7 @@ def _estimated_frame(est, cores=4):
     stats = SimpleNamespace(sizeInBytes=size_in_bytes)
     plan = SimpleNamespace(stats=lambda: stats)
     qe = SimpleNamespace(optimizedPlan=lambda: plan)
-    ctx = SimpleNamespace(defaultParallelism=cores)
-    return SimpleNamespace(
-        _jdf=SimpleNamespace(queryExecution=lambda: qe),
-        sparkSession=SimpleNamespace(sparkContext=ctx),
-    )
+    return SimpleNamespace(_jdf=SimpleNamespace(queryExecution=lambda: qe))
 
 
 @pytest.mark.parametrize("est", _ESTIMATES)
@@ -99,19 +95,6 @@ def test_rdd_frame_without_stats_has_unknown_size(spark):
 
     df = spark.sparkContext.parallelize([(1,), (2,)]).toDF(["x"])
     assert audit.plan_size_bytes(df) is None
-
-
-@given(
-    est=st.sampled_from(_ESTIMATES),
-    expand=st.integers(min_value=0, max_value=1 << 20),
-    cores=st.integers(min_value=1, max_value=4096),
-)
-@settings(max_examples=200, deadline=None)
-def test_fanout_width_stays_in_bounds(est, expand, cores):
-    width = similarity._fanout_width(_estimated_frame(est, cores), expand)
-    assert cores <= width <= 1 << 17
-    if est is None or est >= 1 << 60:
-        assert width == cores
 
 
 @pytest.mark.parametrize("est", _ESTIMATES)

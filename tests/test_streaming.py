@@ -1343,3 +1343,51 @@ def test_asof_override_refuses_changed_bucket_count(spark, tmp_path):
             _asof_checkpoint_run(spark, events, ckpt, asof_override)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_asof_override_output_survives_pyspark_batch_padding():
+    """pyspark pads every applyInPandasWithState output batch with an
+    all-None frame and concatenates it with the group outputs
+    (``ApplyInPandasWithStateSerializer``'s record-batch builder). The
+    as-of processor's frames must concatenate with that pad without
+    pandas' all-NA-entry FutureWarning, on a bucket whose clicks match no
+    purchase and on a mixed one, and still convert to (long, long) with
+    nulls."""
+    import warnings
+
+    import pandas as pd
+    import pyarrow as pa
+
+    from espkinesis_spark.streaming.state import _make_asof_fn
+
+    class _NewState:
+        exists = False
+
+        def update(self, value):
+            self.value = value
+
+    t0 = pd.Timestamp("2024-01-01 00:00:00")
+
+    def events(rows):
+        return pd.DataFrame(
+            rows, columns=["user_id", "ts", "event_id", "event_type"]
+        ).astype({"user_id": "int64", "event_id": "int64"})
+
+    no_buy = events([(1, t0, 1, "click"), (1, t0 + pd.Timedelta(minutes=1), 2, "click")])
+    mixed = events(
+        [
+            (2, t0, 3, "purchase"),
+            (2, t0 + pd.Timedelta(minutes=5), 4, "click"),
+            (3, t0 + pd.Timedelta(minutes=5), 5, "click"),
+        ]
+    )
+    fn = _make_asof_fn(late_slack_us=0, n_buckets=8)
+    outs = [out for pdf in (no_buy, mixed) for out in fn((0,), iter([pdf]), _NewState())]
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        pad = pd.DataFrame(dict.fromkeys(["event_id", "active_override"]), index=[0])
+        merged = pd.concat(outs + [pad], ignore_index=True)
+    schema = pa.schema([("event_id", pa.int64()), ("active_override", pa.int64())])
+    table = pa.Table.from_pandas(merged, schema=schema, preserve_index=False)
+    assert table.column("event_id").to_pylist() == [1, 2, 4, 5, None]
+    assert table.column("active_override").to_pylist() == [None, None, 3, None, None]
