@@ -474,16 +474,6 @@ def simhash_signer(bits: int = C.SIMHASH_BITS):
     return sign
 
 
-def _ckpt(df: DataFrame, mode: str) -> DataFrame:
-    """Truncate iterative lineage. ``local`` pins executor-local blocks
-    (fast; dies with an executor); ``reliable`` writes to the configured
-    checkpoint dir (sparkContext.setCheckpointDir) and survives executor
-    loss — the right mode for long multi-round jobs on real clusters."""
-    if mode == "reliable":
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
-
-
 def _large_star(edges: DataFrame) -> DataFrame:
     """Large-star round: connect every strictly-larger neighbor of u to the
     minimum of N(u) ∪ {u}. One groupBy + one join, both on node id.
@@ -530,9 +520,7 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return nbr.union(own).distinct()
 
 
-def dedup_clusters(
-    pairs: DataFrame, max_iters: int = 25, checkpoint: str = "local"
-) -> DataFrame:
+def dedup_clusters(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
     """Connected components over near-dup pairs: (doc_id, cluster_id) with
     cluster_id = min doc_id in the component (keep iff doc_id == cluster_id).
 
@@ -549,17 +537,14 @@ def dedup_clusters(
     magnitude smaller than the corpus at any scale — and real dup graphs
     converge in 2-4 rounds. max_iters bounds the adversarial case;
     exhausting it without a fixpoint raises RuntimeError instead of
-    returning silently-wrong split clusters.
-
-    ``checkpoint='reliable'`` swaps the per-round ``localCheckpoint`` for
-    reliable checkpointing (requires ``sparkContext.setCheckpointDir``) so
-    a lost executor cannot kill a long run.
+    returning silently-wrong split clusters. Each round's edge set is
+    ``localCheckpoint``-ed, which truncates the iterative lineage.
     """
-    edges = _ckpt(
+    edges = (
         pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .distinct(),
-        checkpoint,
+        .distinct()
+        .localCheckpoint(eager=True)
     )
     # Fixpoint check, count-gated (r16): both edge sets are DISTINCT
     # (small_star ends in distinct), so set equality ⟺ |nxt| == |edges|
@@ -572,7 +557,7 @@ def dedup_clusters(
     n_edges = edges.count()
     converged = False
     for _ in range(max_iters):
-        nxt = _ckpt(_small_star(_large_star(edges)), checkpoint)
+        nxt = _small_star(_large_star(edges)).localCheckpoint(eager=True)
         n_nxt = nxt.count()
         if n_nxt == n_edges and nxt.exceptAll(edges).isEmpty():
             edges = nxt

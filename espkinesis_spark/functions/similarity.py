@@ -1,17 +1,21 @@
 """Similarity search over an embedding column (array<float>).
 
-Three paths, same semantics (cosine rounded to 6 dp before any argmax /
-threshold; ties break to the lowest neighbor id):
+Every path scores with one rounded cosine (``_cosine6``: a BLAS matmul
+over the row-norm product, rounded to 6 dp) and keeps ties to the lowest
+neighbor id:
 
 * brute-force top-k — the exact baseline. The (bounded) query set is
   broadcast into a matmul over each Arrow batch of the corpus.
 * threshold near-dup — all pairs above a cosine threshold; one broadcast
   matmul while the corpus fits, blocked at real scale.
-* IVF — deterministic coarse quantization: assign every vector to its
-  nearest centroid, probe only the closest IVF_NPROBE centroid buckets.
-  The scale path: candidate set shrinks by ~ (nprobe / n_centroids), the
-  assignment pass is a broadcast join against the (small) centroid set,
-  and the probe is an equi-join on centroid id — no all-pairs anywhere.
+* keyed candidates — sign-bit LSH buckets, IVF lists and label
+  partitions. Each query is replicated into every key it probes, each
+  corpus vector sits in its one key, and one keyed Arrow stage
+  (``_keyed_topk``) scores each key group with one matmul and keeps a
+  local top-k; the top-k tail (``_topk_per_query``) merges the groups.
+  IVF is the scale path: the candidate set shrinks by ~ (nprobe /
+  n_centroids), and the assignment and the probe are maps against the
+  broadcast centroids — no all-pairs anywhere.
 
 k-means (``kmeans_train``) and PQ (``pq_train``) share one Lloyd loop
 (``_lloyd``) that keeps the codebooks on the driver: k-means is one
@@ -20,12 +24,8 @@ L2. The codebooks are array pairs broadcast into one assignment kernel
 (``_assign``, also behind ``ivf_assign``, SemDeDup's final assignment and
 ``pq_encode``), and each round is one aggregate collected back. SemDeDup
 (``semdedup``) scores pairs cluster by cluster in one grouped Arrow
-stage.
-
-The exact kernels (top-k, near-dup, the cosine assignment, the SemDeDup
-cluster stage) are Arrow-batched numpy matmuls sharing one
-rounded-cosine form (``_cosine6``); the candidate-scoring joins and the
-PQ ADC scorer compute dot products JVM-side via zip_with/aggregate or
+stage. One top-k selection (``_topk_select``) ranks every Arrow kernel's
+candidates; only the PQ ADC scorer computes dot products JVM-side, with
 the unrolled ``dot_w`` in whole-stage codegen.
 """
 
@@ -42,62 +42,35 @@ def _as_double(arr: Column) -> Column:
     return arr.cast("array<double>")
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Sequential-order dot product (bit-stable across runs)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def dot_w(a: Column, b: Column, width: int) -> Column:
-    """``dot`` unrolled for a statically-known vector width (guide §1.2
-    per-task work): the higher-order fold allocates a zip array and runs
-    an interpreted lambda per element, which dominates candidate-join
-    stages that evaluate millions of d² terms; the unrolled left-assoc
-    sum is pure codegen. Bit-identical to ``dot``: the fold's seed makes
-    its first step 0.0 + a[0]*b[0], and IEEE 0.0 + x == x for every x
-    except -0.0 (sign only, which dies in the downstream subtraction /
-    ordered-fold that every consumer applies)."""
+    """Sequential-order dot product unrolled for a statically-known vector
+    width (guide §1.2 per-task work): the higher-order fold
+    ``aggregate(zip_with(a, b, *), 0.0, +)`` allocates a zip array and
+    runs an interpreted lambda per element, which dominates stages that
+    evaluate millions of d² terms; the unrolled left-assoc sum is pure
+    codegen. Bit-identical to that fold: its seed makes the first step
+    0.0 + a[0]*b[0], and IEEE 0.0 + x == x for every x except -0.0 (sign
+    only, which dies in the downstream subtraction / ordered-fold that
+    every consumer applies). Only narrow widths pay (PQ subvectors, the
+    W=16 ts-similarity distance): a 64-term unroll measured 2-2.5× slower
+    than the fold, as HotSpot declines to JIT giant generated methods."""
     e = a[0] * b[0]
     for i in range(1, width):
         e = e + a[i] * b[i]
     return e
 
 
-def sq_norm(a: Column) -> Column:
-    return F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
-
-
-def with_norm(vecs: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Attach the L2 norm once (reused across every pairwise computation)."""
-    return vecs.withColumn("__norm", F.sqrt(sq_norm(_as_double(F.col(vec_col)))))
-
-
-def cosine(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
-    return F.round(dot(_as_double(a), _as_double(b)) / (norm_a * norm_b), C.COSINE_ROUND)
-
-
 def _cosine6(a, b):
     """Rounded cosine of every row of ``a`` against every row of ``b``
     (float64 matrices): one BLAS matmul over the product of the L2 row
-    norms, rounded to ``COSINE_ROUND`` dp — the numpy form of ``cosine``
-    that every Arrow kernel here scores with."""
+    norms, rounded to ``COSINE_ROUND`` dp — the one cosine every kernel
+    here scores with. It equals the oracle's rounded
+    ``list_dot_product`` cosine on every sf0.1 pair."""
     import numpy as np
 
     na = np.sqrt((a * a).sum(axis=1))
     nb = na if b is a else np.sqrt((b * b).sum(axis=1))
     return np.round((a @ b.T) / (na[:, None] * nb[None, :]), C.COSINE_ROUND)
-
-
-# NOTE (r16, measured twice): statically unrolling FULL-WIDTH (64-dim)
-# kernels is a LOSS — an unrolled 64-term cosine A/B'd ~2.5× slower than
-# the interpreted fold with identical plan shape and single evaluation
-# (140k-pair projection 4.0 s vs 1.4 s), and a fused 64-avg k-means
-# update 2× slower — consistent with HotSpot declining to JIT giant
-# generated methods. Unrolls (dot_w) are used ONLY for narrow widths
-# (PQ subvectors w=4; the W=16 ts-similarity distance).
 
 
 def topk_bruteforce(
@@ -133,47 +106,109 @@ def _topk_candidates_numpy(
     queries: DataFrame, corpus: DataFrame, k: int, vec_col: str
 ) -> DataFrame:
     """Per-batch local top-k candidates (vec_id, neighbor_id, cos): the
-    global merge only sees batches*k rows per query. Ties keep the lowest
-    neighbor_id."""
+    global merge only sees batches*k rows per query."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    rows = queries.select("vec_id", vec_col).collect()  # broadcast build side
-    q_ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    q_mat = np.array([list(r[vec_col]) for r in rows], dtype=np.float64)
-    bc = queries.sparkSession.sparkContext.broadcast((q_ids, q_mat))
+    # broadcast build side
+    books = _vector_books(queries.select("vec_id", F.col(vec_col).alias("embedding")), 1)
+    bc = queries.sparkSession.sparkContext.broadcast(books[0])
 
     def run(batches):
-        qi, qm = bc.value
-        for pdf in batches:
-            c_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            c_mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            cos = _cosine6(c_mat, qm)
-            out_q, out_n, out_c = [], [], []
-            for j in range(len(qi)):
-                col = np.where(c_ids != qi[j], cos[:, j], -np.inf)
-                if len(col) > k:
-                    # all rows >= the k-th largest value (ties included), then
-                    # an exact (-cos, neighbor_id) sort of that tiny set
-                    kth = np.partition(col, -k)[-k]
-                    cand = np.nonzero(col >= kth)[0]
-                else:
-                    cand = np.nonzero(col > -np.inf)[0]
-                order = np.lexsort((c_ids[cand], -col[cand]))[:k]
-                sel = cand[order]
-                out_q.extend([qi[j]] * len(sel))
-                out_n.extend(c_ids[sel])
-                out_c.extend(col[sel])
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.array(out_q, dtype=np.int64),
-                    "neighbor_id": np.array(out_n, dtype=np.int64),
-                    "cos": np.array(out_c, dtype=np.float64),
-                }
+        q_ids, q_mat = bc.value
+        for batch in batches:
+            c_ids = batch.column(0).to_numpy()
+            cos = _cosine6(_rows(batch.column(1)), q_mat).T
+            cos = np.where(q_ids[:, None] != c_ids[None, :], cos, -np.inf)
+            r, c = _topk_select(c_ids, cos, k)
+            yield pa.RecordBatch.from_pydict(
+                {"vec_id": q_ids[r], "neighbor_id": c_ids[c], "cos": cos[r, c]}
             )
 
-    return corpus.select("vec_id", vec_col).mapInPandas(
+    return corpus.select("vec_id", vec_col).mapInArrow(
         run, schema="vec_id long, neighbor_id long, cos double"
+    )
+
+
+def _rows(vec):
+    """An Arrow list array of equal-length vectors as a float64 matrix,
+    one row per vector, read from the flat values buffer (no per-row
+    Python objects)."""
+    import numpy as np
+
+    if np.unique(np.diff(vec.offsets.to_numpy())).size > 1:
+        raise ValueError("every embedding must have the same length")
+    return vec.flatten().to_numpy().astype(np.float64).reshape(len(vec), -1)
+
+
+def _topk_select(c_ids, cos, k: int):
+    """The one top-k selection: row and column indices of each row's
+    best ``k`` entries of ``cos`` (rows × candidates), cos descending,
+    ties to the lowest candidate id; a -inf entry is no candidate.
+    Rows come out ascending, each row's entries best first."""
+    import numpy as np
+
+    live = cos > -np.inf
+    if cos.shape[1] > k:
+        # every entry >= the row's k-th largest value (ties included),
+        # then an exact (-cos, id) sort of that small set
+        live &= cos >= np.partition(cos, -k, axis=1)[:, -k, None]
+    r, c = np.nonzero(live)
+    order = np.lexsort((c_ids[c], -cos[r, c], r))
+    r, c = r[order], c[order]
+    first = np.searchsorted(r, r)
+    keep = np.arange(len(r)) - first < k
+    return r[keep], c[keep]
+
+
+# Row block of the Arrow pair kernels (SemDeDup's cluster stage and the
+# keyed top-k): a group's pairs are scored BLOCK rows at a time, so the
+# cosine tile is at most BLOCK x group doubles (4 MiB per 1,024-vector
+# group), never group².
+PAIR_ROW_BLOCK = 512
+
+
+def _keyed_topk(queries: DataFrame, corpus: DataFrame, k: int, *extra: str) -> DataFrame:
+    """The one keyed candidate stage: each query's local top-k
+    (vec_id, neighbor_id, cos, *extra) within every key it probes.
+
+    ``queries`` is (vec_id, key, embedding, *extra), each query once per
+    key it probes; ``corpus`` is (neighbor_id, key, embedding), each
+    vector in its one key. One ``cogroup(...).applyInArrow`` scores a
+    key group with ``_cosine6`` over the flat Arrow buffers,
+    ``PAIR_ROW_BLOCK`` query rows at a time, masks self-pairs and keeps
+    each query's top k (``_topk_select``); ``_topk_per_query`` merges a
+    query's groups. A (query, neighbor) pair meets in at most one group
+    when the probe keys are distinct, so the merge needs no dedup."""
+    import numpy as np
+    import pyarrow as pa
+
+    block = PAIR_ROW_BLOCK
+
+    def score(q, c):
+        q_ids = q.column("vec_id").to_numpy()
+        c_ids = c.column("neighbor_id").to_numpy()
+        parts = [(np.zeros(0, np.int64), np.zeros(0, np.int64), np.zeros(0))]
+        if len(q_ids) and len(c_ids):
+            q_mat = _rows(q.column("embedding").combine_chunks())
+            c_mat = _rows(c.column("embedding").combine_chunks())
+            for lo in range(0, len(q_ids), block):
+                s = _cosine6(q_mat[lo : lo + block], c_mat)
+                s[q_ids[lo : lo + block, None] == c_ids[None, :]] = -np.inf
+                r, cc = _topk_select(c_ids, s, k)
+                parts.append((r + lo, cc, s[r, cc]))
+        rows, cols, cos = (np.concatenate(p) for p in zip(*parts))
+        out = {"vec_id": q_ids[rows], "neighbor_id": c_ids[cols], "cos": cos}
+        return pa.table({**out, **{e: q.column(e).take(rows) for e in extra}})
+
+    schema = "vec_id long, neighbor_id long, cos double" + "".join(
+        f", {e} {queries.schema[e].dataType.simpleString()}" for e in extra
+    )
+    return (
+        queries.select("vec_id", "key", "embedding", *extra)
+        .groupBy("key")
+        .cogroup(corpus.select("neighbor_id", "key", "embedding").groupBy("key"))
+        .applyInArrow(score, schema=schema)
     )
 
 
@@ -362,31 +397,28 @@ def topk_lsh(
     distinct, so no candidate dedup is needed. Output (vec_id, rnk,
     neighbor_id) is deterministic for the oracle.
     """
-    bucketed = vecs.withColumn("__bucket", sign_bucket(F.col("embedding"), bits))
-    queries = bucketed.filter(F.col("vec_id") < query_max_id)
-    probe_cols = [F.col("__bucket")]
+    return _topk_per_query(
+        _lsh_topk(vecs, F.col("vec_id") < query_max_id, bits, k, multiprobe), k
+    )
+
+
+def _lsh_topk(
+    vecs: DataFrame, is_query: Column, bits: int, k: int, multiprobe: bool
+) -> DataFrame:
+    """Sign-bucket candidates scored by the keyed stage: the ``is_query``
+    rows replicated into their probe buckets (the bucket itself, plus
+    every 1-bit flip with ``multiprobe``) against every vector in its one
+    bucket. Each query's local top k per bucket."""
+    bucketed = vecs.select(
+        "vec_id", "embedding", sign_bucket(F.col("embedding"), bits).alias("key")
+    )
+    probes = [F.col("key")]
     if multiprobe:
-        probe_cols += [F.expr(f"__bucket ^ {2 ** i}") for i in range(bits)]
-    q = (
-        with_norm(queries)
-        .select(
-            "vec_id",
-            F.explode(F.array(*probe_cols)).alias("__probe"),
-            F.col("embedding").alias("__qv"),
-            F.col("__norm").alias("__qn"),
-        )
+        probes += [F.expr(f"key ^ {2 ** i}") for i in range(bits)]
+    q = bucketed.filter(is_query).select(
+        "vec_id", F.explode(F.array(*probes)).alias("key"), "embedding"
     )
-    c = with_norm(bucketed).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("__bucket").alias("__cbucket"),
-        F.col("embedding").alias("__cv"),
-        F.col("__norm").alias("__cn"),
-    )
-    scored = (
-        q.join(c, (F.col("__probe") == F.col("__cbucket")) & (F.col("vec_id") != F.col("neighbor_id")))
-        .withColumn("cos", cosine(F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn")))
-    )
-    return _topk_per_query(scored, k)
+    return _keyed_topk(q, bucketed.withColumnRenamed("vec_id", "neighbor_id"), k)
 
 
 def knn_graph_auto_bits(n: int, target_bucket: int = C.KNN_BUCKET_TARGET) -> int:
@@ -413,54 +445,33 @@ def knn_graph(
     structure graph-clustering / connectivity-dedup pipelines consume.
 
     Candidates come from the EXISTING bounded source (the topk_lsh
-    sign-bucket multiprobe family: same bucket or any 1-bit-flip bucket),
-    so generation is one bucket-key shuffle and never corpus²; the degree
-    cap is a per-vector row_number top-k (ties broken on neighbor id —
-    deterministic for the oracle). ``mutual=True`` then keeps only edges
-    where BOTH endpoints name each other (the standard kNN-graph
-    sparsifier against hub vectors): a self-join on the DIRECTED edge
-    table, which is n·k — corpus-LINEAR — so symmetrization never touches
-    the corpus again. Output (src, dst, cos) with src < dst.
+    sign-bucket multiprobe family: same bucket or any 1-bit-flip bucket,
+    scored bucket by bucket in the keyed Arrow stage), so generation is
+    one bucket-key shuffle and never corpus²; the degree cap is the
+    per-vector row_number top-k of ``_topk_per_query`` (ties broken on
+    neighbor id — deterministic for the oracle). ``mutual=True`` then
+    keeps only edges where BOTH endpoints name each other (the standard
+    kNN-graph sparsifier against hub vectors): a self-join on the
+    DIRECTED edge table, which is n·k — corpus-LINEAR — so symmetrization
+    never touches the corpus again. Output (src, dst, cos) with src < dst.
 
     ``bits=None`` (default) auto-scales the bucket count with the corpus
     (knn_graph_auto_bits) so per-bucket candidate volume stays constant —
     fixed bits are quadratic at scale. The remaining skew risk is a hot
-    bucket (all-near-duplicate corpora collapse into few sign patterns);
-    pre-split hot buckets exactly as the banded-minhash df cap does.
+    bucket (all-near-duplicate corpora collapse into few sign patterns):
+    its group is scored ``PAIR_ROW_BLOCK`` rows at a time, so memory
+    stays bounded but its work is one task; pre-split hot buckets exactly
+    as the banded-minhash df cap does.
     """
     if bits is None:
         bits = knn_graph_auto_bits(vecs.count())
-    bucketed = vecs.withColumn("__bucket", sign_bucket(F.col("embedding"), bits))
-    probe_cols = [F.col("__bucket")] + [
-        F.expr(f"__bucket ^ {2 ** i}") for i in range(bits)
-    ]
-    q = with_norm(bucketed).select(
-        F.col("vec_id").alias("src"),
-        F.explode(F.array(*probe_cols)).alias("__probe"),
-        F.col("embedding").alias("__qv"),
-        F.col("__norm").alias("__qn"),
-    )
-    c = with_norm(bucketed).select(
-        F.col("vec_id").alias("dst"),
-        F.col("__bucket").alias("__cbucket"),
-        F.col("embedding").alias("__cv"),
-        F.col("__norm").alias("__cn"),
-    )
-    scored = q.join(
-        c, (F.col("__probe") == F.col("__cbucket")) & (F.col("src") != F.col("dst"))
-    ).withColumn(
-        "cos", cosine(F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn"))
-    )
-    w = Window.partitionBy("src").orderBy(F.col("cos").desc(), F.col("dst").asc())
-    edges = (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("src", "dst", "cos")
+    edges = _topk_per_query(_lsh_topk(vecs, F.lit(True), bits, k, True), k, "cos").select(
+        F.col("vec_id").alias("src"), F.col("neighbor_id").alias("dst"), "cos"
     )
     if not mutual:
         return edges
     # the edge table feeds both sides of the mutual join — checkpoint the
-    # n·k frame so the bucket-join + window pipeline runs ONCE, not twice
+    # n·k frame so the keyed stage + window pipeline runs ONCE, not twice
     # (the Q11/winnow shared-consumer rule)
     edges = edges.localCheckpoint(eager=True)
     rev = edges.select(
@@ -582,11 +593,8 @@ def _assign(vecs: DataFrame, books, nearest, keep_vec: bool = False) -> DataFram
 
     def run(batches):
         for batch in batches:
-            ids, vec = batch.column(0).to_numpy(), batch.column(1)
-            if np.unique(np.diff(vec.offsets.to_numpy())).size > 1:
-                raise ValueError("every embedding must have the same length")
+            ids, mat = batch.column(0).to_numpy(), _rows(batch.column(1))
             n = len(ids)
-            mat = vec.flatten().to_numpy().astype(np.float64).reshape(n, -1)
             w = mat.shape[1] // m
             subs = mat[:, : m * w].reshape(n, m, w)
             codes = np.stack(
@@ -626,54 +634,41 @@ def topk_ivf(
     if centroids is None:
         centroids = vecs.filter(F.col("vec_id") % centroid_mod == 0)
     queries = vecs.filter(F.col("vec_id") < query_max_id)
-    cand_ids = _ivf_candidates(vecs, queries, centroids, nprobe)
-    q = with_norm(queries).select(
-        "vec_id", F.col("embedding").alias("__qv"), F.col("__norm").alias("__qn")
-    )
-    c = with_norm(vecs).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cv"), F.col("__norm").alias("__cn")
-    )
-    scored = (
-        cand_ids.filter(F.col("vec_id") != F.col("neighbor_id"))
-        .join(q, "vec_id")
-        .join(c, "neighbor_id")
-        .withColumn("cos", cosine(F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn")))
-    )
-    return _topk_per_query(scored, k)
+    return _topk_per_query(_keyed_topk(*_ivf_lists(vecs, queries, centroids, nprobe), k), k)
 
 
-def _ivf_candidates(
-    vecs: DataFrame, queries: DataFrame, centroids: DataFrame, nprobe: int
-) -> DataFrame:
-    """The IVF probe rule as (vec_id, neighbor_id) pairs: each query's
-    ``nprobe`` nearest centroids (broadcast centroid cross-join, cosine
-    descending, ties to the lowest centroid id), joined to every vector
-    ``ivf_assign`` put in those buckets. Self-pairs are kept; the
-    scorer drops them."""
-    assignment = ivf_assign(vecs, centroids)
-    qc = (
-        with_norm(queries)
-        .select("vec_id", F.col("embedding").alias("__v"), F.col("__norm").alias("__vn"))
-        .crossJoin(
-            F.broadcast(
-                with_norm(centroids).select(
-                    F.col("vec_id").alias("centroid_id"),
-                    F.col("embedding").alias("__c"),
-                    F.col("__norm").alias("__cn"),
-                )
+def _ivf_lists(vecs: DataFrame, queries: DataFrame, centroids: DataFrame, nprobe: int):
+    """The IVF probe rule as the keyed stage's two sides, keyed by IVF
+    list: the queries (vec_id, key, embedding), each once per probed
+    list — its ``nprobe`` nearest centroids by rounded cosine, ties to the
+    lowest centroid id, its own list kept — and the corpus (neighbor_id,
+    key, embedding), each vector in the list ``ivf_assign`` gives it. One
+    collect of the centroids; the probe and the assignment are maps
+    against them (the assignment passes the vector through, so nothing
+    joins back to the corpus)."""
+    import pyarrow as pa
+
+    books = _vector_books(centroids, 1)
+    bc = vecs.sparkSession.sparkContext.broadcast(books[0])
+
+    def probe(batches):
+        c_ids, c_mat = bc.value
+        for batch in batches:
+            vec = batch.column(1)
+            r, c = _topk_select(c_ids, _cosine6(_rows(vec), c_mat), nprobe)
+            yield pa.RecordBatch.from_pydict(
+                {"vec_id": batch.column(0).take(r), "key": c_ids[c], "embedding": vec.take(r)}
             )
-        )
-        .withColumn("cos", cosine(F.col("__v"), F.col("__c"), F.col("__vn"), F.col("__cn")))
+
+    q = queries.select("vec_id", "embedding")
+    emb_type = q.schema["embedding"].dataType.simpleString()
+    probes = q.mapInArrow(probe, schema=f"vec_id long, key long, embedding {emb_type}")
+    corpus = _assign(vecs, books, _nearest_cosine, keep_vec=True).select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("centroid_id").alias("key"),
+        F.col("sv").alias("embedding"),
     )
-    wq = Window.partitionBy("vec_id").orderBy(F.col("cos").desc(), F.col("centroid_id").asc())
-    probes = (
-        qc.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= nprobe)
-        .select("vec_id", "centroid_id")
-    )
-    return probes.join(
-        assignment.withColumnRenamed("vec_id", "neighbor_id"), "centroid_id"
-    ).select("vec_id", "neighbor_id")
+    return probes, corpus
 
 
 def quantize_int8(vecs: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -878,42 +873,46 @@ def topk_pq(
     cw = cents.withColumn("scc", dot_w(F.col("c"), F.col("c"), width))
     coded = codes.join(
         F.broadcast(cw), (codes.m == cw.m) & (codes.code == cw.centroid_id)
-    ).select(codes.vec_id, codes.m, "c", "scc")
-    # per-neighbor reconstruction norm: ordered fold over subspaces
-    nrec = coded.groupBy("vec_id").agg(
-        F.sqrt(
-            _ordered_sum(F.collect_list(F.struct("m", "scc")), "scc")
-        ).alias("rnorm")
-    )
-    q = with_norm(vecs.filter(F.col("vec_id") < query_max_id))
+    ).select(codes.vec_id.alias("neighbor_id"), codes.m, "c", "scc")
+    q = vecs.filter(F.col("vec_id") < query_max_id)
     qsub = _subvectors(q, m).withColumnRenamed("vec_id", "qid")
-    qn = q.select(F.col("vec_id").alias("qid"), F.col("__norm").alias("qnorm"))
-    coded_n = coded.withColumnRenamed("vec_id", "neighbor_id")
+    # |q|: the sequential fold of the squared components
+    qn = q.select(
+        F.col("vec_id").alias("qid"),
+        F.sqrt(
+            F.aggregate(
+                F.transform(_as_double(F.col("embedding")), lambda x: x * x),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            )
+        ).alias("qnorm"),
+    )
     if candidates is None:
-        terms = qsub.join(coded_n, "m").filter(
+        terms = qsub.join(coded, "m").filter(
             F.col("qid") != F.col("neighbor_id")
         )
     else:
         cand = candidates.select(
             F.col("vec_id").alias("qid"), "neighbor_id"
         ).filter(F.col("qid") != F.col("neighbor_id"))
-        terms = cand.join(qsub, "qid").join(coded_n, ["neighbor_id", "m"])
+        terms = cand.join(qsub, "qid").join(coded, ["neighbor_id", "m"])
+    # every pair's list holds all m subspaces of the neighbor, so one
+    # ordered fold gives the ADC dot product and another the neighbor's
+    # reconstruction norm — the codes are read once
     terms = terms.select(
-        "qid", "neighbor_id", "m", dot_w(F.col("sv"), F.col("c"), width).alias("term")
+        "qid", "neighbor_id", "m", dot_w(F.col("sv"), F.col("c"), width).alias("term"), "scc"
     )
+    per_m = F.collect_list(F.struct("m", "term", "scc"))
     adc = terms.groupBy("qid", "neighbor_id").agg(
-        _ordered_sum(F.collect_list(F.struct("m", "term")), "term").alias("dp")
+        _ordered_sum(per_m, "term").alias("dp"),
+        F.sqrt(_ordered_sum(per_m, "scc")).alias("rnorm"),
     )
-    scored = (
-        adc.join(qn, "qid")
-        .join(nrec.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
-        .select(
-            F.col("qid").alias("vec_id"),
-            "neighbor_id",
-            F.round(
-                F.col("dp") / (F.col("qnorm") * F.col("rnorm")), C.COSINE_ROUND
-            ).alias("cos"),
-        )
+    scored = adc.join(qn, "qid").select(
+        F.col("qid").alias("vec_id"),
+        "neighbor_id",
+        F.round(
+            F.col("dp") / (F.col("qnorm") * F.col("rnorm")), C.COSINE_ROUND
+        ).alias("cos"),
     )
     return _topk_per_query(scored, topk)
 
@@ -930,10 +929,11 @@ def topk_ivfpq(
     IVF probe rule prunes candidates to nprobe buckets (the compute-side
     cut), then PQ codes score ONLY those candidates via ADC (the
     memory-side cut — the corpus lives as PQ_M bytes/vector, never full
-    floats). The probe stage is ``_ivf_candidates``, the one IVF probe
-    rule ``topk_ivf`` also runs, and the scorer is ``topk_pq`` restricted
-    to those candidates: composing indexes is a join, not a new engine
-    path.
+    floats). The probe stage is ``_ivf_lists``, the one IVF probe rule
+    ``topk_ivf`` also runs, joined on the list into (query, neighbor)
+    pairs (self-pairs kept; the scorer drops them), and the scorer is
+    ``topk_pq`` restricted to those candidates: composing indexes is a
+    join, not a new engine path.
 
     Scale: candidate volume is queries × (nprobe/n_centroids) × corpus —
     the IVF fraction — and each candidate costs m narrow LUT rows; the
@@ -941,7 +941,8 @@ def topk_ivfpq(
     """
     centroids = vecs.filter(F.col("vec_id") % centroid_mod == 0)
     queries = vecs.filter(F.col("vec_id") < query_max_id)
-    cand = _ivf_candidates(vecs, queries, centroids, nprobe)
+    probes, lists = _ivf_lists(vecs, queries, centroids, nprobe)
+    cand = probes.join(lists.select("neighbor_id", "key"), "key").select("vec_id", "neighbor_id")
     return topk_pq(vecs, query_max_id, topk=topk, candidates=cand)
 
 
@@ -951,13 +952,6 @@ def semdedup_auto_k(n: int, target_cluster: int = C.SEMDEDUP_TARGET_CLUSTER) -> 
     n // target_cluster). Keeping the KMEANS_K floor means oracle-scale
     corpora replay the fixed-k SQL trajectory exactly."""
     return max(C.KMEANS_K, n // target_cluster)
-
-
-# Row block of the SemDeDup cluster stage: a cluster's pairs are scored
-# BLOCK rows at a time against the cluster's later vectors, so the cosine
-# tile is at most BLOCK x cluster doubles (4 MiB per 1,024-vector
-# cluster), never cluster².
-SEMDEDUP_ROW_BLOCK = 512
 
 
 def semdedup(
@@ -986,7 +980,7 @@ def semdedup(
     the broadcast centroid arrays and passes the vector through as
     ``sv``, then ONE
     ``groupBy(centroid_id).applyInPandas`` scores each cluster: sorted by
-    vec_id, the rounded cosine (``_cosine6``) of ``SEMDEDUP_ROW_BLOCK``
+    vec_id, the rounded cosine (``_cosine6``) of ``PAIR_ROW_BLOCK``
     rows at a time against the cluster's later vectors, so a cluster's
     memory is O(block × cluster) and its pair work O(cluster²).
 
@@ -1012,7 +1006,7 @@ def semdedup(
     # the kernels read the canonical 'embedding' column — rename at the
     # boundary so any vec_col works
     emb = vecs.select("vec_id", F.col(vec_col).alias("embedding"))
-    block = SEMDEDUP_ROW_BLOCK
+    block = PAIR_ROW_BLOCK
 
     def keep_flags(pdf):
         pdf = pdf.sort_values("vec_id", kind="stable")

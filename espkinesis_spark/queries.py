@@ -363,34 +363,18 @@ def ex_ann_filtered(spark, sf_dir):
     """Metadata-FILTERED vector search (the production retrieval shape:
     a predicate narrows the corpus before similarity ranks it): top-3
     cosine neighbors per query vector restricted to vectors sharing the
-    query's label. The label restriction is an EQUI-join key, so the
-    search co-locates per label partition and cross-label pairs never
-    materialize — the filter prunes the candidate space INSIDE the join,
-    not after it."""
-    from espkinesis_spark.functions.similarity import cosine, with_norm
-
-    emb = _t(spark, sf_dir, "embeddings")
-    q = with_norm(emb.filter(F.col("vec_id") < C.ANN_QUERY_MAX_ID)).select(
-        "vec_id", "label", F.col("embedding").alias("__qv"), F.col("__norm").alias("__qn")
+    query's label. The label is the candidate key, so the search scores
+    each label partition in one keyed Arrow group and cross-label pairs
+    never materialize — the filter prunes the candidate space INSIDE the
+    scoring stage, not after it."""
+    emb = _t(spark, sf_dir, "embeddings").filter(F.col("label").isNotNull())
+    q = emb.filter(F.col("vec_id") < C.ANN_QUERY_MAX_ID).select(
+        "vec_id", F.col("label").alias("key"), "embedding", "label"
     )
-    c = with_norm(emb).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("__cl"),
-        F.col("embedding").alias("__cv"),
-        F.col("__norm").alias("__cn"),
-    )
-    pairs = (
-        q.join(c, (q.label == c.__cl) & (q.vec_id != c.neighbor_id))
-        .withColumn(
-            "cos", cosine(F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn"))
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= 3)
-        .select("vec_id", "label", "rnk", "neighbor_id", "cos")
-    )
+    c = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("label").alias("key"), "embedding")
+    return similarity._topk_per_query(
+        similarity._keyed_topk(q, c, 3, "label"), 3, "label", "cos"
+    ).select("vec_id", "label", "rnk", "neighbor_id", "cos")
 
 
 def ex_ann_ivf(spark, sf_dir):
@@ -2708,7 +2692,7 @@ def ex_ts_similarity(spark, sf_dir):
     # bit-identical to the sequential folds (0.0 + x == x, the dot_w
     # argument), per-element whens reproduce the σ=0 → zero-vector rule,
     # and W=16 is safely under the giant-method JIT hazard the width-64
-    # unroll hit (similarity.cosine_w notes). A/B at sf0.1: 2.4 s →
+    # unroll hit (the similarity.dot_w notes). A/B at sf0.1: 2.4 s →
     # 0.45 s with exact row equality.
     def _ssum(terms):
         e = terms[0]

@@ -225,20 +225,6 @@ def test_dedup_clusters_raises_when_not_a_fixpoint(spark):
         dedup.dedup_clusters(pairs, max_iters=1)
 
 
-def test_dedup_clusters_reliable_checkpoint(spark, tmp_path):
-    """checkpoint='reliable' must produce identical clusters (and requires a
-    checkpoint dir, which a production job sets on real storage)."""
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "doc_a long, doc_b long"
-    )
-    got = {
-        (r["doc_id"], r["cluster_id"])
-        for r in dedup.dedup_clusters(pairs, checkpoint="reliable").collect()
-    }
-    assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
-
-
 def test_hash_split_raises_on_null_key(spark):
     from espkinesis_spark.functions import sampling
 
@@ -633,28 +619,36 @@ def test_semdedup_drop_always_has_lower_id_cluster_witness(spark, sf_dir):
     """Every dropped vector must have a same-cluster lower-id witness at
     cosine >= threshold; every kept one must have none (the order-parallel
     drop rule, checked directly against the pairwise definition)."""
+    from espkinesis_spark.verify import duck_connection
+
     emb = load_table(spark, sf_dir, "embeddings")
-    res = similarity.semdedup(emb)
-    v = similarity.with_norm(emb).join(res.select("vec_id", "centroid_id"), "vec_id")
-    lo = v.select(
-        "centroid_id",
-        F.col("vec_id").alias("lo_id"),
-        F.col("embedding").alias("a"),
-        F.col("__norm").alias("an"),
+    res = similarity.semdedup(emb).toPandas()
+    con = duck_connection(sf_dir)
+    try:
+        con.register("res", res[["vec_id", "centroid_id"]])
+        wit = {
+            r[0]
+            for r in con.execute(
+                f"""
+                WITH v AS (SELECT e.vec_id, r.centroid_id, CAST(e.embedding AS DOUBLE[]) AS e
+                           FROM embeddings e JOIN res r USING (vec_id))
+                SELECT DISTINCT b.vec_id FROM v a JOIN v b
+                  ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id
+                WHERE {_duck_cos('a.e', 'b.e')} >= {C.NEARDUP_COSINE}"""
+            ).fetchall()
+        }
+    finally:
+        con.close()
+    for r in res.itertuples():
+        assert r.keep == (r.vec_id not in wit), r
+
+
+def _duck_cos(a: str, b: str) -> str:
+    """DuckDB's rounded cosine: the independent oracle engine's form."""
+    return (
+        f"round(list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a}))"
+        f" * sqrt(list_dot_product({b}, {b}))), {C.COSINE_ROUND})"
     )
-    witnessed = (
-        lo.join(v, "centroid_id")
-        .filter(F.col("lo_id") < F.col("vec_id"))
-        .filter(
-            similarity.cosine(F.col("a"), F.col("embedding"), F.col("an"), F.col("__norm"))
-            >= F.lit(C.NEARDUP_COSINE)
-        )
-        .select("vec_id")
-        .distinct()
-    )
-    wit = {r["vec_id"] for r in witnessed.collect()}
-    for r in res.collect():
-        assert r["keep"] == (r["vec_id"] not in wit), r
 
 
 def test_embed_gram_matches_numpy(spark, sf_dir):
@@ -2563,7 +2557,7 @@ def test_knn_graph_directed_plan_bounded(spark, sf_dir):
     """The directed candidate pipeline (the part the mutual join's
     checkpoint hides from the final plan) must never plan a cartesian /
     nested-loop join or row-python eval: candidates come from the
-    bucket equi-join, the cap from a window."""
+    bucket-keyed Arrow cogroup, the cap from a window."""
     from espkinesis_spark.functions import similarity
     from espkinesis_spark.plans import audit
     from espkinesis_spark.tables import load_table
@@ -2647,34 +2641,28 @@ def test_ivfpq_neighbors_within_ivf_candidates(spark, sf_dir):
         for r in similarity.topk_bruteforce(q, emb, k=C.IVF_TOPK).collect()
     }
     # a neighbor is valid iff its assigned centroid is one the query
-    # probed; rebuild the probe set via the same rounded-cosine
+    # probed; rebuild the probe set in DuckDB via the same rounded-cosine
     # top-nprobe rule
-    probed = {}
-    from espkinesis_spark.functions.similarity import (
-        Window,
-        cosine,
-        with_norm,
-    )
+    from espkinesis_spark.verify import duck_connection
 
-    qc = (
-        with_norm(q)
-        .select("vec_id", F.col("embedding").alias("__v"), F.col("__norm").alias("__vn"))
-        .crossJoin(
-            with_norm(cents).select(
-                F.col("vec_id").alias("centroid_id"),
-                F.col("embedding").alias("__c"),
-                F.col("__norm").alias("__cn"),
-            )
-        )
-        .withColumn("cos", cosine(F.col("__v"), F.col("__c"), F.col("__vn"), F.col("__cn")))
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos").desc(), F.col("centroid_id").asc())
-    for r in (
-        qc.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= C.IVF_NPROBE)
-        .collect()
-    ):
-        probed.setdefault(r["vec_id"], set()).add(r["centroid_id"])
+    con = duck_connection(sf_dir)
+    try:
+        rows = con.execute(
+            f"""
+            WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)
+            SELECT vec_id, centroid_id FROM (
+              SELECT q.vec_id, c.vec_id AS centroid_id,
+                     row_number() OVER (PARTITION BY q.vec_id
+                       ORDER BY {_duck_cos('q.e', 'c.e')} DESC, c.vec_id) AS rn
+              FROM v q CROSS JOIN v c
+              WHERE q.vec_id < {C.ANN_QUERY_MAX_ID} AND c.vec_id % {C.IVF_CENTROID_MOD} = 0)
+            WHERE rn <= {C.IVF_NPROBE}"""
+        ).fetchall()
+    finally:
+        con.close()
+    probed = {}
+    for vec_id, centroid_id in rows:
+        probed.setdefault(vec_id, set()).add(centroid_id)
     for r in got:
         assert assign[r["neighbor_id"]] in probed[r["vec_id"]]
     hits = len(truth & {(r["vec_id"], r["neighbor_id"]) for r in got})

@@ -98,7 +98,7 @@ def _draws(draw):
 
 
 def test_kmeans_and_semdedup_match_python_model(spark, monkeypatch):
-    monkeypatch.setattr(similarity, "SEMDEDUP_ROW_BLOCK", _BLOCK)
+    monkeypatch.setattr(similarity, "PAIR_ROW_BLOCK", _BLOCK)
     seen = set()
 
     @settings(max_examples=10, deadline=None, phases=_NO_SHRINK)

@@ -347,6 +347,56 @@ def test_ann_pq_build_and_collect_job_count(spark, sf_dir, monkeypatch):
     assert checkpoints == []
 
 
+def test_ann_pq_final_plan_encodes_corpus_once(spark, sf_dir):
+    """ex_ann_pq's executed (final AQE) plan holds exactly one
+    MapInArrow: the PQ codes feed the ADC aggregate once, which also
+    folds each neighbor's reconstruction norm. A second encode map is
+    the separate norm aggregate and its join back."""
+    df = _q(spark, sf_dir, "ex_ann_pq")
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in plan
+    assert final.count("MapInArrow") == 1, final
+
+
+KEYED_ENTRIES = (
+    "ex_ann_filtered",
+    "ex_ann_ivf",
+    "ex_ann_lsh",
+    "ex_ann_recall",
+    "ex_ann_ivf_trained",
+    "ex_ann_ivfpq",
+    "ex_ann_pq",
+    "ex_knn_graph",
+    "ex_knn_clusters",
+    "ex_knn_dedup_apply",
+)
+
+
+def test_keyed_entries_score_with_one_cosine(spark, sf_dir, monkeypatch):
+    """No optimized plan of the LSH, kNN, IVF, PQ and label-filtered
+    entries holds ``zip_with``: every candidate pair is scored by the
+    numpy cosine in an Arrow stage, not by a per-row Column fold. Plans
+    that a build truncates with ``localCheckpoint`` (the kNN edge table,
+    the star rounds) are read before the checkpoint."""
+    frame = type(spark.range(1))
+    real = frame.localCheckpoint
+    plans = []
+
+    def spy(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().optimizedPlan().toString())
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "localCheckpoint", spy)
+    for name in KEYED_ENTRIES:
+        plans.clear()
+        df = _q(spark, sf_dir, name)
+        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        for plan in plans:
+            assert "zip_with" not in plan, (name, plan)
+
+
 def test_pagerank_iterations_have_no_cartesian(spark, sf_dir):
     """Each PageRank round is a dst-keyed aggregation over src-keyed
     equi-joins; the only nested-loop join allowed is the 1-row node-count

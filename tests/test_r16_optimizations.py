@@ -30,6 +30,12 @@ def _sets_equal(a, b) -> bool:
     return a.exceptAll(b).union(b.exceptAll(a)).isEmpty()
 
 
+def _dot(a, b):
+    """The sequential dot-product fold ``dot_w`` unrolls: a 0.0-seeded
+    left-to-right sum of the element products."""
+    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+
+
 def test_dot_w_matches_fold(spark):
     rows = [
         ([1.5, -2.25, 0.0, 4.0], [0.5, 3.0, -1.0, 2.0]),
@@ -38,7 +44,7 @@ def test_dot_w_matches_fold(spark):
     ]
     df = spark.createDataFrame(rows, "a array<double>, b array<double>")
     out = df.select(
-        similarity.dot(F.col("a"), F.col("b")).alias("fold"),
+        _dot(F.col("a"), F.col("b")).alias("fold"),
         similarity.dot_w(F.col("a"), F.col("b"), 4).alias("unrolled"),
     ).collect()
     for r in out:
@@ -52,10 +58,10 @@ def _pq_reference_codes(sub, cents):
     round(svv − 2·sv·c + cc, 6) over sequential dot folds, and a
     lexicographic struct-min over (d², centroid_id), so ties go to the
     lowest id."""
-    s = sub.withColumn("__svv", similarity.dot(F.col("sv"), F.col("sv")))
-    c = F.broadcast(cents.withColumn("__scc", similarity.dot(F.col("c"), F.col("c"))))
+    s = sub.withColumn("__svv", _dot(F.col("sv"), F.col("sv")))
+    c = F.broadcast(cents.withColumn("__scc", _dot(F.col("c"), F.col("c"))))
     d2 = F.round(
-        F.col("__svv") - 2 * similarity.dot(F.col("sv"), F.col("c")) + F.col("__scc"),
+        F.col("__svv") - 2 * _dot(F.col("sv"), F.col("c")) + F.col("__scc"),
         C.COSINE_ROUND,
     )
     return (
