@@ -1,21 +1,24 @@
 """Similarity search over an embedding column (array<float>).
 
-Every path scores with one rounded cosine (``_cosine6``: a BLAS matmul
-over the row-norm product, rounded to 6 dp) and keeps ties to the lowest
-neighbor id:
+Every path scores a 6-dp rounded cosine in numpy, ties to the lowest
+neighbor id. Two top-k stages take the scorer ``score(q_mat, c_mat)``
+(rows × candidates) as an argument, the way ``_assign`` takes
+``nearest``; each keeps a local top-k per query (``_topk_select``) that
+one window tail (``_topk_per_query``) merges:
 
-* brute-force top-k — the exact baseline. The (bounded) query set is
-  broadcast into a matmul over each Arrow batch of the corpus.
-* threshold near-dup — all pairs above a cosine threshold; one broadcast
-  matmul while the corpus fits, blocked at real scale.
-* keyed candidates — sign-bit LSH buckets, IVF lists and label
-  partitions. Each query is replicated into every key it probes, each
-  corpus vector sits in its one key, and one keyed Arrow stage
-  (``_keyed_topk``) scores each key group with one matmul and keeps a
-  local top-k; the top-k tail (``_topk_per_query``) merges the groups.
-  IVF is the scale path: the candidate set shrinks by ~ (nprobe /
-  n_centroids), and the assignment and the probe are maps against the
-  broadcast centroids — no all-pairs anywhere.
+* the broadcast stage (``_topk_candidates_numpy``): the bounded query set
+  broadcast into one Arrow map over the corpus — brute force with
+  ``_cosine6`` (a BLAS matmul over the row-norm product), sign-bit LSH
+  with ``_cosine6`` masked to the probe buckets, flat PQ with ``_adc6``.
+* the keyed stage (``_keyed_topk``): IVF lists, the kNN graph's sign
+  buckets and label partitions, each query replicated into every key it
+  probes and scored by one cogroup per key; IVFADC is the IVF lists
+  scored by ``_adc6``. IVF is the scale path: the candidate set shrinks
+  by ~ (nprobe / n_centroids), and the assignment and the probe are maps
+  against the broadcast centroids — no all-pairs anywhere.
+
+Threshold near-dup is one broadcast matmul while the corpus fits,
+blocked at real scale.
 
 k-means (``kmeans_train``) and PQ (``pq_train``) share one Lloyd loop
 (``_lloyd``) that keeps the codebooks on the driver: k-means is one
@@ -24,9 +27,7 @@ L2. The codebooks are array pairs broadcast into one assignment kernel
 (``_assign``, also behind ``ivf_assign``, SemDeDup's final assignment and
 ``pq_encode``), and each round is one aggregate collected back. SemDeDup
 (``semdedup``) scores pairs cluster by cluster in one grouped Arrow
-stage. One top-k selection (``_topk_select``) ranks every Arrow kernel's
-candidates; only the PQ ADC scorer computes dot products JVM-side, with
-the unrolled ``dot_w`` in whole-stage codegen.
+stage. No scorer runs JVM-side.
 """
 
 from __future__ import annotations
@@ -40,24 +41,6 @@ from espkinesis_spark.plans.audit import plan_size_bytes as _plan_size_bytes
 
 def _as_double(arr: Column) -> Column:
     return arr.cast("array<double>")
-
-
-def dot_w(a: Column, b: Column, width: int) -> Column:
-    """Sequential-order dot product unrolled for a statically-known vector
-    width (guide §1.2 per-task work): the higher-order fold
-    ``aggregate(zip_with(a, b, *), 0.0, +)`` allocates a zip array and
-    runs an interpreted lambda per element, which dominates stages that
-    evaluate millions of d² terms; the unrolled left-assoc sum is pure
-    codegen. Bit-identical to that fold: its seed makes the first step
-    0.0 + a[0]*b[0], and IEEE 0.0 + x == x for every x except -0.0 (sign
-    only, which dies in the downstream subtraction / ordered-fold that
-    every consumer applies). Only narrow widths pay (PQ subvectors, the
-    W=16 ts-similarity distance): a 64-term unroll measured 2-2.5× slower
-    than the fold, as HotSpot declines to JIT giant generated methods."""
-    e = a[0] * b[0]
-    for i in range(1, width):
-        e = e + a[i] * b[i]
-    return e
 
 
 def _cosine6(a, b):
@@ -86,7 +69,9 @@ def topk_bruteforce(
     window merge over batches*k candidates — the scan over the corpus is a
     pure map, so the shape holds at any corpus size.
     """
-    return _topk_per_query(_topk_candidates_numpy(queries, corpus, k, vec_col), k, "cos")
+    return _topk_per_query(
+        _topk_candidates_numpy(queries, corpus, k, _cosine6, vec_col), k, "cos"
+    )
 
 
 def _topk_per_query(scored: DataFrame, k: int, *extra: str) -> DataFrame:
@@ -103,10 +88,13 @@ def _topk_per_query(scored: DataFrame, k: int, *extra: str) -> DataFrame:
 
 
 def _topk_candidates_numpy(
-    queries: DataFrame, corpus: DataFrame, k: int, vec_col: str
+    queries: DataFrame, corpus: DataFrame, k: int, score, vec_col: str = "embedding"
 ) -> DataFrame:
-    """Per-batch local top-k candidates (vec_id, neighbor_id, cos): the
-    global merge only sees batches*k rows per query."""
+    """The broadcast top-k stage: per-batch local top-k candidates
+    (vec_id, neighbor_id, cos). The query set is collected once and
+    broadcast; each Arrow batch of the corpus is scored by ``score``
+    (query rows × batch rows), self-pairs masked, so the global merge
+    only sees batches*k rows per query."""
     import numpy as np
     import pyarrow as pa
 
@@ -117,9 +105,11 @@ def _topk_candidates_numpy(
     def run(batches):
         q_ids, q_mat = bc.value
         for batch in batches:
+            if not len(q_ids):
+                continue  # an empty query set is a 0 × 0 matrix
             c_ids = batch.column(0).to_numpy()
-            cos = _cosine6(_rows(batch.column(1)), q_mat).T
-            cos = np.where(q_ids[:, None] != c_ids[None, :], cos, -np.inf)
+            cos = score(q_mat, _rows(batch.column(1)))
+            cos[q_ids[:, None] == c_ids[None, :]] = -np.inf
             r, c = _topk_select(c_ids, cos, k)
             yield pa.RecordBatch.from_pydict(
                 {"vec_id": q_ids[r], "neighbor_id": c_ids[c], "cos": cos[r, c]}
@@ -168,14 +158,16 @@ def _topk_select(c_ids, cos, k: int):
 PAIR_ROW_BLOCK = 512
 
 
-def _keyed_topk(queries: DataFrame, corpus: DataFrame, k: int, *extra: str) -> DataFrame:
-    """The one keyed candidate stage: each query's local top-k
+def _keyed_topk(
+    queries: DataFrame, corpus: DataFrame, k: int, score, *extra: str
+) -> DataFrame:
+    """The keyed top-k stage: each query's local top-k
     (vec_id, neighbor_id, cos, *extra) within every key it probes.
 
     ``queries`` is (vec_id, key, embedding, *extra), each query once per
     key it probes; ``corpus`` is (neighbor_id, key, embedding), each
     vector in its one key. One ``cogroup(...).applyInArrow`` scores a
-    key group with ``_cosine6`` over the flat Arrow buffers,
+    key group with ``score`` over the flat Arrow buffers,
     ``PAIR_ROW_BLOCK`` query rows at a time, masks self-pairs and keeps
     each query's top k (``_topk_select``); ``_topk_per_query`` merges a
     query's groups. A (query, neighbor) pair meets in at most one group
@@ -185,7 +177,7 @@ def _keyed_topk(queries: DataFrame, corpus: DataFrame, k: int, *extra: str) -> D
 
     block = PAIR_ROW_BLOCK
 
-    def score(q, c):
+    def run(q, c):
         q_ids = q.column("vec_id").to_numpy()
         c_ids = c.column("neighbor_id").to_numpy()
         parts = [(np.zeros(0, np.int64), np.zeros(0, np.int64), np.zeros(0))]
@@ -193,7 +185,7 @@ def _keyed_topk(queries: DataFrame, corpus: DataFrame, k: int, *extra: str) -> D
             q_mat = _rows(q.column("embedding").combine_chunks())
             c_mat = _rows(c.column("embedding").combine_chunks())
             for lo in range(0, len(q_ids), block):
-                s = _cosine6(q_mat[lo : lo + block], c_mat)
+                s = score(q_mat[lo : lo + block], c_mat)
                 s[q_ids[lo : lo + block, None] == c_ids[None, :]] = -np.inf
                 r, cc = _topk_select(c_ids, s, k)
                 parts.append((r + lo, cc, s[r, cc]))
@@ -208,7 +200,7 @@ def _keyed_topk(queries: DataFrame, corpus: DataFrame, k: int, *extra: str) -> D
         queries.select("vec_id", "key", "embedding", *extra)
         .groupBy("key")
         .cogroup(corpus.select("neighbor_id", "key", "embedding").groupBy("key"))
-        .applyInArrow(score, schema=schema)
+        .applyInArrow(run, schema=schema)
     )
 
 
@@ -392,33 +384,34 @@ def topk_lsh(
 
     ``multiprobe`` probes the exact bucket plus every 1-bit-flip neighbor
     (bits+1 probes) — the standard recall fix for boundary vectors, at
-    (bits+1)x the candidate volume but the same single bucket-key shuffle.
-    Each corpus vector lives in exactly one bucket, and the probe list is
-    distinct, so no candidate dedup is needed. Output (vec_id, rnk,
-    neighbor_id) is deterministic for the oracle.
+    (bits+1)x the candidate volume. The query set is bounded, so this is
+    the broadcast stage: a candidate is in a probed bucket iff its sign
+    code (``sign_bucket``'s bits) differs from the query's in at most
+    ``multiprobe`` bits, and ``_cosine6`` is masked to -inf elsewhere —
+    no shuffle of the corpus. Output (vec_id, rnk, neighbor_id) is
+    deterministic for the oracle.
     """
-    return _topk_per_query(
-        _lsh_topk(vecs, F.col("vec_id") < query_max_id, bits, k, multiprobe), k
-    )
+    import numpy as np
+
+    def score(q_mat, c_mat):
+        apart = (q_mat[:, None, :bits] > 0) != (c_mat[None, :, :bits] > 0)
+        return np.where(apart.sum(axis=2) <= multiprobe, _cosine6(q_mat, c_mat), -np.inf)
+
+    queries = vecs.filter(F.col("vec_id") < query_max_id)
+    return _topk_per_query(_topk_candidates_numpy(queries, vecs, k, score), k)
 
 
-def _lsh_topk(
-    vecs: DataFrame, is_query: Column, bits: int, k: int, multiprobe: bool
-) -> DataFrame:
-    """Sign-bucket candidates scored by the keyed stage: the ``is_query``
-    rows replicated into their probe buckets (the bucket itself, plus
-    every 1-bit flip with ``multiprobe``) against every vector in its one
-    bucket. Each query's local top k per bucket."""
+def _lsh_topk(vecs: DataFrame, bits: int, k: int) -> DataFrame:
+    """Sign-bucket candidates of every vector, scored by the keyed stage:
+    each vector replicated into its multiprobe buckets (its own plus every
+    1-bit flip) against every vector in its one bucket. Each vector's
+    local top k per bucket."""
     bucketed = vecs.select(
         "vec_id", "embedding", sign_bucket(F.col("embedding"), bits).alias("key")
     )
-    probes = [F.col("key")]
-    if multiprobe:
-        probes += [F.expr(f"key ^ {2 ** i}") for i in range(bits)]
-    q = bucketed.filter(is_query).select(
-        "vec_id", F.explode(F.array(*probes)).alias("key"), "embedding"
-    )
-    return _keyed_topk(q, bucketed.withColumnRenamed("vec_id", "neighbor_id"), k)
+    probes = [F.col("key")] + [F.expr(f"key ^ {2 ** i}") for i in range(bits)]
+    q = bucketed.select("vec_id", F.explode(F.array(*probes)).alias("key"), "embedding")
+    return _keyed_topk(q, bucketed.withColumnRenamed("vec_id", "neighbor_id"), k, _cosine6)
 
 
 def knn_graph_auto_bits(n: int, target_bucket: int = C.KNN_BUCKET_TARGET) -> int:
@@ -465,7 +458,7 @@ def knn_graph(
     """
     if bits is None:
         bits = knn_graph_auto_bits(vecs.count())
-    edges = _topk_per_query(_lsh_topk(vecs, F.lit(True), bits, k, True), k, "cos").select(
+    edges = _topk_per_query(_lsh_topk(vecs, bits, k), k, "cos").select(
         F.col("vec_id").alias("src"), F.col("neighbor_id").alias("dst"), "cos"
     )
     if not mutual:
@@ -506,26 +499,29 @@ def _nearest_cosine(v, c):
     return np.argmax(_cosine6(v, c), axis=1)
 
 
+def _fold(a, b):
+    """Dot products over the last axis as the left-to-right fold
+    a₀b₀ + a₁b₁ + … — the order the oracle's scalar loops sum in (BLAS and
+    ``np.sum`` pair and block the terms, so their last ulp differs)."""
+    acc = a[..., 0] * b[..., 0]
+    for j in range(1, a.shape[-1]):
+        acc += a[..., j] * b[..., j]
+    return acc
+
+
 def _nearest_l2(v, c):
     """Index of each row's nearest codeword by rounded L2, ties to the
     lowest id: d² = round(svv − 2·sv·c + cc, 6) with every dot product
-    the left-to-right fold ``dot_w`` compiles (no BLAS, which sums in
-    another order), rounded half away from zero on y = d²·10⁶ like the
+    a ``_fold``, rounded half away from zero on y = d²·10⁶ like the
     oracle's ``round``. Rounding is monotone, so the winner is the first
     codeword whose y rounds to R, the rounded row minimum: the first
     with y < R + ½ (y ≤ R + ½ when R < 0)."""
     import numpy as np
 
-    def fold(a, b):
-        acc = a[..., 0] * b[..., 0]
-        for j in range(1, a.shape[-1]):
-            acc += a[..., j] * b[..., j]
-        return acc
-
-    y = fold(v[:, None, :], c[None, :, :])
+    y = _fold(v[:, None, :], c[None, :, :])
     y *= -2.0
-    y += fold(v, v)[:, None]
-    y += fold(c, c)[None, :]
+    y += _fold(v, v)[:, None]
+    y += _fold(c, c)[None, :]
     y *= 1e6
     lo = y.min(axis=1)
     r = np.trunc(lo)
@@ -557,8 +553,8 @@ def _matrix(vectors):
 def _vector_books(vecs: DataFrame, m: int):
     """The (vec_id, embedding) rows of ``vecs`` as ``m`` codebooks, each
     vector split into m contiguous subvectors of ``size div m`` dims (the
-    ``_subvectors`` rule): the one collect a DataFrame-held centroid set
-    or a Lloyd init costs."""
+    split ``_assign`` makes): the one collect a DataFrame-held centroid
+    set, a Lloyd init or a broadcast query set costs."""
     import numpy as np
 
     rows = vecs.select("vec_id", "embedding").collect()
@@ -634,7 +630,9 @@ def topk_ivf(
     if centroids is None:
         centroids = vecs.filter(F.col("vec_id") % centroid_mod == 0)
     queries = vecs.filter(F.col("vec_id") < query_max_id)
-    return _topk_per_query(_keyed_topk(*_ivf_lists(vecs, queries, centroids, nprobe), k), k)
+    return _topk_per_query(
+        _keyed_topk(*_ivf_lists(vecs, queries, centroids, nprobe), k, _cosine6), k
+    )
 
 
 def _ivf_lists(vecs: DataFrame, queries: DataFrame, centroids: DataFrame, nprobe: int):
@@ -768,21 +766,6 @@ def _lloyd(emb: DataFrame, m: int, k: int, iters: int, nearest):
     return books
 
 
-def _subvectors(vecs: DataFrame, m: int = C.PQ_M, vec_col: str = "embedding") -> DataFrame:
-    """(vec_id, m, sv): the vector split into ``m`` equal contiguous
-    subspaces of ``size div m`` dims — PQ's long form, which the ADC
-    scorer joins to the codewords on the subspace index."""
-    return vecs.select(
-        "vec_id",
-        F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("m"),
-        _as_double(F.col(vec_col)).alias("__e"),
-    ).select(
-        "vec_id",
-        "m",
-        F.expr(f"slice(__e, m * (size(__e) div {m}) + 1, size(__e) div {m})").alias("sv"),
-    )
-
-
 def pq_train(
     vecs: DataFrame,
     m: int = C.PQ_M,
@@ -821,24 +804,37 @@ def pq_encode(
         _matrix([r[2] for r in rows]),
         m,
     )
-    return _pq_codes(vecs.select("vec_id", F.col(vec_col).alias("embedding")), books)
-
-
-def _pq_codes(emb: DataFrame, books) -> DataFrame:
+    emb = vecs.select("vec_id", F.col(vec_col).alias("embedding"))
     return _assign(emb, books, _nearest_l2).select(
         "vec_id", "m", F.col("centroid_id").alias("code")
     )
 
 
-def _ordered_sum(col_struct, value_field: str):
-    """Bit-stable sum of a collected (m, value) list: sort by subspace
-    index, sequential fold — both engines add in the identical order, so
-    the 6-dp output round is safe from aggregation-order drift."""
-    return F.aggregate(
-        F.transform(F.array_sort(col_struct), lambda s: s[value_field]),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+def _adc6(books):
+    """The PQ-ADC scorer (asymmetric distance computation, Jégou et al.
+    2011) over the driver-held codebooks: ``score(q_mat, c_mat)`` encodes
+    each candidate (``_nearest_l2`` per subspace) and returns
+    round(dp / (|q| · |reconstruction|), 6) as ``_cosine6`` rounds. dp
+    sums the subspace terms q_m · codeword and the reconstruction norm²
+    the codewords' own, each 0.0-seeded over ascending m; every dot
+    product and |q|² is a ``_fold``, the order the oracle sums in."""
+    import numpy as np
+
+    w = books[0][1].shape[1]
+    own = [_fold(cm, cm) for _, cm in books]
+
+    def score(q_mat, c_mat):
+        dp = np.zeros((len(q_mat), len(c_mat)))
+        rn = np.zeros(len(c_mat))
+        for s, (_, cm) in enumerate(books):
+            sub = slice(s * w, (s + 1) * w)
+            code = _nearest_l2(c_mat[:, sub], cm)
+            dp += _fold(q_mat[:, None, sub], cm[None, :, :])[:, code]
+            rn += own[s][code]
+        qn = np.sqrt(_fold(q_mat, q_mat))
+        return np.round(dp / (qn[:, None] * np.sqrt(rn)[None, :]), C.COSINE_ROUND)
+
+    return score
 
 
 def topk_pq(
@@ -848,73 +844,22 @@ def topk_pq(
     k: int = C.PQ_K,
     iters: int = C.PQ_ITERS,
     topk: int = C.ANN_TOPK,
-    candidates: DataFrame | None = None,
 ) -> DataFrame:
     """PQ-coded approximate top-k via ADC (asymmetric distance
-    computation): the corpus lives ONLY as PQ codes; each query keeps its
-    full vector and scores a neighbor by summing per-subspace dot
-    products against the neighbor's codewords — approx cosine =
-    adc_dot / (|q| · |reconstruction|), 6-dp rounded with lowest-id
-    ties. Output (vec_id, rnk, neighbor_id), the ANN family contract.
+    computation): each query keeps its full vector and scores a neighbor
+    by summing per-subspace dot products against the neighbor's
+    codewords — approx cosine = adc_dot / (|q| · |reconstruction|),
+    6-dp rounded with lowest-id ties. Output (vec_id, rnk, neighbor_id),
+    the ANN family contract.
 
-    Scale: the codebook (m·k rows) broadcasts everywhere; the per-pair
-    work is queries × corpus × m NARROW rows (ids + one double) — the
-    standard flat-ADC scan. ``candidates`` (vec_id, neighbor_id)
-    restricts scoring to a pre-pruned pair set — topk_ivfpq passes the
-    IVF candidate rule here, turning the flat scan into IVFADC. The
-    codebooks stay on the driver (``_lloyd``); their width sets the
-    unrolled dot products.
+    The codebooks train on the driver (``_lloyd``); the flat-ADC scan is
+    the broadcast top-k stage scored by ``_adc6``, which encodes each
+    corpus batch as it scores it, so the corpus is read once.
     """
     emb = vecs.select("vec_id", "embedding")
     books = _lloyd(emb, m, k, iters, _nearest_l2)
-    width = books[0][1].shape[-1]
-    codes = _pq_codes(emb, books)
-    cents = _books_frame(vecs.sparkSession, books)
-    cw = cents.withColumn("scc", dot_w(F.col("c"), F.col("c"), width))
-    coded = codes.join(
-        F.broadcast(cw), (codes.m == cw.m) & (codes.code == cw.centroid_id)
-    ).select(codes.vec_id.alias("neighbor_id"), codes.m, "c", "scc")
-    q = vecs.filter(F.col("vec_id") < query_max_id)
-    qsub = _subvectors(q, m).withColumnRenamed("vec_id", "qid")
-    # |q|: the sequential fold of the squared components
-    qn = q.select(
-        F.col("vec_id").alias("qid"),
-        F.sqrt(
-            F.aggregate(
-                F.transform(_as_double(F.col("embedding")), lambda x: x * x),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        ).alias("qnorm"),
-    )
-    if candidates is None:
-        terms = qsub.join(coded, "m").filter(
-            F.col("qid") != F.col("neighbor_id")
-        )
-    else:
-        cand = candidates.select(
-            F.col("vec_id").alias("qid"), "neighbor_id"
-        ).filter(F.col("qid") != F.col("neighbor_id"))
-        terms = cand.join(qsub, "qid").join(coded, ["neighbor_id", "m"])
-    # every pair's list holds all m subspaces of the neighbor, so one
-    # ordered fold gives the ADC dot product and another the neighbor's
-    # reconstruction norm — the codes are read once
-    terms = terms.select(
-        "qid", "neighbor_id", "m", dot_w(F.col("sv"), F.col("c"), width).alias("term"), "scc"
-    )
-    per_m = F.collect_list(F.struct("m", "term", "scc"))
-    adc = terms.groupBy("qid", "neighbor_id").agg(
-        _ordered_sum(per_m, "term").alias("dp"),
-        F.sqrt(_ordered_sum(per_m, "scc")).alias("rnorm"),
-    )
-    scored = adc.join(qn, "qid").select(
-        F.col("qid").alias("vec_id"),
-        "neighbor_id",
-        F.round(
-            F.col("dp") / (F.col("qnorm") * F.col("rnorm")), C.COSINE_ROUND
-        ).alias("cos"),
-    )
-    return _topk_per_query(scored, topk)
+    queries = vecs.filter(F.col("vec_id") < query_max_id)
+    return _topk_per_query(_topk_candidates_numpy(queries, emb, topk, _adc6(books)), topk)
 
 
 def topk_ivfpq(
@@ -925,25 +870,20 @@ def topk_ivfpq(
     topk: int = C.IVF_TOPK,
 ) -> DataFrame:
     """IVFADC (Jégou et al. 2011) — the composition both indexes exist
-    for, and the architecture of every billion-vector deployment: the
-    IVF probe rule prunes candidates to nprobe buckets (the compute-side
-    cut), then PQ codes score ONLY those candidates via ADC (the
-    memory-side cut — the corpus lives as PQ_M bytes/vector, never full
-    floats). The probe stage is ``_ivf_lists``, the one IVF probe rule
-    ``topk_ivf`` also runs, joined on the list into (query, neighbor)
-    pairs (self-pairs kept; the scorer drops them), and the scorer is
-    ``topk_pq`` restricted to those candidates: composing indexes is a
-    join, not a new engine path.
-
-    Scale: candidate volume is queries × (nprobe/n_centroids) × corpus —
-    the IVF fraction — and each candidate costs m narrow LUT rows; the
-    full-float corpus is touched only at train/encode time.
+    for: the IVF probe rule prunes candidates to nprobe lists (the
+    compute-side cut), and ADC scores only those candidates against
+    their PQ reconstructions (the memory-side cut where a store keeps
+    only the codes). The lists are ``_ivf_lists``, the probe rule
+    ``topk_ivf`` runs, scored by the keyed stage with ``_adc6`` over
+    ``topk_pq``'s codebooks instead of ``_cosine6``: composing indexes
+    is a change of scorer, not a new engine path. Candidate volume is
+    queries × (nprobe/n_centroids) × corpus.
     """
+    books = _lloyd(vecs.select("vec_id", "embedding"), C.PQ_M, C.PQ_K, C.PQ_ITERS, _nearest_l2)
     centroids = vecs.filter(F.col("vec_id") % centroid_mod == 0)
     queries = vecs.filter(F.col("vec_id") < query_max_id)
-    probes, lists = _ivf_lists(vecs, queries, centroids, nprobe)
-    cand = probes.join(lists.select("neighbor_id", "key"), "key").select("vec_id", "neighbor_id")
-    return topk_pq(vecs, query_max_id, topk=topk, candidates=cand)
+    lists = _ivf_lists(vecs, queries, centroids, nprobe)
+    return _topk_per_query(_keyed_topk(*lists, topk, _adc6(books)), topk)
 
 
 def semdedup_auto_k(n: int, target_cluster: int = C.SEMDEDUP_TARGET_CLUSTER) -> int:

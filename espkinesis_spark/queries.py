@@ -373,7 +373,7 @@ def ex_ann_filtered(spark, sf_dir):
     )
     c = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("label").alias("key"), "embedding")
     return similarity._topk_per_query(
-        similarity._keyed_topk(q, c, 3, "label"), 3, "label", "cos"
+        similarity._keyed_topk(q, c, 3, similarity._cosine6, "label"), 3, "label", "cos"
     ).select("vec_id", "label", "rnk", "neighbor_id", "cos")
 
 
@@ -2037,11 +2037,12 @@ def ex_ann_pq(spark, sf_dir):
     of the billion-vector stack: per-subspace codebooks trained with the
     deterministic Lloyd trajectory (rounded-L2 argmin, 6-dp mean
     update), the corpus encoded to PQ_M byte-sized codes, queries scored
-    by ADC (per-subspace dot-product lookups summed in bit-stable
-    subspace order) against the reconstructions. The oracle replays the
-    identical trajectory in one long-form CTE chain (the subspace index
-    is a column, not m separate chains); a recall@k gate vs brute force
-    lives in tests (the ann_recall pattern)."""
+    by ADC (per-subspace dot-product lookups summed in subspace order,
+    scored in the broadcast top-k stage) against the reconstructions.
+    The oracle replays the identical trajectory in one long-form CTE
+    chain (the subspace index is a column, not m separate chains); a
+    recall@k gate vs brute force lives in tests (the ann_recall
+    pattern)."""
     return similarity.topk_pq(_t(spark, sf_dir, "embeddings"))
 
 
@@ -2049,10 +2050,10 @@ def ex_ann_ivfpq(spark, sf_dir):
     """IVFADC — IVF candidate pruning composed with PQ-ADC scoring, the
     architecture of every billion-vector ANN deployment: the probe rule
     cuts candidates to nprobe/n_centroids of the corpus, the PQ codes
-    cut candidate memory to PQ_M bytes/vector. Both halves are existing
-    DataFrames (ex_ann_ivf's candidate rule, ex_ann_pq's scorer) —
-    composing indexes is a join, not a new engine path; the oracle
-    assembles the same two CTE chains."""
+    cut candidate memory to PQ_M bytes/vector. Both halves already
+    exist (ex_ann_ivf's IVF lists and keyed stage, ex_ann_pq's ADC
+    scorer) — composing indexes is a change of scorer, not a new engine
+    path; the oracle assembles the same two CTE chains."""
     return similarity.topk_ivfpq(_t(spark, sf_dir, "embeddings"))
 
 
@@ -2689,11 +2690,11 @@ def ex_ts_similarity(spark, sf_dir):
     # allocated three W-length arrays per window and ran interpreted
     # lambdas; the z-normalized array never needs to materialize —
     # dist² = Σ ((arr[i]-mean)/std - qz[i])². Left-assoc static sums are
-    # bit-identical to the sequential folds (0.0 + x == x, the dot_w
-    # argument), per-element whens reproduce the σ=0 → zero-vector rule,
-    # and W=16 is safely under the giant-method JIT hazard the width-64
-    # unroll hit (the similarity.dot_w notes). A/B at sf0.1: 2.4 s →
-    # 0.45 s with exact row equality.
+    # bit-identical to the sequential folds (0.0 + x == x for every x
+    # but -0.0), per-element whens reproduce the σ=0 → zero-vector rule,
+    # and W=16 is safely under the giant-method JIT hazard a width-64
+    # unroll hits (NOTES.md, "Static unrolls win narrow"). A/B at sf0.1:
+    # 2.4 s → 0.45 s with exact row equality.
     def _ssum(terms):
         e = terms[0]
         for t in terms[1:]:

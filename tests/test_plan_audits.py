@@ -282,82 +282,107 @@ def test_semdedup_pairs_are_cluster_keyed(spark, sf_dir):
     assert "SortMergeJoin" not in plan
 
 
+def _build_and_collect(spark, sf_dir, monkeypatch, name):
+    """Build registry entry ``name`` and collect it through toPandas
+    under one job group: (rows, Spark job count, localCheckpoint calls)."""
+    import uuid
+
+    checkpoints = []
+    frame = type(spark.range(1))
+    real = frame.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        checkpoints.append(args)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "localCheckpoint", spy)
+    sc = spark.sparkContext
+    group = f"{name}-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, f"{name} build + toPandas")
+    try:
+        pdf = _q(spark, sf_dir, name).toPandas()
+    finally:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        sc._jsc.clearJobGroup()
+    return len(pdf), len(sc.statusTracker().getJobIdsForGroup(group)), checkpoints
+
+
 def test_semdedup_build_and_collect_run_at_most_ten_jobs(spark, sf_dir, monkeypatch):
     """One ex_semdedup build plus its toPandas runs at most 10 Spark jobs
     (the auto-k count, the k-means init collect, one collect per Lloyd
     round, the cluster stage), and neither
     kmeans_train nor semdedup truncates lineage with localCheckpoint."""
-    import uuid
-
-    checkpoints = []
-    frame = type(spark.range(1))
-    real = frame.localCheckpoint
-
-    def spy(self, *args, **kwargs):
-        checkpoints.append(args)
-        return real(self, *args, **kwargs)
-
-    monkeypatch.setattr(frame, "localCheckpoint", spy)
-    sc = spark.sparkContext
-    group = f"semdedup-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "ex_semdedup build + toPandas")
-    try:
-        pdf = _q(spark, sf_dir, "ex_semdedup").toPandas()
-    finally:
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        sc._jsc.clearJobGroup()
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(pdf) > 0
-    assert 0 < len(jobs) <= 10, f"{len(jobs)} jobs"
+    rows, jobs, checkpoints = _build_and_collect(spark, sf_dir, monkeypatch, "ex_semdedup")
+    assert rows > 0
+    assert 0 < jobs <= 10, f"{jobs} jobs"
     assert checkpoints == []
 
 
 def test_ann_pq_build_and_collect_job_count(spark, sf_dir, monkeypatch):
-    """One ex_ann_pq build plus its toPandas runs at most 14 Spark jobs:
+    """One ex_ann_pq build plus its toPandas runs at most 8 Spark jobs:
     the PQ codebooks train on the driver (the init collect and one
-    collect per Lloyd round), and neither pq_train nor topk_pq truncates
-    lineage with localCheckpoint. The DataFrame Lloyd loop this replaced
-    ran 21."""
-    import uuid
-
+    collect per Lloyd round), the query set is collected once, and the
+    ADC scan is one map over the corpus; neither pq_train nor topk_pq
+    truncates lineage with localCheckpoint. The DataFrame Lloyd loop
+    ran 21 and the long-form ADC aggregate 11."""
     from espkinesis_spark.functions import similarity
     from espkinesis_spark.tables import load_table
 
-    checkpoints = []
-    frame = type(spark.range(1))
-    real = frame.localCheckpoint
-
-    def spy(self, *args, **kwargs):
-        checkpoints.append(args)
-        return real(self, *args, **kwargs)
-
-    monkeypatch.setattr(frame, "localCheckpoint", spy)
-    sc = spark.sparkContext
-    group = f"ann-pq-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "ex_ann_pq build + toPandas")
-    try:
-        pdf = _q(spark, sf_dir, "ex_ann_pq").toPandas()
-    finally:
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        sc._jsc.clearJobGroup()
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(pdf) > 0
-    assert 0 < len(jobs) <= 14, f"{len(jobs)} jobs"
+    rows, jobs, checkpoints = _build_and_collect(spark, sf_dir, monkeypatch, "ex_ann_pq")
+    assert rows > 0
+    assert 0 < jobs <= 8, f"{jobs} jobs"
     similarity.pq_train(load_table(spark, sf_dir, "embeddings")).collect()
     assert checkpoints == []
 
 
+def test_ann_ivfpq_build_and_collect_job_count(spark, sf_dir, monkeypatch):
+    """One ex_ann_ivfpq build plus its toPandas runs at most 10 Spark
+    jobs: the PQ codebooks' Lloyd collects, the centroid collect, and
+    the keyed ADC stage over the IVF lists. The join of the IVF
+    candidates into the long-form ADC aggregate ran 16."""
+    rows, jobs, checkpoints = _build_and_collect(spark, sf_dir, monkeypatch, "ex_ann_ivfpq")
+    assert rows > 0
+    assert 0 < jobs <= 10, f"{jobs} jobs"
+    assert checkpoints == []
+
+
+def test_ann_pq_entries_score_adc_in_numpy(spark, sf_dir):
+    """Neither PQ entry's optimized plan folds ADC JVM-side: no
+    ``collect_list``, no ``array_sort`` and no aggregate keyed by
+    (qid, neighbor_id) — the long-form per-subspace ADC rows the numpy
+    scorer replaced."""
+    import re
+
+    for name in ("ex_ann_pq", "ex_ann_ivfpq"):
+        plan = _q(spark, sf_dir, name)._jdf.queryExecution().optimizedPlan().toString()
+        assert "collect_list" not in plan, (name, plan)
+        assert "array_sort" not in plan, (name, plan)
+        assert not re.search(r"Aggregate \[qid#\d+L?, neighbor_id#", plan), (name, plan)
+
+
 def test_ann_pq_final_plan_encodes_corpus_once(spark, sf_dir):
     """ex_ann_pq's executed (final AQE) plan holds exactly one
-    MapInArrow: the PQ codes feed the ADC aggregate once, which also
-    folds each neighbor's reconstruction norm. A second encode map is
-    the separate norm aggregate and its join back."""
+    MapInArrow: the broadcast top-k stage encodes each corpus batch and
+    scores it in the same map, so the corpus is read and encoded once."""
     df = _q(spark, sf_dir, "ex_ann_pq")
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]
     assert "isFinalPlan=true" in plan
     assert final.count("MapInArrow") == 1, final
+
+
+def test_ann_lsh_scores_in_the_broadcast_stage(spark, sf_dir):
+    """ex_ann_lsh's bounded query set is broadcast into one map over the
+    corpus: its executed (final AQE) plan holds no
+    FlatMapCoGroupsInArrow, the keyed stage that shuffles the whole
+    corpus into sign-bucket groups."""
+    df = _q(spark, sf_dir, "ex_ann_lsh")
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in plan
+    assert "FlatMapCoGroupsInArrow" not in final, final
 
 
 KEYED_ENTRIES = (

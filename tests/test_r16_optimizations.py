@@ -6,8 +6,6 @@ equality; these tests pin the specific internal equivalences so a future
 refactor that breaks one fails HERE with a named kernel, not as a
 mysterious oracle diff):
 
-  * ``dot_w`` / the unrolled ts-similarity distance == the sequential
-    fold (the 0.0 + x == x seed argument),
   * the numpy PQ assignment (``_nearest_l2`` in the one assignment
     kernel) == the DataFrame dot-fold argmin it replaced,
   * the star rounds without large-star's trailing distinct == the
@@ -31,26 +29,9 @@ def _sets_equal(a, b) -> bool:
 
 
 def _dot(a, b):
-    """The sequential dot-product fold ``dot_w`` unrolls: a 0.0-seeded
-    left-to-right sum of the element products."""
+    """The sequential dot-product fold: a 0.0-seeded left-to-right sum of
+    the element products."""
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-
-
-def test_dot_w_matches_fold(spark):
-    rows = [
-        ([1.5, -2.25, 0.0, 4.0], [0.5, 3.0, -1.0, 2.0]),
-        ([0.0, 0.0, 0.0, 0.0], [-1.0, -2.0, -3.0, -4.0]),  # -0.0 products
-        ([1e-9, 1e9, -1e-9, 1e3], [1e9, 1e-9, 1e3, -1e-9]),
-    ]
-    df = spark.createDataFrame(rows, "a array<double>, b array<double>")
-    out = df.select(
-        _dot(F.col("a"), F.col("b")).alias("fold"),
-        similarity.dot_w(F.col("a"), F.col("b"), 4).alias("unrolled"),
-    ).collect()
-    for r in out:
-        # bit-identical up to the ±0.0 sign (which every consumer
-        # normalizes through a subtraction or a 0.0-seeded fold)
-        assert r["fold"] == r["unrolled"]
 
 
 def _pq_reference_codes(sub, cents):
@@ -79,11 +60,21 @@ def test_pq_assign_keep_sv_matches_joinback(spark, sf_dir):
     # the init codebook (float32 subvectors) and the one after a Lloyd
     # round (6-dp means)
     emb = Q._t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    sub = similarity._subvectors(emb, C.PQ_M)
+    # (vec_id, m, sv): each vector split into PQ_M contiguous subvectors
+    # of size div PQ_M dims
+    w = f"(size(e) div {C.PQ_M})"
+    sub = emb.select(
+        "vec_id",
+        F.explode(F.sequence(F.lit(0), F.lit(C.PQ_M - 1))).alias("m"),
+        F.col("embedding").cast("array<double>").alias("e"),
+    ).select("vec_id", "m", F.expr(f"slice(e, m * {w} + 1, {w})").alias("sv"))
     for iters in (0, 1):
         books = similarity._lloyd(emb, C.PQ_M, C.PQ_K, iters, similarity._nearest_l2)
         want = _pq_reference_codes(sub, similarity._books_frame(spark, books))
-        assert _sets_equal(similarity._pq_codes(emb, books), want)
+        got = similarity._assign(emb, books, similarity._nearest_l2).select(
+            "vec_id", "m", F.col("centroid_id").alias("code")
+        )
+        assert _sets_equal(got, want)
 
 
 def test_star_rounds_no_large_distinct_matches_reference(spark):
