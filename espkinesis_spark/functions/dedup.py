@@ -474,50 +474,58 @@ def simhash_signer(bits: int = C.SIMHASH_BITS):
     return sign
 
 
-def _large_star(edges: DataFrame) -> DataFrame:
-    """Large-star round: connect every strictly-larger neighbor of u to the
-    minimum of N(u) ∪ {u}. One groupBy + one join, both on node id.
+def _contract(batches):
+    """One connected-components round over one partition of the symmetric
+    edge set (u, v), hash-partitioned on u: every key's whole
+    neighborhood is in this task. Emits (u, v, settled) rows.
 
-    No trailing distinct (r16): the only consumer is small∘large, and
-    _small_star's first step re-orients and DISTINCTs its input — the
-    extra exchange+aggregate per round deduplicated rows that were about
-    to be deduplicated again. Duplicate edges cannot change the
-    neighborhood minimum (min is duplicate-blind).
+    ``settled`` holds when every key is a centre (all its neighbors are
+    larger) or a leaf (exactly one distinct neighbor, and it is smaller).
+    A settled partition emits each key with the least of itself and its
+    neighbors; when every partition is settled, the input is a star
+    forest on each component's minimum and those rows are the answer.
+    Otherwise the partition's edges are union-found (min-label hooking
+    plus pointer jumping) and every node that is not the minimum of its
+    local component is emitted with that minimum. Both shapes keep every
+    component connected, and duplicate edges change neither."""
+    import numpy as np
+    import pyarrow as pa
 
-    The min stays a groupBy + join-back rather than a window over the
-    u-keyed shuffle (r16 review): a window buffers a hot node's ENTIRE
-    neighborhood in one task — and a converged dup cluster is a star on
-    its minimum, so the hottest node's degree is the largest cluster's
-    size — while the aggregate reduces it map-side and the join is
-    AQE-skew-splittable (guide §2.5: skew handling applies to joins,
-    not windows). The ~0.15 s/round local window win was not worth the
-    scale hazard."""
-    sym = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("__m"))
-    return (
-        sym.join(mins, "u")
-        .filter(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("u"), F.col("__m").alias("v"))
+    cols = [(b.column(0).to_numpy(), b.column(1).to_numpy()) for b in batches]
+    if not cols:
+        return
+    u = np.concatenate([c[0] for c in cols])
+    nodes, ix = np.unique(np.concatenate([u] + [c[1] for c in cols]), return_inverse=True)
+    a, b = ix[: len(u)], ix[len(u) :]
+    keys, n = np.unique(a), len(nodes)
+    ne = a != b  # a self-loop is no neighbor
+    lo, hi = np.full(n, n), np.full(n, -1)
+    np.minimum.at(lo, a[ne], b[ne])
+    np.maximum.at(hi, a[ne], b[ne])
+    settled = not np.any((lo[keys] < keys) & (hi[keys] != lo[keys]))
+    if settled:
+        x, root = keys, np.minimum(keys, lo[keys])
+    else:
+        p = np.arange(n)
+        while True:
+            q = p.copy()
+            np.minimum.at(q, p[a], p[b])
+            np.minimum.at(q, p[b], p[a])
+            while not np.array_equal(q[q], q):
+                q = q[q]
+            if np.array_equal(q, p):
+                break
+            p = q
+        x = np.flatnonzero(p != np.arange(n))
+        root = p[x]
+    yield pa.RecordBatch.from_arrays(
+        [
+            pa.array(nodes[x], pa.int64()),
+            pa.array(nodes[root], pa.int64()),
+            pa.array(np.full(len(x), settled)),
+        ],
+        names=["u", "v", "settled"],
     )
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    """Small-star round: orient edges high→low, then connect every smaller
-    neighbor (and u itself) to the minimum of the oriented neighborhood.
-    groupBy + join-back for the same skew reason as _large_star."""
-    d = (
-        edges.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    mins = d.groupBy("u").agg(F.min("v").alias("__m"))
-    nbr = (
-        d.join(mins, "u")
-        .filter(F.col("v") != F.col("__m"))
-        .select(F.col("v").alias("u"), F.col("__m").alias("v"))
-    )
-    own = mins.select("u", F.col("__m").alias("v"))
-    return nbr.union(own).distinct()
 
 
 def dedup_clusters(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
@@ -528,51 +536,37 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
     decision needs CLUSTERS (A~B, B~C must drop two docs, not settle two
     independent pairs).
 
-    The large-star/small-star alternation (Kiveris et al., "Connected
-    Components in MapReduce and Beyond") converges in O(log n) rounds even
-    on chain graphs. A fully-contracted component is a star on its minimum,
-    and stars are fixpoints of small∘large — so each round checks whether
-    the edge set changed and stops at the first fixpoint. The check is one
-    action over the EDGE set, which is near-dup-pair-sized — orders of
-    magnitude smaller than the corpus at any scale — and real dup graphs
-    converge in 2-4 rounds. max_iters bounds the adversarial case;
-    exhausting it without a fixpoint raises RuntimeError instead of
-    returning silently-wrong split clusters. Each round's edge set is
-    ``localCheckpoint``-ed, which truncates the iterative lineage.
-    """
-    edges = (
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    Each round contracts locally first (after Łącki, Mirrokni and
+    Włodarczyk, "Connected Components at Scale via Local Contractions"):
+    the edges are symmetrized and repartitioned on u, and one Arrow map
+    (``_contract``) shrinks each partition's share of a component to a
+    star on its local minimum. The round is one ``localCheckpoint``
+    (which also truncates the lineage), and it stops on its own
+    ``settled`` flag. Rounds grow O(log n) even on chains; exhausting
+    max_iters raises RuntimeError instead of returning split clusters.
+
+    Memory: a task holds whole neighborhoods, so the hottest one is at
+    most the largest cluster (a settled cluster is a star on its
+    minimum, whose neighborhood is the whole cluster)."""
+    edges = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).filter(
+        F.col("u") != F.col("v")
     )
-    # Fixpoint check, count-gated (r16): both edge sets are DISTINCT
-    # (small_star ends in distinct), so set equality ⟺ |nxt| == |edges|
-    # AND nxt \ edges = ∅ (equal-cardinality subset ⇒ equality). The
-    # count over a just-checkpointed frame is a near-free local-block
-    # scan, so non-converged rounds skip the two anti-joins the old
-    # symmetric-difference check paid every round; the one-direction
-    # except runs only when the counts agree (typically once, at the
-    # actual fixpoint).
-    n_edges = edges.count()
-    converged = False
+    both_ways = F.inline(
+        F.array(F.struct("u", "v"), F.struct(F.col("v").alias("u"), F.col("u").alias("v")))
+    )
     for _ in range(max_iters):
-        nxt = _small_star(_large_star(edges)).localCheckpoint(eager=True)
-        n_nxt = nxt.count()
-        if n_nxt == n_edges and nxt.exceptAll(edges).isEmpty():
-            edges = nxt
-            converged = True
-            break
-        edges, n_edges = nxt, n_nxt
-    if not converged:
-        raise RuntimeError(
-            f"dedup_clusters not a fixpoint after {max_iters} rounds — "
-            "raise max_iters (expected O(log n) convergence)"
+        edges = (
+            edges.select(both_ways)
+            .repartition("u")
+            .mapInArrow(_contract, schema="u long, v long, settled boolean")
+            .localCheckpoint(eager=True)
         )
-    sym = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    return sym.groupBy("u").agg(
-        F.least(F.min("v"), F.first("u")).alias("cluster_id")
-    ).select(F.col("u").alias("doc_id"), "cluster_id")
+        if edges.filter(~F.col("settled")).isEmpty():
+            return edges.select(F.col("u").alias("doc_id"), F.col("v").alias("cluster_id"))
+    raise RuntimeError(
+        f"dedup_clusters not a fixpoint after {max_iters} rounds — "
+        "raise max_iters (expected O(log n) convergence)"
+    )
 
 
 # Corpus-scan size below which dedup_apply's drop set is safely broadcast-

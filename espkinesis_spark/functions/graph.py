@@ -1,6 +1,6 @@
 """Graph algorithms over relational edge tables.
 
-Connected components (large-star/small-star) lives in functions/dedup.py
+Connected components (local-contraction rounds) lives in functions/dedup.py
 where its consumer (near-dup clustering) is; this module holds the
 general-purpose iterative fixpoint ops, starting with PageRank.
 """

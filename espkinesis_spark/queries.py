@@ -402,16 +402,15 @@ def ex_knn_clusters(spark, sf_dir):
     (ex_knn_graph's bounded LSH-multiprobe candidate source) pruned to
     STRONG edges (rounded cosine >= KNN_CLUSTER_MIN_COS — the raw
     mutual graph percolates into one giant component on any corpus),
-    then fed into the large-star/small-star connected-components
-    kernel — clusters = the pruned graph's components, cluster_id =
-    min member id (the dedup_clusters contract), decorated with each
-    cluster's size. The graph-native alternative to centroid
-    clustering: no k to pick, no centroid trajectory to replay, and
-    chain-shaped semantic neighborhoods stay single clusters where
-    k-means splits them. Scale: edges are n·k (mutual-filtered,
-    corpus-LINEAR), CC is O(log n) star rounds over that edge table,
-    the size decoration is one cluster-keyed count — the corpus itself
-    is never rescanned."""
+    then fed into connected components — clusters = the pruned graph's
+    components, cluster_id = min member id (the dedup_clusters
+    contract), decorated with each cluster's size. The graph-native
+    alternative to centroid clustering: no k to pick, no centroid
+    trajectory to replay, and chain-shaped semantic neighborhoods stay
+    single clusters where k-means splits them. Scale: edges are n·k
+    (mutual-filtered, corpus-LINEAR), CC is O(log n) rounds over that
+    edge table, the size decoration is one cluster-keyed count — the
+    corpus itself is never rescanned."""
     edges = similarity.knn_graph(_t(spark, sf_dir, "embeddings")).filter(
         F.col("cos") >= C.KNN_CLUSTER_MIN_COS
     )
@@ -831,11 +830,11 @@ def ex_image_neardup(spark, sf_dir):
 def ex_image_dedup_apply(spark, sf_dir):
     """Perceptual dedup APPLIED (closes the modality asymmetry — text had
     pairs → clusters → drop set → surviving corpus, image stopped at
-    pairs): dHash Hamming pairs → large-star/small-star connected
-    components → drop non-canonical members → per-source survivor
-    summary. The corpus scan is never shuffled (dedup_apply's routed
-    anti-join shape); the only non-dim exchanges touch the ~40 B/doc
-    fingerprint table and the pair/cluster frames."""
+    pairs): dHash Hamming pairs → connected components → drop
+    non-canonical members → per-source survivor summary. The corpus
+    scan is never shuffled (dedup_apply's routed anti-join shape); the
+    only non-dim exchanges touch the ~40 B/doc fingerprint table and
+    the pair/cluster frames."""
     docs = _t(spark, sf_dir, "documents")
     media = multimodal.synthesize_gray_bmp(docs)
     return media_dedup_summary(
@@ -3552,11 +3551,11 @@ def ex_winnow_fingerprint(spark, sf_dir):
 def ex_winnow_dedup_apply(spark, sf_dir):
     """Winnowing dedup APPLIED (the pairs → clusters → drop set →
     surviving corpus chain every other pairs source already ends in):
-    winnow candidate pairs → large-star/small-star connected components
-    → drop non-canonical members → per-source survivor summary. The
-    corpus scan is never shuffled (apply_drop_set's routed anti-join
-    shape); the non-dim exchanges touch only the fingerprint table and
-    the pair/cluster frames."""
+    winnow candidate pairs → connected components → drop non-canonical
+    members → per-source survivor summary. The corpus scan is never
+    shuffled (apply_drop_set's routed anti-join shape); the non-dim
+    exchanges touch only the fingerprint table and the pair/cluster
+    frames."""
     docs = _t(spark, sf_dir, "documents")
     pairs = dedup.winnow_candidates(docs).select("doc_a", "doc_b")
     return dedup.survivor_summary(dedup.apply_pairs(docs, pairs))

@@ -3,11 +3,14 @@
 from __future__ import annotations
 
 import pytest
+from hypothesis import Phase
 from pyspark.sql import functions as F
 
 from espkinesis_spark.functions import common as C
 from espkinesis_spark.functions import dedup, multimodal, similarity
 from espkinesis_spark.tables import load_table
+
+_NO_SHRINK = (Phase.explicit, Phase.reuse, Phase.generate)  # each shrink step is a Spark job
 
 
 def test_wav_codec_round_trip():
@@ -173,8 +176,8 @@ def _components_model(pairs):
 
 
 def test_dedup_clusters_equals_union_find_model(spark):
-    """Star alternation equals the union-find model on a mixed graph
-    (chains + shared hubs + disjoint components)."""
+    """The local-contraction rounds equal the union-find model on a mixed
+    graph (chains + shared hubs + disjoint components)."""
     edges = (
         [(i, i + 1) for i in range(100, 120)]  # 21-node chain
         + [(200, 200 + i) for i in range(1, 8)]  # star hub
@@ -195,7 +198,7 @@ def test_dedup_clusters_property_union_find(spark):
     node = st.integers(0, 40)
     pair = st.tuples(node, node).filter(lambda p: p[0] != p[1]).map(lambda p: tuple(sorted(p)))
 
-    @settings(max_examples=10, deadline=None)
+    @settings(max_examples=10, deadline=None, phases=_NO_SHRINK)
     @given(st.lists(pair, max_size=40))
     def run(edges):
         pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
@@ -205,9 +208,44 @@ def test_dedup_clusters_property_union_find(spark):
     run()
 
 
+def test_dedup_clusters_property_across_partitions(spark):
+    """With AQE coalescing off and 7 shuffle partitions every round runs
+    over many tasks, so components span partitions: random graphs and
+    randomly permuted chains (long enough to reach every partition)
+    cluster exactly as the union-find model says."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    node = st.integers(0, 60)
+    pair = st.tuples(node, node).filter(lambda p: p[0] != p[1]).map(lambda p: tuple(sorted(p)))
+
+    @st.composite
+    def chain(draw):
+        ids = draw(st.permutations(range(draw(st.integers(30, 120)))))
+        return [tuple(sorted(p)) for p in zip(ids, ids[1:])]
+
+    @settings(max_examples=6, deadline=None, phases=_NO_SHRINK)
+    @given(st.one_of(st.lists(pair, min_size=1, max_size=80), chain()))
+    def run(edges):
+        pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+        got = [(r["doc_id"], r["cluster_id"]) for r in dedup.dedup_clusters(pairs).collect()]
+        assert len(got) == len(set(got))
+        assert set(got) == _components_model(edges)
+
+    keys = ("spark.sql.adaptive.coalescePartitions.enabled", "spark.sql.shuffle.partitions")
+    saved = [spark.conf.get(k) for k in keys]
+    spark.conf.set(keys[0], "false")
+    spark.conf.set(keys[1], "7")
+    try:
+        run()
+    finally:
+        for k, v in zip(keys, saved):
+            spark.conf.set(k, v)
+
+
 def test_dedup_clusters_star_handles_long_chain_in_log_rounds(spark):
-    """A 64-node chain has diameter 63; the star alternation must converge
-    in O(log n) rounds, far under the default budget."""
+    """A 64-node chain has diameter 63; the contraction rounds must
+    converge in O(log n) rounds, far under the default budget."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 64)], "doc_a long, doc_b long"
     )
@@ -892,7 +930,7 @@ class TestPagerankProperty:
         spark = TestPagerankProperty._spark
         node = st.sampled_from(["a", "b", "c", "d", "e"])
 
-        @settings(max_examples=8, deadline=None)
+        @settings(max_examples=8, deadline=None, phases=_NO_SHRINK)
         @given(st.lists(st.tuples(node, node), min_size=1, max_size=12))
         def run(edges):
             d, iters = 0.85, 3

@@ -318,6 +318,35 @@ def test_semdedup_build_and_collect_run_at_most_ten_jobs(spark, sf_dir, monkeypa
     assert checkpoints == []
 
 
+def test_knn_clusters_build_and_collect_run_at_most_twenty_jobs(spark, sf_dir, monkeypatch):
+    """One ex_knn_clusters build plus its toPandas runs at most 20 Spark
+    jobs: a connected-components round is one shuffle, one contraction
+    map checkpointed once and one stop check over the round's own
+    ``settled`` flag. The rounds it replaced, three actions each and a
+    closing exceptAll, ran 52. ``dedup_clusters`` makes at
+    most one localCheckpoint per round: every round budget up to the
+    one that settles a 64-node chain bounds its checkpoints."""
+    from espkinesis_spark.functions import dedup
+
+    rows, jobs, checkpoints = _build_and_collect(spark, sf_dir, monkeypatch, "ex_knn_clusters")
+    assert rows > 0
+    assert 0 < jobs <= 20, f"{jobs} jobs"
+
+    # the spy stays installed until the test ends and keeps filling the list
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(1, 64)], "doc_a long, doc_b long")
+    got = None
+    for budget in range(1, 26):
+        checkpoints.clear()
+        try:
+            got = dedup.dedup_clusters(pairs, max_iters=budget).collect()
+        except RuntimeError:
+            pass
+        assert 0 < len(checkpoints) <= budget, (budget, len(checkpoints))
+        if got is not None:
+            break
+    assert {(r["doc_id"], r["cluster_id"]) for r in got} == {(i, 1) for i in range(1, 65)}
+
+
 def test_ann_pq_build_and_collect_job_count(spark, sf_dir, monkeypatch):
     """One ex_ann_pq build plus its toPandas runs at most 8 Spark jobs:
     the PQ codebooks train on the driver (the init collect and one
@@ -404,7 +433,7 @@ def test_keyed_entries_score_with_one_cosine(spark, sf_dir, monkeypatch):
     entries holds ``zip_with``: every candidate pair is scored by the
     numpy cosine in an Arrow stage, not by a per-row Column fold. Plans
     that a build truncates with ``localCheckpoint`` (the kNN edge table,
-    the star rounds) are read before the checkpoint."""
+    the connected-components rounds) are read before the checkpoint."""
     frame = type(spark.range(1))
     real = frame.localCheckpoint
     plans = []

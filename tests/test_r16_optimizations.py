@@ -8,8 +8,6 @@ mysterious oracle diff):
 
   * the numpy PQ assignment (``_nearest_l2`` in the one assignment
     kernel) == the DataFrame dot-fold argmin it replaced,
-  * the star rounds without large-star's trailing distinct == the
-    both-distinct reference form,
   * the assignment kernel's ``keep_vec`` subvector == assignment ⋈ corpus,
   * ex_pagerank's numeric node relabeling == the string-key trajectory.
 """
@@ -75,44 +73,6 @@ def test_pq_assign_keep_sv_matches_joinback(spark, sf_dir):
             "vec_id", "m", F.col("centroid_id").alias("code")
         )
         assert _sets_equal(got, want)
-
-
-def test_star_rounds_no_large_distinct_matches_reference(spark):
-    # a graph with chains, a star, duplicates-after-orientation and
-    # isolated pairs — the shapes the alternation contracts differently
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 21), (5, 1), (4, 5)],
-        "u long, v long",
-    )
-
-    def large_ref(e):
-        sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("__m"))
-        return (
-            sym.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("__m").alias("v"))
-            .distinct()
-        )
-
-    def small_ref(e):
-        d = (
-            e.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        mins = d.groupBy("u").agg(F.min("v").alias("__m"))
-        nbr = (
-            d.join(mins, "u")
-            .filter(F.col("v") != F.col("__m"))
-            .select(F.col("v").alias("u"), F.col("__m").alias("v"))
-        )
-        own = mins.select("u", F.col("__m").alias("v"))
-        return nbr.union(own).distinct()
-
-    cur = dedup._small_star(dedup._large_star(edges))
-    ref = small_ref(large_ref(edges))
-    assert _sets_equal(cur, ref)
 
 
 def test_dedup_clusters_window_form_components(spark):
