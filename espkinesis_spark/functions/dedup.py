@@ -295,42 +295,24 @@ def neardup_minhash_persisted(
     return exact_jaccard(cands, sh).filter(F.col("jaccard") >= threshold)
 
 
-def containment_pairs(
-    docs: DataFrame,
-    threshold: float = C.CONTAIN_THRESHOLD,
-    df_cap: int | None = None,
-) -> DataFrame:
-    """Shingle-set CONTAINMENT near-dup: C(A,B) = |A∩B| / |A| (and the
-    symmetric C(B,A)) for every pair sharing >= 1 shingle, kept when
-    either direction reaches ``threshold``. Jaccard misses
-    subset/boilerplate duplication — a doc wholly contained in a much
-    larger one has i/(na+nb-i) ≈ na/nb — while containment reads 1.0;
-    this is the template/boilerplate detector of the dedup stack
-    (Broder's containment measure).
-
-    Scale shape: the intersection counts come from ``_intersections``,
-    the one shared-shingle stage ``neardup_jaccard_exact`` also scores
-    (one s-keyed exchange, no pair list materialized separately); sizes
-    ride a doc-keyed aggregate. ``df_cap`` is that stage's hot-shingle
-    guard — REQUIRED at corpus scale on natural text, where
-    stopword-ish shingles shared by thousands of docs make the capless
-    self-join quadratic: the 30x ladder (bounded-vocab corpus, ~50x
-    shingle volume) did not finish capless inside 10 min, while
-    df_cap=64 reads 18x wall at ~50x work (the dup_spans cost class),
-    with exactness preserved for every pair sharing >= 1 sub-cap
-    shingle (equivalence-tested).
-    """
-    return containment_from_shingles(shingles(docs), threshold, df_cap)
-
-
 def containment_from_shingles(
     sh: DataFrame,
     threshold: float = C.CONTAIN_THRESHOLD,
     df_cap: int | None = None,
 ) -> DataFrame:
-    """The scoring half of ``containment_pairs``: runs identically over a
-    live distinct-shingle frame (batch) or a drained + deduped store
-    (streaming)."""
+    """Shingle-set CONTAINMENT near-dup over a distinct (doc_id, s)
+    table: C(A,B) = |A∩B| / |A| (and the symmetric C(B,A)) for every
+    pair sharing >= 1 shingle, kept when either direction reaches
+    ``threshold``. Jaccard misses subset/boilerplate duplication — a doc
+    wholly contained in a much larger one has i/(na+nb-i) ≈ na/nb —
+    while containment reads 1.0 (Broder's containment measure).
+
+    The intersection counts come from ``_intersections``, the one
+    shared-shingle stage ``neardup_jaccard_exact`` also scores.
+    ``df_cap`` is that stage's hot-shingle guard, required at corpus
+    scale on natural text: the 30x ladder did not finish capless inside
+    10 min, while df_cap=64 read 18x wall at ~50x work, exact for every
+    pair sharing >= 1 sub-cap shingle (equivalence-tested)."""
     # The shingle table feeds the df-annotation window AND the per-doc
     # sizes aggregate (two plan branches) — materialize it once (r17,
     # guide §5; the winnow_candidates_from precedent). The checkpoint is
@@ -722,35 +704,19 @@ def winnow_fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def winnow_candidates(
-    docs: DataFrame,
-    min_shared: int = C.WINNOW_MIN_SHARED,
-    max_df: int = C.WINNOW_MAX_DF,
-    text_col: str = "text",
-) -> DataFrame:
-    """Near-dup candidate pairs from winnowing fingerprints: docs sharing
-    ≥ ``min_shared`` fingerprints, after dropping boilerplate
-    fingerprints appearing in more than ``max_df`` docs (the df cap that
-    bounds per-fingerprint join fanout at corpus scale). One
-    fingerprint-keyed equi-join, never all-pairs; the df filter shares
-    the join's fp partitioning. The fingerprint table feeds three plan
-    branches (df counts + both join sides), so it is localCheckpointed
-    once (the hamming fingerprint-table rule)."""
-    fp = winnow_fingerprints(docs, text_col=text_col)
-    return winnow_candidates_from(fp, min_shared=min_shared, max_df=max_df)
-
-
 def winnow_candidates_from(
     fp: DataFrame,
     min_shared: int = C.WINNOW_MIN_SHARED,
     max_df: int = C.WINNOW_MAX_DF,
 ) -> DataFrame:
-    """``winnow_candidates`` from an existing distinct (doc_id, fp) key
-    table — the entry point for a persisted store (the streaming leg
-    drains fingerprints extracted at ingest into exactly this shape) and
-    the one drop-hot shared-key count: ``multimodal.shared_frame_neardup``
-    runs its frame-hash table through it. Unlike ``_intersections``'
-    cap, a key past ``max_df`` is dropped, so it counts toward no pair."""
+    """Near-dup candidate pairs over a distinct (doc_id, fp) key table
+    (``winnow_fingerprints``): docs sharing >= ``min_shared`` keys,
+    after dropping keys that appear in more than ``max_df`` docs (the df
+    cap that bounds per-key join fanout at corpus scale). One key-keyed
+    equi-join, never all-pairs. It is also the one drop-hot shared-key
+    count: ``multimodal.shared_frame_neardup`` runs its frame-hash table
+    through it. Unlike ``_intersections``' cap, a key past ``max_df`` is
+    dropped, so it counts toward no pair."""
     fp = fp.localCheckpoint(eager=True)
     dfc = fp.groupBy("fp").agg(F.count("*").cast("long").alias("df"))
     kept = fp.join(dfc.filter(F.col("df") <= max_df), "fp").select("doc_id", "fp")
@@ -806,39 +772,13 @@ def dup_spans(
     )
 
 
-def dup_spans_apply(
-    docs: DataFrame, span: int = C.SPAN_TOKENS, text_col: str = "text"
-) -> DataFrame:
-    """Exact-substring dedup APPLIED (the rewrite ``dup_spans`` only
-    reports): every token covered by a non-first-occurrence span window
-    is removed (Lee et al. 2022's substring dedup cuts the later
-    occurrences; overlapping cut windows merge naturally through the
-    position-set union). Emits one row per document —
-    (doc_id, n_tokens, n_removed, kept_md5) with kept_md5 the md5 of the
-    space-joined SURVIVING tokens in original order (md5('') when a doc
-    is entirely duplicated text) — so the oracle can value-check the
-    exact rewritten content without hauling it.
-
-    Scale shape: the span table and first-occurrence window are exactly
-    ``dup_spans``' one __h-keyed shuffle; the cut-position fan-out is a
-    bounded ×span array explode; removal is one (doc, pos)-keyed
-    LEFT-ANTI equi-join; the rebuild is a single doc_id-keyed
-    aggregation whose per-group payload is one document's tokens (the
-    same per-doc bound every text op here carries). No collects, no
-    windows over the corpus, nothing driver-side.
-    """
-    occ, tok_tbl = dup_spans_tables(docs, span, text_col)
-    return dup_spans_apply_from(occ, tok_tbl, span)
-
-
 def dup_spans_tables(
     docs: DataFrame, span: int = C.SPAN_TOKENS, text_col: str = "text"
 ) -> tuple[DataFrame, DataFrame]:
     """The two narrow extraction tables the substring-dedup analysis runs
-    on, split out so a STREAM can compute them at ingest (both are
-    stateless per-row fan-outs — the payload is touched exactly once):
-    the span-hash occurrence table (doc_id, pos, __h) and the position-
-    indexed token table (doc_id, tp, tok)."""
+    on, both stateless per-row fan-outs, so a stream computes them at
+    ingest: the span-hash occurrence table (doc_id, pos, __h) and the
+    position-indexed token table (doc_id, tp, tok)."""
     toks = tokens(F.col(text_col))
     spans_expr = F.expr(
         f"transform(sequence(1, size(__toks) - {span} + 1),"
@@ -865,11 +805,20 @@ def dup_spans_tables(
 def dup_spans_apply_from(
     occ: DataFrame, tok_tbl: DataFrame, span: int = C.SPAN_TOKENS
 ) -> DataFrame:
-    """The analysis half of ``dup_spans_apply``: first-occurrence window
-    over the span-hash table, overlap-merged cut positions, (doc, pos)
-    anti join, per-doc rebuild. Runs identically over live extraction
-    frames (batch) or drained stores (streaming) — which is WHY the
-    split exists."""
+    """Exact-substring dedup APPLIED over the ``dup_spans_tables`` pair
+    (the rewrite ``dup_spans`` only reports): every token covered by a
+    non-first-occurrence span window is removed (Lee et al. 2022 cut the
+    later occurrences; overlapping cut windows merge through the
+    position-set union). Emits one row per document — (doc_id,
+    n_tokens, n_removed, kept_md5) with kept_md5 the md5 of the
+    space-joined SURVIVING tokens in original order (md5('') when a doc
+    is entirely duplicated text) — so the oracle can value-check the
+    rewritten content without hauling it.
+
+    Scale shape: ``dup_spans``' one __h-keyed shuffle for the
+    first-occurrence window; a bounded ×span cut-position explode; one
+    (doc, pos)-keyed LEFT-ANTI join; one doc_id-keyed rebuild whose
+    per-group payload is one document's tokens."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("__h")

@@ -72,9 +72,7 @@ def pagerank(
     return ranks.select("node", F.round(F.col("r"), 6).alias("rank"))
 
 
-def label_propagation(
-    edges: DataFrame, iters: int = C.LPA_ITERS, weight_col: str | None = None
-) -> DataFrame:
+def label_propagation(edges: DataFrame, iters: int = C.LPA_ITERS) -> DataFrame:
     """Synchronous label-propagation community detection over a directed
     (src, dst) edge table, treated as undirected (each edge votes both
     ways; multi-edges weight the vote naturally). Labels start as the node
@@ -84,12 +82,7 @@ def label_propagation(
     pagerank/kmeans trick). Symmetrization makes every node a ``dst`` of
     at least one edge, so the per-round vote argmax covers EVERY node and
     no keep-old-label fallback join is needed (the oracle carries the
-    coalesce form; it never fires). With ``weight_col`` the neighbor vote
-    sums that edge weight instead of counting edges (weighted LPA — ties
-    still break to the smallest label; weights should be integers or
-    fixed-precision decimals if cross-engine determinism matters, since a
-    float sum's partial order is engine-dependent). Returns (node,
-    community, n_members).
+    coalesce form; it never fires). Returns (node, community, n_members).
 
     Scale shape: per round, the node-sized label table joins the edge
     table on src (co-partitioned equi-join; AQE broadcasts while it fits)
@@ -98,18 +91,13 @@ def label_propagation(
     only full shuffles are keyed by node. Fixed budget, no driver-side
     data, no windows over the edge table.
     """
-    wcol = (
-        F.col(weight_col) if weight_col is not None else F.lit(1).cast("long")
-    )
     # checkpoint the DIRECTED edge table once, THEN symmetrize (r16): the
     # union's two branches each re-ran the upstream edge construction (a
     # join, typically), so materializing after the union paid that join
     # twice; symmetrizing from the checkpointed blocks is a cheap local
     # re-read and halves the construction cost (guide §5 localCheckpoint)
-    edges = edges.select("src", "dst", wcol.alias("__w")).localCheckpoint(eager=True)
-    both = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "__w")
-    )
+    edges = edges.select("src", "dst").localCheckpoint(eager=True)
+    both = edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     labels = both.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("lab")
     )
@@ -117,7 +105,7 @@ def label_propagation(
         votes = (
             both.join(labels, both["src"] == labels["node"])
             .groupBy(F.col("dst").alias("vnode"), "lab")
-            .agg(F.sum("__w").alias("c"))
+            .agg(F.count("*").alias("c"))
         )
         labels = (
             votes.groupBy("vnode")

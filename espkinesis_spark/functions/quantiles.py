@@ -318,7 +318,9 @@ def hdr_quantiles(buckets: DataFrame, pcts: Sequence[int] = C.SKQ_PCTS) -> DataF
     double. All windows/aggregates run over the bucket table only —
     sketch-sized by construction, never data-sized (the inherent
     summary-window SinglePartition, same class as sketch_quantiles'
-    bound phase)."""
+    bound phase). The bucket table feeds two branches (cumulative ranks
+    and the total), so callers pass it materialized; a live one would
+    scan the corpus twice."""
     ordered = buckets.withColumn("lb", F.expr("shiftleft(top, shift)"))
     w_cum = Window.orderBy("lb").rowsBetween(Window.unboundedPreceding, 0)
     cum = ordered.withColumn("cum", F.sum("w").over(w_cum))
@@ -337,21 +339,6 @@ def hdr_quantiles(buckets: DataFrame, pcts: Sequence[int] = C.SKQ_PCTS) -> DataF
         .withColumn(
             "est", (F.col("bucket_lb").cast("double") / F.lit(float(C.HDR_SCALE)))
         )
-    )
-
-
-def hdr_sketch_quantiles(
-    df: DataFrame, col: str, pcts: Sequence[int] = C.SKQ_PCTS
-) -> DataFrame:
-    """Batch convenience: build the sketch and answer from it in one
-    plan — one scan + one bucket-keyed shuffle (map-side partial) + the
-    sketch-sized extraction. The bucket table feeds TWO extraction
-    branches (cumulative ranks + the total), so it is materialized once
-    (sketch-sized — the multi-branch re-execution rule; without it the
-    corpus scan runs twice). The streaming leg gets this for free: its
-    drained snapshot is already frozen."""
-    return hdr_quantiles(
-        hdr_buckets(df, col).localCheckpoint(eager=True), pcts
     )
 
 

@@ -383,80 +383,39 @@ def bigram_logprob(
     of ``unigram_logprob`` — catches improbable word ORDER, not just
     improbable words. Documents with < 2 tokens emit no row.
 
-    Scale shape: bigram generation is a per-row array fan-out (the token
-    array is materialized as a column first — the lambda-scope CSE
-    hazard); the LM tables are bigram-vocab-sized (one map-side-combined
-    groupBy each); scoring probes them map-side (AQE broadcasts while
-    they fit; a 100 TB corpus's bigram table falls back to a shuffled
-    equi-join) and reduces per doc_id.
+    Scale shape: the bigram rows are a per-row fan-out; the LM tables
+    are bigram-vocab-sized (one map-side-combined groupBy each); scoring
+    probes them map-side (AQE broadcasts while they fit; a 100 TB
+    corpus's bigram table falls back to a shuffled equi-join) and
+    reduces per doc_id.
     """
-    pairs = _bigram_pairs(df, text_col)
-    v = _word_freqs(df, text_col).agg(F.count("*").cast("double").alias("v"))
-    return _bigram_score(pairs, v, alpha)
+    return bigram_score(bigram_rows(df, text_col), alpha)
 
 
-def _bigram_pairs(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, w1, w2) — raw-adjacency bigram fan-out (empty tokens are
-    filtered AFTER pairing, so a blank token breaks adjacency exactly as
-    the oracle's UNNEST(range) replay does)."""
-    toks_df = df.select("doc_id", tokens(F.col(text_col)).alias("__t"))
-    t = F.col("__t")
-    n = F.size(t)
-    big = F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.struct(
-                F.element_at(t, i).alias("w1"),
-                F.element_at(t, i + 1).alias("w2"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
+def bigram_rows(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """(doc_id, w1, w2): one row per raw token, w1 the token and w2 the
+    next raw token (null after the last). A stateless zero-shuffle
+    projection, so a stream extracts it at ingest. Empty tokens are
+    dropped only in ``bigram_score``, so a blank token breaks adjacency
+    exactly as the oracle's UNNEST(range) replay does."""
     return (
-        toks_df.select("doc_id", F.explode(big).alias("p"))
-        .select("doc_id", "p.w1", "p.w2")
-        .filter((F.length("w1") > 0) & (F.length("w2") > 0))
+        df.select("doc_id", tokens(F.col(text_col)).alias("__t"))
+        .select("doc_id", "__t", F.posexplode("__t").alias("__i", "w1"))
+        .select("doc_id", "w1", F.get("__t", F.col("__i") + 1).alias("w2"))
     )
 
 
-def token_positions(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, pos, tok) — the raw positional token table (NO empty-token
-    filter: position adjacency must survive so bigram reconstruction
-    matches the in-array fan-out). A stateless zero-shuffle projection,
-    which is what lets the streaming leg extract it at ingest."""
-    return df.select(
-        "doc_id", F.posexplode(tokens(F.col(text_col))).alias("pos", "tok")
-    )
-
-
-def bigram_logprob_from_tokens(
-    tok_positions_df: DataFrame, alpha: float = C.BIGRAM_ALPHA
-) -> DataFrame:
-    """``bigram_logprob`` over a drained (doc_id, pos, tok) store: pairs
-    rebuilt by positional adjacency (one per-doc window lead), vocab =
-    distinct non-empty tokens. Equals the in-array form exactly — the
-    streaming leg's post-drain scorer."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    pairs = (
-        tok_positions_df.withColumn("__w2", F.lead("tok").over(w))
-        .filter(F.col("__w2").isNotNull())
-        .select("doc_id", F.col("tok").alias("w1"), F.col("__w2").alias("w2"))
-        .filter((F.length("w1") > 0) & (F.length("w2") > 0))
-    )
+def bigram_score(rows: DataFrame, alpha: float = C.BIGRAM_ALPHA) -> DataFrame:
+    """``bigram_logprob`` over ``bigram_rows``: the add-alpha LM trains
+    on the pairs (the rows with both words non-empty) and the vocab size
+    (the distinct non-empty w1), then scores each doc."""
+    pairs = rows.filter((F.length("w1") > 0) & (F.length("w2") > 0))
     v = (
-        tok_positions_df.filter(F.length("tok") > 0)
-        .select("tok")
+        rows.filter(F.length("w1") > 0)
+        .select("w1")
         .distinct()
         .agg(F.count("*").cast("double").alias("v"))
     )
-    return _bigram_score(pairs, v, alpha)
-
-
-def _bigram_score(pairs: DataFrame, v: DataFrame, alpha: float) -> DataFrame:
-    """Train the add-alpha LM on the pair table and score per doc; ``v``
-    is a 1-row frame holding the corpus vocab size."""
     lm = pairs.groupBy("w1", "w2").agg(F.count("*").cast("double").alias("c12"))
     # the LM table feeds its own context marginal (c1 = Σ_w2 c12) and the
     # scoring probe — materialize the bigram-vocab-sized table once and
@@ -483,43 +442,25 @@ def _bigram_score(pairs: DataFrame, v: DataFrame, alpha: float) -> DataFrame:
     )
 
 
-def perplexity_buckets(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """CCNet-style perplexity bucketing (Wenzek et al. 2020, "CCNet:
-    Extracting High Quality Monolingual Datasets from Web Crawl Data"):
-    every document is scored under the corpus-trained add-alpha bigram LM
-    (``bigram_logprob``) and cut into head / middle / tail TERCILES of
-    the corpus score distribution — head = the most-fluent third (lowest
-    per-bigram negative log-likelihood), the slice CCNet keeps for LM
-    training; tail = the noisiest third.
+def perplexity_buckets_from(bigram_scored: DataFrame) -> DataFrame:
+    """CCNet-style perplexity bucketing (Wenzek et al. 2020) of a
+    ``bigram_score`` frame: every document is cut into head / middle /
+    tail TERCILES of the corpus score distribution — head = the
+    most-fluent third (lowest per-bigram negative log-likelihood), the
+    slice CCNet keeps for LM training; tail = the noisiest third.
 
     Thresholds are exact DISCRETE quantiles over integer micro-unit
     scores (the 4-dp score x PPL_SCALE): t1 = the ceil(n/3)-th smallest,
     t2 = the ceil(2n/3)-th smallest, ties take the LOWER bucket. No
-    float interpolation in the CUT itself, so the residual cross-engine
-    risk is the one every 4-dp score column already carries (a doc whose
-    avg(ln p) lands within 1 ulp of a .00005 boundary could round apart;
-    a flip relabels that doc discretely — and because t1/t2 are the k-th
-    smallest of these same micro-scores, a flip AT a threshold score can
-    move t1/t2 themselves and relabel every doc tied at the old
-    threshold, not just the flipping doc — accepted under the same
-    empirically-engine-consistent rounding discipline as
-    bigram_logprob/BM25, not claimed impossible). Documents with < 2
-    tokens carry no LM score and emit no row (the bigram_logprob
-    contract).
-
-    Scale shape: the LM pipeline is bigram_logprob's (bigram-vocab-sized
-    tables, corpus probed map-side). The threshold pass adds one
-    aggregate over DISTINCT micro-scores (a cumulative window over a
-    score-cardinality-sized table — 4-dp scores, not corpus rows) and a
-    broadcast of two scalar cut points; the per-doc score table is
-    localCheckpointed once for its two consumers (threshold + label)."""
-    return perplexity_buckets_from(bigram_logprob(df, text_col))
-
-
-def perplexity_buckets_from(bigram_scored: DataFrame) -> DataFrame:
-    """The tercile cut over an already-scored (doc_id, n_bigrams,
-    bigram_logprob) frame — shared by the batch op and the streaming
-    leg's post-drain rollup."""
+    float interpolation in the cut itself, so the residual cross-engine
+    risk is the one every 4-dp score column carries: a doc whose
+    avg(ln p) lands within 1 ulp of a .00005 boundary could round apart,
+    and a flip AT a threshold score moves t1/t2 and relabels every doc
+    tied there. Documents with < 2 tokens carry no LM score and emit no
+    row. The threshold pass aggregates DISTINCT micro-scores (a
+    score-cardinality-sized cumulative window, not corpus rows) and
+    broadcasts two scalar cut points; the per-doc score table is
+    localCheckpointed once for its two consumers."""
     from pyspark.sql import Window
 
     scored = bigram_scored.withColumn(
@@ -715,11 +656,14 @@ def _vocab_layout(words: DataFrame, rows_per_partition: int = 50_000) -> DataFra
     return words.coalesce(target) if target < current else words
 
 
+# merge rounds between bpe_train's lineage truncations
+BPE_CHECKPOINT_EVERY = 3
+
+
 def bpe_train(
     docs: DataFrame,
     merges: int = C.BPE_MERGES,
     text_col: str = "text",
-    checkpoint_interval: int = 3,
     word_freqs: DataFrame | None = None,
 ) -> DataFrame:
     """Distributed BPE-merge tokenizer training (Sennrich et al. 2016).
@@ -740,7 +684,7 @@ def bpe_train(
     data is exactly one (pair, count) row per round; the trajectory is
     merges-bounded, the same bounded-build-side contract as
     ``similarity.kmeans_train``. Lineage is truncated every
-    ``checkpoint_interval`` rounds — between checkpoints the merge folds
+    ``BPE_CHECKPOINT_EVERY`` rounds — between checkpoints the merge folds
     stack lazily (depth ≤ interval, safely under the >30-step codegen
     hazard), so a round costs one argmax job, not argmax + materialize;
     the final round's merge is never materialized at all (the trajectory,
@@ -789,7 +733,7 @@ def bpe_train(
         trajectory.append((rank, a, b, int(cnt)))
         if rank < merges:  # the final round's merge is never materialized
             words = words.select(apply_merge_expr(a, b).alias("s"), "freq")
-            if rank % checkpoint_interval == 0:
+            if rank % BPE_CHECKPOINT_EVERY == 0:
                 words = words.localCheckpoint(eager=True)
     return spark.createDataFrame(
         trajectory, "merge_rank int, lhs string, rhs string, pair_count long"
@@ -956,41 +900,9 @@ def quality_gate_stateless(df: DataFrame, text_col: str = "text") -> DataFrame:
     return quality_filter(df, text_col).filter("keep").drop("keep")
 
 
-def bm25_topk(
-    docs: DataFrame,
-    query: tuple[str, ...] = C.BM25_QUERY,
-    k1: float = C.BM25_K1,
-    b: float = C.BM25_B,
-    topk: int = C.BM25_TOPK,
-    text_col: str = "text",
-) -> DataFrame:
-    """Okapi BM25 top-k retrieval over the corpus for a fixed query-term
-    set (the relevance-scoring pass an LLM curation pipeline runs to
-    mine topical documents). Output: (rnk, doc_id, n_hits, score_micro,
-    score) — score in integer micro-units plus the descaled double.
-
-    Scale shape: the corpus token stream shuffles ONCE on doc_id for
-    document lengths; the query-side tables (per-term document
-    frequencies) are query-sized and broadcast; per-(doc, term) term
-    frequencies group on (doc_id, term) whose leading key matches the
-    dl partitioning; top-k is TakeOrderedAndProject. Nothing
-    corpus-global beyond two scalar reductions (N, total token count).
-
-    Float discipline: every contribution is ONE fixed expression dag
-    over integer inputs (tf, df, dl, N, L) — the divides/multiplies are
-    IEEE exact-rounded and the single ln is engine-consistent at the
-    6 dp rounding (the ex_tfidf precedent); each contribution rounds
-    half-away to int MICRO-UNITS before the per-doc sum, so summation
-    is exact integer arithmetic in any partition order. The oracle
-    replays the identical expression text.
-    """
-    return bm25_from_tokens(bm25_tokens(docs, text_col), query, k1, b, topk)
-
-
 def bm25_tokens(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """BM25's extraction table — the lowercased (doc_id, term) stream, a
-    stateless per-row fan-out, so a STREAM can compute it at ingest
-    (the dup_spans_tables split)."""
+    stateless per-row fan-out, so a stream computes it at ingest."""
     return docs.select(
         "doc_id", F.explode(tokens(F.lower(F.col(text_col)))).alias("term")
     ).filter(F.length("term") > 0)
@@ -1003,11 +915,23 @@ def bm25_from_tokens(
     b: float = C.BM25_B,
     topk: int = C.BM25_TOPK,
 ) -> DataFrame:
-    """The scoring half of ``bm25_topk``, running identically over a
-    live extraction frame (batch) or a drained store (streaming). The
-    BM25 corpus is defined as documents with >= 1 token (N and both
-    scalars derive from the per-doc length table — one extra reduction
-    over an already doc-sized frame, no second corpus scan)."""
+    """Okapi BM25 top-k retrieval for a fixed query-term set over a
+    ``bm25_tokens`` frame, live (batch) or drained (stream). Output:
+    (rnk, doc_id, n_hits, score_micro, score) — score in integer
+    micro-units plus the descaled double. The BM25 corpus is the
+    documents with >= 1 token (N and both scalars derive from the
+    per-doc length table, no second corpus scan).
+
+    Scale shape: one doc_id-keyed token shuffle for the lengths; the
+    per-term document frequencies are query-sized and broadcast; top-k
+    is TakeOrderedAndProject.
+
+    Float discipline: every contribution is ONE fixed expression dag
+    over integer inputs (tf, df, dl, N, L) and rounds half-away to int
+    MICRO-UNITS before the per-doc sum, so summation is exact in any
+    partition order; the single ln is engine-consistent at 6 dp (the
+    ex_tfidf precedent). The oracle replays the identical expression
+    text."""
     dl = tok.groupBy("doc_id").agg(F.count("*").cast("long").alias("dl"))
     # dl feeds the scalar reduction AND the per-doc probe — freeze the
     # doc-sized table once (the multi-branch rule)

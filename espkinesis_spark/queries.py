@@ -15,12 +15,20 @@ would only add a global sort stage.
 from __future__ import annotations
 
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from espkinesis_spark.functions import common as C
-from espkinesis_spark.functions import dedup, multimodal, similarity, text
+from espkinesis_spark.functions import (
+    dedup,
+    multimodal,
+    quantiles,
+    sampling,
+    similarity,
+    text,
+)
 from espkinesis_spark.operators import core as ops
 from espkinesis_spark.streaming import jobs
 from espkinesis_spark.tables import load_table
@@ -351,14 +359,6 @@ def ex_ann_topk(spark, sf_dir):
     )
 
 
-def ex_containment_dedup(spark, sf_dir):
-    """Shingle-containment near-dup (Broder's containment — the
-    subset/boilerplate detector Jaccard misses): pairs where either
-    direction's |A∩B|/|A| reaches CONTAIN_THRESHOLD. Single-pass
-    shared-shingle self-join (one s-keyed exchange)."""
-    return dedup.containment_pairs(_t(spark, sf_dir, "documents"))
-
-
 def ex_ann_filtered(spark, sf_dir):
     """Metadata-FILTERED vector search (the production retrieval shape:
     a predicate narrows the corpus before similarity ranks it): top-3
@@ -454,17 +454,6 @@ def ex_knn_dedup_apply(spark, sf_dir):
             F.sum("vec_id").cast("long").alias("sum_ids"),
         )
     )
-
-
-def ex_perplexity_buckets(spark, sf_dir):
-    """CCNet perplexity bucketing (Wenzek et al. 2020): every document
-    scored under the corpus-trained bigram LM, then cut into head /
-    middle / tail terciles of the corpus score distribution — the
-    standard model-based quality gate for web-crawl training data (keep
-    head, inspect middle, drop tail). Thresholds are exact discrete
-    quantiles in integer micro-units, so the cut is engine-portable;
-    ties take the lower bucket (pinned by test)."""
-    return text.perplexity_buckets(_t(spark, sf_dir, "documents"))
 
 
 def ex_balance_classes(spark, sf_dir):
@@ -723,16 +712,6 @@ def ex_zrange_bigmin(spark, sf_dir):
     )
 
 
-def ex_lang_id(spark, sf_dir):
-    """Heuristic language identification."""
-    return text.lang_id(_t(spark, sf_dir, "documents")).select("doc_id", "lang_pred")
-
-
-def ex_text_stats(spark, sf_dir):
-    """Per-document quality statistics."""
-    return text.text_stats(_t(spark, sf_dir, "documents"))
-
-
 def ex_token_count(spark, sf_dir):
     """Whitespace + BPE-ish regex token counts."""
     return text.token_counts(_t(spark, sf_dir, "documents"))
@@ -808,68 +787,6 @@ def ex_multimodal_resize(spark, sf_dir):
     )
     return multimodal.resize_media(media).select(
         "doc_id", "width", "height", F.md5(F.col("thumb")).alias("thumb_md5")
-    )
-
-
-def ex_image_neardup(spark, sf_dir):
-    """Perceptual image near-dup (the multimodal leg of the dedup stack):
-    synthesize REAL 24-bpp BMP containers from the documents (9x8 gray
-    grid, fixed-stride prefix sampling so near-dup docs yield near-dup
-    images), dHash each through the real decode path, then a banded
-    Hamming candidate join (16-bit bands — an equi-join, never
-    all-pairs) with exact xor-popcount verification at radius
-    IMG_HAM_MAX. Every step is integer-exact, so the oracle replays the
-    pixel grid, the 64 gradient bits, the bands, and the Hamming filter
-    from the raw text."""
-    media = multimodal.synthesize_gray_bmp(_t(spark, sf_dir, "documents"))
-    return multimodal.hamming_neardup(
-        multimodal.image_dhash(media), max_hamming=C.IMG_HAM_MAX
-    )
-
-
-def ex_image_dedup_apply(spark, sf_dir):
-    """Perceptual dedup APPLIED (closes the modality asymmetry — text had
-    pairs → clusters → drop set → surviving corpus, image stopped at
-    pairs): dHash Hamming pairs → connected components → drop
-    non-canonical members → per-source survivor summary. The corpus
-    scan is never shuffled (dedup_apply's routed anti-join shape); the
-    only non-dim exchanges touch the ~40 B/doc fingerprint table and
-    the pair/cluster frames."""
-    docs = _t(spark, sf_dir, "documents")
-    media = multimodal.synthesize_gray_bmp(docs)
-    return media_dedup_summary(
-        docs,
-        multimodal.hamming_neardup(multimodal.image_dhash(media), max_hamming=C.IMG_HAM_MAX),
-    )
-
-
-def ex_audio_dedup_apply(spark, sf_dir):
-    """Acoustic dedup APPLIED: envelope-fingerprint Hamming pairs →
-    connected components → drop set → per-source survivor summary, the
-    same shared pairs→clusters→apply tail as the image/text chains
-    (``dedup.apply_drop_set``). Corpus scan never shuffled."""
-    docs = _t(spark, sf_dir, "documents")
-    media = multimodal.synthesize_tone_wav(docs)
-    return media_dedup_summary(
-        docs,
-        multimodal.hamming_neardup(
-            multimodal.audio_envelope_hash(media), max_hamming=C.AUD_HAM_MAX
-        ),
-    )
-
-
-def ex_video_dedup_apply(spark, sf_dir):
-    """Video-shape dedup APPLIED: shared-keyframe pairs → connected
-    components → drop set → per-source survivor summary (the
-    ``apply_drop_set`` tail). Completes the modality symmetry — every
-    near-dup pairs source (text MinHash, substring, image, audio, video)
-    now ends in a deduplicated corpus."""
-    docs = _t(spark, sf_dir, "documents")
-    return media_dedup_summary(
-        docs,
-        multimodal.shared_frame_neardup(
-            multimodal.sample_frames(multimodal.attach_binary(docs))
-        ),
     )
 
 
@@ -961,40 +878,6 @@ def ex_image_neardup_wide(spark, sf_dir):
     return multimodal.hamming_neardup(
         multimodal.image_dhash(media), max_hamming=C.IMG_HAM_MAX, bucket_bands=2
     )
-
-
-def ex_video_neardup(spark, sf_dir):
-    """Video-shape near-dup (shared sampled keyframes): the keyframe
-    table from the frame-sampling stage (every 3rd 64-byte frame, md5 —
-    ex_multimodal_frames' plumbing) pairs documents sharing >=
-    VID_SHARED_FRAMES distinct frame hashes. Hot frames (document
-    frequency > VID_FRAME_DF_CAP) are dropped first — the same
-    hot-shingle guard as the text dedup pipeline — so candidate volume
-    stays linear. One hash-keyed equi-join + one pair-keyed count;
-    payload bytes are ASCII so the oracle computes the identical frames
-    in text space."""
-    media = multimodal.attach_binary(_t(spark, sf_dir, "documents"))
-    return multimodal.shared_frame_neardup(multimodal.sample_frames(media))
-
-
-def ex_audio_neardup(spark, sf_dir):
-    """Acoustic near-dup: synthesize REAL RIFF/WAVE containers from the
-    documents (first AUD_FP_SAMPLES codepoints as 8-bit PCM), fingerprint
-    each clip through the real decode path as energy-envelope gradient
-    signs (Haitsma-Kalker shape: 32 exact-integer window sums -> 31
-    bits), then the same banded Hamming join at radius AUD_HAM_MAX.
-    Integer-exact end to end; the oracle replays windows/bits/bands from
-    the raw text."""
-    media = multimodal.synthesize_tone_wav(_t(spark, sf_dir, "documents"))
-    return multimodal.hamming_neardup(
-        multimodal.audio_envelope_hash(media), max_hamming=C.AUD_HAM_MAX
-    )
-
-
-# --------------------------------------------------------------------------
-# Relational-analytics widening (rollup/pivot/percentiles/window/semi-join) —
-# the aggregation & window surface SURVEY §2.5 notes as absent-but-declared.
-# --------------------------------------------------------------------------
 
 
 def ex_rollup(spark, sf_dir):
@@ -1581,16 +1464,6 @@ def ex_disjunctive_revenue(spark, sf_dir):
     )
 
 
-def ex_bm25(spark, sf_dir):
-    """Okapi BM25 top-k retrieval for a fixed query-term set (the
-    relevance-mining pass of a curation pipeline): one doc_id-keyed token
-    shuffle, query-sized broadcast df table, micro-unit integer score
-    accumulation (exact in any partition order — the single ln rides the
-    ex_tfidf 6-dp precedent), TakeOrderedAndProject top-k. The oracle
-    replays the identical expression text."""
-    return text.bm25_topk(_t(spark, sf_dir, "documents"))
-
-
 def ex_tfidf(spark, sf_dir):
     """TF-IDF top-3 terms per document (doc_id < 50): token explode ->
     per-(doc, term) tf -> document-frequency join -> windowed top-k.
@@ -1766,28 +1639,6 @@ def ex_correlated_min(spark, sf_dir):
     )
 
 
-def ex_stratified_sample(spark, sf_dir):
-    """Deterministic stratified sampling: downsample English docs to 10%,
-    keep other languages at 50% (training-data language rebalancing)."""
-    from espkinesis_spark.functions import sampling
-
-    docs = _t(spark, sf_dir, "documents")
-    out = sampling.stratified_sample(
-        docs, "lang", rates={"en": 10}, default_pct=50, key_col="doc_id"
-    )
-    return out.select("doc_id", "lang", "source")
-
-
-def ex_hash_split(spark, sf_dir):
-    """Deterministic train/val/test routing by hash bucket; per-split,
-    per-language counts (the split audit a training pipeline reports)."""
-    from espkinesis_spark.functions import sampling
-
-    docs = _t(spark, sf_dir, "documents")
-    split = sampling.hash_split(docs, "doc_id", {"train": 90, "val": 5, "test": 5})
-    return split.groupBy("split", "lang").agg(F.count("*").alias("n"))
-
-
 def ex_label_centroids(spark, sf_dir):
     """Per-label embedding centroid (mean per dimension) + L2 norm — the
     class-prototype aggregation of an embedding pipeline. posexplode +
@@ -1915,18 +1766,11 @@ def ex_decontaminate_apply(spark, sf_dir):
     return dedup.survivor_summary(dedup.apply_drop_set(train, contaminated))
 
 
-def ex_pii_scrub(spark, sf_dir):
-    """PII redaction over a deterministically PII-augmented corpus
-    (``pii_augmented``) — the scrub path has real matches to find.
-    Zero-shuffle projection."""
-    return text.pii_scrub(pii_augmented(_t(spark, sf_dir, "documents")))
-
-
 def pii_augmented(docs: DataFrame) -> DataFrame:
     """The PII entries' input: the synthetic documents carry no
     addresses, so each doc gets an email and a long id derived from
     doc_id appended (same expression in the oracle). Per-row, so a
-    stream applies it at ingest (``jobs.pii_scrub_stream``)."""
+    stream applies it at ingest."""
     return docs.withColumn(
         "text",
         F.concat(
@@ -2119,15 +1963,6 @@ def ex_dedup_incremental(spark, sf_dir):
     )
 
 
-def ex_dedup_substring(spark, sf_dir):
-    """Exact-substring dedup APPLIED (Lee et al. 2022's rewrite —
-    ex_dup_spans is the report): tokens covered by non-first-occurrence
-    span windows are removed; emits per-doc surviving-token count and
-    the md5 of the rewritten content. One span-hash-keyed shuffle + one
-    (doc, pos)-keyed anti join + one doc-keyed rebuild."""
-    return dedup.dup_spans_apply(_t(spark, sf_dir, "documents"))
-
-
 def ex_chunk_docs(spark, sf_dir):
     """Overlapping character chunking with offsets + per-chunk md5 (RAG /
     context-window prep). Pure per-row fan-out, no shuffle."""
@@ -2244,8 +2079,6 @@ def ex_domain_mix(spark, sf_dir):
     """Temperature-scaled domain-mixture sampling (weights ∝ sqrt(n),
     deterministic md5-bucket quotas): per-source docs, mix weight,
     acceptance buckets and realized sample size."""
-    from espkinesis_spark.functions import sampling
-
     return sampling.domain_mix(_t(spark, sf_dir, "documents"))
 
 
@@ -2363,26 +2196,9 @@ def ex_sketch_quantile(spark, sf_dir):
     output is exact and partitioning-independent, so the sketch's
     internals never reach the result (same discipline as
     ex_heavy_hitters)."""
-    from espkinesis_spark.functions import quantiles
-
     return quantiles.sketch_quantiles(
         _t(spark, sf_dir, "lineitem"), "l_extendedprice"
     )
-
-
-def ex_hdr_quantile(spark, sf_dir):
-    """MERGEABLE quantile sketch (HdrHistogram log-bucketing) over
-    events.value — the streaming-capable complement to the exact-batch
-    ex_sketch_quantile: bucket counts merge by integer addition (order-
-    independent, bit-identical under any partitioning), sketch size is
-    bounded (<= 64·2^(HDR_SUB_BITS+1) buckets) at any data size, and the
-    reported bucket lower bound is guaranteed within relative
-    2^-HDR_SUB_BITS of the true order statistic. One scan + one
-    bucket-keyed map-side-partial shuffle; extraction is sketch-sized.
-    The oracle replays the integer bucketing/extraction exactly."""
-    from espkinesis_spark.functions import quantiles
-
-    return quantiles.hdr_sketch_quantiles(_t(spark, sf_dir, "events"), "value")
 
 
 def ex_hdr_quantile_grouped(spark, sf_dir):
@@ -2392,19 +2208,9 @@ def ex_hdr_quantile_grouped(spark, sf_dir):
     no single-partition stage at any group cardinality. Same integer
     bucketing/extraction as ex_hdr_quantile, replayed per group by the
     oracle."""
-    from espkinesis_spark.functions import quantiles
-
     return quantiles.hdr_grouped_quantiles(
         _t(spark, sf_dir, "events"), "value", "event_type"
     )
-
-
-def ex_quality_model(spark, sf_dir):
-    """Model-based quality scoring: hashed-feature linear classifier over
-    each document's tokens (the fasttext/logreg curation pass), as a
-    zero-shuffle projection with exact-integer weight sums so both
-    engines score bit-identically (see text.quality_model_score)."""
-    return text.quality_model_score(_t(spark, sf_dir, "documents"))
 
 
 def ex_token_entropy(spark, sf_dir):
@@ -2732,40 +2538,30 @@ def ex_ts_similarity(spark, sf_dir):
     )
 
 
-def ex_anomaly(spark, sf_dir):
-    """Windowed anomaly detection (the observability query a fleet
-    operator runs on the A6-style liveness stream): hourly event counts
-    per type z-scored against that type's own hourly distribution; hours
-    with |z| > 2 flagged. All statistics are exact-integer sums divided
-    once, so both engines compute bit-identical z-scores; constant series
-    (σ=0) are never flagged. Two partial-aggregating shuffles (the second
-    over type-sized data) + one broadcast join back. Scale bound: the
-    int64 Σn² stays exact while per-hour-per-type counts are < ~3e8 over
-    a year of hours; past that, compute the stats over a bounded trailing
-    window or cast the squared term to DECIMAL(38,0)."""
-    ev = _t(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("hr")
-    ).agg(F.count("*").cast("long").alias("n"))
-    return hourly_zscore_flags(hourly)
-
-
 def hourly_zscore_flags(hourly: DataFrame) -> DataFrame:
-    """z-score flagging over an (event_type, hr, n) hourly-count table —
-    shared by the batch (ex_anomaly) and streaming-lambda (st_anomaly)
-    entries. Exact integer sums; flags |round(z, 4)| > 2."""
-    stats = hourly.groupBy("event_type").agg(
-        F.sum("n").cast("long").alias("sn"),
-        F.sum(F.col("n") * F.col("n")).cast("long").alias("sn2"),
-        F.count("*").cast("long").alias("c"),
+    """Windowed anomaly detection over an (event_type, hr, n) hourly-count
+    table: each hour's count z-scored against its type's own hourly
+    distribution, |round(z, 4)| > 2 flagged; constant series (σ=0) are
+    never flagged. All statistics are exact-integer sums divided once,
+    so both engines compute bit-identical z-scores. Scale bound: the
+    int64 Σn² stays exact while per-hour-per-type counts are < ~3e8 over
+    a year of hours; past that, bound the stats window or cast the
+    squared term to DECIMAL(38,0)."""
+    w = Window.partitionBy("event_type")
+    stats = hourly.select(
+        "event_type",
+        "hr",
+        "n",
+        F.sum("n").over(w).cast("long").alias("sn"),
+        F.sum(F.col("n") * F.col("n")).over(w).cast("long").alias("sn2"),
+        F.count("*").over(w).cast("long").alias("c"),
     )
     mean = F.col("sn") / F.col("c")
     var = F.col("sn2") / F.col("c") - mean * mean
     std = F.sqrt(F.greatest(var, F.lit(0.0)))
     z = F.when(std == 0.0, F.lit(0.0)).otherwise((F.col("n") - mean) / std)
     return (
-        hourly.join(F.broadcast(stats), "event_type")
-        .select(
+        stats.select(
             "event_type",
             "hr",
             "n",
@@ -3374,22 +3170,11 @@ def ex_global_sales_opportunity(spark, sf_dir):
     )
 
 
-def ex_repetition_stats(spark, sf_dir):
-    """Gopher-style repetition signals (Rae et al. 2021 'repetitious
-    text' rules): per document, the duplicate word-trigram fraction and
-    the hottest trigram's repeat count. One (doc, shingle)-keyed partial
-    aggregation, then a doc-keyed map-side-combinable rollup; the ratio
-    is one double divide of exact counters. The drop verdict applies the
-    dup_frac > 0.1 rule."""
-    sh = dedup.shingles(_t(spark, sf_dir, "documents"), distinct=False)
-    return repetition_stats_from(sh)
-
-
 def repetition_stats_from(sh):
-    """ex_repetition_stats' rollup over an arbitrary (doc_id, s) trigram
-    frame — shared with the streaming leg, whose ingest projection
-    extracts exactly this shape (the dup_spans_tables extract/analyze
-    split). Exact counters all the way; one final divide."""
+    """Gopher-style repetition signals (Rae et al. 2021) over a
+    non-distinct (doc_id, s) trigram table: per document, the duplicate
+    trigram fraction and the hottest trigram's repeat count, dropped
+    when dup_frac > 0.1. Exact counters; one final divide."""
     per_gram = sh.groupBy("doc_id", "s").agg(F.count("*").alias("cnt"))
     return (
         per_gram.groupBy("doc_id")
@@ -3414,31 +3199,6 @@ def repetition_stats_from(sh):
     )
 
 
-def ex_asof_features(spark, sf_dir):
-    """Point-in-time feature join (the leakage-safe enrichment every
-    training pipeline needs): each event picks the user's most recent
-    order at-or-before the event time, within a 1-year lookback — never
-    a future order. Orders first reduce to one row per (custkey, day)
-    (max orderkey — the deterministic tie rule), then ride the as-of
-    composition: ONE user-keyed equi-join + re-aggregation on the event
-    primary key (operators.core.asof_last_match; Spark has no native
-    ASOF join). The match value is a composite day·2^44+orderkey bigint
-    so max() picks the LATEST day, not the largest key (2^44 leaves
-    headroom for ~1.7e13 order keys and ~500k days — no collision at
-    any realistic scale factor; 2^20 would already overflow at TPC-H
-    sf1's 1.5M orders); the oracle uses
-    DuckDB's native ASOF JOIN on the same reduced order table.
-
-    The event times are deterministically REBASED into the order-date
-    span first (prime-spread modulus — see asof_feature_frame): the
-    fixture's raw event clock (2024-01) sits entirely AFTER the last
-    order (2001-08), so without the rebase the 365-day lookback matches
-    zero rows and the parity evidence is vacuous (ADVICE r9). After the
-    rebase ~73% of events match and ~27% exercise the NULL leg."""
-    ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    return asof_feature_frame(spark, sf_dir, ev)
-
-
 def ex_asof_features_skew(spark, sf_dir):
     """ex_asof_features through the SKEW-SAFE kernel: the same
     point-in-time semantics, but matching runs as a cogrouped-pandas
@@ -3451,7 +3211,7 @@ def ex_asof_features_skew(spark, sf_dir):
     Outputs are identical by construction, so it shares ex_asof_features'
     oracle (plus a unit equivalence test against the join form)."""
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    return asof_feature_frame(spark, sf_dir, ev, matcher="pandas")
+    return asof_feature_frame(ev, spark, sf_dir, matcher="pandas")
 
 
 # Composite-value epoch: strictly BELOW any representable order date so
@@ -3461,11 +3221,19 @@ def ex_asof_features_skew(spark, sf_dir):
 _ASOF_EPOCH = "DATE '1992-01-01'"
 
 
-def asof_feature_frame(spark, sf_dir, ev, matcher="join"):
-    """ex_asof_features' composition over an arbitrary (event_id,
-    user_id, ts) frame — shared with the streaming leg, which drains the
-    event stream into exactly this shape, and with the skew-safe
-    cogrouped-pandas variant (``matcher='pandas'``).
+def asof_feature_frame(ev, spark, sf_dir, matcher="join"):
+    """Point-in-time feature join (the leakage-safe enrichment every
+    training pipeline needs) over an (event_id, user_id, ts) frame: each
+    event picks the user's most recent order at-or-before the event
+    time, within a 1-year lookback — never a future order. Orders first
+    reduce to one row per (custkey, day) (max orderkey — the
+    deterministic tie rule), then ride the as-of composition: one
+    user-keyed equi-join + re-aggregation on the event key
+    (``ops.asof_last_match``; Spark has no native ASOF join), or the
+    skew-safe cogrouped-pandas kernel (``matcher='pandas'``). The match
+    value is the composite day·2^44+orderkey, so max() picks the LATEST
+    day; 2^44 leaves room for ~1.7e13 order keys and ~500k days. The
+    oracle uses DuckDB's native ASOF JOIN on the same reduced table.
 
     The event clock is rebased into the order-date span: shifted ts =
     1995-06-01 + (epoch_seconds(ts)·1009 mod 190,000,000) seconds. The
@@ -3473,7 +3241,10 @@ def asof_feature_frame(spark, sf_dir, ev, matcher="join"):
     the full 1995–2001 order history (a plain modulus would land every
     event in the same month); 190 M seconds tops out at 2001-06, inside
     the last order date. Deterministic pure integer arithmetic, mirrored
-    exactly in the DuckDB oracle."""
+    exactly in the DuckDB oracle. Without the rebase the fixture's event
+    clock (2024-01) sits after the last order (2001-08) and the lookback
+    matches nothing; with it ~73% of events match and ~27% take the
+    NULL leg."""
     ev = ev.withColumn(
         "ts",
         F.expr(
@@ -3536,18 +3307,6 @@ def asof_feature_frame(spark, sf_dir, ev, matcher="join"):
     )
 
 
-def ex_winnow_fingerprint(spark, sf_dir):
-    """Winnowing near-dup candidates (Schleimer et al. 2003, the MOSS
-    fingerprint): per doc, trigram hashes in position order, the min
-    hash of each 4-window kept as a fingerprint (guarantee: any shared
-    run ≥ w+k−1 tokens shares a fingerprint), boilerplate fingerprints
-    df-capped, then candidate pairs = docs sharing ≥ 2 fingerprints.
-    One doc-keyed window pass + one fingerprint-keyed equi-join — never
-    all-pairs; the df cap bounds per-fingerprint fanout at corpus
-    scale."""
-    return dedup.winnow_candidates(_t(spark, sf_dir, "documents"))
-
-
 def ex_winnow_dedup_apply(spark, sf_dir):
     """Winnowing dedup APPLIED (the pairs → clusters → drop set →
     surviving corpus chain every other pairs source already ends in):
@@ -3557,7 +3316,9 @@ def ex_winnow_dedup_apply(spark, sf_dir):
     exchanges touch only the fingerprint table and the pair/cluster
     frames."""
     docs = _t(spark, sf_dir, "documents")
-    pairs = dedup.winnow_candidates(docs).select("doc_a", "doc_b")
+    pairs = dedup.winnow_candidates_from(dedup.winnow_fingerprints(docs)).select(
+        "doc_a", "doc_b"
+    )
     return dedup.survivor_summary(dedup.apply_pairs(docs, pairs))
 
 
@@ -3613,6 +3374,197 @@ def ex_range_join(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
+# Batch/stream twins: one declaration per batch entry whose streaming
+# replay shares its oracle.
+# --------------------------------------------------------------------------
+
+
+class Twin(NamedTuple):
+    """A batch entry and its streaming replay, declared once.
+
+    ``batch`` runs ``analyze(ingest(table), spark, sf_dir)``; ``stream``
+    (``jobs.twin_stream``) runs ``ingest`` over the replayed table and
+    ``analyze`` over the drained store. ``ingest`` is a stateless
+    per-row projection, or a complete-mode aggregate (``mode``) whose
+    state is key-sized. Its store takes the routed ``jobs._drain`` when
+    it holds at most one row per source row, else (``parquet``) the
+    executor-parallel ``jobs._drain_to_parquet``."""
+
+    name: str
+    table: str
+    ingest: Callable[[DataFrame], DataFrame | tuple[DataFrame, ...]]
+    analyze: Callable[[DataFrame, SparkSession, str], DataFrame] = lambda s, *_: s
+    parquet: bool = False
+    mode: str = "append"
+
+    def batch(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        return self.analyze(self.ingest(_t(spark, sf_dir, self.table)), spark, sf_dir)
+
+    def stream(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        return jobs.twin_stream(self, spark, sf_dir)
+
+
+def _media_apply(pairs):
+    """A media dedup-apply analyze: near-dup pairs over the fingerprint
+    store, applied to the landed documents table."""
+    return lambda store, spark, sf_dir: media_dedup_summary(
+        _t(spark, sf_dir, "documents"), pairs(store)
+    )
+
+
+def _image_hashes(docs):
+    return multimodal.image_dhash(multimodal.synthesize_gray_bmp(docs))
+
+
+def _audio_hashes(docs):
+    return multimodal.audio_envelope_hash(multimodal.synthesize_tone_wav(docs))
+
+
+def _video_frames(docs):
+    return multimodal.sample_frames(multimodal.attach_binary(docs))
+
+
+def _image_pairs(h, *_):
+    return multimodal.hamming_neardup(h, max_hamming=C.IMG_HAM_MAX)
+
+
+def _audio_pairs(h, *_):
+    return multimodal.hamming_neardup(h, max_hamming=C.AUD_HAM_MAX)
+
+
+TWINS = {
+    t.name: t
+    for t in (
+        # Hourly counts per type: complete-mode state is types x hours,
+        # calendar-sized. The z-scores are a second aggregation level,
+        # which one streaming query cannot hold, so they run on the
+        # drained snapshot.
+        Twin(
+            "anomaly",
+            "events",
+            lambda ev: ev.groupBy(
+                "event_type", F.date_trunc("hour", F.col("ts")).alias("hr")
+            ).agg(F.count("*").cast("long").alias("n")),
+            lambda h, *_: hourly_zscore_flags(h),
+            mode="complete",
+        ),
+        # CCNet terciles (Wenzek et al. 2020) under the corpus-trained
+        # bigram LM; the LM is corpus-global, so it trains on the store.
+        Twin(
+            "perplexity_buckets",
+            "documents",
+            text.bigram_rows,
+            lambda rows, *_: text.perplexity_buckets_from(text.bigram_score(rows)),
+            parquet=True,
+        ),
+        Twin(
+            "stratified_sample",
+            "documents",
+            lambda d: sampling.stratified_sample(
+                d, "lang", rates={"en": 10}, default_pct=50, key_col="doc_id"
+            ).select("doc_id", "lang", "source"),
+        ),
+        # The per-(split, lang) audit folds into the stream as
+        # complete-mode state of splits x langs rows, so no per-doc row
+        # reaches the driver.
+        Twin(
+            "hash_split",
+            "documents",
+            lambda d: sampling.hash_split(d, "doc_id", {"train": 90, "val": 5, "test": 5})
+            .groupBy("split", "lang")
+            .agg(F.count("*").cast("long").alias("n")),
+            mode="complete",
+        ),
+        # HDR bucket counts merge by integer addition, so the drained
+        # sketch equals the batch sketch for any micro-batch split.
+        Twin(
+            "hdr_quantile",
+            "events",
+            lambda ev: quantiles.hdr_buckets(ev, "value"),
+            lambda b, *_: quantiles.hdr_quantiles(b.localCheckpoint(eager=True)),
+            mode="complete",
+        ),
+        # Exact-substring dedup (Lee et al. 2022): the span-hash and token
+        # tables drain as two parquet stores.
+        Twin(
+            "dedup_substring",
+            "documents",
+            dedup.dup_spans_tables,
+            lambda t, *_: dedup.dup_spans_apply_from(*t),
+            parquet=True,
+        ),
+        Twin("image_dedup_apply", "documents", _image_hashes, _media_apply(_image_pairs)),
+        Twin("audio_dedup_apply", "documents", _audio_hashes, _media_apply(_audio_pairs)),
+        # several keyframe rows per document: past _drain's
+        # one-row-per-source-row bound, so always the parquet drain
+        Twin(
+            "video_dedup_apply",
+            "documents",
+            _video_frames,
+            _media_apply(multimodal.shared_frame_neardup),
+            parquet=True,
+        ),
+        Twin(
+            "bm25",
+            "documents",
+            text.bm25_tokens,
+            lambda t, *_: text.bm25_from_tokens(t),
+            parquet=True,
+        ),
+        # shingles without the distinct, which on a stream would be
+        # update-mode state; the store is deduplicated after the drain
+        Twin(
+            "containment_dedup",
+            "documents",
+            lambda d: dedup.shingles(d, distinct=False),
+            lambda sh, *_: dedup.containment_from_shingles(sh.distinct()),
+            parquet=True,
+        ),
+        Twin("image_neardup", "documents", _image_hashes, _image_pairs),
+        Twin("audio_neardup", "documents", _audio_hashes, _audio_pairs),
+        Twin(
+            "video_neardup",
+            "documents",
+            _video_frames,
+            lambda fr, *_: multimodal.shared_frame_neardup(fr),
+            parquet=True,
+        ),
+        Twin("quality_model", "documents", text.quality_model_score),
+        Twin(
+            "lang_id",
+            "documents",
+            lambda d: text.lang_id(d).select("doc_id", "lang_pred"),
+        ),
+        Twin("pii_scrub", "documents", lambda d: text.pii_scrub(pii_augmented(d))),
+        Twin("text_stats", "documents", text.text_stats),
+        Twin(
+            "winnow_fingerprint",
+            "documents",
+            dedup.winnow_fingerprints,
+            lambda fp, *_: dedup.winnow_candidates_from(fp),
+            parquet=True,
+        ),
+        # the as-of re-aggregation would be event-keyed state in a stream,
+        # so the event triples drain and the join runs on the store
+        Twin(
+            "asof_features",
+            "events",
+            lambda ev: ev.select("event_id", "user_id", "ts"),
+            asof_feature_frame,
+            parquet=True,
+        ),
+        Twin(
+            "repetition_stats",
+            "documents",
+            lambda d: dedup.shingles(d, distinct=False),
+            lambda sh, *_: repetition_stats_from(sh),
+            parquet=True,
+        ),
+    )
+}
+
+
+# --------------------------------------------------------------------------
 
 
 def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -3628,19 +3580,19 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # --- window 1-16: the 16 remaining r11-green entries (r15 VERDICT mandate #1, first-green order) ---
         "ex_token_entropy": ex_token_entropy,
         "ex_ts_similarity": ex_ts_similarity,
-        "st_anomaly": jobs.anomaly_stream,
+        "st_anomaly": TWINS["anomaly"].stream,
         "st_console_roundtrip": jobs.console_roundtrip_stream,
         "st_heavy_hitters": jobs.heavy_hitters_stream,
         "st_quality_gate": jobs.quality_gate_stream,
-        "st_quality_model": jobs.quality_model_stream,
-        "ex_audio_neardup": ex_audio_neardup,
-        "st_audio_neardup": jobs.audio_neardup_stream,
-        "st_image_neardup": jobs.image_neardup_stream,
-        "st_video_neardup": jobs.video_neardup_stream,
-        "st_audio_dedup_apply": jobs.audio_dedup_apply_stream,
-        "st_image_dedup_apply": jobs.image_dedup_apply_stream,
-        "st_video_dedup_apply": jobs.video_dedup_apply_stream,
-        "st_hash_split": jobs.hash_split_stream,
+        "st_quality_model": TWINS["quality_model"].stream,
+        "ex_audio_neardup": TWINS["audio_neardup"].batch,
+        "st_audio_neardup": TWINS["audio_neardup"].stream,
+        "st_image_neardup": TWINS["image_neardup"].stream,
+        "st_video_neardup": TWINS["video_neardup"].stream,
+        "st_audio_dedup_apply": TWINS["audio_dedup_apply"].stream,
+        "st_image_dedup_apply": TWINS["image_dedup_apply"].stream,
+        "st_video_dedup_apply": TWINS["video_dedup_apply"].stream,
+        "st_hash_split": TWINS["hash_split"].stream,
         "st_zorder_layout": jobs.zorder_shard_stream,
         # --- window 17-50: the 34 oldest r12-green entries (first-green r1/r2/r3 + three r5) ---
         "dq04": dq04,
@@ -3649,8 +3601,8 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dq21": dq21,
         "dq22": dq22,
         "ex_cube": ex_cube,
-        "ex_lang_id": ex_lang_id,
-        "ex_text_stats": ex_text_stats,
+        "ex_lang_id": TWINS["lang_id"].batch,
+        "ex_text_stats": TWINS["text_stats"].batch,
         "ex_token_count": ex_token_count,
         "dq02": dq02,
         "dq09": dq09,
@@ -3661,7 +3613,7 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ex_dedup_pipeline": ex_dedup_pipeline,
         "ex_fuzzy_match": ex_fuzzy_match,
         "ex_gapfill": ex_gapfill,
-        "ex_hash_split": ex_hash_split,
+        "ex_hash_split": TWINS["hash_split"].batch,
         "ex_histogram": ex_histogram,
         "ex_multimodal_features": ex_multimodal_features,
         "ex_multimodal_frames": ex_multimodal_frames,
@@ -3673,7 +3625,7 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ex_scd2_history": ex_scd2_history,
         "ex_semantic_search": ex_semantic_search,
         "ex_skew_join": ex_skew_join,
-        "ex_stratified_sample": ex_stratified_sample,
+        "ex_stratified_sample": TWINS["stratified_sample"].batch,
         "ex_ann_ivf_trained": ex_ann_ivf_trained,
         "ex_ann_recall": ex_ann_recall,
         "ex_array_agg": ex_array_agg,
@@ -3684,14 +3636,14 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ex_date_funcs": ex_date_funcs,
         "ex_dedup_apply": ex_dedup_apply,
         "ex_dedup_incremental": ex_dedup_incremental,
-        "ex_dedup_substring": ex_dedup_substring,
+        "ex_dedup_substring": TWINS["dedup_substring"].batch,
         "ex_embed_gram": ex_embed_gram,
-        "ex_image_neardup": ex_image_neardup,
-        "ex_video_neardup": ex_video_neardup,
+        "ex_image_neardup": TWINS["image_neardup"].batch,
+        "ex_video_neardup": TWINS["video_neardup"].batch,
         "ex_ann_filtered": ex_ann_filtered,
-        "ex_audio_dedup_apply": ex_audio_dedup_apply,
-        "ex_bm25": ex_bm25,
-        "ex_containment_dedup": ex_containment_dedup,
+        "ex_audio_dedup_apply": TWINS["audio_dedup_apply"].batch,
+        "ex_bm25": TWINS["bm25"].batch,
+        "ex_containment_dedup": TWINS["containment_dedup"].batch,
         "ex_decontaminate_apply": ex_decontaminate_apply,
         "ex_zrange_bigmin": ex_zrange_bigmin,
         # --- tail: r13-green ---
@@ -3700,21 +3652,21 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ex_embed_quantize": ex_embed_quantize,
         "ex_exists_shipped": ex_exists_shipped,
         "ex_group_concat": ex_group_concat,
-        "ex_hdr_quantile": ex_hdr_quantile,
+        "ex_hdr_quantile": TWINS["hdr_quantile"].batch,
         "ex_hdr_quantile_grouped": ex_hdr_quantile_grouped,
-        "ex_image_dedup_apply": ex_image_dedup_apply,
+        "ex_image_dedup_apply": TWINS["image_dedup_apply"].batch,
         "ex_image_neardup_incr": ex_image_neardup_incr,
         "ex_image_neardup_wide": ex_image_neardup_wide,
         "ex_part_promotion": ex_part_promotion,
         "ex_semdedup_apply": ex_semdedup_apply,
         "ex_ship_priority_counts": ex_ship_priority_counts,
         "ex_small_qty_revenue": ex_small_qty_revenue,
-        "ex_video_dedup_apply": ex_video_dedup_apply,
+        "ex_video_dedup_apply": TWINS["video_dedup_apply"].batch,
         "ex_waiting_orders": ex_waiting_orders,
-        "st_bm25": jobs.bm25_stream,
-        "st_containment_dedup": jobs.containment_stream,
-        "st_dedup_substring": jobs.dedup_substring_stream,
-        "st_hdr_quantile": jobs.hdr_quantile_stream,
+        "st_bm25": TWINS["bm25"].stream,
+        "st_containment_dedup": TWINS["containment_dedup"].stream,
+        "st_dedup_substring": TWINS["dedup_substring"].stream,
+        "st_hdr_quantile": TWINS["hdr_quantile"].stream,
         "ex_grouping_sets": ex_grouping_sets,
         "ex_neardup_jaccard": ex_neardup_jaccard,
         "ex_rollup": ex_rollup,
@@ -3729,7 +3681,7 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ex_label_centroids": ex_label_centroids,
         "ex_map_funcs": ex_map_funcs,
         "ex_null_logic": ex_null_logic,
-        "ex_pii_scrub": ex_pii_scrub,
+        "ex_pii_scrub": TWINS["pii_scrub"].batch,
         "ex_promo_share": ex_promo_share,
         "ex_quality_filter": ex_quality_filter,
         "ex_rank_funcs": ex_rank_funcs,
@@ -3755,15 +3707,15 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ex_pricing_summary": ex_pricing_summary,
         "ex_product_profit": ex_product_profit,
         "ex_range_join": ex_range_join,
-        "ex_repetition_stats": ex_repetition_stats,
+        "ex_repetition_stats": TWINS["repetition_stats"].batch,
         "ex_returned_items": ex_returned_items,
         "ex_top_supplier": ex_top_supplier,
         "ex_winnow_dedup_apply": ex_winnow_dedup_apply,
-        "ex_winnow_fingerprint": ex_winnow_fingerprint,
-        "st_lang_id": jobs.lang_id_stream,
-        "st_pii_scrub": jobs.pii_scrub_stream,
-        "st_text_stats": jobs.text_stats_stream,
-        "st_winnow_fingerprint": jobs.winnow_stream,
+        "ex_winnow_fingerprint": TWINS["winnow_fingerprint"].batch,
+        "st_lang_id": TWINS["lang_id"].stream,
+        "st_pii_scrub": TWINS["pii_scrub"].stream,
+        "st_text_stats": TWINS["text_stats"].stream,
+        "st_winnow_fingerprint": TWINS["winnow_fingerprint"].stream,
         "dq18": dq18,
         "ex_ann_ivf": ex_ann_ivf,
         "ex_ann_lsh": ex_ann_lsh,
@@ -3778,7 +3730,7 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ex_except": ex_except,
         "ex_dup_spans": ex_dup_spans,
         "ex_frame_decode": ex_frame_decode,
-        "ex_anomaly": ex_anomaly,
+        "ex_anomaly": TWINS["anomaly"].batch,
         "ex_bigram_logprob": ex_bigram_logprob,
         "ex_bpe_encode": ex_bpe_encode,
         "ex_bpe_train": ex_bpe_train,
@@ -3791,10 +3743,10 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ex_label_prop": ex_label_prop,
         "ex_normalize_text": ex_normalize_text,
         "ex_pagerank": ex_pagerank,
-        "ex_quality_model": ex_quality_model,
+        "ex_quality_model": TWINS["quality_model"].batch,
         "ex_retention": ex_retention,
-        "ex_asof_features": ex_asof_features,
-        "st_asof_features": jobs.asof_features_stream,
+        "ex_asof_features": TWINS["asof_features"].batch,
+        "st_asof_features": TWINS["asof_features"].stream,
         "ex_ann_ivfpq": ex_ann_ivfpq,
         # --- tail: r15-green (the r15 window, freshest last) ---
         "ex_ann_pq": ex_ann_pq,
@@ -3805,14 +3757,14 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ex_knn_clusters": ex_knn_clusters,
         "ex_knn_dedup_apply": ex_knn_dedup_apply,
         "ex_knn_graph": ex_knn_graph,
-        "ex_perplexity_buckets": ex_perplexity_buckets,
+        "ex_perplexity_buckets": TWINS["perplexity_buckets"].batch,
         "ex_session_funnel": ex_session_funnel,
         "ex_token_budget_mix": ex_token_budget_mix,
         "ex_zorder_layout": ex_zorder_layout,
         "ex_zrange_query": ex_zrange_query,
-        "st_perplexity_buckets": jobs.perplexity_buckets_stream,
-        "st_repetition_stats": jobs.repetition_stats_stream,
-        "st_stratified_sample": jobs.stratified_sample_stream,
+        "st_perplexity_buckets": TWINS["perplexity_buckets"].stream,
+        "st_repetition_stats": TWINS["repetition_stats"].stream,
+        "st_stratified_sample": TWINS["stratified_sample"].stream,
         "dq05": dq05,
         "dq06": dq06,
         "dq13": dq13,

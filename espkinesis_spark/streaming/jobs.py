@@ -3,21 +3,27 @@
 Each job replays a test table as a file stream with
 ``trigger(availableNow=True)`` and drains the result back as a batch
 DataFrame, so the driver's correctness gate checks streaming semantics
-against the same DuckDB oracles as the batch queries, e.g.:
+against the same DuckDB oracles as the batch queries.
 
-  * latest_per_user_stream  == DQ-07 (last-value-per-key, A2/A3)
-  * window_counts_stream    == hourly tumbling counts (A4/T3 analog)
-  * override_asof_stream    == DQ-09 (stateful as-of, A5) via
-    applyInPandasWithState over hash buckets of the user
+Most ``st_*`` entries are the streaming form of a batch entry declared
+once as a ``queries.Twin``: a source table, a stateless ingest (or a
+complete-mode aggregate), an analyze over the drained store, and the
+drain that store takes. ``twin_stream`` runs
+``analyze(drain(ingest(_table_stream(table))))``; the batch entry runs
+``analyze(ingest(table))``. The 16 jobs written out below share no
+ingest and analyze with a batch entry of the same oracle: windows and
+sessions, the stateful as-of, joins, dedup and vocab state, the command
+plane, the sink round-trips, and heavy hitters, whose batch entry is
+Misra-Gries.
 
-``queries.registry()`` maps each ``st_*`` name straight to its job here.
 Every drain runs one query lifecycle, ``_replay``: stop a same-named
 active query, pin ``_state_layout``, start with availableNow, wait,
-record the plan. ``_drain`` picks the sink of every other leg by one
-rule on the source table's parquet footers: above either source bound
-the parquet drain, otherwise the memory sink. Corpus-sized stores call
-``_drain_to_parquet`` directly. The two round-trip jobs start their
-queries through the ``sinks`` K1/K3 constructors.
+record the plan. ``_drain`` picks the sink of a store with at most one
+row per source row by one rule on the source table's parquet footers:
+above either source bound the parquet drain, otherwise the memory sink.
+Corpus-sized stores call ``_drain_to_parquet`` directly. The two
+round-trip jobs start their queries through the ``sinks`` K1/K3
+constructors.
 """
 
 from __future__ import annotations
@@ -70,14 +76,6 @@ def _table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _ensure_symlink(src_file, os.path.join(stream_dir, f"{name}.parquet"))
     raw = spark.readStream.schema(disk_schema(src_file, name)).parquet(stream_dir)
     return _normalize_timestamps(raw, name)
-
-
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _table_stream(spark, sf_dir, "events")
-
-
-def _documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _table_stream(spark, sf_dir, "documents")
 
 
 # Executed micro-batch physical plans, keyed by query name — recorded at
@@ -426,10 +424,25 @@ def _rows_of(files: list[str]) -> int:
     return total
 
 
+def twin_stream(twin, spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The streaming entry of a ``queries.Twin``: its batch entry's own
+    ingest over the replayed table, drained, then its analyze over the
+    store. A tuple ingest drains one parquet store per frame."""
+    out = twin.ingest(_table_stream(spark, sf_dir, twin.table))
+    sink = f"st_{twin.name}_sink"
+    if not twin.parquet:
+        store = _drain(out, sink, table_path(sf_dir, twin.table), twin.mode)
+    elif isinstance(out, tuple):
+        store = tuple(_drain_to_parquet(o, f"{sink}{i}") for i, o in enumerate(out))
+    else:
+        store = _drain_to_parquet(out, sink)
+    return twin.analyze(store, spark, sf_dir)
+
+
 def latest_per_user_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming A2/A3: last event per user via max_by aggregation
     (complete mode). Ties on ts break by event_id, matching DQ-07."""
-    src = _events_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "events")
     agg = src.groupBy("user_id").agg(
         F.expr("max_by(struct(event_type, value), struct(ts, event_id))").alias("m")
     )
@@ -439,7 +452,7 @@ def latest_per_user_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def window_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming A4/T3: tumbling 1h snapshot counts per event type."""
-    src = _events_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "events")
     agg = src.groupBy(F.window("ts", "1 hour").alias("win"), "event_type").agg(
         F.count("*").alias("n")
     )
@@ -454,7 +467,7 @@ def override_asof_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     files = _source_files(events)
     # built under the same layout _drain starts it with
     with _state_layout(spark, _rows_of(files) if files else None):
-        out = st.asof_override(_events_stream(spark, sf_dir))
+        out = st.asof_override(_table_stream(spark, sf_dir, "events"))
     return _drain(out, "st_override_asof_sink", events)
 
 
@@ -464,7 +477,7 @@ def session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     when the key goes quiet for the gap. ``session_window`` merges while
     ``next_ts < prev_ts + gap`` (window end exclusive), so the batch oracle
     breaks sessions on ``diff >= gap``."""
-    src = _events_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "events")
     agg = src.groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id").agg(
         F.count("*").alias("n"), F.max("event_id").alias("last_event")
     )
@@ -477,7 +490,7 @@ def session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sliding_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding event-time windows (1 h long, 30 min slide) per event type —
     every event lands in exactly two windows."""
-    src = _events_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "events")
     agg = src.groupBy(F.window("ts", "1 hour", "30 minutes").alias("win"), "event_type").agg(
         F.count("*").alias("n")
     )
@@ -492,235 +505,10 @@ def content_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature set (deterministic regardless of which doc wins a bucket)."""
     from espkinesis_spark.functions import dedup
 
-    src = _documents_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "documents")
     signed = dedup.simhash(src)  # mapInPandas works on streaming DataFrames
     out = signed.dropDuplicates(["simhash"]).select("simhash")
     return _drain(out, "st_content_dedup_sink", table_path(sf_dir, "documents"))
-
-
-def image_neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming perceptual image dedup — the production lambda: the
-    dHash fingerprint is extracted AT INGEST (synthesize + real-BMP
-    decode + hash as a STATELESS zero-state append projection — Arrow
-    kernels run on the stream, so fingerprinting keeps up at any
-    ingest rate and the corpus payload is touched exactly once), the
-    fingerprint rows land in the store, and the banded Hamming
-    candidate join + exact verify run over the drained fingerprint
-    store (the anomaly/heavy-hitters drain-then-analyze split:
-    Structured Streaming cannot run the self-join + aggregation level
-    in-query). The snapshot equals the batch hash table, so
-    ex_image_neardup's oracle is exact."""
-    from espkinesis_spark.functions import common as C
-    from espkinesis_spark.functions.multimodal import (
-        hamming_neardup,
-        image_dhash,
-        synthesize_gray_bmp,
-    )
-
-    src = _documents_stream(spark, sf_dir)
-    hashes = image_dhash(synthesize_gray_bmp(src))
-    store = _drain(hashes, "st_image_neardup_sink", table_path(sf_dir, "documents"))
-    return hamming_neardup(store, max_hamming=C.IMG_HAM_MAX)
-
-
-def dedup_substring_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming exact-substring dedup (the Lee et al. 2022 rewrite as a
-    lambda): BOTH narrow extraction tables — span hashes and positioned
-    tokens — are computed AT INGEST as stateless append projections (the
-    document payload is touched exactly once, on arrival), and the
-    global analysis (first-occurrence window, overlap-merged cuts,
-    anti-join rebuild) runs over the drained stores. The drained tables
-    equal the batch extraction, so ex_dedup_substring's oracle is
-    exact."""
-    from espkinesis_spark.functions import dedup
-
-    src = _documents_stream(spark, sf_dir)
-    occ, tok = dedup.dup_spans_tables(src)
-    # the token store feeds two analysis branches (totals + kept) — a
-    # memory-sink view cannot appear twice in one plan (the st_anomaly
-    # hazard), so freeze both snapshots
-    # corpus-sized stores -> parquet drains (executor-parallel; a
-    # file-backed frame can also feed both analysis branches without the
-    # memory-sink twice-in-plan hazard)
-    occ_store = _drain_to_parquet(occ, "st_dedup_substring_occ_sink")
-    tok_store = _drain_to_parquet(tok, "st_dedup_substring_tok_sink")
-    return dedup.dup_spans_apply_from(occ_store, tok_store)
-
-
-def image_dedup_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The streaming leg of the CLOSED perceptual dedup chain:
-    fingerprints at ingest (stateless append dHash projection — the
-    st_image_neardup front), then pairs → connected components → drop
-    set over the drained fingerprint store, and the anti-join apply
-    against the landed corpus (the batch documents table — in the
-    lambda, the ingested store itself). The drained hash table equals
-    the batch one, so ex_image_dedup_apply's oracle is exact."""
-    from espkinesis_spark.functions import common as C
-    from espkinesis_spark.functions.multimodal import (
-        hamming_neardup,
-        image_dhash,
-        synthesize_gray_bmp,
-    )
-    from espkinesis_spark.queries import media_dedup_summary
-    from espkinesis_spark.tables import load_table
-
-    src = _documents_stream(spark, sf_dir)
-    hashes = image_dhash(synthesize_gray_bmp(src))
-    store = _drain(hashes, "st_image_dedup_apply_sink", table_path(sf_dir, "documents"))
-    return media_dedup_summary(
-        load_table(spark, sf_dir, "documents"),
-        hamming_neardup(store, max_hamming=C.IMG_HAM_MAX),
-    )
-
-
-def bm25_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming BM25 retrieval: the (doc_id, term) extraction computed
-    AT INGEST (stateless append fan-out — the payload is tokenized once,
-    on arrival), scoring over the drained token store. The drained table
-    equals the batch extraction, so ex_bm25's oracle is exact."""
-    from espkinesis_spark.functions import text as T
-
-    src = _documents_stream(spark, sf_dir)
-    tok = T.bm25_tokens(src)
-    # corpus-sized store -> parquet drain (executor-parallel, the durable
-    # production shape); no localCheckpoint needed — a file-backed frame
-    # can appear in many plan branches
-    store = _drain_to_parquet(tok, "st_bm25_sink")
-    return T.bm25_from_tokens(store)
-
-
-def audio_dedup_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming acoustic dedup APPLIED: envelope fingerprints at ingest,
-    pairs -> clusters -> drop set over the drained store, routed
-    anti-join against the landed corpus. Shares ex_audio_dedup_apply's
-    oracle."""
-    from espkinesis_spark.functions import common as C
-    from espkinesis_spark.functions.multimodal import (
-        audio_envelope_hash,
-        hamming_neardup,
-        synthesize_tone_wav,
-    )
-    from espkinesis_spark.queries import media_dedup_summary
-    from espkinesis_spark.tables import load_table
-
-    src = _documents_stream(spark, sf_dir)
-    hashes = audio_envelope_hash(synthesize_tone_wav(src))
-    store = _drain(hashes, "st_audio_dedup_apply_sink", table_path(sf_dir, "documents"))
-    return media_dedup_summary(
-        load_table(spark, sf_dir, "documents"),
-        hamming_neardup(store, max_hamming=C.AUD_HAM_MAX),
-    )
-
-
-def video_dedup_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming video-shape dedup APPLIED: keyframe hashes at ingest,
-    shared-frame pairs -> clusters -> drop set over the drained store,
-    routed anti-join against the landed corpus. Shares
-    ex_video_dedup_apply's oracle."""
-    from espkinesis_spark.functions.multimodal import (
-        attach_binary,
-        sample_frames,
-        shared_frame_neardup,
-    )
-    from espkinesis_spark.queries import media_dedup_summary
-    from espkinesis_spark.tables import load_table
-
-    src = _documents_stream(spark, sf_dir)
-    frames = sample_frames(attach_binary(src))
-    # several keyframe rows PER document (sample_frames explodes the
-    # payload) — the corpus-sized class _drain never routes, so this
-    # store always takes the executor-parallel parquet drain
-    store = _drain_to_parquet(frames, "st_video_dedup_apply_sink")
-    return media_dedup_summary(
-        load_table(spark, sf_dir, "documents"), shared_frame_neardup(store)
-    )
-
-
-def containment_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Broder-containment near-dup: the shingle fan-out runs at
-    ingest WITHOUT the distinct (a streaming distinct is update-mode
-    state; the raw fan-out is a stateless append projection), the
-    corpus-sized shingle store drains through the parquet sink, and the
-    post-drain distinct + containment scoring equal the batch chain —
-    shares ex_containment_dedup's oracle."""
-    from espkinesis_spark.functions import dedup
-
-    src = _documents_stream(spark, sf_dir)
-    sh = dedup.shingles(src, distinct=False)
-    store = _drain_to_parquet(sh, "st_containment_sink")
-    return dedup.containment_from_shingles(store.distinct())
-
-
-def audio_neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming acoustic near-dup: the image_neardup_stream lambda with
-    the WAV energy-envelope fingerprint (see image_neardup_stream for
-    the ingest/drain split rationale). Shares ex_audio_neardup's
-    oracle."""
-    from espkinesis_spark.functions import common as C
-    from espkinesis_spark.functions.multimodal import (
-        audio_envelope_hash,
-        hamming_neardup,
-        synthesize_tone_wav,
-    )
-
-    src = _documents_stream(spark, sf_dir)
-    hashes = audio_envelope_hash(synthesize_tone_wav(src))
-    store = _drain(hashes, "st_audio_neardup_sink", table_path(sf_dir, "documents"))
-    return hamming_neardup(store, max_hamming=C.AUD_HAM_MAX)
-
-
-def video_neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming video-shape near-dup: keyframe hashes extracted at
-    ingest (stateless append projection), the shared-frame pairing with
-    its hot-frame df cap over the drained keyframe store. Shares
-    ex_video_neardup's oracle."""
-    from espkinesis_spark.functions.multimodal import (
-        attach_binary,
-        sample_frames,
-        shared_frame_neardup,
-    )
-
-    src = _documents_stream(spark, sf_dir)
-    frames = sample_frames(attach_binary(src))
-    # several keyframe rows per document — always the parquet drain
-    # (_drain's source bounds assume at most one row per source row)
-    store = _drain_to_parquet(frames, "st_video_neardup_sink")
-    return shared_frame_neardup(store)
-
-
-def anomaly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming observability lambda: hourly per-type event counts
-    maintained incrementally on the stream (complete-mode aggregation —
-    state is one row per (type, hour), calendar-sized, not event-sized),
-    then the z-score flagging applied in BATCH over the drained snapshot.
-    The aggregate-online / analyze-on-snapshot split exists because
-    Structured Streaming forbids the second (stats-over-counts) level of
-    aggregation in one query; the snapshot equals the batch hourly table,
-    so ex_anomaly's oracle is exact.
-
-    State retention bound: complete-mode state here is exactly
-    |event types| x |distinct hours seen| rows (the replay test asserts
-    the state-store row count equals that product's realized size). Event
-    types are a small fixed vocabulary, so state grows only with the
-    CALENDAR — ~9k rows/type/year — not with event volume; a 100 TB/day
-    stream adds zero state beyond its new hours. If the deployment ever
-    needs unbounded-calendar retention, the switch is update mode + a
-    watermark on ``hr`` with the stats window bounded to the trailing N
-    hours; for the z-score-over-observed-history semantics this entry
-    declares, calendar-sized complete mode is the honest minimal state.
-    """
-    from espkinesis_spark.queries import hourly_zscore_flags
-
-    src = _events_stream(spark, sf_dir)
-    agg = src.groupBy(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("hr")
-    ).agg(F.count("*").cast("long").alias("n"))
-    counts = _drain(agg, "st_anomaly_sink", table_path(sf_dir, "events"), "complete")
-    # the flagging self-joins the snapshot (stats side + probe side); a
-    # memory-sink view can't appear twice in one plan (conflicting expr
-    # ids), so freeze the calendar-sized table first
-    counts = counts.localCheckpoint(eager=True)
-    return hourly_zscore_flags(counts)
 
 
 def quality_gate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -731,158 +519,9 @@ def quality_gate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate; it shares one oracle with the batch gate."""
     from espkinesis_spark.functions.text import quality_gate_stateless
 
-    src = _documents_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "documents")
     out = quality_gate_stateless(src)
     return _drain(out, "st_quality_gate_sink", table_path(sf_dir, "documents"))
-
-
-def quality_model_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming model-based quality scoring: the hashed-feature linear
-    classifier applied to documents AS THEY ARRIVE — like the rule gate
-    (quality_gate_stream) it is a STATELESS zero-state append-mode
-    projection, so the scorer keeps up at any ingest rate; scores equal
-    the batch pass exactly (exact-integer weight sums), one oracle."""
-    from espkinesis_spark.functions.text import quality_model_score
-
-    src = _documents_stream(spark, sf_dir)
-    out = quality_model_score(src)
-    return _drain(out, "st_quality_model_sink", table_path(sf_dir, "documents"))
-
-
-def winnow_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming winnowing near-dup: the fingerprint projection is a
-    ZERO-SHUFFLE stateless transform (array window-minima per row), so
-    it runs at ingest rate on the stream; the ~|tokens|/w-sized
-    fingerprint store drains through the executor-parallel parquet sink
-    (corpus-proportional — the st_bm25 drain rule), and the df-capped
-    candidate join runs over the drained store. Snapshot equals the
-    batch fingerprint table; shares ex_winnow_fingerprint's oracle."""
-    from espkinesis_spark.functions.dedup import (
-        winnow_candidates_from,
-        winnow_fingerprints,
-    )
-
-    src = _documents_stream(spark, sf_dir)
-    fp = winnow_fingerprints(src)
-    store = _drain_to_parquet(fp, "st_winnow_sink")
-    return winnow_candidates_from(store)
-
-
-def repetition_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Gopher repetition stats: the trigram projection
-    (non-distinct shingles — distinct would force update-mode state) is
-    stateless, so it runs at ingest rate; the gram store drains through
-    the executor-parallel parquet sink (corpus-proportional — the
-    st_bm25 drain rule), and the exact-counter rollup + divide run over
-    the drained store. Shares ex_repetition_stats' oracle."""
-    from espkinesis_spark import queries
-    from espkinesis_spark.functions import dedup
-
-    src = _documents_stream(spark, sf_dir)
-    sh = dedup.shingles(src, distinct=False)
-    store = _drain_to_parquet(sh, "st_repetition_sink")
-    return queries.repetition_stats_from(store)
-
-
-def asof_features_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming point-in-time enrichment: events land from the stream
-    into the durable store (stateless append passthrough — the as-of
-    re-aggregation would be event-keyed update-mode state in-query, so
-    the lambda splits drain from analysis), then the shared as-of
-    composition joins the drained events against the batch orders
-    dimension. Shares ex_asof_features' oracle."""
-    from espkinesis_spark import queries
-
-    ev = _events_stream(spark, sf_dir).select("event_id", "user_id", "ts")
-    store = _drain_to_parquet(ev, "st_asof_sink")
-    return queries.asof_feature_frame(spark, sf_dir, store)
-
-
-def lang_id_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming language ID at ingest: the stopword-hit classifier as a
-    STATELESS append-mode projection (Arrow kernel inside the stream —
-    mapInPandas works on streaming DataFrames). Predictions equal the
-    batch pass exactly; shares ex_lang_id's oracle."""
-    from espkinesis_spark.functions.text import lang_id
-
-    src = _documents_stream(spark, sf_dir)
-    out = lang_id(src).select("doc_id", "lang_pred")
-    return _drain(out, "st_lang_id_sink", table_path(sf_dir, "documents"))
-
-
-def pii_scrub_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming PII redaction at ingest — the production placement
-    (scrub BEFORE anything persists). The stream replays the same
-    deterministic PII augmentation as ex_pii_scrub (the synthetic corpus
-    carries no addresses), then the regex scrub runs as a stateless
-    zero-shuffle append projection. Shares ex_pii_scrub's oracle."""
-    from espkinesis_spark.functions.text import pii_scrub
-    from espkinesis_spark.queries import pii_augmented
-
-    aug = pii_augmented(_documents_stream(spark, sf_dir))
-    return _drain(pii_scrub(aug), "st_pii_scrub_sink", table_path(sf_dir, "documents"))
-
-
-def text_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming per-document quality statistics: the codegen stat
-    projection applied as documents arrive (stateless append mode, the
-    st_quality_model shape). Shares ex_text_stats' oracle."""
-    from espkinesis_spark.functions.text import text_stats
-
-    src = _documents_stream(spark, sf_dir)
-    return _drain(text_stats(src), "st_text_stats_sink", table_path(sf_dir, "documents"))
-
-
-def stratified_sample_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming stratified sampling AT INGEST — the production placement
-    for rebalancing (rows the sampler drops are never persisted at all):
-    the md5-bucket acceptance is row-local, so the filter is a stateless
-    zero-shuffle projection on the stream. Shares
-    ex_stratified_sample's oracle."""
-    from espkinesis_spark.functions import sampling
-
-    src = _documents_stream(spark, sf_dir)
-    out = sampling.stratified_sample(
-        src, "lang", rates={"en": 10}, default_pct=50, key_col="doc_id"
-    ).select("doc_id", "lang", "source")
-    return _drain(out, "st_stratified_sink", table_path(sf_dir, "documents"))
-
-
-def hash_split_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming train/val/test routing at ingest: the hash-bucket split
-    decision is row-local (stateless projection — downstream the writer
-    partitions by split), and the per-split-per-language audit folds
-    INTO the stream as a complete-mode aggregation: state is one row per
-    (split, lang) pair — splits x langs, never corpus-sized (the first
-    cut drained every per-doc row through the driver memory sink and
-    rolled up post-drain; at scale that materializes the whole corpus in
-    driver memory — the r10 VERDICT weak item, same class as the
-    st_zorder fix). Shares ex_hash_split's oracle."""
-    from espkinesis_spark.functions import sampling
-
-    src = _documents_stream(spark, sf_dir)
-    split = sampling.hash_split(src, "doc_id", {"train": 90, "val": 5, "test": 5})
-    out = split.groupBy("split", "lang").agg(F.count("*").cast("long").alias("n"))
-    return _drain(out, "st_hash_split_sink", table_path(sf_dir, "documents"), "complete")
-
-
-def perplexity_buckets_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming CCNet terciles: the positional token table is extracted
-    AT INGEST (stateless zero-shuffle posexplode — the corpus text is
-    touched exactly once; the LM itself is corpus-global state no
-    stream query should hold), the corpus-proportional token store
-    drains through the executor-parallel parquet sink, and the bigram
-    LM + tercile cut run over the drained store. Positional adjacency
-    rebuilds the exact in-array bigrams, so ex_perplexity_buckets'
-    oracle is exact."""
-    from espkinesis_spark.functions import text as text_fns
-
-    src = _documents_stream(spark, sf_dir)
-    toks = text_fns.token_positions(src)
-    store = _drain_to_parquet(toks, "st_perplexity_sink")
-    return text_fns.perplexity_buckets_from(
-        text_fns.bigram_logprob_from_tokens(store)
-    )
 
 
 def zorder_shard_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -907,7 +546,7 @@ def zorder_shard_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from espkinesis_spark.functions import layout
 
     grid = 1 << C.ZORDER_BITS
-    src = _events_stream(spark, sf_dir).select(
+    src = _table_stream(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
         F.unix_millis("ts").alias("t_ms"),
@@ -940,7 +579,7 @@ def vocab_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals the batch token count, so the DuckDB oracle is exact."""
     from espkinesis_spark.functions.text import tokens
 
-    src = _documents_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "documents")
     out = (
         src.select(F.explode(tokens(F.col("text"))).alias("token"))
         .groupBy("token")
@@ -963,7 +602,7 @@ def heavy_hitters_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from espkinesis_spark.functions import common as C
     from espkinesis_spark.functions.text import exact_share_filter, tokens
 
-    src = _documents_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "documents")
     agg = (
         src.select(F.explode(tokens(F.col("text"))).alias("token"))
         .groupBy("token")
@@ -975,22 +614,6 @@ def heavy_hitters_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_share_filter(counts, tot, "token", C.HH_K)
 
 
-def hdr_quantile_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming percentiles from the mergeable HDR sketch: the bucket
-    counts aggregate complete-mode on the event stream (state is
-    sketch-sized — bounded by the bucket-space constant, never
-    data-sized), then the batch extraction runs over the drained
-    snapshot. Bucket counts merge by integer addition, so the drained
-    sketch is bit-identical to the batch sketch for any micro-batch
-    split — shares ex_hdr_quantile's oracle."""
-    from espkinesis_spark.functions import quantiles
-
-    src = _events_stream(spark, sf_dir)
-    buckets = quantiles.hdr_buckets(src, "value")
-    snap = _drain(buckets, "st_hdr_quantile_sink", table_path(sf_dir, "events"), "complete")
-    return quantiles.hdr_quantiles(snap.localCheckpoint(eager=True))
-
-
 def ack_tracker_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J7/A2 as a driver query: a deterministic ack stream derived from the
     events table (mac keyed by user_id % 8, ok unless event_id % 3 == 0)
@@ -998,7 +621,7 @@ def ack_tracker_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     last_successful_send."""
     from espkinesis_spark.streaming.pipeline import ack_tracker
 
-    src = _events_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "events")
     acks = src.select(
         F.col("ts").alias("ack_ts"),
         F.format_string("AA:BB:CC:DD:EE:%02X", (F.col("user_id") % 8 + 1).cast("int")).alias(
@@ -1019,7 +642,7 @@ def dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the kept-key set (not the arbitrary winning row) is the deterministic,
     oracle-checkable output. State is one entry per distinct key — bound it
     in production with ``dropDuplicatesWithinWatermark``."""
-    src = _events_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "events")
     out = src.dropDuplicates(["user_id", "event_type"]).select("user_id", "event_type")
     return _drain(out, "st_dedup_sink", table_path(sf_dir, "events"))
 
@@ -1032,7 +655,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both sides branch from ONE source (a stream-stream self-join) — a
     second FileStreamSource instance measured ~25% slower and doubles the
     source-offset bookkeeping."""
-    src = _events_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "events")
     clicks = (
         src.filter(F.col("event_type") == "click")
         .select(
@@ -1186,7 +809,7 @@ def sink_roundtrip_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from espkinesis_spark.streaming.sinks import keyed_foreach_batch_sink
 
-    src = _events_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "events")
     out_dir = tempfile.mkdtemp(prefix="espk_sink_rt_")
     data_dir = os.path.join(out_dir, "delivered")
 
@@ -1228,7 +851,7 @@ def console_roundtrip_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     every field)."""
     from espkinesis_spark.streaming.sinks import console_json_sink
 
-    src = _events_stream(spark, sf_dir)
+    src = _table_stream(spark, sf_dir, "events")
     out_dir = tempfile.mkdtemp(prefix="espk_console_rt_")
     cap = os.path.join(out_dir, "docs")
     query = console_json_sink(

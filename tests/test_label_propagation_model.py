@@ -7,13 +7,12 @@ The model is the trajectory the oracle SQL replays:
   for each endpoint's label at the other endpoint (multi-edges and
   self-loops vote once per direction);
 * every node starts with its own id as its label;
-* each round every node takes, at once, the label with the largest vote
-  sum among its neighbors — an edge's vote is 1, or its weight with
-  ``weight_col`` — ties to the smallest label;
+* each round every node takes, at once, the label with the most votes
+  among its neighbors (one per edge), ties to the smallest label;
 * the output is (node, community, n_members), n_members the number of
   nodes ending with that label.
 
-Draws are random small graphs with integer weights, plus a star (its
+Draws are random small graphs with repeated edges, plus a star (its
 leaves tie at the hub) and isolated pairs (the two nodes swap labels
 every round).
 """
@@ -31,26 +30,25 @@ from espkinesis_spark.functions import graph
 _NO_SHRINK = (Phase.explicit, Phase.reuse, Phase.generate)
 
 
-def _lpa(edges, iters, weighted):
-    votes_at = defaultdict(list)  # node -> [(neighbor, vote)]
-    for u, v, w in edges:
-        vote = w if weighted else 1
-        votes_at[v].append((u, vote))
-        votes_at[u].append((v, vote))
+def _lpa(edges, iters):
+    votes_at = defaultdict(list)  # node -> [neighbor, one per edge]
+    for u, v in edges:
+        votes_at[v].append(u)
+        votes_at[u].append(v)
     labels = {n: n for n in votes_at}
     for _ in range(iters):
         new = {}
         for n, votes in votes_at.items():
             tally = defaultdict(int)
-            for u, vote in votes:
-                tally[labels[u]] += vote
+            for u in votes:
+                tally[labels[u]] += 1
             new[n] = min(tally, key=lambda lab: (-tally[lab], lab))
         labels = new
     sizes = Counter(labels.values())
     return {(n, lab, sizes[lab]) for n, lab in labels.items()}
 
 
-_edge = st.tuples(st.integers(0, 9), st.integers(0, 9), st.integers(1, 3))
+_edge = st.tuples(st.integers(0, 9), st.integers(0, 9))
 
 
 def test_label_propagation_matches_python_model(spark):
@@ -61,25 +59,20 @@ def test_label_propagation_matches_python_model(spark):
     # a star on hub 5 with leaves 1, 2, 3 and 8, and the isolated pairs
     # 0-9 and 4-6: each round the hub's four votes tie, the leaves follow
     # the hub, and each pair swaps its labels
-    @example([(5, 1, 1), (5, 2, 1), (3, 5, 1), (8, 5, 1), (0, 9, 2), (4, 6, 1)], 3)
+    @example([(5, 1), (5, 2), (3, 5), (8, 5), (0, 9), (4, 6)], 3)
     def run(edges, iters):
-        df = spark.createDataFrame(edges, "src long, dst long, w long")
-        for weighted in (False, True):
-            got = graph.label_propagation(
-                df if weighted else df.select("src", "dst"),
-                iters,
-                "w" if weighted else None,
-            ).collect()
-            assert {tuple(r) for r in got} == _lpa(edges, iters, weighted)
+        df = spark.createDataFrame(edges, "src long, dst long")
+        got = graph.label_propagation(df, iters).collect()
+        assert {tuple(r) for r in got} == _lpa(edges, iters)
 
-        degree = Counter(n for u, v, _ in edges for n in (u, v))
-        pairs = {(u, v) for u, v, _ in edges if u != v and degree[u] == degree[v] == 1}
+        degree = Counter(n for e in edges for n in e)
+        pairs = {(u, v) for u, v in edges if u != v and degree[u] == degree[v] == 1}
         if pairs and iters % 2:
             seen.add("isolated pair swaps")
         if any(d >= 3 for d in degree.values()) and iters:
             seen.add("node with three or more votes")
-        if len({w for _, _, w in edges}) > 1:
-            seen.add("unequal weights")
+        if len(set(edges)) < len(edges):
+            seen.add("repeated edge")
 
     run()
-    assert seen == {"isolated pair swaps", "node with three or more votes", "unequal weights"}
+    assert seen == {"isolated pair swaps", "node with three or more votes", "repeated edge"}

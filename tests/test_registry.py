@@ -132,3 +132,31 @@ def test_registry_dict_literal_has_no_duplicate_keys():
             assert dupes == [], f"duplicate literal registry keys: {dupes}"
             return
     raise AssertionError("registry() not found in queries.py")
+
+
+def test_oracle_aliases_come_from_one_twin_declaration():
+    """Every streaming entry that shares its batch entry's oracle
+    (``ORACLES["st_x"] is ORACLES["ex_x"]``) runs that entry's own ingest
+    and analyze: both registry values are bound to one ``queries.Twin``.
+    ``st_heavy_hitters`` is the one exception: its batch entry is
+    Misra-Gries (``frequent_values``), a different kernel."""
+    from espkinesis_spark import queries
+    from espkinesis_spark.oracles import ORACLES
+
+    reg = queries.registry()
+    aliased = {
+        n[3:]
+        for n in reg
+        if n.startswith("st_") and ORACLES[n] is ORACLES.get("ex_" + n[3:])
+    }
+    assert "heavy_hitters" in aliased
+    assert not isinstance(
+        getattr(reg["st_heavy_hitters"], "__self__", None), queries.Twin
+    )
+    twins = aliased - {"heavy_hitters"}
+    assert twins == set(queries.TWINS) and len(twins) == 21
+    for name in twins:
+        ex, st = reg["ex_" + name], reg["st_" + name]
+        assert ex.__self__ is st.__self__ is queries.TWINS[name]
+        assert ex.__func__ is queries.Twin.batch
+        assert st.__func__ is queries.Twin.stream

@@ -268,7 +268,7 @@ def test_asof_features_skew_equals_join_form(spark, sf_dir):
     from espkinesis_spark import queries
 
     join_rows = {
-        tuple(r) for r in queries.ex_asof_features(spark, sf_dir).collect()
+        tuple(r) for r in queries.registry()["ex_asof_features"](spark, sf_dir).collect()
     }
     skew_rows = {
         tuple(r)

@@ -407,6 +407,27 @@ def _chunked_doc_stream(spark, sf_dir, tmp_path_factory, label, n_chunks=3):
     )
 
 
+def _twin_replay(spark, sf_dir, twin, src, label):
+    """Run the registry twin's own ingest over the multi-batch ``src``
+    into a memory sink and its analyze over that store; returns (the
+    result rows, the finished query)."""
+    q = (
+        twin.ingest(src)
+        .writeStream.outputMode(twin.mode)
+        .format("memory")
+        .queryName(label)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    got = {tuple(r) for r in twin.analyze(spark.table(label), spark, sf_dir).collect()}
+    return got, q
+
+
+def _twin_batch(spark, sf_dir, twin, docs):
+    return {tuple(r) for r in twin.analyze(twin.ingest(docs), spark, sf_dir).collect()}
+
+
 def test_quality_gate_stream_multibatch_equals_batch(spark, sf_dir, tmp_path_factory):
     """The stateless streaming gate replayed in multiple micro-batches
     must emit exactly the batch gate's passing set (append mode: each doc
@@ -440,9 +461,10 @@ def test_anomaly_stream_snapshot_equals_batch(spark, sf_dir, tmp_path_factory):
     """The streaming-lambda anomaly entry's drained hourly table must
     carry state across micro-batches: flags over a 4-batch replay equal
     the batch flags."""
-    from espkinesis_spark.queries import hourly_zscore_flags
+    from espkinesis_spark.queries import TWINS
     from espkinesis_spark.tables import load_table
 
+    twin = TWINS["anomaly"]
     ev = load_table(spark, sf_dir, "events").select("event_type", "ts")
     chunk_dir = tmp_path_factory.mktemp("an_chunks")
     ev.withColumn("__c", F.pmod(F.hash("ts"), F.lit(4))).write.partitionBy(
@@ -454,29 +476,14 @@ def test_anomaly_stream_snapshot_equals_batch(spark, sf_dir, tmp_path_factory):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(chunk_dir / "ev"))
     )
-    agg = src.groupBy(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("hr")
-    ).agg(F.count("*").cast("long").alias("n"))
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("an_mb")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    counts = spark.table("an_mb").localCheckpoint(eager=True)
-    got = {tuple(r) for r in hourly_zscore_flags(counts).collect()}
-    hourly = ev.groupBy(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("hr")
-    ).agg(F.count("*").cast("long").alias("n"))
-    want = {tuple(r) for r in hourly_zscore_flags(hourly).collect()}
+    got, q = _twin_replay(spark, sf_dir, twin, src, "an_mb")
+    want = _twin_batch(spark, sf_dir, twin, ev)
     assert got == want and len(want) > 0
     assert len(q.recentProgress) > 1
     # calendar-sized state, asserted: the aggregation's state store holds
     # exactly one row per observed (event_type, hour) — event volume adds
-    # no state beyond its new hours (jobs.anomaly_stream retention bound)
-    calendar_rows = hourly.count()
+    # no state beyond its new hours
+    calendar_rows = twin.ingest(ev).count()
     state_rows = sum(
         op["numRowsTotal"] for op in q.lastProgress["stateOperators"]
     )
@@ -522,21 +529,13 @@ def test_quality_model_stream_multibatch_equals_batch(spark, sf_dir, tmp_path_fa
     must emit exactly the batch scores (append mode: each doc scored
     once, in whatever batch it arrives; scores are exact-integer-derived
     so equality is exact)."""
-    from espkinesis_spark.functions.text import quality_model_score
+    from espkinesis_spark.queries import TWINS
 
+    twin = TWINS["quality_model"]
     docs, src = _chunked_doc_stream(spark, sf_dir, tmp_path_factory, "qm")
-    q = (
-        quality_model_score(src)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("qm_mb")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    got, q = _twin_replay(spark, sf_dir, twin, src, "qm_mb")
     assert len(q.recentProgress) > 1, "replay did not split into micro-batches"
-    got = {tuple(r) for r in spark.table("qm_mb").collect()}
-    want = {tuple(r) for r in quality_model_score(docs).collect()}
+    want = _twin_batch(spark, sf_dir, twin, docs)
     assert got == want and len(want) > 0
 
 
@@ -544,35 +543,13 @@ def test_image_neardup_stream_multibatch_equals_batch(spark, sf_dir, tmp_path_fa
     """The fingerprint-at-ingest leg replayed across micro-batches must
     accumulate exactly the batch hash table (append mode, zero state),
     so the banded join over the drained store equals the batch op."""
-    from espkinesis_spark.functions import common as C
-    from espkinesis_spark.functions.multimodal import (
-        hamming_neardup,
-        image_dhash,
-        synthesize_gray_bmp,
-    )
+    from espkinesis_spark.queries import TWINS
 
+    twin = TWINS["image_neardup"]
     docs, src = _chunked_doc_stream(spark, sf_dir, tmp_path_factory, "imgnd")
-    q = (
-        image_dhash(synthesize_gray_bmp(src))
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("imgnd_mb")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    got, q = _twin_replay(spark, sf_dir, twin, src, "imgnd_mb")
     assert len(q.recentProgress) > 1  # genuinely multi-batch
-    store = spark.table("imgnd_mb")
-    got = {
-        (r["doc_id_a"], r["doc_id_b"], r["hamming"])
-        for r in hamming_neardup(store, C.IMG_HAM_MAX).collect()
-    }
-    want = {
-        (r["doc_id_a"], r["doc_id_b"], r["hamming"])
-        for r in hamming_neardup(
-            image_dhash(synthesize_gray_bmp(docs)), C.IMG_HAM_MAX
-        ).collect()
-    }
+    want = _twin_batch(spark, sf_dir, twin, docs)
     assert got == want and len(want) > 0
 
 
@@ -581,42 +558,15 @@ def test_audio_video_neardup_stream_multibatch_equals_batch(
 ):
     """The audio/video fingerprint-at-ingest legs replayed across
     micro-batches accumulate exactly the batch fingerprint tables."""
-    from espkinesis_spark.functions import common as C
-    from espkinesis_spark.functions.multimodal import (
-        attach_binary,
-        audio_envelope_hash,
-        hamming_neardup,
-        sample_frames,
-        shared_frame_neardup,
-        synthesize_tone_wav,
-    )
+    from espkinesis_spark.queries import TWINS
 
     docs, src = _chunked_doc_stream(spark, sf_dir, tmp_path_factory, "avnd")
-    for label, extract, pair in (
-        (
-            "aud",
-            lambda d: audio_envelope_hash(synthesize_tone_wav(d)),
-            lambda h: hamming_neardup(h, C.AUD_HAM_MAX),
-        ),
-        (
-            "vid",
-            lambda d: sample_frames(attach_binary(d)),
-            shared_frame_neardup,
-        ),
-    ):
-        q = (
-            extract(src)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(f"avnd_{label}")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        assert len(q.recentProgress) > 1, label
-        got = {tuple(r) for r in pair(spark.table(f"avnd_{label}")).collect()}
-        want = {tuple(r) for r in pair(extract(docs)).collect()}
-        assert got == want and len(want) > 0, label
+    for name in ("audio_neardup", "video_neardup"):
+        twin = TWINS[name]
+        got, q = _twin_replay(spark, sf_dir, twin, src, f"avnd_{name}")
+        assert len(q.recentProgress) > 1, name
+        want = _twin_batch(spark, sf_dir, twin, docs)
+        assert got == want and len(want) > 0, name
 
 
 def test_winnow_stream_multibatch_equals_batch(spark, sf_dir, tmp_path_factory):
@@ -625,28 +575,16 @@ def test_winnow_stream_multibatch_equals_batch(spark, sf_dir, tmp_path_factory):
     (append mode, zero state — each doc's fingerprint set is computed
     from that doc alone), so the df-capped candidate join over the
     drained store equals the batch op."""
-    from espkinesis_spark.functions.dedup import (
-        winnow_candidates_from,
-        winnow_fingerprints,
-    )
+    from espkinesis_spark.queries import TWINS
 
+    twin = TWINS["winnow_fingerprint"]
     docs, src = _chunked_doc_stream(spark, sf_dir, tmp_path_factory, "winnow")
-    q = (
-        winnow_fingerprints(src)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("winnow_mb")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    got, q = _twin_replay(spark, sf_dir, twin, src, "winnow_mb")
     assert len(q.recentProgress) > 1, "replay did not split into micro-batches"
-    store = spark.table("winnow_mb")
-    assert {tuple(r) for r in store.collect()} == {
-        tuple(r) for r in winnow_fingerprints(docs).collect()
+    assert {tuple(r) for r in spark.table("winnow_mb").collect()} == {
+        tuple(r) for r in twin.ingest(docs).collect()
     }
-    got = {tuple(r) for r in winnow_candidates_from(store).collect()}
-    want = {tuple(r) for r in winnow_candidates_from(winnow_fingerprints(docs)).collect()}
+    want = _twin_batch(spark, sf_dir, twin, docs)
     assert got == want and len(want) > 0
 
 
@@ -690,12 +628,13 @@ def test_drain_rowstore_routes_by_source_size(spark, sf_dir, monkeypatch):
     executor-parallel parquet drain — and the analysis result over the
     drained store is identical either way (route choice is a pure
     placement decision, never a semantics one)."""
+    from espkinesis_spark import queries
     from espkinesis_spark.streaming import jobs
 
     def run():
         return {
             (r["doc_id_a"], r["doc_id_b"], r["hamming"])
-            for r in jobs.image_neardup_stream(spark, sf_dir).collect()
+            for r in queries.registry()["st_image_neardup"](spark, sf_dir).collect()
         }
 
     parquet = _spy_parquet_drains(monkeypatch, jobs)
@@ -718,11 +657,12 @@ def test_video_frame_stores_never_use_memory_sink(spark, sf_dir):
     corpus-sized class the drain policy excludes from memory-sink
     routing — so both video legs must drain through the parquet sink
     unconditionally: no memory-sink table may exist after a run."""
-    from espkinesis_spark.streaming import jobs
+    from espkinesis_spark import queries
 
-    assert jobs.video_neardup_stream(spark, sf_dir).count() > 0
+    reg = queries.registry()
+    assert reg["st_video_neardup"](spark, sf_dir).count() > 0
     assert not spark.catalog.tableExists("st_video_neardup_sink")
-    assert jobs.video_dedup_apply_stream(spark, sf_dir).count() > 0
+    assert reg["st_video_dedup_apply"](spark, sf_dir).count() > 0
     assert not spark.catalog.tableExists("st_video_dedup_apply_sink")
 
 
@@ -752,12 +692,13 @@ def test_drain_rowstore_routes_by_source_row_count(spark, sf_dir, monkeypatch):
     the single-threaded memory sink (r11 ADVICE). With the row bound forced
     to 0 the job must cross to the parquet drain even though the byte
     bound is untouched, with identical results."""
+    from espkinesis_spark import queries
     from espkinesis_spark.streaming import jobs
 
     def run():
         return {
             (r["doc_id_a"], r["doc_id_b"], r["hamming"])
-            for r in jobs.image_neardup_stream(spark, sf_dir).collect()
+            for r in queries.registry()["st_image_neardup"](spark, sf_dir).collect()
         }
 
     parquet = _spy_parquet_drains(monkeypatch, jobs)
@@ -826,7 +767,7 @@ def test_drain_failure_restores_layout_and_name_drains_again(spark, sf_dir):
     # restore below is not vacuous
     rows = jobs._rows_of(_source_files(events))
     assert jobs._state_partitions(spark, rows) != prev
-    src = jobs._events_stream(spark, sf_dir)
+    src = jobs._table_stream(spark, sf_dir, "events")
     failing = src.select(
         F.when(F.col("event_id") % 7 == 3, F.raise_error(F.lit("boom")))
         .otherwise(F.col("event_id"))
@@ -852,7 +793,7 @@ def test_drain_stops_active_query_holding_its_name(spark, sf_dir):
     from espkinesis_spark.streaming import jobs
     from espkinesis_spark.tables import load_table, table_path
 
-    src = jobs._events_stream(spark, sf_dir).select("event_id")
+    src = jobs._table_stream(spark, sf_dir, "events").select("event_id")
     hog = (
         src.filter(F.col("event_id") < 0)
         .writeStream.format("memory")
@@ -1166,35 +1107,16 @@ def test_hash_split_stream_multibatch_equals_batch(spark, sf_dir, tmp_path_facto
     the exact batch counts across micro-batch splits — streaming-agg
     state carries the partial counts between triggers (the single-file
     fixture replay exercises only one micro-batch, so this pins the
-    multi-batch leg of the r11 plan change)."""
-    from espkinesis_spark.functions import sampling
+    multi-batch leg)."""
+    from espkinesis_spark.queries import TWINS
     from espkinesis_spark.tables import load_table
 
+    twin = TWINS["hash_split"]
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
     src = _chunked_replay(spark, tmp_path_factory, "hsplit", docs, "doc_id")
-    pcts = {"train": 90, "val": 5, "test": 5}
-    agg = (
-        sampling.hash_split(src, "doc_id", pcts)
-        .groupBy("split", "lang")
-        .agg(F.count("*").cast("long").alias("n"))
-    )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("hsplit_mb")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    got, q = _twin_replay(spark, sf_dir, twin, src, "hsplit_mb")
     assert len(q.recentProgress) > 1  # genuinely multi-batch
-    got = {tuple(r) for r in spark.table("hsplit_mb").collect()}
-    want = {
-        tuple(r)
-        for r in sampling.hash_split(docs, "doc_id", pcts)
-        .groupBy("split", "lang")
-        .agg(F.count("*").cast("long").alias("n"))
-        .collect()
-    }
+    want = _twin_batch(spark, sf_dir, twin, docs)
     assert got == want and len(want) > 0
 
 

@@ -243,9 +243,9 @@ def test_table_and_stream_construction_start_no_spark_job(spark, sf_dir):
     """Loading a table and building the events stream read footers on the
     driver only: no schema-inference job. The control read (Spark's own
     inference) shows the counter does see such a job."""
-    from espkinesis_spark.streaming.jobs import _events_stream
+    from espkinesis_spark.streaming.jobs import _table_stream
 
     path = table_path(sf_dir, "events")
     assert _jobs_started(spark, lambda: spark.read.parquet(path).schema)
     assert _jobs_started(spark, lambda: load_table(spark, sf_dir, "events").schema) == []
-    assert _jobs_started(spark, lambda: _events_stream(spark, sf_dir).schema) == []
+    assert _jobs_started(spark, lambda: _table_stream(spark, sf_dir, "events").schema) == []

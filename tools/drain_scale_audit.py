@@ -14,6 +14,10 @@ leaves documents flat at 500, which would blind the doc-side leg).
 For each entry, record the row count of every frame jobs._drain
 returned through the memory sink (its name did not go to
 jobs._drain_to_parquet) at each SF, plus the entry's RESULT row count.
+The batch/stream twins (``queries.TWINS``) drain in
+``jobs.twin_stream``, whose drain is picked by the twin declaration
+(``parquet``, ``mode``); it calls both drains through the module
+globals this audit swaps for its spies.
 Classification of a store whose rows grow more than GROWTH_LIMIT across
 the step:
 
@@ -26,8 +30,9 @@ the step:
     sink BELOW the bounds, the parquet drain above) and stores whose
     growth tracks a dimension the fixture couples to SF (key
     cardinality, time span) rather than corpus row count.
-  * anything else: FLAGGED — cross it to jobs._drain_to_parquet, or
-    to jobs._drain if at most one store row per source row.
+  * anything else: FLAGGED — cross it to jobs._drain_to_parquet (for
+    a twin: ``parquet=True`` on its declaration), or to jobs._drain if
+    at most one store row per source row.
 
 Exit 1 on unexplained flags, 0 when clean.
 
