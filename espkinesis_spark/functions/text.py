@@ -271,19 +271,27 @@ def quality_filter(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def token_tally(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """(token, n): the count of each whitespace token. As streaming state
+    it is one row per distinct token: vocab-sized, not corpus-sized."""
+    return (
+        df.select(F.explode(tokens(F.col(text_col))).alias("token"))
+        .groupBy("token")
+        .agg(F.count("*").cast("long").alias("n"))
+    )
+
+
 def vocab(df: DataFrame, text_col: str = "text", k: int = C.VOCAB_TOP_K) -> DataFrame:
     """Corpus vocabulary: top-k tokens by frequency, ties to the
     lexicographically-smallest token (deterministic cut line).
 
-    explode → token groupBy (map-side combine shrinks the shuffle to the
+    ``token_tally`` (map-side combine shrinks the shuffle to the
     distinct-vocab size) → ``orderBy().limit(k)``, which Spark plans as
     TakeOrderedAndProject: per-partition top-k then a driver-side k-merge —
     never a full sort or single-partition exchange of the token table.
     """
-    tok = df.select(F.explode(tokens(F.col(text_col))).alias("token"))
     return (
-        tok.groupBy("token")
-        .agg(F.count("*").cast("long").alias("n"))
+        token_tally(df, text_col)
         .orderBy(F.col("n").desc(), F.col("token").asc())
         .limit(k)
     )
@@ -857,8 +865,8 @@ def exact_share_filter(
     value_source: str | None = None,
 ) -> DataFrame:
     """The heavy-hitter emission convention, in ONE place so the batch
-    (frequent_values) and streaming (jobs.heavy_hitters_stream) legs can
-    never drift from their shared oracle: keep rows of ``counts``
+    (frequent_values) and streaming (the ``heavy_hitters`` declaration in
+    ``queries.TWINS``) legs can never drift from their shared oracle: keep rows of ``counts``
     (value column, ``n``) whose exact count exceeds total/k, with the
     share rounded to 6 dp. ``total`` is a one-row (``total``) frame.
 

@@ -2,10 +2,12 @@
 
 Each entry is ``(spark, sf_dir) -> DataFrame``, DataFrame-API first, built
 from the operator library so the declared inventory exercises the same code
-paths users call. The streaming entries (``st_*``) are the availableNow
-replay jobs of ``streaming/jobs.py``, registered directly. Every computed
-column is aliased to match the oracle SQL in ``oracles.py`` exactly (the
-driver compares by column name).
+paths users call. The streaming entries (``st_*``) are availableNow
+replays: each is a ``Twin`` declaration in ``TWINS`` run by
+``jobs.twin_stream``, except four jobs with a lifecycle of their own in
+``streaming/jobs.py``. Every computed column is aliased to match the
+oracle SQL in ``oracles.py`` exactly (results are compared by column
+name).
 
 Ordering note: the driver's value-hash is order-insensitive, but ORDER BY is
 kept where it defines the *result set* (LIMIT queries) and dropped where it
@@ -30,7 +32,7 @@ from espkinesis_spark.functions import (
     text,
 )
 from espkinesis_spark.operators import core as ops
-from espkinesis_spark.streaming import jobs
+from espkinesis_spark.streaming import jobs, pipeline
 from espkinesis_spark.tables import load_table
 
 
@@ -3374,27 +3376,29 @@ def ex_range_join(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# Batch/stream twins: one declaration per batch entry whose streaming
-# replay shares its oracle.
+# Stream entries, one declaration each: the streaming replay and, where a
+# batch entry shares its oracle, that batch entry.
 # --------------------------------------------------------------------------
 
 
 class Twin(NamedTuple):
-    """A batch entry and its streaming replay, declared once.
+    """A streaming entry and its batch form, declared once.
 
-    ``batch`` runs ``analyze(ingest(table), spark, sf_dir)``; ``stream``
-    (``jobs.twin_stream``) runs ``ingest`` over the replayed table and
-    ``analyze`` over the drained store. ``ingest`` is a stateless
-    per-row projection, or a complete-mode aggregate (``mode``) whose
-    state is key-sized. Its store takes the routed ``jobs._drain`` when
-    it holds at most one row per source row, else (``parquet``) the
-    executor-parallel ``jobs._drain_to_parquet``."""
+    ``stream`` (``jobs.twin_stream``) runs ``ingest`` over the replayed
+    table and ``analyze`` over the drained store; ``batch`` runs
+    ``analyze(ingest(table))``, registered as ``ex_x`` only where that
+    entry shares the oracle (else the multi-batch tests' reference).
+    ``ingest`` is a projection, a stateful stream operator, or a
+    complete-mode aggregate (``mode``) with key-sized state.
+    ``rows_per_source`` bounds store rows per source row for
+    ``jobs._drain``'s sink choice; ``None`` means always
+    ``jobs._drain_to_parquet``."""
 
     name: str
     table: str
     ingest: Callable[[DataFrame], DataFrame | tuple[DataFrame, ...]]
     analyze: Callable[[DataFrame, SparkSession, str], DataFrame] = lambda s, *_: s
-    parquet: bool = False
+    rows_per_source: int | None = 1
     mode: str = "append"
 
     def batch(self, spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3432,6 +3436,80 @@ def _audio_pairs(h, *_):
     return multimodal.hamming_neardup(h, max_hamming=C.AUD_HAM_MAX)
 
 
+def _window_counts(start, *window):
+    """Events per (window ``start``, event_type): windows x types state."""
+    return lambda ev: (
+        ev.groupBy(F.window("ts", *window).alias("win"), "event_type")
+        .agg(F.count("*").alias("n"))
+        .select(F.col("win.start").alias(start), "event_type", "n")
+    )
+
+
+def _share_filter(counts, *_):
+    """Tokens with count·k > total. The total self-joins the tally, which
+    a memory-sink view cannot do, so the tally is frozen first."""
+    counts = counts.localCheckpoint(eager=True)
+    tot = counts.agg(F.sum("n").cast("long").alias("total"))
+    return text.exact_share_filter(counts, tot, "token", C.HH_K)
+
+
+def _ack_state(ev):
+    """J7/A2 over one ack per event (MAC by user_id % 8, ok unless
+    event_id % 3 == 0): the latest ack per target wins."""
+    acks = ev.select(
+        F.col("ts").alias("ack_ts"),
+        F.format_string("AA:BB:CC:DD:EE:%02X", (F.col("user_id") % 8 + 1).cast("int"))
+        .alias("mac"),
+        (F.col("event_id") % 3 != 0).alias("ok"),
+        F.col("event_id").alias("ack_id"),
+    )
+    return pipeline.ack_tracker(acks, jobs._targets(ev.sparkSession), tiebreak="ack_id")
+
+
+def _click_purchase_pairs(ev):
+    """Each click paired with the same user's purchases in the preceding
+    hour. Watermarks bound the join state; both sides branch from one
+    source (a second FileStreamSource measured ~25% slower)."""
+
+    def side(kind, p):
+        return ev.filter(F.col("event_type") == kind).select(
+            F.col("event_id").alias(f"{kind}_id"),
+            F.col("user_id").alias(f"{p}_user"),
+            F.col("ts").alias(f"{p}_ts"),
+        ).withWatermark(f"{p}_ts", "2 hours")
+
+    return side("click", "c").join(
+        side("purchase", "p"),
+        F.expr("c_user = p_user AND p_ts <= c_ts AND p_ts > c_ts - INTERVAL 1 HOUR"),
+    ).select("click_id", "purchase_id")
+
+
+def _z_rows(ev):
+    """A Morton key per event over each axis's LOW bits: writer spread,
+    not the batch layout's locality (which needs corpus bounds). Pre-1970
+    times are out of contract (``div``/``pmod`` differ from DuckDB's)."""
+    from espkinesis_spark.functions import layout
+
+    grid = 1 << C.ZORDER_BITS
+    return ev.select("event_id", "user_id", F.unix_millis("ts").alias("t_ms")).withColumn(
+        "z",
+        layout.z_value(
+            F.pmod(F.col("user_id"), F.lit(grid)).cast("long"),
+            F.pmod(F.expr("t_ms div 1000"), F.lit(grid)).cast("long"),
+        ),
+    )
+
+
+def _z_shards(z, *_):
+    """Rows and distinct users per shard of the low z bits. The exact
+    countDistinct cannot be streaming state, so it runs on the store."""
+    shards = 1 << C.ZORDER_REPORT_BITS
+    return z.groupBy(F.pmod(F.col("z"), F.lit(shards)).alias("zshard")).agg(
+        F.count("*").cast("long").alias("n"),
+        F.countDistinct("user_id").cast("long").alias("n_users"),
+    )
+
+
 TWINS = {
     t.name: t
     for t in (
@@ -3455,7 +3533,7 @@ TWINS = {
             "documents",
             text.bigram_rows,
             lambda rows, *_: text.perplexity_buckets_from(text.bigram_score(rows)),
-            parquet=True,
+            rows_per_source=None,
         ),
         Twin(
             "stratified_sample",
@@ -3491,25 +3569,38 @@ TWINS = {
             "documents",
             dedup.dup_spans_tables,
             lambda t, *_: dedup.dup_spans_apply_from(*t),
-            parquet=True,
+            rows_per_source=None,
         ),
-        Twin("image_dedup_apply", "documents", _image_hashes, _media_apply(_image_pairs)),
-        Twin("audio_dedup_apply", "documents", _audio_hashes, _media_apply(_audio_pairs)),
-        # several keyframe rows per document: past _drain's
-        # one-row-per-source-row bound, so always the parquet drain
+        # up to 4 band rows per image and 2 per audio clip
+        Twin(
+            "image_dedup_apply",
+            "documents",
+            _image_hashes,
+            _media_apply(_image_pairs),
+            rows_per_source=4,
+        ),
+        Twin(
+            "audio_dedup_apply",
+            "documents",
+            _audio_hashes,
+            _media_apply(_audio_pairs),
+            rows_per_source=2,
+        ),
+        # a data-dependent number of keyframe rows per document, so
+        # always the parquet drain
         Twin(
             "video_dedup_apply",
             "documents",
             _video_frames,
             _media_apply(multimodal.shared_frame_neardup),
-            parquet=True,
+            rows_per_source=None,
         ),
         Twin(
             "bm25",
             "documents",
             text.bm25_tokens,
             lambda t, *_: text.bm25_from_tokens(t),
-            parquet=True,
+            rows_per_source=None,
         ),
         # shingles without the distinct, which on a stream would be
         # update-mode state; the store is deduplicated after the drain
@@ -3518,16 +3609,16 @@ TWINS = {
             "documents",
             lambda d: dedup.shingles(d, distinct=False),
             lambda sh, *_: dedup.containment_from_shingles(sh.distinct()),
-            parquet=True,
+            rows_per_source=None,
         ),
-        Twin("image_neardup", "documents", _image_hashes, _image_pairs),
-        Twin("audio_neardup", "documents", _audio_hashes, _audio_pairs),
+        Twin("image_neardup", "documents", _image_hashes, _image_pairs, rows_per_source=4),
+        Twin("audio_neardup", "documents", _audio_hashes, _audio_pairs, rows_per_source=2),
         Twin(
             "video_neardup",
             "documents",
             _video_frames,
             lambda fr, *_: multimodal.shared_frame_neardup(fr),
-            parquet=True,
+            rows_per_source=None,
         ),
         Twin("quality_model", "documents", text.quality_model_score),
         Twin(
@@ -3542,7 +3633,7 @@ TWINS = {
             "documents",
             dedup.winnow_fingerprints,
             lambda fp, *_: dedup.winnow_candidates_from(fp),
-            parquet=True,
+            rows_per_source=None,
         ),
         # the as-of re-aggregation would be event-keyed state in a stream,
         # so the event triples drain and the join runs on the store
@@ -3551,15 +3642,62 @@ TWINS = {
             "events",
             lambda ev: ev.select("event_id", "user_id", "ts"),
             asof_feature_frame,
-            parquet=True,
+            rows_per_source=None,
         ),
         Twin(
             "repetition_stats",
             "documents",
             lambda d: dedup.shingles(d, distinct=False),
             lambda sh, *_: repetition_stats_from(sh),
-            parquet=True,
+            rows_per_source=None,
         ),
+        # Stream-only entries: no ex_* entry shares their oracle.
+        # A2/A3: the last event per user, ts ties to the larger event_id
+        Twin(
+            "latest_user",
+            "events",
+            lambda ev: ev.groupBy("user_id")
+            .agg(F.max_by(F.struct("event_type", "value"), F.struct("ts", "event_id")).alias("m"))
+            .select("user_id", "m.*"),
+            mode="complete",
+        ),
+        Twin("window_counts", "events", _window_counts("w", "1 hour"), mode="complete"),
+        # sessions merge while next_ts < prev_ts + 30 min (window end
+        # exclusive), so the oracle breaks them on diff >= gap
+        Twin(
+            "session_window",
+            "events",
+            lambda ev: ev.groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
+            .agg(F.count("*").alias("n"), F.max("event_id").alias("last_event"))
+            .select("user_id", F.col("sw.start").alias("s_start"), "n", "last_event"),
+            mode="complete",
+        ),
+        # 1 h windows sliding by 30 min: every event lands in two
+        Twin(
+            "sliding_counts",
+            "events",
+            _window_counts("w_start", "1 hour", "30 minutes"),
+            rows_per_source=2,
+            mode="complete",
+        ),
+        # the distinct SimHash signatures and (user, type) keys: their
+        # state is one entry per key
+        Twin(
+            "content_dedup",
+            "documents",
+            lambda d: dedup.simhash(d).select("simhash").dropDuplicates(),
+        ),
+        Twin("dedup", "events", lambda ev: ev.select("user_id", "event_type").dropDuplicates()),
+        # the Gopher-style gate on each document as it arrives: no state
+        Twin("quality_gate", "documents", text.quality_gate_stateless),
+        Twin("vocab", "documents", text.token_tally, mode="complete"),
+        # the streaming leg of ex_heavy_hitters' oracle: exact counts
+        # instead of the batch entry's Misra-Gries candidates
+        Twin("heavy_hitters", "documents", text.token_tally, _share_filter, mode="complete"),
+        Twin("ack_tracker", "events", _ack_state, mode="complete"),
+        Twin("stream_join", "events", _click_purchase_pairs),
+        # one z row per event, so the parquet drain
+        Twin("zorder_layout", "events", _z_rows, _z_shards, rows_per_source=None),
     )
 }
 
@@ -3582,8 +3720,8 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ex_ts_similarity": ex_ts_similarity,
         "st_anomaly": TWINS["anomaly"].stream,
         "st_console_roundtrip": jobs.console_roundtrip_stream,
-        "st_heavy_hitters": jobs.heavy_hitters_stream,
-        "st_quality_gate": jobs.quality_gate_stream,
+        "st_heavy_hitters": TWINS["heavy_hitters"].stream,
+        "st_quality_gate": TWINS["quality_gate"].stream,
         "st_quality_model": TWINS["quality_model"].stream,
         "ex_audio_neardup": TWINS["audio_neardup"].batch,
         "st_audio_neardup": TWINS["audio_neardup"].stream,
@@ -3593,7 +3731,7 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "st_image_dedup_apply": TWINS["image_dedup_apply"].stream,
         "st_video_dedup_apply": TWINS["video_dedup_apply"].stream,
         "st_hash_split": TWINS["hash_split"].stream,
-        "st_zorder_layout": jobs.zorder_shard_stream,
+        "st_zorder_layout": TWINS["zorder_layout"].stream,
         # --- window 17-50: the 34 oldest r12-green entries (first-green r1/r2/r3 + three r5) ---
         "dq04": dq04,
         "dq16": dq16,
@@ -3693,7 +3831,7 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ex_union_all": ex_union_all,
         "ex_unpivot": ex_unpivot,
         "ex_vocab": ex_vocab,
-        "st_vocab": jobs.vocab_stream,
+        "st_vocab": TWINS["vocab"].stream,
         "ex_disjunctive_revenue": ex_disjunctive_revenue,
         "ex_volume_shipping": ex_volume_shipping,
         "ex_large_orders": ex_large_orders,
@@ -3782,16 +3920,16 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dq17": dq17,
         "dq24": dq24,
         "ex_tfidf": ex_tfidf,
-        "st_ack_tracker": jobs.ack_tracker_stream,
+        "st_ack_tracker": TWINS["ack_tracker"].stream,
         "st_command_plane": jobs.command_plane_stream,
-        "st_content_dedup": jobs.content_dedup_stream,
-        "st_dedup": jobs.dedup_stream,
-        "st_latest_user": jobs.latest_per_user_stream,
+        "st_content_dedup": TWINS["content_dedup"].stream,
+        "st_dedup": TWINS["dedup"].stream,
+        "st_latest_user": TWINS["latest_user"].stream,
         "st_override_asof": jobs.override_asof_stream,
-        "st_session_window": jobs.session_window_stream,
-        "st_sliding_counts": jobs.sliding_counts_stream,
-        "st_stream_join": jobs.stream_stream_join,
-        "st_window_counts": jobs.window_counts_stream,
+        "st_session_window": TWINS["session_window"].stream,
+        "st_sliding_counts": TWINS["sliding_counts"].stream,
+        "st_stream_join": TWINS["stream_join"].stream,
+        "st_window_counts": TWINS["window_counts"].stream,
         "ex_approx_distinct": ex_approx_distinct,
         "ex_approx_quantile": ex_approx_quantile,
         "ex_correlated_min": ex_correlated_min,

@@ -5,25 +5,20 @@ Each job replays a test table as a file stream with
 DataFrame, so the driver's correctness gate checks streaming semantics
 against the same DuckDB oracles as the batch queries.
 
-Most ``st_*`` entries are the streaming form of a batch entry declared
-once as a ``queries.Twin``: a source table, a stateless ingest (or a
-complete-mode aggregate), an analyze over the drained store, and the
-drain that store takes. ``twin_stream`` runs
-``analyze(drain(ingest(_table_stream(table))))``; the batch entry runs
-``analyze(ingest(table))``. The 16 jobs written out below share no
-ingest and analyze with a batch entry of the same oracle: windows and
-sessions, the stateful as-of, joins, dedup and vocab state, the command
-plane, the sink round-trips, and heavy hitters, whose batch entry is
-Misra-Gries.
+Every ``st_*`` entry but four is a ``queries.Twin`` declaration, run by
+``twin_stream`` as ``analyze(drain(ingest(_table_stream(table))))``.
+The four jobs written out below have a lifecycle of their own: the
+stateful as-of (built under ``_state_layout``), the command plane (its
+own source directory) and the two sink round-trips.
 
 Every drain runs one query lifecycle, ``_replay``: stop a same-named
 active query, pin ``_state_layout``, start with availableNow, wait,
-record the plan. ``_drain`` picks the sink of a store with at most one
-row per source row by one rule on the source table's parquet footers:
-above either source bound the parquet drain, otherwise the memory sink.
-Corpus-sized stores call ``_drain_to_parquet`` directly. The two
-round-trip jobs start their queries through the ``sinks`` K1/K3
-constructors.
+record the plan. ``_drain`` picks the sink of a store with at most
+``rows_per_source`` rows per source row by one rule on the source
+table's parquet footers: above either source bound the parquet drain,
+otherwise the memory sink. Corpus-sized stores call
+``_drain_to_parquet`` directly. The two round-trip jobs start their
+queries through the ``sinks`` K1/K3 constructors.
 """
 
 from __future__ import annotations
@@ -374,20 +369,23 @@ MEMORY_DRAIN_MAX_SOURCE_BYTES = 256 << 20
 MEMORY_DRAIN_MAX_SOURCE_ROWS = 1_000_000
 
 
-def _drain(df: DataFrame, name: str, source: str, mode: str = "append") -> DataFrame:
-    """Drain a stream result whose size the ``source`` table bounds,
-    deciding its sink from that table's parquet FOOTERS (one directory
-    walk, read before the stream runs; the row count also sizes the
-    state layout). One rule for every leg: if the source's bytes exceed
-    ``MEMORY_DRAIN_MAX_SOURCE_BYTES`` or its rows exceed
-    ``MEMORY_DRAIN_MAX_SOURCE_ROWS``, the leg drains executor-parallel
+def _drain(
+    df: DataFrame, name: str, source: str, mode: str = "append", rows_per_source: int = 1
+) -> DataFrame:
+    """Drain a stream result of at most ``rows_per_source`` rows per row
+    of the ``source`` table, deciding its sink from that table's parquet
+    FOOTERS (one directory walk, read before the stream runs; the row
+    count also sizes the state layout). One rule for every leg: if the
+    source's bytes exceed ``MEMORY_DRAIN_MAX_SOURCE_BYTES`` or its rows
+    times ``rows_per_source`` exceed ``MEMORY_DRAIN_MAX_SOURCE_ROWS``,
+    the leg drains executor-parallel
     through ``_drain_to_parquet(mode=mode)``; otherwise through the
     driver memory sink, read back as the table ``name`` whose temp view
     is then dropped: the returned frame keeps the sink's rows alive, and
-    nothing else does once the caller lets it go. Corpus-sized
-    stores (token/span/shingle tables, per-EVENT rows — several rows per
-    document) never come here; their jobs call ``_drain_to_parquet``
-    directly (the r8 discipline).
+    nothing else does once the caller lets it go. Corpus-sized stores
+    with no constant rows-per-source bound (token/span/shingle tables,
+    video keyframes) never come here; their jobs call
+    ``_drain_to_parquet`` directly (the r8 discipline).
 
     A missing source sizes nothing (the stream's own reader raises the
     clearer error) and routes to memory."""
@@ -395,7 +393,7 @@ def _drain(df: DataFrame, name: str, source: str, mode: str = "append") -> DataF
     rows = _rows_of(files) if files else None
     if (
         _bytes_of(files) > MEMORY_DRAIN_MAX_SOURCE_BYTES
-        or (rows or 0) > MEMORY_DRAIN_MAX_SOURCE_ROWS
+        or (rows or 0) * rows_per_source > MEMORY_DRAIN_MAX_SOURCE_ROWS
     ):
         return _drain_to_parquet(df, name, mode=mode, source_rows=rows)
     _replay(df, name, lambda w: w.outputMode(mode).format("memory"), rows)
@@ -425,39 +423,19 @@ def _rows_of(files: list[str]) -> int:
 
 
 def twin_stream(twin, spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The streaming entry of a ``queries.Twin``: its batch entry's own
-    ingest over the replayed table, drained, then its analyze over the
-    store. A tuple ingest drains one parquet store per frame."""
+    """The streaming entry of a ``queries.Twin``: its ingest over the
+    replayed table, drained, then its analyze over the store. A tuple
+    ingest drains one parquet store per frame."""
     out = twin.ingest(_table_stream(spark, sf_dir, twin.table))
     sink = f"st_{twin.name}_sink"
-    if not twin.parquet:
-        store = _drain(out, sink, table_path(sf_dir, twin.table), twin.mode)
+    if twin.rows_per_source is not None:
+        source = table_path(sf_dir, twin.table)
+        store = _drain(out, sink, source, twin.mode, twin.rows_per_source)
     elif isinstance(out, tuple):
         store = tuple(_drain_to_parquet(o, f"{sink}{i}") for i, o in enumerate(out))
     else:
         store = _drain_to_parquet(out, sink)
     return twin.analyze(store, spark, sf_dir)
-
-
-def latest_per_user_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming A2/A3: last event per user via max_by aggregation
-    (complete mode). Ties on ts break by event_id, matching DQ-07."""
-    src = _table_stream(spark, sf_dir, "events")
-    agg = src.groupBy("user_id").agg(
-        F.expr("max_by(struct(event_type, value), struct(ts, event_id))").alias("m")
-    )
-    out = agg.select("user_id", F.col("m.event_type").alias("event_type"), F.col("m.value").alias("value"))
-    return _drain(out, "st_latest_user_sink", table_path(sf_dir, "events"), "complete")
-
-
-def window_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming A4/T3: tumbling 1h snapshot counts per event type."""
-    src = _table_stream(spark, sf_dir, "events")
-    agg = src.groupBy(F.window("ts", "1 hour").alias("win"), "event_type").agg(
-        F.count("*").alias("n")
-    )
-    out = agg.select(F.col("win.start").alias("w"), "event_type", "n")
-    return _drain(out, "st_window_counts_sink", table_path(sf_dir, "events"), "complete")
 
 
 def override_asof_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -471,216 +449,12 @@ def override_asof_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _drain(out, "st_override_asof_sink", events)
 
 
-def session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-time session windows (30-min gap) per user — the streaming
-    generalization of the override-session construct (A5): a session closes
-    when the key goes quiet for the gap. ``session_window`` merges while
-    ``next_ts < prev_ts + gap`` (window end exclusive), so the batch oracle
-    breaks sessions on ``diff >= gap``."""
-    src = _table_stream(spark, sf_dir, "events")
-    agg = src.groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id").agg(
-        F.count("*").alias("n"), F.max("event_id").alias("last_event")
-    )
-    out = agg.select("user_id", F.col("sw.start").alias("s_start"), "n", "last_event")
-    # corpus-proportional (~one session per active user): past the
-    # source bounds _drain sends it to the foreachBatch parquet snapshot
-    return _drain(out, "st_session_window_sink", table_path(sf_dir, "events"), "complete")
-
-
-def sliding_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding event-time windows (1 h long, 30 min slide) per event type —
-    every event lands in exactly two windows."""
-    src = _table_stream(spark, sf_dir, "events")
-    agg = src.groupBy(F.window("ts", "1 hour", "30 minutes").alias("win"), "event_type").agg(
-        F.count("*").alias("n")
-    )
-    out = agg.select(F.col("win.start").alias("w_start"), "event_type", "n")
-    return _drain(out, "st_sliding_counts_sink", table_path(sf_dir, "events"), "complete")
-
-
-def content_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming content dedup: SimHash each incoming document (Arrow
-    kernel inside the stream) and keep one document per signature —
-    the LLM-pipeline dedup shape applied online. Output is the kept
-    signature set (deterministic regardless of which doc wins a bucket)."""
-    from espkinesis_spark.functions import dedup
-
-    src = _table_stream(spark, sf_dir, "documents")
-    signed = dedup.simhash(src)  # mapInPandas works on streaming DataFrames
-    out = signed.dropDuplicates(["simhash"]).select("simhash")
-    return _drain(out, "st_content_dedup_sink", table_path(sf_dir, "documents"))
-
-
-def quality_gate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming document quality gate: the Gopher-style repetition rules
-    applied to documents AS THEY ARRIVE (text.quality_gate_stateless, the
-    documents ``text.quality_filter``'s per-row projection keeps) — zero
-    state, no watermark, append mode, so the gate keeps up at any ingest
-    rate; it shares one oracle with the batch gate."""
-    from espkinesis_spark.functions.text import quality_gate_stateless
-
-    src = _table_stream(spark, sf_dir, "documents")
-    out = quality_gate_stateless(src)
-    return _drain(out, "st_quality_gate_sink", table_path(sf_dir, "documents"))
-
-
-def zorder_shard_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming z-SHARD assignment: the Morton key computed AT INGEST as
-    a stateless zero-shuffle projection, bucketed by its LOW interleaved
-    bits — the streaming goal is BALANCED SPREAD across writers (the low
-    3 bits of each axis vary fastest), not the batch entry's locality
-    (which needs corpus min/max bounds no endless stream has; the first
-    cut bucketed the TOP bits of a modular grid and the report
-    degenerated to 8 buckets with near-full spans on this fixture — the
-    pmod-undershoot vacuity NOTES.md documents for the batch form). The
-    interleave still buys hierarchical splitting: dropping one low
-    z-bit merges shard pairs that are adjacent in BOTH axes' low bits.
-    The drained store rolls up rows + user spread per shard; balance is
-    pinned by test. The per-event z store is corpus-PROPORTIONAL (one
-    row per event), so it drains through the executor-parallel parquet
-    sink per the r8 discipline — the first cut used the driver memory
-    sink (r10 VERDICT weak item); the rollup itself needs an exact
-    countDistinct, which streaming aggregation can't hold, so it stays
-    post-drain."""
-    from espkinesis_spark.functions import common as C
-    from espkinesis_spark.functions import layout
-
-    grid = 1 << C.ZORDER_BITS
-    src = _table_stream(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        F.unix_millis("ts").alias("t_ms"),
-    )
-    # pre-1970 timestamps are out of contract: Spark's `div`/pmod
-    # truncate-vs-floor differs from DuckDB's `//`/`%` on NEGATIVE
-    # operands, so the oracle mirror only holds for t_ms >= 0 (the same
-    # non-negative-epoch assumption the as-of composite documents)
-    z = src.select(
-        "event_id",
-        "user_id",
-        "t_ms",
-        layout.z_value(
-            F.pmod(F.col("user_id"), F.lit(grid)).cast("long"),
-            F.pmod(F.expr("t_ms div 1000"), F.lit(grid)).cast("long"),
-        ).alias("z"),
-    )
-    store = _drain_to_parquet(z, "st_zorder_sink")
-    shards = 1 << C.ZORDER_REPORT_BITS
-    return store.groupBy(F.pmod(F.col("z"), F.lit(shards)).alias("zshard")).agg(
-        F.count("*").cast("long").alias("n"),
-        F.countDistinct("user_id").cast("long").alias("n_users"),
-    )
-
-
-def vocab_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming corpus vocabulary: running token counts maintained
-    incrementally as documents arrive (complete-mode aggregation — state is
-    one row per distinct token, vocab-sized, not corpus-sized). Final table
-    equals the batch token count, so the DuckDB oracle is exact."""
-    from espkinesis_spark.functions.text import tokens
-
-    src = _table_stream(spark, sf_dir, "documents")
-    out = (
-        src.select(F.explode(tokens(F.col("text"))).alias("token"))
-        .groupBy("token")
-        .agg(F.count("*").cast("long").alias("n"))
-    )
-    return _drain(out, "st_vocab_sink", table_path(sf_dir, "documents"), "complete")
-
-
-def heavy_hitters_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming heavy hitters: running token counts maintained
-    complete-mode on the document stream (vocab-sized state, exactly the
-    st_vocab shape), then the exact share filter (count·k > total) applied
-    over the drained snapshot. The snapshot counts equal the batch counts,
-    so this shares ex_heavy_hitters' exact oracle — the streaming leg of
-    the Misra-Gries batch op (which bounds candidate memory instead of
-    keeping the full vocab; pick per deployment by vocab size). The
-    total-vs-counts comparison self-joins the snapshot, so it is frozen
-    with localCheckpoint first (a memory-sink view cannot appear twice in
-    one plan — the st_anomaly hazard)."""
-    from espkinesis_spark.functions import common as C
-    from espkinesis_spark.functions.text import exact_share_filter, tokens
-
-    src = _table_stream(spark, sf_dir, "documents")
-    agg = (
-        src.select(F.explode(tokens(F.col("text"))).alias("token"))
-        .groupBy("token")
-        .agg(F.count("*").cast("long").alias("n"))
-    )
-    counts = _drain(agg, "st_heavy_hitters_sink", table_path(sf_dir, "documents"), "complete")
-    counts = counts.localCheckpoint(eager=True)
-    tot = counts.agg(F.sum("n").cast("long").alias("total"))
-    return exact_share_filter(counts, tot, "token", C.HH_K)
-
-
-def ack_tracker_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J7/A2 as a driver query: a deterministic ack stream derived from the
-    events table (mac keyed by user_id % 8, ok unless event_id % 3 == 0)
-    joined to the target dim; latest ack wins per target, ok acks refresh
-    last_successful_send."""
-    from espkinesis_spark.streaming.pipeline import ack_tracker
-
-    src = _table_stream(spark, sf_dir, "events")
-    acks = src.select(
-        F.col("ts").alias("ack_ts"),
-        F.format_string("AA:BB:CC:DD:EE:%02X", (F.col("user_id") % 8 + 1).cast("int")).alias(
-            "mac"
-        ),
-        (F.col("event_id") % 3 != 0).alias("ok"),
-        F.col("event_id").alias("ack_id"),
-    )
-    targets = spark.createDataFrame(
+def _targets(spark: SparkSession) -> DataFrame:
+    """The target dim the command plane and the ack tracker address:
+    ids 1-8, MAC ``AA:BB:CC:DD:EE:<id>``."""
+    return spark.createDataFrame(
         [(i, f"AA:BB:CC:DD:EE:{i:02X}") for i in range(1, 9)], "id int, mac string"
     )
-    out = ack_tracker(acks, targets, tiebreak="ack_id")
-    return _drain(out, "st_ack_tracker_sink", table_path(sf_dir, "events"), "complete")
-
-
-def dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming deduplication: first event per (user_id, event_type) wins;
-    the kept-key set (not the arbitrary winning row) is the deterministic,
-    oracle-checkable output. State is one entry per distinct key — bound it
-    in production with ``dropDuplicatesWithinWatermark``."""
-    src = _table_stream(spark, sf_dir, "events")
-    out = src.dropDuplicates(["user_id", "event_type"]).select("user_id", "event_type")
-    return _drain(out, "st_dedup_sink", table_path(sf_dir, "events"))
-
-
-def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream interval join: each click joined to the same user's
-    purchases within the preceding hour (the ack-correlation shape J7 as an
-    event-time join). Watermarks bound the join state on both sides; the
-    replay drains in append mode (matches emit as both sides arrive).
-    Both sides branch from ONE source (a stream-stream self-join) — a
-    second FileStreamSource instance measured ~25% slower and doubles the
-    source-offset bookkeeping."""
-    src = _table_stream(spark, sf_dir, "events")
-    clicks = (
-        src.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "2 hours")
-    )
-    purchases = (
-        src.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("p_ts") <= F.col("c_ts"))
-        & (F.col("p_ts") > F.col("c_ts") - F.expr("INTERVAL 1 HOUR")),
-    ).select("click_id", "purchase_id")
-    return _drain(joined, "st_stream_join_sink", table_path(sf_dir, "events"))
 
 
 def _command_lines_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -755,10 +529,7 @@ def command_plane_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cmd_dir = _command_lines_dir(spark, sf_dir)
     lines = file_stream(spark, cmd_dir, COMMAND_LINE_SCHEMA, fmt="parquet")
-    targets = spark.createDataFrame(
-        [(i, f"AA:BB:CC:DD:EE:{i:02X}") for i in range(1, 9)], "id int, mac string"
-    )
-    annotated = classify_command_lines(lines, targets)
+    annotated = classify_command_lines(lines, _targets(spark))
     out = (
         annotated.select(F.coalesce(F.col("error"), F.lit("ok")).alias("cls"))
         .groupBy("cls")

@@ -57,9 +57,13 @@ def test_label_propagation_matches_python_model(spark):
     @settings(max_examples=8, deadline=None, phases=_NO_SHRINK)
     @given(st.lists(_edge, min_size=1, max_size=14), st.integers(0, 4))
     # a star on hub 5 with leaves 1, 2, 3 and 8, and the isolated pairs
-    # 0-9 and 4-6: each round the hub's four votes tie, the leaves follow
-    # the hub, and each pair swaps its labels
+    # 0-9 and 4-6: in round 1 the hub's four votes tie (to leaf 1) and the
+    # leaves take the hub's 5; from then on the hub and its leaves swap
+    # labels every round, as each pair does
     @example([(5, 1), (5, 2), (3, 5), (8, 5), (0, 9), (4, 6)], 3)
+    # a repeated edge votes once per copy: node 2 takes label 3 (two
+    # votes) over label 1, which would win a tie
+    @example([(3, 2), (3, 2), (1, 2)], 1)
     def run(edges, iters):
         df = spark.createDataFrame(edges, "src long, dst long")
         got = graph.label_propagation(df, iters).collect()

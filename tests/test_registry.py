@@ -135,28 +135,48 @@ def test_registry_dict_literal_has_no_duplicate_keys():
 
 
 def test_oracle_aliases_come_from_one_twin_declaration():
-    """Every streaming entry that shares its batch entry's oracle
-    (``ORACLES["st_x"] is ORACLES["ex_x"]``) runs that entry's own ingest
-    and analyze: both registry values are bound to one ``queries.Twin``.
-    ``st_heavy_hitters`` is the one exception: its batch entry is
-    Misra-Gries (``frequent_values``), a different kernel."""
+    """Every ``st_*`` entry but the four with a lifecycle of their own is
+    ``Twin.stream`` bound to its ``queries.TWINS`` member. Where a
+    streaming entry shares its batch entry's oracle
+    (``ORACLES["st_x"] is ORACLES["ex_x"]``), the batch entry runs the
+    same ingest and analyze: both registry values are bound to that one
+    declaration. A declaration's ``batch`` is registered nowhere else.
+    ``st_heavy_hitters`` is the one aliased pair whose batch entry is not
+    its declaration's ``batch``: it is Misra-Gries (``frequent_values``),
+    a different kernel."""
     from espkinesis_spark import queries
     from espkinesis_spark.oracles import ORACLES
 
     reg = queries.registry()
+    lifecycle = {
+        "st_override_asof",
+        "st_command_plane",
+        "st_sink_roundtrip",
+        "st_console_roundtrip",
+    }
+    declared = {n for n in reg if n.startswith("st_")} - lifecycle
+    assert {n[3:] for n in declared} == set(queries.TWINS)
+    for n in declared:
+        assert reg[n].__func__ is queries.Twin.stream, n
+        assert reg[n].__self__ is queries.TWINS[n[3:]], n
+    for n in lifecycle:
+        assert not isinstance(getattr(reg[n], "__self__", None), queries.Twin), n
+
     aliased = {
         n[3:]
         for n in reg
         if n.startswith("st_") and ORACLES[n] is ORACLES.get("ex_" + n[3:])
     }
     assert "heavy_hitters" in aliased
-    assert not isinstance(
-        getattr(reg["st_heavy_hitters"], "__self__", None), queries.Twin
-    )
     twins = aliased - {"heavy_hitters"}
-    assert twins == set(queries.TWINS) and len(twins) == 21
+    assert len(twins) == 21
     for name in twins:
         ex, st = reg["ex_" + name], reg["st_" + name]
         assert ex.__self__ is st.__self__ is queries.TWINS[name]
         assert ex.__func__ is queries.Twin.batch
-        assert st.__func__ is queries.Twin.stream
+    batch_bound = {
+        fn.__self__.name
+        for fn in reg.values()
+        if getattr(fn, "__func__", None) is queries.Twin.batch
+    }
+    assert batch_bound == twins

@@ -283,7 +283,7 @@ def test_rocksdb_state_store_runs_stateful_replay(spark, sf_dir):
     analog. RocksDB keeps state off-heap/on-disk — the provider that holds
     at 100 TB key cardinality where the default in-memory HDFS-backed
     provider OOMs."""
-    from espkinesis_spark.streaming import jobs
+    from espkinesis_spark import queries
     from espkinesis_spark.tables import load_table
 
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
@@ -294,7 +294,7 @@ def test_rocksdb_state_store_runs_stateful_replay(spark, sf_dir):
     try:
         got = {
             (r["w"], r["event_type"], r["n"])
-            for r in jobs.window_counts_stream(spark, sf_dir).collect()
+            for r in queries.registry()["st_window_counts"](spark, sf_dir).collect()
         }
     finally:
         if prev is None:
@@ -407,20 +407,22 @@ def _chunked_doc_stream(spark, sf_dir, tmp_path_factory, label, n_chunks=3):
     )
 
 
-def _twin_replay(spark, sf_dir, twin, src, label):
-    """Run the registry twin's own ingest over the multi-batch ``src``
-    into a memory sink and its analyze over that store; returns (the
-    result rows, the finished query)."""
-    q = (
-        twin.ingest(src)
-        .writeStream.outputMode(twin.mode)
-        .format("memory")
-        .queryName(label)
-        .trigger(availableNow=True)
-        .start()
-    )
+def _twin_replay(spark, sf_dir, twin, src, label, sink_dir=None):
+    """Run the registry declaration's own ingest over the multi-batch
+    ``src`` into a memory sink, or into a parquet file sink under
+    ``sink_dir`` when given, and its analyze over that store; returns
+    (the result rows, the finished query)."""
+    w = twin.ingest(src).writeStream.outputMode(twin.mode).queryName(label)
+    if sink_dir is None:
+        w = w.format("memory")
+    else:
+        data = os.path.join(sink_dir, "data")
+        w = w.format("parquet").option("path", data)
+        w = w.option("checkpointLocation", os.path.join(sink_dir, "ckpt"))
+    q = w.trigger(availableNow=True).start()
     q.awaitTermination()
-    got = {tuple(r) for r in twin.analyze(spark.table(label), spark, sf_dir).collect()}
+    store = spark.table(label) if sink_dir is None else spark.read.parquet(data)
+    got = {tuple(r) for r in twin.analyze(store, spark, sf_dir).collect()}
     return got, q
 
 
@@ -432,20 +434,12 @@ def test_quality_gate_stream_multibatch_equals_batch(spark, sf_dir, tmp_path_fac
     """The stateless streaming gate replayed in multiple micro-batches
     must emit exactly the batch gate's passing set (append mode: each doc
     judged once, in whatever batch it arrives)."""
-    from espkinesis_spark.functions.text import quality_filter, quality_gate_stateless
+    from espkinesis_spark.functions.text import quality_filter
+    from espkinesis_spark.queries import TWINS
 
     docs, src = _chunked_doc_stream(spark, sf_dir, tmp_path_factory, "qg")
-    q = (
-        quality_gate_stateless(src)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("qg_mb")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    got, q = _twin_replay(spark, sf_dir, TWINS["quality_gate"], src, "qg_mb")
     n_batches = len(q.recentProgress)
-    got = {tuple(r) for r in spark.table("qg_mb").collect()}
     want = {
         tuple(r)
         for r in quality_filter(docs)
@@ -493,34 +487,15 @@ def test_anomaly_stream_snapshot_equals_batch(spark, sf_dir, tmp_path_factory):
 def test_heavy_hitters_stream_multibatch_equals_batch(spark, sf_dir, tmp_path_factory):
     """Streaming heavy hitters replayed across micro-batches: the
     complete-mode token counts must accumulate across batches so the
-    snapshot filter equals the batch ex_heavy_hitters output exactly."""
-    from espkinesis_spark.functions import common as C
-    from espkinesis_spark.functions.text import heavy_hitters, tokens
+    snapshot filter equals the batch ex_heavy_hitters output exactly
+    (token, count and share)."""
+    from espkinesis_spark.functions.text import heavy_hitters
+    from espkinesis_spark.queries import TWINS
 
     docs, src = _chunked_doc_stream(spark, sf_dir, tmp_path_factory, "hh")
-    agg = (
-        src.select(F.explode(tokens(F.col("text"))).alias("token"))
-        .groupBy("token")
-        .agg(F.count("*").cast("long").alias("n"))
-    )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("hh_mb")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    got, q = _twin_replay(spark, sf_dir, TWINS["heavy_hitters"], src, "hh_mb")
     assert len(q.recentProgress) > 1, "replay did not split into micro-batches"
-    counts = spark.table("hh_mb").localCheckpoint(eager=True)
-    tot = counts.agg(F.sum("n").cast("long").alias("total"))
-    got = {
-        (r["token"], r["n"])
-        for r in counts.crossJoin(F.broadcast(tot))
-        .filter(F.col("n") * C.HH_K > F.col("total"))
-        .collect()
-    }
-    want = {(r["token"], r["n"]) for r in heavy_hitters(docs).collect()}
+    want = {tuple(r) for r in heavy_hitters(docs).collect()}
     assert got == want and len(want) > 0
 
 
@@ -652,6 +627,41 @@ def test_drain_rowstore_routes_by_source_size(spark, sf_dir, monkeypatch):
     assert via_parquet == via_memory and len(via_memory) > 0
 
 
+def test_routed_stores_hold_at_most_rows_per_source(spark, sf_dir, monkeypatch):
+    """jobs._drain sizes the memory sink by the source's row count times
+    the caller's ``rows_per_source``, so that must bound the store: for
+    every ``st_*`` entry that drains through ``_drain`` (a declaration
+    with an integer ``rows_per_source``, or ``st_override_asof`` and
+    ``st_command_plane`` at 1), store rows <= rows_per_source x source
+    rows."""
+    from espkinesis_spark import queries
+    from espkinesis_spark.streaming import jobs
+    from espkinesis_spark.tables import _source_files
+
+    reg = queries.registry()
+    routed = {"st_override_asof", "st_command_plane"} | {
+        "st_" + t.name for t in queries.TWINS.values() if t.rows_per_source is not None
+    }
+    drain = jobs._drain
+    stores = {}
+
+    def spy(df, name, source, mode="append", rows_per_source=1):
+        out = drain(df, name, source, mode, rows_per_source)
+        stores[name] = (out.count(), jobs._rows_of(_source_files(source)), rows_per_source)
+        return out
+
+    monkeypatch.setattr(jobs, "_drain", spy)
+    for name in routed:
+        reg[name](spark, sf_dir)
+    assert set(stores) == {f"{n}_sink" for n in routed}
+    over = {n: s for n, s in stores.items() if s[0] > s[1] * s[2]}
+    assert over == {}, over
+    # the bound is not vacuous: the image bands and the sliding windows
+    # each hold more rows than their source
+    assert stores["st_image_neardup_sink"][0] > stores["st_image_neardup_sink"][1]
+    assert stores["st_sliding_counts_sink"][0] > stores["st_sliding_counts_sink"][1]
+
+
 def test_video_frame_stores_never_use_memory_sink(spark, sf_dir):
     """The per-FRAME video stores are several rows per document — the
     corpus-sized class the drain policy excludes from memory-sink
@@ -713,16 +723,16 @@ def test_drain_rowstore_routes_by_source_row_count(spark, sf_dir, monkeypatch):
 
 
 @pytest.mark.parametrize(
-    ("job_name", "sink"),
+    ("entry", "sink"),
     [
-        ("session_window_stream", "st_session_window_sink"),
-        ("latest_per_user_stream", "st_latest_user_sink"),
-        ("override_asof_stream", "st_override_asof_sink"),
-        ("stream_stream_join", "st_stream_join_sink"),
+        ("st_session_window", "st_session_window_sink"),
+        ("st_latest_user", "st_latest_user_sink"),
+        ("st_override_asof", "st_override_asof_sink"),
+        ("st_stream_join", "st_stream_join_sink"),
     ],
 )
 def test_complete_mode_result_sink_routes_identically(
-    spark, sf_dir, monkeypatch, job_name, sink
+    spark, sf_dir, monkeypatch, entry, sink
 ):
     """Past the source bounds jobs._drain moves a result leg from the
     driver memory sink to the executor-parallel parquet drain (the
@@ -733,9 +743,10 @@ def test_complete_mode_result_sink_routes_identically(
     corpus-proportional session window and latest-per-user), a stateful
     append leg (the applyInPandasWithState as-of) and the stream-stream
     join, to prove the rule is general, not entry-special-cased."""
+    from espkinesis_spark import queries
     from espkinesis_spark.streaming import jobs
 
-    job = getattr(jobs, job_name)
+    job = queries.registry()[entry]
 
     def run():
         return sorted(tuple(r) for r in job(spark, sf_dir).collect())
@@ -1127,45 +1138,23 @@ def test_zorder_stream_parquet_drain_multibatch_accumulates(
     memory sink) must accumulate EXACTLY the per-event z rows across
     micro-batch splits — append-mode file-sink semantics, no loss, no
     duplication — so the post-drain rollup equals the batch form."""
-    from espkinesis_spark.functions import common as C
-    from espkinesis_spark.functions import layout
+    from espkinesis_spark.queries import TWINS
     from espkinesis_spark.tables import load_table
 
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", F.unix_millis("ts").alias("t_ms")
-    )
+    twin = TWINS["zorder_layout"]
+    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     src = _chunked_replay(spark, tmp_path_factory, "zshard", ev, "event_id")
-    sink_dir = tmp_path_factory.mktemp("zshard_sink")
-    grid = 1 << C.ZORDER_BITS
-
-    def zproj(df):
-        return df.select(
-            "event_id",
-            layout.z_value(
-                F.pmod(F.col("user_id"), F.lit(grid)).cast("long"),
-                F.pmod(F.expr("t_ms div 1000"), F.lit(grid)).cast("long"),
-            ).alias("z"),
-        )
-
-    out_dir = str(sink_dir / "data")
-    q = (
-        zproj(src)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(sink_dir / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    sink_dir = str(tmp_path_factory.mktemp("zshard_sink"))
+    shards, q = _twin_replay(spark, sf_dir, twin, src, "zshard_mb", sink_dir)
     assert len(q.recentProgress) > 1  # genuinely multi-batch
-    drained = spark.read.parquet(out_dir)
+    drained = spark.read.parquet(os.path.join(sink_dir, "data"))
     # exact count pins NO-DUPLICATION (a set compare alone would collapse
     # a twice-written micro-batch); the set compare pins no-loss
     assert drained.count() == ev.count()
     got = {tuple(r) for r in drained.collect()}
-    want = {tuple(r) for r in zproj(ev).collect()}
+    want = {tuple(r) for r in twin.ingest(ev).collect()}
     assert got == want and len(want) > 0
+    assert shards == _twin_batch(spark, sf_dir, twin, ev)
 
 
 def _asof_checkpoint_run(spark, events_dir, ckpt, stateful):

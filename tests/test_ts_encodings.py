@@ -94,14 +94,15 @@ def test_streaming_source_adapts_to_encoding(spark, sf_dir, encoded_dirs):
     """The FileStreamSource path probes the footer for its declared schema;
     the last-value-per-key stream must agree across encodings (the r4 bug
     shape: a long-declared schema over µs data is off by 1000x)."""
-    from espkinesis_spark.streaming.jobs import latest_per_user_stream
+    from espkinesis_spark.queries import registry
 
+    latest_user = registry()["st_latest_user"]
     canonical = sorted(
-        map(tuple, latest_per_user_stream(spark, sf_dir).collect())
+        map(tuple, latest_user(spark, sf_dir).collect())
     )
     for enc in ("nanos", "us_ntz", "int96"):
         got = sorted(
-            map(tuple, latest_per_user_stream(spark, encoded_dirs[enc]).collect())
+            map(tuple, latest_user(spark, encoded_dirs[enc]).collect())
         )
         assert got == canonical, f"streaming drifted under encoding {enc}"
 

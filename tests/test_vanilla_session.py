@@ -76,10 +76,11 @@ def test_entry_queries_on_vanilla_session(spark, sf_dir):
 def test_streaming_job_on_vanilla_session(spark, sf_dir):
     """Streaming jobs bypass load_table; their own entry points must pin
     confs too (st_* correctness rows in round 2)."""
-    from espkinesis_spark.streaming.jobs import latest_per_user_stream
+    from espkinesis_spark.queries import registry
 
+    latest_user = registry()["st_latest_user"]
     with _vanilla_confs(spark):
-        df = latest_per_user_stream(spark, sf_dir)
+        df = latest_user(spark, sf_dir)
         assert df.count() >= 1
         assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
 

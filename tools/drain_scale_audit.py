@@ -14,10 +14,10 @@ leaves documents flat at 500, which would blind the doc-side leg).
 For each entry, record the row count of every frame jobs._drain
 returned through the memory sink (its name did not go to
 jobs._drain_to_parquet) at each SF, plus the entry's RESULT row count.
-The batch/stream twins (``queries.TWINS``) drain in
-``jobs.twin_stream``, whose drain is picked by the twin declaration
-(``parquet``, ``mode``); it calls both drains through the module
-globals this audit swaps for its spies.
+The declared stream entries (``queries.TWINS``) drain in
+``jobs.twin_stream``, whose drain is picked by the declaration
+(``rows_per_source``, ``mode``); it calls both drains through the
+module globals this audit swaps for its spies.
 Classification of a store whose rows grow more than GROWTH_LIMIT across
 the step:
 
@@ -25,14 +25,15 @@ the step:
     the big SF — the drained frame IS the result set, which the
     harness collects anyway, so the memory sink adds no second
     corpus-sized driver copy (the r10 VERDICT st_stratified carve-out).
-  * EXPECTED_GROWTH (annotated): per-doc fingerprint stores (one row
-    per source row, so jobs._drain's source bounds cap them: the memory
-    sink BELOW the bounds, the parquet drain above) and stores whose
+  * EXPECTED_GROWTH (annotated): per-doc fingerprint stores (a
+    constant number of rows per source row, so jobs._drain's source
+    bounds cap them: the memory sink BELOW the bounds, the parquet
+    drain above) and stores whose
     growth tracks a dimension the fixture couples to SF (key
     cardinality, time span) rather than corpus row count.
   * anything else: FLAGGED — cross it to jobs._drain_to_parquet (for
-    a twin: ``parquet=True`` on its declaration), or to jobs._drain if
-    at most one store row per source row.
+    a declared entry: ``rows_per_source=None``), or to jobs._drain with
+    its constant bound of store rows per source row.
 
 Exit 1 on unexplained flags, 0 when clean.
 
@@ -62,8 +63,9 @@ MIN_FLAG_ROWS = 1000
 # sink name -> why >GROWTH_LIMIT growth is correct for this store
 EXPECTED_GROWTH: dict[str, str] = {
     "st_image_neardup_sink": "size-routed per-doc fingerprint store: "
-    "_drain keeps it on the memory sink below the 256 MB / 1M-row "
-    "source bounds and crosses to the parquet drain above them (route "
+    "_drain keeps it on the memory sink below the 256 MB source bound "
+    "and 1M store rows (4 per source document) and crosses to the "
+    "parquet drain above them (route "
     "pinned by tests/test_streaming.py::test_drain_rowstore_routes_by_source_size)",
     "st_image_dedup_apply_sink": "size-routed per-doc fingerprint "
     "store (same source bounds)",
@@ -92,8 +94,8 @@ def _run_entries(spark, sf_dir: str):
         parquet.add(name)
         return to_parquet(df, name, **kwargs)
 
-    def drain_spy(df, name, source, mode="append"):
-        out = drain(df, name, source, mode)
+    def drain_spy(df, name, source, mode="append", rows_per_source=1):
+        out = drain(df, name, source, mode, rows_per_source)
         if name not in parquet:
             sizes[name] = out.count()
         return out
