@@ -21,16 +21,16 @@ can finish the job:
    ``(v_lo, v_hi, w)``: ``w`` rows of the partition lie in
    ``(v_lo, v_hi]``. Summary size is O(partitions x SKQ_SUMMARY) rows —
    data-size independent.
-2. **Bound** — over the summary only: a block holds the partition rows
-   with sorted rank in ``(c_prev, c]``; their VALUES satisfy
+2. **Bound** — on the driver, over the summary only (one collect, then
+   sort/cumsum/searchsorted in ``_brackets``): a block holds the
+   partition rows with sorted rank in ``(c_prev, c]``; their VALUES satisfy
    ``v_lo <= x <= v_hi`` (closed on the left — ties on the boundary
    value spill into the block). So ``count(x <= v)`` is bracketed by
    ``lower(v) = sum(w | v_hi <= v)`` (those blocks lie entirely at or
    below ``v``) and ``upper(v) = sum(w | v_lo <= v)`` (a block whose
    ``v_lo`` exceeds ``v`` lies entirely above it; the comparison must be
    NON-strict or boundary ties undercount). For target rank ``r`` the
-   true quantile then
-   sits in ``(lo, hi]`` with ``lo = max{v : upper(v) < r}`` (possibly
+   true quantile then sits in ``(lo, hi]`` with ``lo = max{v : upper(v) < r}`` (possibly
    none) and ``hi = min{v : lower(v) >= r}`` (always exists: the global
    max has ``lower = n``). Each partition contributes at most
    ``n_p/SKQ_SUMMARY`` rows of rank slack per boundary, so the interval
@@ -43,13 +43,15 @@ can finish the job:
    output is the exact order statistic — independent of partitioning,
    batch order, and SKQ_SUMMARY (the sketch only narrows the interval).
 
-Scale shape: two single-column scans + one summary-sized window + one
+Scale shape: two single-column scans + one summary collect + one
 interval-sized aggregation. No full-data exchange at all, versus the
 global sort's shuffle of every row. The interval filter and conditional
-sums push down to the parquet scan. The bound windows run on a single
-partition BY DESIGN — they see O(partitions x SKQ_SUMMARY) rows, never
-data-sized (at extreme partition counts, shrink SKQ_SUMMARY or add one
-intermediate merge pass; the blocks are mergeable by construction).
+sums push down to the parquet scan. The bound phase runs on the DRIVER
+BY DESIGN: it sees the O(partitions x SKQ_SUMMARY) summary rows, never
+data-sized — the rows a single-partition Spark window would hold,
+without the window's jobs (at extreme partition counts, shrink
+SKQ_SUMMARY or add one intermediate merge pass; the blocks are
+mergeable by construction).
 
 Rank convention: ``r(pct) = ceil(pct * n / 100)`` computed in INTEGER
 arithmetic (``(pct*n + 99) div 100``) so both engines agree exactly —
@@ -94,6 +96,41 @@ def _partition_blocks(s: int):
     return kernel
 
 
+def _brackets(
+    v_lo: "np.ndarray", v_hi: "np.ndarray", w: "np.ndarray", pcts: Sequence[int]
+) -> tuple[int, list[tuple[int, int, float | None, float]]]:
+    """The bound phase over a collected block summary: ``n`` and, per
+    pct, ``(pct, target_rank, lo, hi)`` with the order statistic in
+    ``(lo, hi]`` (``lo`` None when no candidate lies below it). A NaN
+    ``v_lo`` is a partition's first block (its NULL start) and counts
+    under every candidate."""
+    import numpy as np
+
+    n = int(w.sum())
+    if not n:
+        return 0, []
+    cands = np.unique(v_hi)
+    by_hi = np.argsort(v_hi, kind="stable")
+    # lower(v) = sum(w | v_hi <= v), upper(v) = sum(w | v_lo <= v): both
+    # non-strict, so boundary ties on either edge count
+    lower = np.concatenate(([0], np.cumsum(w[by_hi])))[
+        np.searchsorted(v_hi[by_hi], cands, side="right")
+    ]
+    starts = ~np.isnan(v_lo)
+    by_lo = np.argsort(v_lo[starts], kind="stable")
+    upper = int(w[~starts].sum()) + np.concatenate(
+        ([0], np.cumsum(w[starts][by_lo]))
+    )[np.searchsorted(v_lo[starts][by_lo], cands, side="right")]
+    out = []
+    for pct in pcts:
+        rk = (int(pct) * n + 99) // 100  # exact ints, as the oracle's //
+        below = int(np.searchsorted(upper, rk, side="left"))
+        lo = float(cands[below - 1]) if below else None
+        hi = float(cands[np.searchsorted(lower, rk, side="left")])
+        out.append((int(pct), rk, lo, hi))
+    return n, out
+
+
 def sketch_quantiles(
     df: DataFrame,
     col: str,
@@ -103,78 +140,20 @@ def sketch_quantiles(
     """Exact percentiles of ``df[col]`` (one row per pct) without a
     global sort — see the module docstring for the algorithm and scale
     argument. Output: ``pct, n, target_rank, value`` with ``value`` the
-    exact ``target_rank``-th smallest non-null input value."""
+    exact ``target_rank``-th smallest non-null input value. The block
+    summary comes back to the driver in one collect: at most partitions
+    x ``s`` rows, whatever the row count."""
     vals = df.select(F.col(col).cast("double").alias("__x")).filter(
         F.col("__x").isNotNull()
     )
-    # Materialize the summary ONCE: three bound-phase consumers (lower /
-    # starts / total) would each re-execute the full-data scan + per-
-    # partition sort otherwise (ADVICE r6). The checkpoint is
-    # O(partitions x SKQ_SUMMARY) rows — cheap at any data size.
-    blocks = vals.mapInPandas(_partition_blocks(s), _BLOCK_SCHEMA).localCheckpoint(
-        eager=True
+    blocks = vals.mapInPandas(_partition_blocks(s), _BLOCK_SCHEMA).toPandas()
+    n, brackets = _brackets(
+        blocks["v_lo"].to_numpy("float64"),
+        blocks["v_hi"].to_numpy("float64"),
+        blocks["w"].to_numpy("int64"),
+        pcts,
     )
-
-    # --- bound phase: summary-sized only ------------------------------
-    # lower(v_hi): RANGE frame includes cross-partition ties on v_hi
-    w_lower = Window.orderBy("v_hi").rangeBetween(Window.unboundedPreceding, 0)
-    lower = (
-        blocks.withColumn("lower_cnt", F.sum("w").over(w_lower))
-        .groupBy("v_hi")
-        .agg(F.max("lower_cnt").alias("lower_cnt"))
-    )
-    # upper(v) = sum(w | v_lo <= v): merge-sort block starts (kind=0)
-    # BEFORE candidates (kind=1) at equal value, take the running w sum —
-    # a block whose v_lo equals the candidate must be included (boundary
-    # ties spill into the block: values are closed on the left). NULL
-    # v_lo (partition min block) sorts first and is always included.
-    cand = lower.select(
-        F.col("v_hi").alias("val"),
-        F.lit(1).alias("kind"),
-        F.lit(None).cast("long").alias("w"),
-    )
-    starts = (
-        blocks.groupBy(F.col("v_lo").alias("val"))
-        .agg(F.sum("w").alias("w"))
-        .select("val", F.lit(0).alias("kind"), "w")
-    )
-    w_upper = Window.orderBy(
-        F.col("val").asc_nulls_first(), "kind"
-    ).rowsBetween(Window.unboundedPreceding, 0)
-    upper = (
-        cand.unionByName(starts)
-        .withColumn("upper_cnt", F.sum(F.coalesce("w", F.lit(0))).over(w_upper))
-        .filter(F.col("kind") == 1)
-        .groupBy(F.col("val").alias("v_hi"))
-        .agg(F.min("upper_cnt").alias("upper_cnt"))
-    )
-    bounds = lower.join(upper, "v_hi")
-    total = blocks.agg(F.sum("w").cast("long").alias("n"))
-    pct_df = total.select(
-        "n", F.explode(F.array(*[F.lit(int(p)) for p in pcts])).alias("pct")
-    ).withColumn(
-        # INTEGER div, matching the oracle's `//` — double division then
-        # truncation goes off-by-one once n is large enough that the
-        # ~1e-16 relative error crosses the fractional gap
-        "target_rank",
-        F.expr("(pct * n + 99) div 100").cast("long"),
-    )
-    intervals = (
-        bounds.crossJoin(F.broadcast(pct_df))
-        .groupBy("pct", "n", "target_rank")
-        .agg(
-            F.max(
-                F.when(F.col("upper_cnt") < F.col("target_rank"), F.col("v_hi"))
-            ).alias("lo"),
-            F.min(
-                F.when(F.col("lower_cnt") >= F.col("target_rank"), F.col("v_hi"))
-            ).alias("hi"),
-        )
-    )
-    # bounded build-side collect: one row per pct (like the centroid /
-    # query-side collects in similarity.py — never data-sized)
-    ivs = [r for r in intervals.collect() if r["n"]]
-    if not ivs:  # empty/all-null input: empty result, stable schema
+    if not n:  # empty/all-null input: empty result, stable schema
         return df.sparkSession.createDataFrame(
             [], "pct int, n long, target_rank long, value double"
         )
@@ -188,18 +167,18 @@ def sketch_quantiles(
     # x <= max(hi) is a plain pushable range: rows at or below any lo
     # still matter (they feed the offsets), so per-interval pruning
     # tighter than hi_max would be incorrect here.
-    hi_max = max(r["hi"] for r in ivs)
+    hi_max = max(hi for *_, hi in brackets)
     entries = []
-    for r in ivs:
-        pct = F.lit(int(r["pct"]))
-        in_rng = F.col("__x") <= F.lit(r["hi"])
-        if r["lo"] is None:
+    for p, _, lo, hi in brackets:
+        pct = F.lit(p)
+        in_rng = F.col("__x") <= F.lit(hi)
+        if lo is None:
             entry = F.when(
                 in_rng, F.struct(pct.alias("pct"), F.col("__x").alias("v"))
             )
         else:
             entry = F.when(
-                F.col("__x") <= F.lit(r["lo"]),
+                F.col("__x") <= F.lit(lo),
                 F.struct(pct.alias("pct"), F.lit(None).cast("double").alias("v")),
             ).when(in_rng, F.struct(pct.alias("pct"), F.col("__x").alias("v")))
         entries.append(entry)
@@ -217,12 +196,7 @@ def sketch_quantiles(
     w_sel = Window.partitionBy("pct").orderBy("v").rangeBetween(
         Window.unboundedPreceding, 0
     )
-    need = F.create_map(
-        *[x for r in ivs for x in (F.lit(int(r["pct"])), F.lit(int(r["target_rank"])))]
-    )
-    n_map = F.create_map(
-        *[x for r in ivs for x in (F.lit(int(r["pct"])), F.lit(int(r["n"])))]
-    )
+    need = F.create_map(*[F.lit(x) for p, rk, *_ in brackets for x in (p, rk)])
     sel = (
         tagged.withColumn(
             "off", F.max(F.when(F.col("v").isNull(), F.col("c"))).over(w_pct)
@@ -244,7 +218,7 @@ def sketch_quantiles(
     )
     return sel.select(
         "pct",
-        n_map[F.col("pct")].cast("long").alias("n"),
+        F.lit(n).cast("long").alias("n"),
         need[F.col("pct")].cast("long").alias("target_rank"),
         "value",
     )
@@ -286,51 +260,62 @@ def sketch_quantiles(
 # so the DuckDB oracle replays it bit-exactly.
 
 
-def hdr_buckets(df: DataFrame, col: str, scale: int = C.HDR_SCALE) -> DataFrame:
-    """The mergeable sketch itself: (shift, top, w) bucket counts of
-    ``df[col]`` quantized to integer 1/scale units (sign-aware half-away,
-    the repo-wide fixed-point convention). Works unchanged on a streaming
-    frame (stateless projection + one grouped count — complete-mode state
-    is bucket-table-sized, never data-sized). Non-positive quantized
-    values are outside the log-sketch domain and excluded (documented;
-    a production deployment would keep a separate zero/negative counter —
-    the test data is strictly positive)."""
-    k = C.HDR_SUB_BITS
+def hdr_buckets(df: DataFrame, col: str, *group: str) -> DataFrame:
+    """The mergeable sketch itself: (``*group``, shift, top, w) bucket
+    counts of ``df[col]`` quantized to integer 1/HDR_SCALE units
+    (sign-aware half-away, the repo-wide fixed-point convention), one
+    sketch per value of the optional ``group`` columns. Works unchanged
+    on a streaming frame (stateless projection + one grouped count —
+    complete-mode state is groups x bucket-space, never data-sized).
+    Non-positive quantized values are outside the log-sketch domain and
+    excluded (documented; a production deployment would keep a separate
+    zero/negative counter — the test data is strictly positive)."""
+    k, scale = C.HDR_SUB_BITS, C.HDR_SCALE
     x = F.expr(
         f"CAST(CASE WHEN {col} >= 0 THEN floor({col} * {scale} + 0.5) "
         f"ELSE -floor(-({col}) * {scale} + 0.5) END AS BIGINT)"
     )
     return (
-        df.select(x.alias("__x"))
+        df.select(*group, x.alias("__x"))
         .filter(F.col("__x") >= 1)
         .withColumn("__m", (F.length(F.bin(F.col("__x"))) - 1).cast("int"))
         .withColumn("shift", F.greatest(F.lit(0), F.col("__m") - F.lit(k)))
         .withColumn("top", F.expr("shiftright(__x, shift)"))
-        .groupBy("shift", "top")
+        .groupBy(*group, "shift", "top")
         .agg(F.count("*").cast("long").alias("w"))
     )
 
 
-def hdr_quantiles(buckets: DataFrame, pcts: Sequence[int] = C.SKQ_PCTS) -> DataFrame:
-    """Answer percentiles FROM the sketch: one row per pct with the
-    integer bucket lower bound (guaranteed within relative
+def hdr_quantiles(
+    buckets: DataFrame, pcts: Sequence[int] = C.SKQ_PCTS, *group: str
+) -> DataFrame:
+    """Answer percentiles FROM the sketch: one row per (``*group``, pct)
+    with the integer bucket lower bound (guaranteed within relative
     2^-HDR_SUB_BITS below the true order statistic) and its descaled
     double. All windows/aggregates run over the bucket table only —
-    sketch-sized by construction, never data-sized (the inherent
-    summary-window SinglePartition, same class as sketch_quantiles'
-    bound phase). The bucket table feeds two branches (cumulative ranks
-    and the total), so callers pass it materialized; a live one would
-    scan the corpus twice."""
+    sketch-sized by construction, never data-sized. Ungrouped, the
+    cumulative window is the inherent summary-window SinglePartition;
+    grouped ("p99 latency per endpoint"), every window partitions BY
+    GROUP, so nothing is single-partition even at millions of groups.
+    The bucket table feeds two branches (cumulative ranks and the
+    total), so callers pass it materialized; a live one would scan the
+    corpus twice."""
     ordered = buckets.withColumn("lb", F.expr("shiftleft(top, shift)"))
-    w_cum = Window.orderBy("lb").rowsBetween(Window.unboundedPreceding, 0)
+    w_cum = (
+        Window.partitionBy(*group)
+        .orderBy("lb")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
     cum = ordered.withColumn("cum", F.sum("w").over(w_cum))
-    tot = ordered.agg(F.sum("w").cast("long").alias("n"))
+    tot = ordered.groupBy(*group).agg(F.sum("w").cast("long").alias("n"))
     pct_df = tot.select(
-        "n", F.explode(F.array(*[F.lit(int(p)) for p in pcts])).alias("pct")
+        *group, "n", F.explode(F.array(*[F.lit(int(p)) for p in pcts])).alias("pct")
     ).withColumn("target_rank", F.expr("(pct * n + 99) div 100").cast("long"))
+    joined = (
+        cum.join(pct_df, list(group)) if group else cum.crossJoin(F.broadcast(pct_df))
+    )
     return (
-        cum.crossJoin(F.broadcast(pct_df))
-        .groupBy("pct", "n", "target_rank")
+        joined.groupBy(*group, "pct", "n", "target_rank")
         .agg(
             F.min(
                 F.when(F.col("cum") >= F.col("target_rank"), F.col("lb"))
@@ -339,58 +324,4 @@ def hdr_quantiles(buckets: DataFrame, pcts: Sequence[int] = C.SKQ_PCTS) -> DataF
         .withColumn(
             "est", (F.col("bucket_lb").cast("double") / F.lit(float(C.HDR_SCALE)))
         )
-    )
-
-
-def hdr_grouped_quantiles(
-    df: DataFrame,
-    col: str,
-    group_col: str,
-    pcts: Sequence[int] = C.SKQ_PCTS,
-    scale: int = C.HDR_SCALE,
-) -> DataFrame:
-    """Per-GROUP percentiles from the HDR sketch — the everyday ops
-    question ("p99 latency per endpoint") answered with one scan + one
-    (group, bucket)-keyed map-side-partial shuffle, never a per-group
-    sort. The sketch is built per group (state: groups × bucket-space,
-    still data-size independent) and every extraction window partitions
-    BY GROUP, so nothing here is single-partition even at millions of
-    groups. Same integer discipline as ``hdr_quantiles`` — bit-identical
-    under any partitioning."""
-    k = C.HDR_SUB_BITS
-    x = F.expr(
-        f"CAST(CASE WHEN {col} >= 0 THEN floor({col} * {scale} + 0.5) "
-        f"ELSE -floor(-({col}) * {scale} + 0.5) END AS BIGINT)"
-    )
-    buckets = (
-        df.select(F.col(group_col).alias("grp"), x.alias("__x"))
-        .filter(F.col("__x") >= 1)
-        .withColumn("__m", (F.length(F.bin(F.col("__x"))) - 1).cast("int"))
-        .withColumn("shift", F.greatest(F.lit(0), F.col("__m") - F.lit(k)))
-        .withColumn("top", F.expr("shiftright(__x, shift)"))
-        .groupBy("grp", "shift", "top")
-        .agg(F.count("*").cast("long").alias("w"))
-        # feeds the cumulative AND total branches — sketch-sized, freeze
-        .localCheckpoint(eager=True)
-    )
-    ordered = buckets.withColumn("lb", F.expr("shiftleft(top, shift)"))
-    w_cum = (
-        Window.partitionBy("grp").orderBy("lb").rowsBetween(
-            Window.unboundedPreceding, 0
-        )
-    )
-    cum = ordered.withColumn("cum", F.sum("w").over(w_cum))
-    tot = ordered.groupBy("grp").agg(F.sum("w").cast("long").alias("n"))
-    pct_df = tot.select(
-        "grp", "n", F.explode(F.array(*[F.lit(int(p)) for p in pcts])).alias("pct")
-    ).withColumn("target_rank", F.expr("(pct * n + 99) div 100").cast("long"))
-    return (
-        cum.join(pct_df, "grp")
-        .groupBy("grp", "pct", "n", "target_rank")
-        .agg(
-            F.min(
-                F.when(F.col("cum") >= F.col("target_rank"), F.col("lb"))
-            ).alias("bucket_lb")
-        )
-        .withColumn("est", F.col("bucket_lb").cast("double") / F.lit(float(scale)))
     )

@@ -465,43 +465,35 @@ def perplexity_buckets_from(bigram_scored: DataFrame) -> DataFrame:
     avg(ln p) lands within 1 ulp of a .00005 boundary could round apart,
     and a flip AT a threshold score moves t1/t2 and relabels every doc
     tied there. Documents with < 2 tokens carry no LM score and emit no
-    row. The threshold pass aggregates DISTINCT micro-scores (a
-    score-cardinality-sized cumulative window, not corpus rows) and
-    broadcasts two scalar cut points; the per-doc score table is
-    localCheckpointed once for its two consumers."""
-    from pyspark.sql import Window
+    row. The threshold pass collects the DISTINCT micro-score counts (one
+    row per 4-dp score: bounded by score cardinality, never by corpus
+    row count) and cuts them on the driver into two literals; the
+    per-doc score table is localCheckpointed once for its two consumers."""
+    import pandas as pd
 
     scored = bigram_scored.withColumn(
         "__mu", F.round(F.col("bigram_logprob") * C.PPL_SCALE).cast("long")
     )
     scored = scored.localCheckpoint(eager=True)
-    counts = scored.groupBy("__mu").agg(F.count("*").cast("long").alias("__c"))
-    # single-partition window, but over distinct 4-dp scores — bounded by
-    # score cardinality (sketch-sized), never by corpus row count
-    cum = counts.withColumn(
-        "__cum",
-        F.sum("__c").over(
-            Window.orderBy("__mu").rowsBetween(Window.unboundedPreceding, 0)
-        ),
+    counts = (
+        scored.groupBy("__mu")
+        .agg(F.count("*").cast("long").alias("__c"))
+        .toPandas()
+        .sort_values("__mu", na_position="first")
     )
-    # n comes from the distinct-score table, not a second corpus pass
-    n = counts.agg(F.sum("__c").cast("long").alias("__n"))
-    thr = (
-        cum.crossJoin(F.broadcast(n))
-        .agg(
-            F.min(
-                F.when(F.col("__cum") >= F.expr("(__n + 2) div 3"), F.col("__mu"))
-            ).alias("__t1"),
-            F.min(
-                F.when(F.col("__cum") >= F.expr("(2 * __n + 2) div 3"), F.col("__mu"))
-            ).alias("__t2"),
-        )
-    )
-    return scored.crossJoin(F.broadcast(thr)).select(
+    cum = counts["__c"].cumsum()
+    n = int(cum.iloc[-1]) if len(cum) else 0
+
+    def cut(rank: int) -> Column:
+        t = counts["__mu"][cum >= rank].min()
+        return F.lit(None if pd.isna(t) else int(t))
+
+    t1, t2 = cut((n + 2) // 3), cut((2 * n + 2) // 3)
+    return scored.select(
         "doc_id",
         "bigram_logprob",
-        F.when(F.col("__mu") <= F.col("__t1"), F.lit("head"))
-        .when(F.col("__mu") <= F.col("__t2"), F.lit("middle"))
+        F.when(F.col("__mu") <= t1, F.lit("head"))
+        .when(F.col("__mu") <= t2, F.lit("middle"))
         .otherwise(F.lit("tail"))
         .alias("ppl_bucket"),
     )
@@ -811,12 +803,14 @@ def frequent_values(df: DataFrame, col: str, k: int = C.HH_K) -> DataFrame:
     so per-partition undercount ≤ n_p/(k+1) and any value with global
     count > total/k MUST survive in at least one partition's summary (the
     merged candidate set is a guaranteed superset of the true heavies).
-    Pass 2 broadcast-semi-joins the ≤ partitions·k candidates back onto
-    the value stream and counts them EXACTLY, so the emitted rows are
+    The summary comes back to the driver in one collect: at most
+    partitions x (k+1) rows, whatever the row count. Pass 2
+    broadcast-semi-joins the ≤ partitions·k candidates back onto the
+    value stream and counts them EXACTLY, so the emitted rows are
     deterministic regardless of partitioning/batch order; the sketch only
     bounds the candidate set. Scale shape: two scans, a map-side
-    candidate filter, one value-keyed partial agg over candidates only,
-    one scalar total — no full-cardinality shuffle at all.
+    candidate filter, one value-keyed partial agg over candidates only —
+    no full-cardinality shuffle at all.
     """
     import pandas as pd
 
@@ -844,52 +838,39 @@ def frequent_values(df: DataFrame, col: str, k: int = C.HH_K) -> DataFrame:
             }
         )
 
-    summary = vals.mapInPandas(mg, "__v string, __n long").localCheckpoint(
-        eager=True
+    summary = vals.mapInPandas(mg, "__v string, __n long").toPandas()
+    cand = df.sparkSession.createDataFrame(
+        [(v,) for v in summary["__v"].dropna().unique()], "__v string"
     )
-    cand = summary.filter(F.col("__v").isNotNull()).select("__v").distinct()
-    tot = summary.agg(F.sum("__n").cast("long").alias("total"))
     exact = (
         vals.join(F.broadcast(cand), "__v")
-        .groupBy("__v")
+        .groupBy(F.col("__v").alias(col))
         .agg(F.count("*").cast("long").alias("n"))
     )
-    return exact_share_filter(exact, tot, col, k, value_source="__v")
+    return exact_share_filter(exact, int(summary["__n"].sum()), col, k)
 
 
 def exact_share_filter(
-    counts: DataFrame,
-    total: DataFrame,
-    value_col: str,
-    k: int,
-    value_source: str | None = None,
+    counts: DataFrame, total: int, value_col: str, k: int
 ) -> DataFrame:
     """The heavy-hitter emission convention, in ONE place so the batch
     (frequent_values) and streaming (the ``heavy_hitters`` declaration in
-    ``queries.TWINS``) legs can never drift from their shared oracle: keep rows of ``counts``
-    (value column, ``n``) whose exact count exceeds total/k, with the
-    share rounded to 6 dp. ``total`` is a one-row (``total``) frame.
-
-    The value rides under internal sentinels until the final select —
-    ``value_source`` names the column it arrives under (default
-    ``value_col``) — so a profiling column legitimately named ``total``
-    cannot collide with the broadcast total (ADVICE r6). ``n``/``share``
-    are the OUTPUT count/share names, so those two value names are
-    rejected up front instead of emitting an ambiguous schema."""
+    ``queries.TWINS``) legs can never drift from their shared oracle: keep
+    rows of ``counts`` (value column, ``n``) whose exact count exceeds
+    ``total``/k, with the share rounded to 6 dp. ``total`` is the
+    driver-side integer row total, so it enters as a literal and no
+    value column name can collide with it. ``n``/``share`` are the
+    OUTPUT count/share names, so those two value names are rejected up
+    front instead of emitting an ambiguous schema."""
     if value_col in ("n", "share"):
         raise ValueError(
             f"value_col {value_col!r} collides with the output count/share "
             "columns — alias the profiled column first"
         )
-    return (
-        counts.select(F.col(value_source or value_col).alias("__v"), "n")
-        .crossJoin(F.broadcast(total.select(F.col("total").alias("__tot"))))
-        .filter(F.col("n") * k > F.col("__tot"))
-        .select(
-            F.col("__v").alias(value_col),
-            "n",
-            F.round(F.col("n") / F.col("__tot"), 6).alias("share"),
-        )
+    return counts.filter(F.col("n") * k > F.lit(total)).select(
+        value_col,
+        "n",
+        F.round(F.col("n") / F.lit(total), 6).alias("share"),
     )
 
 

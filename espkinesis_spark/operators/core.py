@@ -407,6 +407,9 @@ def asof_last_match_pandas(
 
     bucket = F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets))
     lb = left.withColumn("__asof_bucket", bucket)
+    # fresh attributes: a right side derived from the left's scan would
+    # otherwise bind the kernel's right arguments to the left's columns
+    right = right.select(key, right_ts, right_val).toDF(key, right_ts, right_val)
     rb = right.withColumn("__asof_bucket", bucket)
     return (
         lb.groupBy("__asof_bucket")

@@ -2210,9 +2210,9 @@ def ex_hdr_quantile_grouped(spark, sf_dir):
     no single-partition stage at any group cardinality. Same integer
     bucketing/extraction as ex_hdr_quantile, replayed per group by the
     oracle."""
-    return quantiles.hdr_grouped_quantiles(
-        _t(spark, sf_dir, "events"), "value", "event_type"
-    )
+    ev = _t(spark, sf_dir, "events").select(F.col("event_type").alias("grp"), "value")
+    buckets = quantiles.hdr_buckets(ev, "value", "grp").localCheckpoint(eager=True)
+    return quantiles.hdr_quantiles(buckets, C.SKQ_PCTS, "grp")
 
 
 def ex_token_entropy(spark, sf_dir):
@@ -3446,11 +3446,10 @@ def _window_counts(start, *window):
 
 
 def _share_filter(counts, *_):
-    """Tokens with count·k > total. The total self-joins the tally, which
-    a memory-sink view cannot do, so the tally is frozen first."""
-    counts = counts.localCheckpoint(eager=True)
-    tot = counts.agg(F.sum("n").cast("long").alias("total"))
-    return text.exact_share_filter(counts, tot, "token", C.HH_K)
+    """Tokens with count·k > total; the total is one scalar aggregate of
+    the tally, read on the driver."""
+    total = counts.agg(F.sum("n").cast("long")).first()[0] or 0
+    return text.exact_share_filter(counts, total, "token", C.HH_K)
 
 
 def _ack_state(ev):

@@ -19,7 +19,9 @@ Scale posture (100 TB readiness):
     spark-core jar from the workers' ``sys.path`` when the installed pyspark
     is the zip's version (per-task zip re-reads, ~0.25 s a task, otherwise).
     Executors need the package importable, as they already do for the
-    kernels' UDFs; ``get_spark`` puts its root on ``PYTHONPATH``.
+    kernels' UDFs; ``get_spark`` puts its root on ``PYTHONPATH`` and sets
+    ``PYTHONSAFEPATH`` for the workers, so the driver's cwd is not on
+    their path.
 """
 
 from __future__ import annotations
@@ -115,6 +117,10 @@ def get_spark(
         .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "espkinesis_spark._worker_daemon")
+        # `python -m` would put the JVM's cwd ahead of PYTHONPATH, so a
+        # session started from one checkout would run another checkout's
+        # kernels when the cwd holds one (Python >= 3.11)
+        .config("spark.executorEnv.PYTHONSAFEPATH", "1")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
     )
     for k, v in (extra_conf or {}).items():

@@ -1542,13 +1542,46 @@ def test_sketch_quantiles_empty_and_degenerate(spark):
     assert {r["target_rank"] for r in out} == {1}
 
 
+def test_frequent_values_empty_and_degenerate(spark):
+    from espkinesis_spark.functions import text
+
+    empty = spark.createDataFrame([], "v string").repartition(3)
+    assert text.frequent_values(empty, "v", k=5).collect() == []
+    nulls = spark.createDataFrame([(None,)] * 4, "v string").repartition(3)
+    assert text.frequent_values(nulls, "v", k=5).collect() == []
+    one = spark.createDataFrame([("a",)], "v string").repartition(8)
+    out = text.frequent_values(one, "v", k=5).collect()
+    assert [(r["v"], r["n"], r["share"]) for r in out] == [("a", 1, 1.0)]
+
+
+def test_perplexity_buckets_empty_and_degenerate(spark):
+    """No scored docs: no rows. Docs with no score take no cut and land in
+    the tail. One doc: both cuts are its own score, so it is head."""
+    from espkinesis_spark.functions import text
+
+    schema = "doc_id long, n_bigrams long, bigram_logprob double"
+    empty = spark.createDataFrame([], schema)
+    assert text.perplexity_buckets_from(empty).collect() == []
+    nulls = spark.createDataFrame([(1, 1, None), (2, 1, None)], schema)
+    out = text.perplexity_buckets_from(nulls).collect()
+    assert sorted(tuple(r) for r in out) == [(1, None, "tail"), (2, None, "tail")]
+    one = spark.createDataFrame([(7, 3, 2.5)], schema).repartition(4)
+    out = text.perplexity_buckets_from(one).collect()
+    assert [tuple(r) for r in out] == [(7, 2.5, "head")]
+
+
 def test_sketch_quantile_bound_property():
     """Pure-python mirror of the summarize/bound phases: for random
     streams, partitionings, and summary sizes, the derived (lo, hi]
     interval must contain the true order statistic and the claimed rank
-    bracket must hold — the guarantee the exact select pass relies on."""
+    bracket must hold — the guarantee the exact select pass relies on.
+    The library's driver-side bound phase (``_brackets``) must derive the
+    same n and (lo, hi] from the same blocks."""
+    import numpy as np
     from hypothesis import given, settings
     from hypothesis import strategies as st
+
+    from espkinesis_spark.functions.quantiles import _brackets
 
     def blocks_for(part, s):
         part = sorted(part)
@@ -1588,6 +1621,11 @@ def test_sketch_quantile_bound_property():
         }
         lo = max((v for v in cands if upper[v] < rk), default=None)
         hi = min(v for v in cands if lower[v] >= rk)
+        v_lo, v_hi, w = (np.array(c, dtype=float) for c in zip(*blocks))
+        assert _brackets(v_lo, v_hi, w.astype(np.int64), [pct]) == (
+            n,
+            [(pct, rk, lo, hi)],
+        )
         true = sorted(stream)[rk - 1]
         assert (lo is None or true > lo) and true <= hi
         # exact select inside the interval reproduces the order statistic
@@ -1805,8 +1843,8 @@ def test_downsample_seq_oracle_precondition_holds():
 
 def test_frequent_values_collision_column_names(spark):
     """A profiled column named 'total' must survive the share filter
-    (the value rides under a sentinel, ADVICE r6); 'n'/'share' collide
-    with the OUTPUT schema and must fail loudly, not ambiguously."""
+    (the total is a literal, not a column); 'n'/'share' collide with the
+    OUTPUT schema and must fail loudly, not ambiguously."""
     import pytest as _pytest
 
     from espkinesis_spark.functions import text

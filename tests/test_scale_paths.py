@@ -187,6 +187,28 @@ def test_pandas_asof_equals_join_form(spark, sf_dir):
     assert got == want and len(want) > 0
 
 
+@pytest.mark.parametrize("n_buckets", [64, 8])
+def test_pandas_asof_self_asof_on_one_scan(spark, sf_dir, n_buckets):
+    """dq09's shape: clicks and purchases are filters of ONE events scan,
+    and a projection over the result prunes the kernel's output. Both
+    sides then share attribute ids, which the kernel's right-side
+    arguments must not bind to."""
+    ev = load_table(spark, sf_dir, "events")
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        "event_id", "user_id", "ts"
+    )
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "user_id", "ts", "event_id"
+    )
+    args = dict(key="user_id", left_ts="ts", right_ts="ts", right_val="event_id")
+    want = ops.asof_last_match(clicks, purchases, **args)
+    got = ops.asof_last_match_pandas(clicks, purchases, n_buckets=n_buckets, **args)
+    pick = F.col("event_id"), F.col("asof_match").alias("m")
+    want = {tuple(r) for r in want.select(*pick).collect()}
+    assert {tuple(r) for r in got.select(*pick).collect()} == want
+    assert any(m is not None for _, m in want)
+
+
 def test_pandas_asof_null_keys_and_times_match_nothing(spark):
     """Null keys, times and values never match, as in the join form's
     SQL equality and range predicates; a left row with a null key or

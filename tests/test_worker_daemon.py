@@ -106,3 +106,56 @@ def test_package_import_leaves_pyspark_unimported():
     )
     assert proc.returncode == 0, proc.stderr
     assert proc.stdout.strip() == "False"
+
+
+_DECOY_PROBE = """
+import os, sys
+sys.path.insert(0, {root!r})
+import espkinesis_spark
+from espkinesis_spark.session import get_spark
+
+def where(batches):
+    import espkinesis_spark
+    import pandas as pd
+    for _ in batches:
+        yield pd.DataFrame({{"file": [espkinesis_spark.__file__]}})
+
+spark = get_spark(master="local[1]", shuffle_partitions=1)
+row = spark.range(1, numPartitions=1).mapInPandas(where, "file string").first()
+print(espkinesis_spark.__file__)
+print(row.file)
+print(os.environ.get("PYTHONSAFEPATH", "unset"))
+spark.stop()
+"""
+
+
+def test_workers_import_the_drivers_package_not_the_cwds(tmp_path):
+    """A session started while the cwd holds another ``espkinesis_spark``
+    (a second checkout) still runs the driver's package in its workers:
+    ``python -m`` would put the cwd first on the worker's path. The
+    setting reaches the workers only, not the driver's own environment
+    (which any tool subprocess inherits)."""
+    decoy = tmp_path / "espkinesis_spark"
+    decoy.mkdir()
+    (decoy / "__init__.py").write_text("")
+    # a working daemon, so a worker that picked the decoy reports it
+    (decoy / "_worker_daemon.py").write_text(
+        "from pyspark.daemon import manager\nmanager()\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    env.pop("PYTHONPATH", None)
+    env.pop("PYTHONSAFEPATH", None)
+    proc = subprocess.run(
+        [sys.executable, "-c", _DECOY_PROBE.format(root=root)],
+        capture_output=True,
+        text=True,
+        cwd=tmp_path,
+        env=env,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    driver, worker, driver_env = proc.stdout.split()[-3:]
+    assert driver == os.path.join(root, "espkinesis_spark", "__init__.py")
+    assert worker == driver
+    assert driver_env == "unset"

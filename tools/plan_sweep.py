@@ -9,9 +9,9 @@ Greps each entry's physical plan for the three 100 TB killers:
 
 SinglePartition hits are REPORTED, not failed: a global scalar reduce
 over map-side partials (totals, bounds, vocab size) and summary-sized
-windows (downsample anchors, sketch-quantile bounds) are inherent and
-tiny — the sweep output is for eyeballing that every hit stays in that
-category and none is data-sized.
+windows (downsample anchors, the ungrouped HDR cumulative ranks) are
+inherent and tiny — the sweep output is for eyeballing that every hit
+stays in that category and none is data-sized.
 
 Batch entries are explained unexecuted — with one documented exception:
 ``ex_zrange_bigmin`` runs a real 4-scalar min/max reduce at DataFrame
